@@ -267,106 +267,6 @@ BENCH_R8 = [
     "wh07_snapshot_diff",
 ]
 
-# Zero-code-change drift control (VERDICT r8 #6). PERF.md has used the
-# frozen r4 group total as the host-state control since r06, but only
-# narratively — the committed BENCH_r0N.json could not distinguish host
-# drift from a real regression on its own. The headline line now
-# carries control_s (the r4 group total, minus any member whose CODE
-# changed after r4) and headline_over_control; compare the RATIO across
-# rounds, not raw totals. Members edited later must be added here the
-# same commit (r9: dd15's eager localCheckpoint became a lazy persist;
-# ts09/dd14/ml08 gained lint waivers only — zero code change).
-CONTROL_EXCLUDED = {
-    "dd15_simhash_hamming_pairs",
-    # r10 optimization round: engine-level persist/plan changes (ml04's
-    # pinned candidate relation + window survivor; dd13's pinned
-    # base/token relations). Their registered wrappers are unchanged
-    # (the source pins in tests/test_bench_control.py still match) but
-    # their runtime changed, so they leave the drift control.
-    "ml04_density_dedup",
-    "dd13_containment_join",
-    # tp16's DSIR fit fused to one conditional-count pass (r10).
-    "tp16_dsir_resample",
-    # sim13's engine (knn_join_topk) switched to canonical-orientation
-    # scoring + symmetrize (r10): the registered wrapper is unchanged
-    # (its source pin still matches — the pin only covers direct
-    # wrapper edits) but the runtime changed, so it leaves the control.
-    "sim13_knn_join",
-    # er04 consumes the shared component fixpoint engine, whose
-    # convergence detection changed in r10 (star-forest test replaces
-    # the confirming round) — engine-level runtime change, wrapper
-    # untouched. Note the r10 checkpoint-fusion change had ALREADY
-    # altered er04's runtime without an exclusion; both are corrected
-    # here.
-    "er04_golden_record",
-    # r11: dq12 gained the adaptive approx-prescreen (exact Expand only
-    # over near-key candidates) — code change, leaves the control.
-    "dq12_key_discovery",
-}
-
-# The FROZEN r10 control basis (VERDICT r10 #3): BENCH_R4 minus the six
-# r10 exclusions, spelled out so the denominator of
-# ``headline_over_control`` is a named, pinned artifact rather than a
-# set difference that silently shifts when CONTROL_EXCLUDED grows. The
-# r10 reference reading on this basis is 0.2777
-# (plans/r10_bench_after2.log); r11's ratio is comparable to that
-# number if and only if the basis members' code is unchanged —
-# tests/test_bench_control.py pins both the membership and each
-# member's source. If a member MUST change in a later round, exclude it
-# via CONTROL_EXCLUDED as before AND recompute the prior round's ratio
-# on the shrunk basis from its committed bench log, so two comparable
-# readings always exist (document both in the round's OPTIMIZATION_*.md).
-# r11 note: dq12_key_discovery left the basis (VERDICT r10 #7 made its
-# plan adaptive), so the operative basis is these 40 members. Prior
-# readings recomputed on THIS basis from the committed logs:
-# r10 close (plans/r10_bench_after2.log)  headline 14.526 / control 47.601 = 0.3052
-# r11 open  (plans/r11_bench_before.log)  headline 13.364 / control 37.161 = 0.3596
-# (The r10-published 0.2777 sat on the pre-er04-exclusion 42-member
-# denominator; on the frozen 41-member basis it recomputes to 0.2920.)
-CONTROL_BASIS_R10 = (
-    "gr05_kcore",
-    "sim12_ivf_mmr_rerank",
-    "dq06_k_anonymity",
-    "dq07_k_anonymity_suppress",
-    "gr06_onion_layers",
-    "sim14_pq_knn_join",
-    "tx13_bigram_surprisal",
-    "dq08_ks_drift",
-    "dq09_mann_whitney",
-    "ml05_fasttext_quality",
-    "tx14_bpe_merges",
-    "tx15_bpe_tokenize",
-    "dq10_mad_outliers",
-    "ts09_seasonal_naive_backtest",
-    "dq11_benford_digits",
-    "gr07_lpa_communities",
-    "ml06_threshold_sweep",
-    "ab01_experiment_readout",
-    "gr08_bfs_hops",
-    "ts10_linear_trend",
-    "gr09_link_prediction",
-    "tx16_collocations",
-    "dq13_l_diversity",
-    "ts11_cusum_changepoint",
-    "inc03_incremental_distinct",
-    "gr10_degree_assortativity",
-    "tp17_decontaminate_train",
-    "ts12_weekday_seasonality",
-    "dd14_ngram_novelty",
-    "dq14_referential_orphans",
-    "ml08_reliability_bins",
-    "st02_last_touch_attribution",
-    "u06_arrow_udf_bucket",
-    "sim15_ivf_recall_eval",
-    "a30_grouped_string_agg",
-    "j12_null_safe_join",
-    "gr11_clustering_coefficient",
-    "wh04_scd2_merge",
-    "f25_id_gap_islands",
-    "ts13_seasonal_anomaly",
-)
-
-
 def run_pipeline_e2e(sf_dir: str) -> dict[str, object]:
     """Time the full warehouse CLI (ingestion → warehouse → analytics).
 
@@ -580,25 +480,12 @@ def main() -> None:
     # self-check below enforces < 1800 so a future query rename or
     # growth fails HERE, in-session). The full-precision stats stay on
     # `headline_queries_detail` for committed logs.
-    control_s = round(
-        sum(v for k, v in r4.items() if k in CONTROL_BASIS_R10), 3
-    )
-    headline_value = round(sum(timings.values()), 3)
     headline = {
         "metric": "headline_queries_total_runtime",
-        "value": headline_value,
+        "value": round(sum(timings.values()), 3),
         "value_min": round(sum(s["min"] for s in stats.values()), 3),
         "unit": "sec",
         "sf": sf,
-        # same-process host-drift control: the FROZEN r10 basis total
-        # (CONTROL_BASIS_R10 — zero-code-change members of the r4
-        # group). Compare headline_over_control across rounds — it
-        # cancels the uniform host-state inflation PERF.md documents
-        # (the r4 group drifted 58.4→91.2 s across r6-r8 sessions with
-        # zero code change while per-query medians held). r10 reference
-        # reading on this exact basis: 0.2777.
-        "control_s": control_s,
-        "headline_over_control": round(headline_value / control_s, 4),
         "queries": {k: round(v, 2) for k, v in timings.items()},
     }
     line = json.dumps(headline)

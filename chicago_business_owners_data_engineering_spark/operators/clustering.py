@@ -23,7 +23,7 @@ dataflow form:
 
 Iterations are fixed (ITERATIONS=2) rather than convergence-tested so
 the oracle SQL can mirror the exact trajectory; the loop body is the
-same either way (components_from_pairs in dedup.py shows the
+same either way (components_large_small_star in graph.py shows the
 fixpoint-loop variant of driver-coordinated iteration).
 """
 
@@ -362,7 +362,7 @@ def semantic_dedup_components(
     SCALE_PROBE.md) and k ∝ corpus size (constant cell width keeps the
     in-cell quadratic flat per SemDeDup).
     """
-    from .dedup import components_from_pairs
+    from .graph import components_large_small_star
 
     # Normalize ONCE per (vector, probe) row — cosine then costs a
     # single zip_with/aggregate fold per candidate pair instead of a
@@ -419,7 +419,7 @@ def semantic_dedup_components(
         .select(F.col("a.vec_id").alias("doc_a"), F.col("b.vec_id").alias("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    comp = components_from_pairs(pairs)
+    comp = components_large_small_star(pairs)
     return (
         comp.select(
             F.col("doc_id").alias("vec_id"),
@@ -659,7 +659,7 @@ def dbscan_density_dedup(
     corpora raise ``cos_threshold`` out of the random-cosine tail and
     grow ``k`` with the corpus so cell width stays constant.
     """
-    from .dedup import components_from_pairs
+    from .graph import components_large_small_star
 
     _release_blocking_caches()
     norm = F.sqrt(
@@ -729,7 +729,7 @@ def dbscan_density_dedup(
         .join(core.withColumnRenamed("vec_id", "nb"), "nb")
         .select(F.col("vec_id").alias("doc_a"), F.col("nb").alias("doc_b"))
     )
-    comp = components_from_pairs(core_edges)
+    comp = components_large_small_star(core_edges)
     # Isolated cores (enough neighbors, none of them core) form their
     # own singleton cluster — hence the coalesce to self. Pinned: the
     # border branch and the final labeling both consume it, and its

@@ -370,19 +370,12 @@ def dd05_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # peer operator modules can import it at decoration time without
 # re-entering this module through the registry.
 from .shared_oracles import DD06_COMPONENT_CTE as _DD06_COMPONENT_CTE  # noqa: E402
+from .shared_oracles import DD06_REPORT_SQL as _DD06_REPORT_SQL  # noqa: E402
 
 
 @query(
     "dd06_neardup_components",
-    oracle=_DD06_COMPONENT_CTE
-    + """
-    , sizes AS (
-        SELECT component, COUNT(*) AS csize FROM comp GROUP BY component
-    )
-    SELECT c.doc_id, c.component, s.csize
-    FROM comp c JOIN sizes s ON c.component = s.component
-    ORDER BY c.doc_id
-    """,
+    oracle=_DD06_REPORT_SQL,
 )
 def dd06_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS: connected components over the similarity graph.
@@ -396,18 +389,12 @@ def dd06_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan); the DuckDB recursive-CTE oracle derives the same graph from
     the brute-force all-pairs definition, so the differential check
     proves the LSH band parameters lose no component structure.
-    ``neardup_components(..., use_lsh_edges=False)`` keeps the
-    brute-force twin runnable for recall audits.
 
-    Components run as driver-coordinated min-label propagation (the
-    dataflow form of Pregel/GraphX): each round, every node takes the
-    min of its own label and its neighbors' — one shuffle keyed on
-    node per round, rounds = graph diameter (near-dup clusters are
-    shallow; 3-4 rounds in practice). ``localCheckpoint`` after each
-    round truncates lineage so the plan doesn't grow with iterations —
-    the thing that OOMs the driver at round 20 if skipped. Convergence
-    is an exact fixpoint test (no label changed), not a fixed round
-    count.
+    Components run as large-star/small-star
+    (graph.components_large_small_star): O(log n) rounds regardless of
+    graph diameter, ~4 node-keyed shuffles per round, lineage truncated
+    by a ``localCheckpoint`` each round. Convergence is an exact
+    star-forest test on the round's output, not a fixed round count.
     """
     comp = neardup_components(spark, sf_dir)
     sizes = comp.groupBy("component").agg(F.count("*").alias("csize"))
@@ -419,20 +406,16 @@ def dd06_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def neardup_edges(
-    docs: DataFrame,
-    set_col: str = "ws",
-    threshold: float = 0.5,
-    use_lsh: bool = True,
+    docs: DataFrame, set_col: str = "ws", threshold: float = 0.5
 ) -> DataFrame:
     """(doc_a, doc_b) near-dup pairs over a (doc_id, token-set) relation.
 
-    ``use_lsh=True`` (the scale path) routes through dd04's machinery
-    with recall-aggressive banding: 32 minhash slots in 16 bands of 2,
-    so a pair at exactly the 0.5 threshold is missed with probability
-    (1-s²)^16 ≈ 1% and anything ≥0.7 with < 1e-4 — and because the
-    candidates are then verified with EXACT Jaccard, band tuning only
-    affects recall, never precision. ``use_lsh=False`` is the O(n²)
-    brute-force twin (the oracle's definition), kept for recall audits.
+    Routes through dd04's MinHash-LSH machinery with recall-aggressive
+    banding: 32 minhash slots in 16 bands of 2, so a pair at exactly
+    the 0.5 threshold is missed with probability (1-s²)^16 ≈ 1% and
+    anything ≥0.7 with < 1e-4 — and because the candidates are then
+    verified with EXACT Jaccard, band tuning only affects recall, never
+    precision.
 
     Honest caveat on the differential check: dd06/dd07's oracle derives
     edges from the EXACT all-pairs definition, so its green status
@@ -441,69 +424,29 @@ def neardup_edges(
     a recall measurement, not a theorem. A corpus with a borderline
     ~0.5-Jaccard bridge edge can legitimately diverge with ~1%
     probability per such edge; production deployments pick (bands,
-    rows) for their threshold and audit recall with the brute-force
-    twin on samples, exactly as done here.
+    rows) for their threshold and audit recall on samples against the
+    brute-force definition (the DD04_EXACT_PAIRS_SQL oracle).
     """
-    if use_lsh:
-        return minhash_lsh_pairs(
-            docs, "doc_id", set_col, threshold=threshold, num_hashes=32, band_size=2
-        ).select("doc_a", "doc_b")
-    a, b = docs.alias("a"), docs.alias("b")
-    sa, sb = F.col(f"a.{set_col}"), F.col(f"b.{set_col}")
-    inter = F.size(F.array_intersect(sa, sb))
-    union = F.size(sa) + F.size(sb) - inter
-    return (
-        a.crossJoin(b)
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .filter((inter / union) >= threshold)
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-    )
+    return minhash_lsh_pairs(
+        docs, "doc_id", set_col, threshold=threshold, num_hashes=32, band_size=2
+    ).select("doc_a", "doc_b")
 
 
-def neardup_components(
-    spark: SparkSession, sf_dir: str, use_lsh_edges: bool = True
-) -> DataFrame:
+def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components of the shingle-Jaccard near-dup graph.
 
-    Shared by dd06 (cluster report) and dd07 (canonical selection).
-    Returns (doc_id, component) for every doc that participates in at
-    least one near-dup edge; component = min doc_id reachable. Edges
-    come from MinHash-LSH by default (see neardup_edges); the component
-    step is identical either way.
+    Shared by dd06/dd08 (cluster report) and dd07 (canonical
+    selection). Returns (doc_id, component) for every doc that
+    participates in at least one near-dup edge; component = min doc_id
+    reachable.
     """
+    # Lazy import: graph.py imports dedup only inside query bodies, so
+    # this direction is cycle-free regardless of registry order.
+    from .graph import components_large_small_star
+
     documents = spread_scan(load_table(spark, sf_dir, "documents"))
     docs = documents.select("doc_id", _shingle_set(F.col("text")).alias("ws"))
-    pairs = neardup_edges(docs, "ws", threshold=0.5, use_lsh=use_lsh_edges)
-    return components_from_pairs(pairs)
-
-
-def components_from_pairs(pairs: DataFrame, engine: str = "large_star") -> DataFrame:
-    """Connected components over a (doc_a, doc_b) pair relation.
-
-    The default engine is the alternating large-star/small-star
-    algorithm (graph.components_large_small_star): O(log n) rounds
-    REGARDLESS of graph diameter, ~4 bounded node-keyed shuffles per
-    round. Near-dup graphs are usually shallow, but entity graphs and
-    incremental quotient graphs can carry long chains, and a
-    diameter-bound engine silently degrades to thousands of shuffle
-    rounds there — so the scale-safe engine is the default and
-    every consumer (dd06/dd07/er02/er03/ml03/inc02, curation funnel)
-    inherits it.
-
-    ``engine="propagation"`` selects min-label propagation — one
-    shuffle per round but rounds = diameter — kept as the independent
-    twin for equivalence tests and as the cheaper choice when the
-    caller KNOWS the graph is shallow.
-    """
-    if engine == "large_star":
-        # Lazy import: graph.py deliberately never imports dedup, so
-        # this direction is cycle-free regardless of registry order.
-        from .graph import components_large_small_star
-
-        return components_large_small_star(pairs)
-    if engine != "propagation":
-        raise ValueError(f"unknown component engine {engine!r}")
-    return components_propagation(pairs)
+    return components_large_small_star(neardup_edges(docs, "ws", threshold=0.5))
 
 
 def components_propagation(pairs: DataFrame) -> DataFrame:
@@ -515,6 +458,10 @@ def components_propagation(pairs: DataFrame) -> DataFrame:
     = graph diameter. ``localCheckpoint`` after each round truncates
     lineage so the plan doesn't grow with iterations. Convergence is an
     exact fixpoint (no label changed), not a fixed round count.
+
+    Production consumers use graph.components_large_small_star, whose
+    round count does not grow with the diameter; this is its
+    independent reference in the tests.
     """
     directed = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     edges = directed.union(

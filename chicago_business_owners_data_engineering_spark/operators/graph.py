@@ -31,16 +31,19 @@ the algorithm choice is the beyond-reference scale path.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import load_table
 from ..registry import query
 
 # The shared component oracle lives in the registry-free shared_oracles
 # module precisely so it can be imported here at decoration time; a
 # peer import from dedup would re-enter dedup half-initialized when
 # graph is imported first (the registry imports all operator modules).
-from .shared_oracles import DD06_COMPONENT_CTE as _DD06_COMPONENT_CTE
+from .shared_oracles import DD06_REPORT_SQL as _DD06_REPORT_SQL
 
 
 def _canonical(pairs: DataFrame) -> DataFrame:
@@ -205,26 +208,46 @@ PR_SCALE = 1_000_000_000_000  # integer PageRank unit: 1.0 == 10^12
 PR_TELEPORT_PCT = 15  # damping d = 0.85 expressed as integer percents
 PR_ITERATIONS = 3
 
-_COPURCHASE_EDGE_CTE = """
+
+def _e0_cte(weighted: bool = False) -> str:
+    """``e0(src, dst[, w])``: both orientations of ``copairs(part_a,
+    part_b[, w])`` — the oracle twin of :func:`_bidir`. MATERIALIZED
+    because the chains and joins that read it reference it repeatedly."""
+    w = ", w" if weighted else ""
+    return f"""
+    , e0 AS MATERIALIZED (
+        SELECT part_a AS src, part_b AS dst{w} FROM copairs
+        UNION ALL SELECT part_b, part_a{w} FROM copairs
+    )"""
+
+
+def _copurchase_cte(weighted: bool = False) -> str:
+    """Oracle prefix: 1995 co-purchase ``copairs`` (with the shared-order
+    count ``w`` when ``weighted``) followed by its ``e0`` edge CTE."""
+    w = ",\n               CAST(COUNT(*) AS BIGINT) AS w" if weighted else ""
+    return (
+        f"""
     WITH items AS (
         SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
         WHERE l_shipdate >= TIMESTAMP '1995-01-01'
           AND l_shipdate <  TIMESTAMP '1996-01-01'
     ), copairs AS (
-        SELECT a.l_partkey AS part_a, b.l_partkey AS part_b
+        SELECT a.l_partkey AS part_a, b.l_partkey AS part_b{w}
         FROM items a JOIN items b
           ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
         GROUP BY 1, 2
+    )"""
+        + _e0_cte(weighted)
     )
-"""
 
 
-def copurchase_edges(lineitem: DataFrame) -> DataFrame:
-    """Distinct canonical (part_a < part_b) co-purchase edges, 1995.
+def _copurchase_join(lineitem: DataFrame) -> tuple[DataFrame, tuple]:
+    """1995 (order, part) rows self-joined on the order key with
+    ``a.l_partkey < b.l_partkey`` (one row per order a part pair
+    shares), plus the (part_a, part_b) key columns of that join.
 
     One shuffle on the order key (the block key); the quadratic compare
-    runs inside ~4-row order groups. ``distinct`` collapses repeat
-    co-purchases — the downstream graph ops are unweighted.
+    runs inside ~4-row order groups.
     """
     items = (
         lineitem.filter(
@@ -235,20 +258,50 @@ def copurchase_edges(lineitem: DataFrame) -> DataFrame:
         .distinct()
     )
     a, b = items.alias("a"), items.alias("b")
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a.l_orderkey") == F.col("b.l_orderkey"),
-                F.col("a.l_partkey") < F.col("b.l_partkey"),
-            ],
-        )
-        .select(
-            F.col("a.l_partkey").alias("part_a"),
-            F.col("b.l_partkey").alias("part_b"),
-        )
-        .distinct()
+    joined = a.join(
+        b,
+        on=[
+            F.col("a.l_orderkey") == F.col("b.l_orderkey"),
+            F.col("a.l_partkey") < F.col("b.l_partkey"),
+        ],
     )
+    pair = (F.col("a.l_partkey").alias("part_a"), F.col("b.l_partkey").alias("part_b"))
+    return joined, pair
+
+
+def copurchase_edges(lineitem: DataFrame) -> DataFrame:
+    """Distinct canonical (part_a < part_b) co-purchase edges, 1995.
+
+    ``distinct`` collapses repeat co-purchases — the downstream graph
+    ops are unweighted.
+    """
+    joined, pair = _copurchase_join(lineitem)
+    return joined.select(*pair).distinct()
+
+
+def copurchase_edges_weighted(lineitem: DataFrame) -> DataFrame:
+    """(part_a < part_b, w) co-purchase edges, w = the number of
+    distinct 1995 orders the pair shared — the natural edge weight for
+    the ranking variants."""
+    joined, pair = _copurchase_join(lineitem)
+    return joined.groupBy(*pair).agg(F.count("*").alias("w"))
+
+
+def _bidir(edges: DataFrame, *cols) -> DataFrame:
+    """(src, dst, *cols): both orientations of canonical (part_a, part_b)
+    edges. Callers checkpoint the result where they need to."""
+    return edges.select(
+        F.col("part_a").alias("src"), F.col("part_b").alias("dst"), *cols
+    ).unionByName(
+        edges.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"), *cols)
+    )
+
+
+def _degree(bidir: DataFrame, name: str = "deg", mass=None) -> DataFrame:
+    """(node, name): per-source edge count (or ``mass``) of a (src, dst)
+    relation."""
+    mass = F.count("*") if mass is None else mass
+    return bidir.groupBy("src").agg(mass.alias(name)).withColumnRenamed("src", "node")
 
 
 def pagerank_integer(
@@ -297,21 +350,8 @@ def pagerank_integer(
     the unrolled plan stays shallow (no per-round checkpoint needed).
     """
     wcols = [F.col(weight_col).alias("w")] if weight_col else []
-    bidir = (
-        edges_canon.select(
-            F.col("part_a").alias("src"), F.col("part_b").alias("dst"), *wcols
-        )
-        .unionByName(
-            edges_canon.select(
-                F.col("part_b").alias("src"), F.col("part_a").alias("dst"), *wcols
-            )
-        )
-        .localCheckpoint(eager=True)
-    )
-    mass = F.sum("w") if weight_col else F.count("*")
-    deg = bidir.groupBy("src").agg(mass.alias("deg")).withColumnRenamed(
-        "src", "node"
-    )
+    bidir = _bidir(edges_canon, *wcols).localCheckpoint(eager=True)
+    deg = _degree(bidir, mass=F.sum("w") if weight_col else None)
     scols = [F.min("node").alias("seed")] if personalized else []
     stats = deg.agg(F.count("*").alias("n_nodes"), *scols)
     keep = ["node", "deg"] + (["seed"] if personalized else [])
@@ -319,21 +359,14 @@ def pagerank_integer(
         *keep, F.expr(f"{scale} div n_nodes").alias("base")
     )
     if personalized:
-        state = base.withColumn(
-            "rank",
-            F.when(F.col("node") == F.col("seed"), F.lit(scale)).otherwise(F.lit(0)),
-        )
+        at_seed = F.col("node") == F.col("seed")
+        state = base.withColumn("rank", F.when(at_seed, F.lit(scale)).otherwise(F.lit(0)))
+        teleport = F.when(at_seed, F.lit((teleport_pct * scale) // 100)).otherwise(F.lit(0))
     else:
         state = base.withColumn("rank", F.col("base"))
+        teleport = F.expr(f"({teleport_pct} * base) div 100")
     keep_pct = 100 - teleport_pct
     contrib_expr = "(rank * w) div deg" if weight_col else "rank div deg"
-    if personalized:
-        teleport = (
-            F.when(F.col("node") == F.col("seed"), F.lit((teleport_pct * scale) // 100))
-            .otherwise(F.lit(0))
-        )
-    else:
-        teleport = F.expr(f"({teleport_pct} * base) div 100")
     for _ in range(iterations):
         contrib = state.join(bidir, state["node"] == bidir["src"]).select(
             F.col("dst").alias("node"), F.expr(contrib_expr).alias("c")
@@ -363,14 +396,7 @@ def triangle_counts(edges_canon: DataFrame) -> DataFrame:
     which is what lets the DuckDB oracle use the simple id-ordered
     3-way self-join and still compare exactly.
     """
-    bidir = edges_canon.select(
-        F.col("part_a").alias("src"), F.col("part_b").alias("dst")
-    ).unionByName(
-        edges_canon.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
-    )
-    deg = bidir.groupBy("src").agg(F.count("*").alias("deg")).withColumnRenamed(
-        "src", "node"
-    )
+    deg = _degree(_bidir(edges_canon))
     # Attach both endpoint degrees, then orient low-(deg,id) → high.
     with_deg = (
         edges_canon.join(
@@ -423,7 +449,7 @@ def _pagerank_oracle_chain(
     node_type: str = "BIGINT", weighted: bool = False, personalized: bool = False
 ) -> str:
     """The 3-iteration integer-PageRank CTE chain, appended after an
-    ``edges(src, dst)`` CTE (bidirectional; with a ``w`` column when
+    ``e0(src, dst)`` CTE (bidirectional; with a ``w`` column when
     ``weighted``). Shared by gr01 (part nodes), gr03 (weighted), gr04
     (personalized — teleport conditionally at the min-id seed) and tx12
     (word nodes) so every oracle replays the IDENTICAL recurrence;
@@ -450,7 +476,7 @@ def _pagerank_oracle_chain(
         f"""
     , s{i} AS (
         SELECT e.dst AS node, CAST(SUM({contrib}) AS BIGINT) AS s
-        FROM r{i - 1} r JOIN edges e ON r.node = e.src GROUP BY 1
+        FROM r{i - 1} r JOIN e0 e ON r.node = e.src GROUP BY 1
     ), r{i} AS (
         SELECT b.node, b.deg{bseed}, b.base,
                {teleport}
@@ -463,7 +489,7 @@ def _pagerank_oracle_chain(
         f"""
     , deg AS (
         SELECT src AS node, CAST({mass} AS BIGINT) AS deg
-        FROM edges GROUP BY 1
+        FROM e0 GROUP BY 1
     ), n AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes{seed_sel} FROM deg
     ), base AS (
@@ -477,13 +503,7 @@ def _pagerank_oracle_chain(
 
 @query(
     "gr01_pagerank",
-    oracle=_COPURCHASE_EDGE_CTE
-    + """
-    , edges AS (
-        SELECT part_a AS src, part_b AS dst FROM copairs
-        UNION ALL
-        SELECT part_b, part_a FROM copairs
-    )"""
+    oracle=_copurchase_cte()
     + _pagerank_oracle_chain()
     + f"""
     SELECT node AS part, rank AS pr_micro
@@ -499,8 +519,6 @@ def gr01_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     See :func:`pagerank_integer` for why the recurrence runs in int64
     micro-units and how the per-iteration shuffles are keyed.
     """
-    from ..catalog import load_table
-
     edges = copurchase_edges(load_table(spark, sf_dir, "lineitem"))
     pr = pagerank_integer(edges)
     return (
@@ -508,10 +526,11 @@ def gr01_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("pr_micro"), F.asc("part"))
         .limit(20)
     )
-@query(
-    "gr02_triangle_counts",
-    oracle=_COPURCHASE_EDGE_CTE
-    + """
+
+
+# The oracle twin of triangle_counts (gr02, gr11): every triangle once
+# from the naive id-ordered 3-way self-join, one member row per corner.
+_TRIANGLE_MEMBER_CTE = """
     , tri AS (
         SELECT p1.part_a AS a, p1.part_b AS b, p2.part_b AS c
         FROM copairs p1
@@ -521,7 +540,14 @@ def gr01_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT a AS node FROM tri
         UNION ALL SELECT b FROM tri
         UNION ALL SELECT c FROM tri
-    )
+    )"""
+
+
+@query(
+    "gr02_triangle_counts",
+    oracle=_copurchase_cte()
+    + _TRIANGLE_MEMBER_CTE
+    + """
     SELECT node AS part, CAST(COUNT(*) AS BIGINT) AS n_tri
     FROM member GROUP BY node
     ORDER BY n_tri DESC, part LIMIT 20
@@ -537,8 +563,6 @@ def gr02_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves orientation-invariance by re-deriving the same triangle set
     from the naive id-ordered 3-way self-join.
     """
-    from ..catalog import load_table
-
     edges = copurchase_edges(load_table(spark, sf_dir, "lineitem"))
     return (
         triangle_counts(edges)
@@ -550,40 +574,20 @@ def gr02_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dd08_components_largestar",
-    oracle=_DD06_COMPONENT_CTE
-    + """
-    , sizes AS (
-        SELECT component, COUNT(*) AS csize FROM comp GROUP BY component
-    )
-    SELECT c.doc_id, c.component, s.csize
-    FROM comp c JOIN sizes s ON c.component = s.component
-    ORDER BY c.doc_id
-    """,
+    oracle=_DD06_REPORT_SQL,
 )
 def dd08_components_largestar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dd06's near-dup components recomputed by large-star/small-star.
+    """dd06's near-dup component report under its large-star name.
 
-    Deliberately the SAME answer as dd06 over the same MinHash-LSH edge
-    relation (and the same brute-force recursive-CTE oracle): what
-    changes is the round complexity of the component step — O(log n)
-    alternating rounds instead of diameter-many propagation rounds.
-    On the shallow near-dup graph both finish in a handful of rounds;
-    the pytest demonstrates the separation on a 64-node chain (6 rounds
-    vs 63) where this algorithm is the only viable one at scale.
+    Large-star/small-star is the component engine of every consumer
+    (see :func:`components_large_small_star`), so this is dd06's plan
+    and oracle; the pytest demonstrates the algorithm's O(log n) round
+    bound on a 96-node chain, where min-label propagation would need
+    diameter-many rounds.
     """
-    from .dedup import _shingle_set, neardup_edges
-    from ..catalog import load_table, spread_scan
+    from .dedup import dd06_neardup_components
 
-    documents = spread_scan(load_table(spark, sf_dir, "documents"))
-    docs = documents.select("doc_id", _shingle_set(F.col("text")).alias("ws"))
-    pairs = neardup_edges(docs, "ws", threshold=0.5, use_lsh=True)
-    comp = components_large_small_star(pairs)
-    sizes = comp.groupBy("component").agg(F.count("*").alias("csize"))
-    return (
-        comp.join(sizes, "component")
-        .select("doc_id", "component", "csize")
-        .orderBy("doc_id")
-    )
+    return dd06_neardup_components(spark, sf_dir)
 
 
 @query(
@@ -595,15 +599,12 @@ def dd08_components_largestar(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT t, UNNEST(RANGE(1, LEN(t))) AS i FROM toks WHERE LEN(t) >= 2
     ), adj AS (
         SELECT t[i] AS a, t[i + 1] AS b FROM raw
-    ), wpairs AS (
-        SELECT DISTINCT LEAST(a, b) AS wa, GREATEST(a, b) AS wb
+    ), copairs AS (
+        SELECT DISTINCT LEAST(a, b) AS part_a, GREATEST(a, b) AS part_b
         FROM adj
         WHERE LENGTH(a) >= 3 AND LENGTH(b) >= 3 AND a <> b
-    ), edges AS (
-        SELECT wa AS src, wb AS dst FROM wpairs
-        UNION ALL
-        SELECT wb, wa FROM wpairs
     )"""
+    + _e0_cte()
     + _pagerank_oracle_chain(node_type="VARCHAR")
     + f"""
     SELECT node AS word, rank AS pr_micro
@@ -629,8 +630,6 @@ def tx12_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation; PageRank then runs on a vocabulary-sized graph regardless
     of corpus size — the corpus-sized work is exactly one scan.
     """
-    from ..catalog import load_table
-
     documents = load_table(spark, sf_dir, "documents")
     t = F.split(F.lower(F.col("text")), " ")
     sz = F.size(t)
@@ -659,57 +658,9 @@ def tx12_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def copurchase_edges_weighted(lineitem: DataFrame) -> DataFrame:
-    """(part_a < part_b, w) co-purchase edges, w = co-occurrence count.
-
-    Same blocked self-join as :func:`copurchase_edges`, but the
-    groupBy keeps the number of distinct 1995 orders each pair shared —
-    the natural edge weight for the ranking variants.
-    """
-    items = (
-        lineitem.filter(
-            (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1996-01-01").cast("timestamp"))
-        )
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = items.alias("a"), items.alias("b")
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a.l_orderkey") == F.col("b.l_orderkey"),
-                F.col("a.l_partkey") < F.col("b.l_partkey"),
-            ],
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("part_a"),
-            F.col("b.l_partkey").alias("part_b"),
-        )
-        .agg(F.count("*").alias("w"))
-    )
-
-
 @query(
     "gr03_weighted_pagerank",
-    oracle=_COPURCHASE_EDGE_CTE.replace(
-        """        SELECT a.l_partkey AS part_a, b.l_partkey AS part_b
-        FROM items a JOIN items b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2""",
-        """        SELECT a.l_partkey AS part_a, b.l_partkey AS part_b,
-               CAST(COUNT(*) AS BIGINT) AS w
-        FROM items a JOIN items b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2""",
-    )
-    + """
-    , edges AS (
-        SELECT part_a AS src, part_b AS dst, w FROM copairs
-        UNION ALL
-        SELECT part_b, part_a, w FROM copairs
-    )"""
+    oracle=_copurchase_cte(weighted=True)
     + _pagerank_oracle_chain(weighted=True)
     + f"""
     SELECT node AS part, rank AS pr_micro
@@ -728,8 +679,6 @@ def gr03_weighted_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     generated oracle chain with the weighted terms switched in; see
     :func:`pagerank_integer`.
     """
-    from ..catalog import load_table
-
     edges = copurchase_edges_weighted(load_table(spark, sf_dir, "lineitem"))
     pr = pagerank_integer(edges, weight_col="w")
     return (
@@ -739,35 +688,9 @@ def gr03_weighted_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def personalized_pagerank_integer(
-    edges_canon: DataFrame,
-    iterations: int = PR_ITERATIONS,
-    scale: int = PR_SCALE,
-    teleport_pct: int = PR_TELEPORT_PCT,
-) -> DataFrame:
-    """Personalized PageRank → (node, rank, seed): thin wrapper over
-    :func:`pagerank_integer` with ``personalized=True`` — all teleport
-    mass restarts at the seed (min node id), so rank measures graph
-    proximity to it (related-items semantics). One recurrence core,
-    four query surfaces (gr01/gr03/gr04/tx12)."""
-    return pagerank_integer(
-        edges_canon,
-        iterations=iterations,
-        scale=scale,
-        teleport_pct=teleport_pct,
-        personalized=True,
-    )
-
-
 @query(
     "gr04_personalized_pagerank",
-    oracle=_COPURCHASE_EDGE_CTE
-    + """
-    , edges AS (
-        SELECT part_a AS src, part_b AS dst FROM copairs
-        UNION ALL
-        SELECT part_b, part_a FROM copairs
-    )"""
+    oracle=_copurchase_cte()
     + _pagerank_oracle_chain(personalized=True)
     + f"""
     SELECT node AS part, rank AS ppr_micro
@@ -784,18 +707,38 @@ def gr04_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     proximity to it — direct co-purchases score highest, then their
     co-purchases, decaying with distance. The seed itself is excluded
     from the answer (it holds the teleport mass by construction). See
-    :func:`personalized_pagerank_integer` for the integer recurrence.
+    :func:`pagerank_integer` (``personalized=True``) for the integer
+    recurrence.
     """
-    from ..catalog import load_table
-
     edges = copurchase_edges(load_table(spark, sf_dir, "lineitem"))
-    ppr = personalized_pagerank_integer(edges)
+    ppr = pagerank_integer(edges, personalized=True)
     return (
         ppr.filter(F.col("node") != F.col("seed"))
         .select(F.col("node").alias("part"), F.col("rank").alias("ppr_micro"))
         .orderBy(F.desc("ppr_micro"), F.asc("part"))
         .limit(20)
     )
+
+
+def _nodes(bidir: DataFrame) -> DataFrame:
+    """(node): every node with at least one edge."""
+    return bidir.select(F.col("src").alias("node")).distinct()
+
+
+def _peel(bidir: DataFrame, alive: DataFrame, k: int) -> tuple[DataFrame, DataFrame]:
+    """One k-core peel round → (deg, next_alive).
+
+    ``deg`` is (node, core_deg) within the subgraph induced by
+    ``alive``: two node-keyed semi-joins plus one map-side-combined
+    count. ``next_alive`` (its nodes with core_deg ≥ k) is eagerly
+    localCheckpointed, so the unrolled lazy plan never re-derives the
+    previous round per reference and lineage stays shallow.
+    """
+    e = bidir.join(alive, bidir["src"] == alive["node"], "left_semi")
+    e = e.join(alive, e["dst"] == alive["node"], "left_semi")
+    deg = _degree(e, "core_deg")
+    alive_next = deg.filter(F.col("core_deg") >= k).select("node")
+    return deg, alive_next.localCheckpoint(eager=True)
 
 
 KCORE_K = 4
@@ -821,34 +764,18 @@ def kcore_bounded(
     (one count() per round — the standard coordinator pattern for
     unbounded iteration; the pytest proves it matches the bounded form).
 
-    Scale: each round is two semi-joins keyed on the node id plus one
-    map-side-combined degree count — shuffles stay on one key family.
-    The alive set shrinks monotonically and is localCheckpoint-ed per
-    round, both to stop the unrolled lazy plan re-deriving round r-1
-    twice per reference and to keep lineage shallow. Round count is
-    bounded by the peel depth, which for power-law graphs is small
-    (degeneracy ordering, not diameter).
+    Scale: each round is one :func:`_peel` (shuffles on the node-key
+    family, alive set checkpointed per round). The alive set shrinks
+    monotonically, and the round count is bounded by the peel depth,
+    which for power-law graphs is small (degeneracy ordering, not
+    diameter).
     """
-    bidir = (
-        edges_canon.select(F.col("part_a").alias("src"), F.col("part_b").alias("dst"))
-        .unionByName(
-            edges_canon.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
-        )
-        .localCheckpoint(eager=True)
-    )
-    alive = bidir.select(F.col("src").alias("node")).distinct().localCheckpoint(eager=True)
-    deg = None
+    bidir = _bidir(edges_canon).localCheckpoint(eager=True)
+    alive = _nodes(bidir).localCheckpoint(eager=True)
     prev_n = alive.count() if rounds is None else None
     r = 0
     while True:
-        e = bidir.join(alive, bidir["src"] == alive["node"], "left_semi")
-        e = e.join(alive, e["dst"] == alive["node"], "left_semi")
-        deg = e.groupBy("src").agg(F.count("*").alias("core_deg")).withColumnRenamed(
-            "src", "node"
-        )
-        alive = (
-            deg.filter(F.col("core_deg") >= k).select("node").localCheckpoint(eager=True)
-        )
+        deg, alive = _peel(bidir, alive, k)
         r += 1
         if rounds is None:
             n = alive.count()
@@ -872,10 +799,7 @@ def _kcore_chain(k: int, rounds: int) -> str:
     cost linear in rounds, matching how the Spark side
     localCheckpoints each round."""
     head = """
-    , e0 AS MATERIALIZED (
-        SELECT part_a AS src, part_b AS dst FROM copairs
-        UNION ALL SELECT part_b, part_a FROM copairs
-    ), alive0 AS MATERIALIZED (SELECT DISTINCT src AS node FROM e0)"""
+    , alive0 AS MATERIALIZED (SELECT DISTINCT src AS node FROM e0)"""
     body = "".join(
         f"""
     , d{r} AS MATERIALIZED (
@@ -890,20 +814,15 @@ def _kcore_chain(k: int, rounds: int) -> str:
     return head + body
 
 
-def _kcore_oracle(k: int, rounds: int) -> str:
-    return (
-        _kcore_chain(k, rounds)
-        + f"""
-    SELECT node AS part, core_deg
-    FROM d{rounds} WHERE core_deg >= {k}
-    ORDER BY part
-    """
-    )
-
-
 @query(
     "gr05_kcore",
-    oracle=_COPURCHASE_EDGE_CTE.rstrip() + _kcore_oracle(KCORE_K, KCORE_ROUNDS),
+    oracle=_copurchase_cte()
+    + _kcore_chain(KCORE_K, KCORE_ROUNDS)
+    + f"""
+    SELECT node AS part, core_deg
+    FROM d{KCORE_ROUNDS} WHERE core_deg >= {KCORE_K}
+    ORDER BY part
+    """,
 )
 def gr05_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The {K}-core of the 1995 co-purchase graph: parts that survive
@@ -919,8 +838,6 @@ def gr05_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SURVEY.md §2 extras), same bounded-iteration oracle discipline as
     gr01/gr03/gr04/tx12.
     """
-    from ..catalog import load_table
-
     edges = copurchase_edges(load_table(spark, sf_dir, "lineitem"))
     return (
         kcore_bounded(edges, KCORE_K, KCORE_ROUNDS)
@@ -950,33 +867,17 @@ def onion_layers(
     peeled in the same round has no degree row at all, and the
     difference form catches it where the filter form would drop it).
     """
-    bidir = (
-        edges_canon.select(F.col("part_a").alias("src"), F.col("part_b").alias("dst"))
-        .unionByName(
-            edges_canon.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
-        )
-        .localCheckpoint(eager=True)
-    )
-    alive = bidir.select(F.col("src").alias("node")).distinct().localCheckpoint(eager=True)
+    bidir = _bidir(edges_canon).localCheckpoint(eager=True)
+    alive = _nodes(bidir).localCheckpoint(eager=True)
     layers = []
     for r in range(1, rounds + 1):
-        e = bidir.join(alive, bidir["src"] == alive["node"], "left_semi")
-        e = e.join(alive, e["dst"] == alive["node"], "left_semi")
-        deg = e.groupBy("src").agg(F.count("*").alias("core_deg")).withColumnRenamed(
-            "src", "node"
-        )
-        alive_next = (
-            deg.filter(F.col("core_deg") >= k).select("node").localCheckpoint(eager=True)
-        )
+        _, alive_next = _peel(bidir, alive, k)
         layers.append(
             alive.exceptAll(alive_next).select("node", F.lit(r).alias("layer"))
         )
         alive = alive_next
     layers.append(alive.select("node", F.lit(0).alias("layer")))
-    out = layers[0]
-    for df in layers[1:]:
-        out = out.unionByName(df)
-    return out
+    return reduce(DataFrame.unionByName, layers)
 
 
 def _onion_oracle(rounds: int) -> str:
@@ -1006,7 +907,7 @@ def _onion_oracle(rounds: int) -> str:
 
 @query(
     "gr06_onion_layers",
-    oracle=_COPURCHASE_EDGE_CTE.rstrip()
+    oracle=_copurchase_cte()
     + _kcore_chain(ONION_K, ONION_ROUNDS)
     + _onion_oracle(ONION_ROUNDS),
 )
@@ -1023,8 +924,6 @@ def gr06_onion_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Parity: graph-analytics family beyond the reference's surface
     (SURVEY.md §2 extras); shares gr05's unrolled-chain oracle.
     """
-    from ..catalog import load_table
-
     edges = copurchase_edges(load_table(spark, sf_dir, "lineitem"))
     return (
         onion_layers(edges, ONION_K, ONION_ROUNDS)
@@ -1065,21 +964,13 @@ def label_propagation(
     map-side-combined (node, label) count, and one per-node argmax
     window over the count relation — shuffles stay on the node key
     family, and each round's label relation is localCheckpointed (the
-    kcore_bounded rationale: stop the unrolled lazy plan re-deriving
-    round r−1 per reference).
+    :func:`_peel` rationale).
     """
     from pyspark.sql import Window
 
-    bidir = (
-        edges_canon.select(F.col("part_a").alias("src"), F.col("part_b").alias("dst"))
-        .unionByName(
-            edges_canon.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
-        )
-        .localCheckpoint(eager=True)
-    )
+    bidir = _bidir(edges_canon).localCheckpoint(eager=True)
     labels = (
-        bidir.select(F.col("src").alias("node"))
-        .distinct()
+        _nodes(bidir)
         .select("node", F.col("node").alias("label"))
         .localCheckpoint(eager=True)
     )
@@ -1103,10 +994,7 @@ def _lpa_chain(rounds: int) -> str:
     _kcore_chain lesson (each lab_r is referenced by the next round's
     join — default inlining re-expands the upstream chain)."""
     head = """
-    , e0 AS MATERIALIZED (
-        SELECT part_a AS src, part_b AS dst FROM copairs
-        UNION ALL SELECT part_b, part_a FROM copairs
-    ), lab0 AS MATERIALIZED (
+    , lab0 AS MATERIALIZED (
         SELECT DISTINCT src AS node, src AS label FROM e0
     )"""
     body = "".join(
@@ -1128,7 +1016,7 @@ def _lpa_chain(rounds: int) -> str:
 
 @query(
     "gr07_lpa_communities",
-    oracle=_COPURCHASE_EDGE_CTE.rstrip()
+    oracle=_copurchase_cte()
     + _lpa_chain(LPA_ROUNDS)
     + f"""
     SELECT label AS community, CAST(COUNT(*) AS BIGINT) AS n_members
@@ -1154,8 +1042,6 @@ def gr07_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's co-ownership network analysis is the seed —
     cbddl/src/analytics/network_analyzer.py).
     """
-    from ..catalog import load_table
-
     labels = label_propagation(copurchase_edges(load_table(spark, sf_dir, "lineitem")))
     return (
         labels.groupBy(F.col("label").alias("community"))
@@ -1169,6 +1055,25 @@ def gr07_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BFS_ROUNDS = 4
 BFS_SEED_MOD = 13
+
+
+def _relax(bidir: DataFrame, dist: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:
+    """One synchronous BFS relaxation of (*keys, node, dist): the min
+    over the previous relation and every edge one hop out of it, per
+    (*keys, node). One node-keyed join plus one map-side-combined
+    groupBy-min; the result is eagerly localCheckpointed (the
+    :func:`_peel` rationale). ``keys`` carries a per-source key through
+    the hop, e.g. gr12's landmark ``seed``.
+    """
+    relaxed = bidir.join(dist, bidir["dst"] == dist["node"]).select(
+        *keys, F.col("src").alias("node"), (F.col("dist") + F.lit(1)).alias("dist")
+    )
+    return (
+        dist.unionByName(relaxed)
+        .groupBy(*keys, "node")
+        .agg(F.min("dist").alias("dist"))
+        .localCheckpoint(eager=True)
+    )
 
 
 def bfs_hops(
@@ -1192,22 +1097,13 @@ def bfs_hops(
     divides ``seed_mod`` plus the minimum node id, so the seed set is
     deterministic AND provably non-empty on any graph.
 
-    Scale shape: each round is one join keyed on the node id plus one
-    map-side-combined groupBy-min — the PageRank exchange layout, all
-    shuffles on the node-key family. The dist relation only ever holds
-    REACHED nodes (frontier-compact: unreached nodes never materialize
-    a row until a relaxation reaches them), and each round is
-    localCheckpointed so the unrolled lazy plan does not re-derive
-    round r−1 per reference (the kcore_bounded rationale).
+    Scale shape: each round is one :func:`_relax` — the PageRank
+    exchange layout, all shuffles on the node-key family. The dist
+    relation only ever holds REACHED nodes (frontier-compact: unreached
+    nodes never materialize a row until a relaxation reaches them).
     """
-    bidir = (
-        edges_canon.select(F.col("part_a").alias("src"), F.col("part_b").alias("dst"))
-        .unionByName(
-            edges_canon.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
-        )
-        .localCheckpoint(eager=True)
-    )
-    nodes = bidir.select(F.col("src").alias("node")).distinct()
+    bidir = _bidir(edges_canon).localCheckpoint(eager=True)
+    nodes = _nodes(bidir)
     dist = (
         nodes.filter(F.col("node") % seed_mod == 0)
         .unionByName(nodes.agg(F.min("node").alias("node")))
@@ -1216,53 +1112,44 @@ def bfs_hops(
         .localCheckpoint(eager=True)
     )
     for _ in range(rounds):
-        relaxed = bidir.join(dist, bidir["dst"] == dist["node"]).select(
-            F.col("src").alias("node"), (F.col("dist") + F.lit(1)).alias("dist")
-        )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
+        dist = _relax(bidir, dist)
     return dist
 
 
-def _bfs_chain(rounds: int, seed_mod: int) -> str:
-    """Unrolled BFS CTEs after ``copairs``; MATERIALIZED per the
+def _relax_chain(rounds: int, keys: tuple[str, ...] = ()) -> str:
+    """Unrolled :func:`_relax` CTEs d1..d{rounds} over ``e0``, starting
+    from the caller's ``d0(*keys, node, dist)``; MATERIALIZED per the
     _kcore_chain lesson (each d_r is referenced twice by round r+1)."""
-    head = f"""
-    , e0 AS MATERIALIZED (
-        SELECT part_a AS src, part_b AS dst FROM copairs
-        UNION ALL SELECT part_b, part_a FROM copairs
-    ), n0 AS MATERIALIZED (
-        SELECT DISTINCT src AS node FROM e0
-    ), d0 AS MATERIALIZED (
-        SELECT node, CAST(0 AS BIGINT) AS dist FROM (
-            SELECT node FROM n0 WHERE node % {seed_mod} = 0
-            UNION
-            SELECT MIN(node) FROM n0
-        )
-    )"""
-    body = "".join(
+    k = "".join(f"{c}, " for c in keys)
+    dk = "".join(f"d.{c}, " for c in keys)
+    return "".join(
         f"""
     , d{r} AS MATERIALIZED (
-        SELECT node, MIN(dist) AS dist FROM (
-            SELECT node, dist FROM d{r - 1}
+        SELECT {k}node, MIN(dist) AS dist FROM (
+            SELECT {k}node, dist FROM d{r - 1}
             UNION ALL
-            SELECT e.src AS node, d.dist + 1 AS dist
+            SELECT {dk}e.src AS node, d.dist + 1 AS dist
             FROM e0 e JOIN d{r - 1} d ON e.dst = d.node
-        ) GROUP BY node
+        ) GROUP BY {k}node
     )"""
         for r in range(1, rounds + 1)
     )
-    return head + body
 
 
 @query(
     "gr08_bfs_hops",
-    oracle=_COPURCHASE_EDGE_CTE.rstrip()
-    + _bfs_chain(BFS_ROUNDS, BFS_SEED_MOD)
+    oracle=_copurchase_cte()
+    + f"""
+    , n0 AS MATERIALIZED (
+        SELECT DISTINCT src AS node FROM e0
+    ), d0 AS MATERIALIZED (
+        SELECT node, CAST(0 AS BIGINT) AS dist FROM (
+            SELECT node FROM n0 WHERE node % {BFS_SEED_MOD} = 0
+            UNION
+            SELECT MIN(node) FROM n0
+        )
+    )"""
+    + _relax_chain(BFS_ROUNDS)
     + f"""
     SELECT COALESCE(d.dist, -1) AS hops, CAST(COUNT(*) AS BIGINT) AS n_nodes
     FROM n0 n LEFT JOIN d{BFS_ROUNDS} d ON n.node = d.node
@@ -1286,8 +1173,6 @@ def gr08_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     cbddl/src/analytics/network_analyzer.py's co-ownership distance
     views).
     """
-    from ..catalog import load_table
-
     edges = copurchase_edges(load_table(spark, sf_dir, "lineitem")).localCheckpoint(
         eager=True
     )
@@ -1312,14 +1197,38 @@ LP_MAX_DEG = 64  # wedge-center degree cap: bounds candidate volume
 LP_TOP = 20
 
 
+def link_candidates(edges_canon: DataFrame) -> DataFrame:
+    """(u < v, common_neighbors) for every NON-adjacent pair sharing a
+    wedge center of degree ≤ LP_MAX_DEG — gr09's candidate relation
+    before ranking. The neighbor relation is eagerly localCheckpointed
+    because both sides of the wedge self-join read it."""
+    bidir = _bidir(edges_canon)
+    # Not _degree: the join is on ``src``, and renaming _degree's
+    # ``node`` back would add a projection to the plan.
+    deg = bidir.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    nb = (
+        bidir.join(deg.filter(F.col("deg") <= LP_MAX_DEG).select("src"), "src")
+        .select(F.col("src").alias("w"), F.col("dst").alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    a, b = nb.alias("a"), nb.alias("b")
+    cn = (
+        a.join(b, on=[F.col("a.w") == F.col("b.w"), F.col("a.n") < F.col("b.n")])
+        .groupBy(F.col("a.n").alias("u"), F.col("b.n").alias("v"))
+        .agg(F.count(F.lit(1)).alias("common_neighbors"))
+    )
+    return cn.join(
+        edges_canon,
+        on=[cn["u"] == edges_canon["part_a"], cn["v"] == edges_canon["part_b"]],
+        how="left_anti",
+    )
+
+
 @query(
     "gr09_link_prediction",
-    oracle=_COPURCHASE_EDGE_CTE.rstrip()
+    oracle=_copurchase_cte()
     + f"""
-    , e0 AS MATERIALIZED (
-        SELECT part_a AS src, part_b AS dst FROM copairs
-        UNION ALL SELECT part_b, part_a FROM copairs
-    ), deg AS MATERIALIZED (
+    , deg AS MATERIALIZED (
         SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS deg FROM e0 GROUP BY src
     ), nb AS MATERIALIZED (
         SELECT e.src AS w, e.dst AS n
@@ -1361,34 +1270,11 @@ def gr09_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     Parity: beyond-reference (§2.11 graph-analytics extension; seed
     cbddl/src/analytics/network_analyzer.py's co-ownership link views).
     """
-    from ..catalog import load_table
-
     edges = copurchase_edges(load_table(spark, sf_dir, "lineitem")).localCheckpoint(
         eager=True
     )
-    bidir = edges.select(
-        F.col("part_a").alias("src"), F.col("part_b").alias("dst")
-    ).unionByName(
-        edges.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
-    )
-    deg = bidir.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    nb = (
-        bidir.join(deg.filter(F.col("deg") <= LP_MAX_DEG).select("src"), "src")
-        .select(F.col("src").alias("w"), F.col("dst").alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    a, b = nb.alias("a"), nb.alias("b")
-    cn = (
-        a.join(b, on=[F.col("a.w") == F.col("b.w"), F.col("a.n") < F.col("b.n")])
-        .groupBy(F.col("a.n").alias("u"), F.col("b.n").alias("v"))
-        .agg(F.count(F.lit(1)).alias("common_neighbors"))
-    )
     return (
-        cn.join(
-            edges,
-            on=[cn["u"] == edges["part_a"], cn["v"] == edges["part_b"]],
-            how="left_anti",
-        )
+        link_candidates(edges)
         .orderBy(F.desc("common_neighbors"), "u", "v")
         .limit(LP_TOP)
     )
@@ -1399,12 +1285,9 @@ def gr09_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "gr10_degree_assortativity",
-    oracle=_COPURCHASE_EDGE_CTE.rstrip()
+    oracle=_copurchase_cte()
     + """
-    , e0 AS MATERIALIZED (
-        SELECT part_a AS src, part_b AS dst FROM copairs
-        UNION ALL SELECT part_b, part_a FROM copairs
-    ), deg AS MATERIALIZED (
+    , deg AS MATERIALIZED (
         SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS deg FROM e0 GROUP BY src
     ), endp AS (
         SELECT ds.deg AS x, dd.deg AS y
@@ -1455,19 +1338,13 @@ def gr10_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Parity: beyond-reference (§2.11 graph-analytics extension; seed
     cbddl/src/analytics/network_analyzer.py).
     """
-    from ..catalog import load_table
-
     edges = copurchase_edges(load_table(spark, sf_dir, "lineitem"))
-    bidir = edges.select(
-        F.col("part_a").alias("src"), F.col("part_b").alias("dst")
-    ).unionByName(
-        edges.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
-    ).localCheckpoint(eager=True)
-    deg = bidir.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    bidir = _bidir(edges).localCheckpoint(eager=True)
+    deg = _degree(bidir)
     endp = (
-        bidir.join(deg.select(F.col("src").alias("s"), F.col("deg").alias("x")),
+        bidir.join(deg.select(F.col("node").alias("s"), F.col("deg").alias("x")),
                    bidir["src"] == F.col("s"))
-        .join(deg.select(F.col("src").alias("d"), F.col("deg").alias("y")),
+        .join(deg.select(F.col("node").alias("d"), F.col("deg").alias("y")),
               bidir["dst"] == F.col("d"))
         .select("x", "y")
     )
@@ -1500,22 +1377,11 @@ CC_MIN_DEG = 2  # coefficient undefined below 2 neighbors
 
 @query(
     "gr11_clustering_coefficient",
-    oracle=_COPURCHASE_EDGE_CTE
+    oracle=_copurchase_cte()
+    + _TRIANGLE_MEMBER_CTE
     + f"""
-    , tri AS (
-        SELECT p1.part_a AS a, p1.part_b AS b, p2.part_b AS c
-        FROM copairs p1
-        JOIN copairs p2 ON p1.part_b = p2.part_a
-        JOIN copairs p3 ON p3.part_a = p1.part_a AND p3.part_b = p2.part_b
-    ), member AS (
-        SELECT a AS node FROM tri
-        UNION ALL SELECT b FROM tri
-        UNION ALL SELECT c FROM tri
-    ), tcnt AS (
+    , tcnt AS (
         SELECT node, CAST(COUNT(*) AS BIGINT) AS n_tri FROM member GROUP BY node
-    ), e0 AS (
-        SELECT part_a AS src, part_b AS dst FROM copairs
-        UNION ALL SELECT part_b, part_a FROM copairs
     ), deg AS (
         SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS deg FROM e0 GROUP BY src
     )
@@ -1552,22 +1418,16 @@ def gr11_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     Parity: beyond-reference (§2.11 graph-analytics extension; seed
     cbddl/src/analytics/network_analyzer.py's cohesion views).
     """
-    from ..catalog import load_table
-
     edges = copurchase_edges(load_table(spark, sf_dir, "lineitem")).localCheckpoint(
         eager=True
     )
-    tcnt = triangle_counts(edges)
-    bidir = edges.select(
-        F.col("part_a").alias("src"), F.col("part_b").alias("dst")
-    ).unionByName(
-        edges.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
-    )
-    deg = bidir.groupBy(F.col("src").alias("node")).agg(
+    # Not _degree: its rename projection would sit above the deg filter
+    # here instead of being folded into the aggregate.
+    deg = _bidir(edges).groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
     return (
-        deg.join(tcnt, "node", "left")
+        deg.join(triangle_counts(edges), "node", "left")
         .filter(F.col("deg") >= CC_MIN_DEG)
         .select(
             "node",
@@ -1590,45 +1450,24 @@ HARMONIC_K = 8  # fixed landmark panel: the K smallest node ids
 HARMONIC_ROUNDS = 4  # same bounded-radius convention as gr08
 
 
-def _harmonic_chain(rounds: int, k: int) -> str:
-    """Unrolled per-seed BFS CTEs after ``copairs`` (seed carried in the
-    state relation); MATERIALIZED per the _kcore_chain lesson."""
-    head = f"""
-    , e0 AS MATERIALIZED (
-        SELECT part_a AS src, part_b AS dst FROM copairs
-        UNION ALL SELECT part_b, part_a FROM copairs
-    ), n0 AS MATERIALIZED (
-        SELECT DISTINCT src AS node FROM e0
-    ), seeds AS MATERIALIZED (
-        SELECT node AS seed FROM n0 ORDER BY node LIMIT {k}
-    ), h0 AS MATERIALIZED (
-        SELECT seed, seed AS node, CAST(0 AS BIGINT) AS dist FROM seeds
-    )"""
-    body = "".join(
-        f"""
-    , h{r} AS MATERIALIZED (
-        SELECT seed, node, MIN(dist) AS dist FROM (
-            SELECT seed, node, dist FROM h{r - 1}
-            UNION ALL
-            SELECT d.seed, e.src AS node, d.dist + 1 AS dist
-            FROM e0 e JOIN h{r - 1} d ON e.dst = d.node
-        ) GROUP BY seed, node
-    )"""
-        for r in range(1, rounds + 1)
-    )
-    return head + body
-
-
 @query(
     "gr12_harmonic_centrality",
-    oracle=_COPURCHASE_EDGE_CTE.rstrip()
-    + _harmonic_chain(HARMONIC_ROUNDS, HARMONIC_K)
+    oracle=_copurchase_cte()
+    + f"""
+    , n0 AS MATERIALIZED (
+        SELECT DISTINCT src AS node FROM e0
+    ), seeds AS MATERIALIZED (
+        SELECT node AS seed FROM n0 ORDER BY node LIMIT {HARMONIC_K}
+    ), d0 AS MATERIALIZED (
+        SELECT seed, seed AS node, CAST(0 AS BIGINT) AS dist FROM seeds
+    )"""
+    + _relax_chain(HARMONIC_ROUNDS, ("seed",))
     + f"""
     SELECT seed,
            CAST(COUNT(CASE WHEN dist >= 1 THEN 1 END) AS BIGINT) AS n_reached,
            CAST(COALESCE(SUM(CASE WHEN dist >= 1 THEN 1000 // dist END), 0)
                 AS BIGINT) AS harmonic_milli
-    FROM h{HARMONIC_ROUNDS}
+    FROM d{HARMONIC_ROUNDS}
     GROUP BY seed
     ORDER BY seed
     """,
@@ -1652,29 +1491,16 @@ def gr12_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     1000 // dist per reached node — BIGINT end to end, no float SUM
     order to trap the driver hash (dist ∈ {{1..{HARMONIC_ROUNDS}}}).
     """
-    from ..catalog import load_table
-
     edges = copurchase_edges(load_table(spark, sf_dir, "lineitem")).localCheckpoint(
         eager=True
     )
-    bidir = edges.select(
-        F.col("part_a").alias("src"), F.col("part_b").alias("dst")
-    ).unionByName(edges.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst")))
-    nodes = bidir.select(F.col("src").alias("node")).distinct()
-    seeds = nodes.orderBy("node").limit(HARMONIC_K).select(F.col("node").alias("seed"))
+    bidir = _bidir(edges)
+    seeds = _nodes(bidir).orderBy("node").limit(HARMONIC_K).select(F.col("node").alias("seed"))
     dist = seeds.select(
         "seed", F.col("seed").alias("node"), F.lit(0).cast("long").alias("dist")
     ).localCheckpoint(eager=True)
     for _ in range(HARMONIC_ROUNDS):
-        relaxed = bidir.join(dist, bidir["dst"] == dist["node"]).select(
-            "seed", F.col("src").alias("node"), (F.col("dist") + F.lit(1)).alias("dist")
-        )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("seed", "node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
+        dist = _relax(bidir, dist, ("seed",))
     return (
         dist.groupBy("seed")
         .agg(

@@ -260,14 +260,12 @@ def inc02_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     (inc01's, lifted from algebraic aggregates to graph state).
     """
     from ..catalog import load_table, spread_scan
-    from .dedup import _shingle_set, components_from_pairs, neardup_edges
+    from .dedup import _shingle_set, neardup_edges
     from .graph import components_large_small_star
 
     documents = spread_scan(load_table(spark, sf_dir, "documents"))
     docs = documents.select("doc_id", _shingle_set(F.col("text")).alias("ws"))
-    all_edges = neardup_edges(docs, "ws", threshold=0.5, use_lsh=True).localCheckpoint(
-        eager=True
-    )
+    all_edges = neardup_edges(docs, "ws", threshold=0.5).localCheckpoint(eager=True)
     a_new = F.col("doc_a") % 7 == 0
     b_new = F.col("doc_b") % 7 == 0
     base_edges = all_edges.filter(~a_new & ~b_new)
@@ -284,9 +282,8 @@ def inc02_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("cb", F.col("doc_b")).alias("doc_b"),
         )
     )
-    # The quotient graph is delta-sized — the shallow propagation
-    # variant is the cheaper loop here (no log-round machinery needed).
-    q_labels = components_from_pairs(quotient).select(
+    # The quotient graph is delta-sized, so this second run is cheap.
+    q_labels = components_large_small_star(quotient).select(
         F.col("doc_id").alias("mid"), F.col("component").alias("final")
     )
 

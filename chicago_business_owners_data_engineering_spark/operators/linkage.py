@@ -15,7 +15,8 @@ the production pattern is **blocked fuzzy matching**:
    (``levenshtein`` is JVM whole-stage-codegen — no Python).
 3. CLUSTER: matched pairs are not transitive, so connected components
    turn pairwise matches into entities (reusing the same min-label
-   propagation as near-dup dedup, dedup.py:components_from_pairs).
+   large-star/small-star engine as near-dup dedup,
+   graph.py:components_large_small_star).
 4. SURVIVE: pick one canonical record per entity (cheapest listing),
    a ``min_by`` hash aggregate.
 
@@ -31,10 +32,11 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..registry import query
 
-# NOTE: components_from_pairs is imported inside er02 (not here):
-# dedup.py imports registry, registry imports every operator module,
-# and a module-level dedup import from HERE would leave dedup partially
-# initialized whenever dedup itself is the first module imported.
+# NOTE: components_large_small_star is imported inside the queries (not
+# here): graph.py imports registry, registry imports every operator
+# module, and a module-level graph import from HERE would leave graph
+# partially initialized whenever graph itself is the first module
+# imported.
 
 MAX_EDIT = 2
 
@@ -160,13 +162,13 @@ def er02_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     by min partkey — a single ``min_by`` hash aggregate with map-side
     combine, no per-entity sort.
     """
-    from .dedup import components_from_pairs
+    from .graph import components_large_small_star
 
     part = load_table(spark, sf_dir, "part")
     pairs = _blocked_pairs(part).select(
         F.col("part_a").alias("doc_a"), F.col("part_b").alias("doc_b")
     )
-    comp = components_from_pairs(pairs).select(
+    comp = components_large_small_star(pairs).select(
         F.col("doc_id").alias("p_partkey"), F.col("component").alias("entity_id")
     )
     priced = comp.join(part.select("p_partkey", "p_retailprice"), "p_partkey")
@@ -230,14 +232,14 @@ def er03_entity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     on summation order; integer money math is both the production
     practice and bit-deterministic everywhere.
     """
-    from .dedup import components_from_pairs
+    from .graph import components_large_small_star
 
     part = load_table(spark, sf_dir, "part")
     lineitem = load_table(spark, sf_dir, "lineitem")
     pairs = _blocked_pairs(part).select(
         F.col("part_a").alias("doc_a"), F.col("part_b").alias("doc_b")
     )
-    comp = components_from_pairs(pairs).select(
+    comp = components_large_small_star(pairs).select(
         F.col("doc_id").alias("p_partkey"), F.col("component").alias("entity_id")
     )
     rev_cc = F.round(F.col("l_extendedprice") * 100).cast("long") * (
@@ -330,13 +332,13 @@ def er04_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     row — whole-record); field-level resolution is the beyond-reference
     extension.
     """
-    from .dedup import components_from_pairs
+    from .graph import components_large_small_star
 
     part = load_table(spark, sf_dir, "part")
     pairs = _blocked_pairs(part).select(
         F.col("part_a").alias("doc_a"), F.col("part_b").alias("doc_b")
     )
-    comp = components_from_pairs(pairs).select(
+    comp = components_large_small_star(pairs).select(
         F.col("doc_id").alias("p_partkey"), F.col("component").alias("entity_id")
     )
     members = comp.join(part, "p_partkey").select(

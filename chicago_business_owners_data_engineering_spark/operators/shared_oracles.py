@@ -140,3 +140,16 @@ DD06_COMPONENT_CTE = (
     )
 """
 )
+
+# dd06's component report (doc_id, component, csize), which dd08 shares.
+DD06_REPORT_SQL = (
+    DD06_COMPONENT_CTE
+    + """
+    , sizes AS (
+        SELECT component, COUNT(*) AS csize FROM comp GROUP BY component
+    )
+    SELECT c.doc_id, c.component, s.csize
+    FROM comp c JOIN sizes s ON c.component = s.component
+    ORDER BY c.doc_id
+    """
+)

@@ -45,7 +45,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..operators.dedup import _shingle_set, components_from_pairs, neardup_edges
+from ..operators.dedup import _shingle_set, neardup_edges
+from ..operators.graph import components_large_small_star
 from ..operators.multimodal import SHARD_BUDGET_BYTES, shard_id_over
 
 # Gate thresholds live in shared_oracles (import-pure) so
@@ -134,7 +135,7 @@ def dedup_exact(docs: DataFrame) -> DataFrame:
     return docs.join(survivor, "doc_id", "left_semi")
 
 
-def dedup_near(docs: DataFrame, use_lsh_edges: bool = True) -> DataFrame:
+def dedup_near(docs: DataFrame) -> DataFrame:
     """Stage 2b: drop non-canonical members of near-dup clusters.
 
     Canonical = longest doc (ties → min doc_id) per connected
@@ -143,12 +144,10 @@ def dedup_near(docs: DataFrame, use_lsh_edges: bool = True) -> DataFrame:
     SURVIVORS this stage receives — not the raw table — so a
     gated-out or exact-deduped document can never bridge two
     otherwise-separate clusters and over-drop survivors. Edges come
-    from MinHash-LSH by default (the 100 TB path, no cross join);
-    ``use_lsh_edges=False`` selects the brute-force oracle twin.
+    from MinHash-LSH (the 100 TB path, no cross join).
     """
     shingled = docs.select("doc_id", _shingle_set(F.col("text")).alias("ws"))
-    pairs = neardup_edges(shingled, "ws", threshold=0.5, use_lsh=use_lsh_edges)
-    comp = components_from_pairs(pairs)
+    comp = components_large_small_star(neardup_edges(shingled, "ws", threshold=0.5))
     members = comp.join(docs.select("doc_id", "n_chars"), "doc_id")
     canonical = members.groupBy("component").agg(
         F.max_by(

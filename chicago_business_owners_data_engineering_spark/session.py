@@ -19,6 +19,7 @@ driver entry point, and the pipelines all run with the same posture:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -27,6 +28,23 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+def driver_memory_for(meminfo: str) -> str:
+    """Driver heap for a host, given its ``/proc/meminfo`` text: about
+    60% of MemTotal in whole GiB, at least 1g and at most 16g. The heap
+    is committed up front (see get_spark), so it must leave the rest of
+    the host's memory to the OS, the Python driver and its workers."""
+    kib = int(re.search(r"^MemTotal:\s+(\d+) kB", meminfo, re.M).group(1))
+    return f"{max(1, min(16, kib * 6 // 10 // 2**20))}g"
+
+
+def _host_driver_memory() -> str:
+    try:
+        with open("/proc/meminfo") as f:
+            return driver_memory_for(f.read())
+    except OSError:  # no procfs (not Linux): keep the former fixed size
+        return "16g"
 
 
 def get_spark(
@@ -41,7 +59,7 @@ def get_spark(
     harness; on a cluster, leave it unset and let spark-submit decide.
     """
     cpus = default_parallelism()
-    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY", "16g")
+    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY") or _host_driver_memory()
     # Commit + pre-touch the whole heap at JVM start (-Xms = -Xmx,
     # AlwaysPreTouch). Measured on this host (virtualized, lazily
     # faulted guest memory): a FIRST-touch page fault costs ~83 µs —

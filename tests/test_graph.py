@@ -12,7 +12,7 @@ from __future__ import annotations
 import random
 
 from chicago_business_owners_data_engineering_spark.operators.dedup import (
-    components_from_pairs,
+    components_propagation,
 )
 from chicago_business_owners_data_engineering_spark.operators.graph import (
     components_large_small_star,
@@ -27,25 +27,14 @@ def test_matches_propagation_on_random_graph(spark):
     rng = random.Random(11)
     # Three regimes in one graph: a dense blob, sparse random edges,
     # and singleton pairs — exercises dedup/ER-like cluster shapes.
-    # components_from_pairs defaults to large-star, so the independent
-    # twin is requested explicitly via engine="propagation".
     pairs = [(rng.randint(0, 29), rng.randint(0, 29)) for _ in range(60)]
     pairs += [(100 + rng.randint(0, 199), 100 + rng.randint(0, 199)) for _ in range(80)]
     pairs += [(1000, 1001), (2000, 2001)]
     pairs = [(a, b) for a, b in pairs if a != b]
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
     assert _components(components_large_small_star(df)) == _components(
-        components_from_pairs(df, engine="propagation")
+        components_propagation(df)
     )
-
-
-def test_default_engine_is_large_star(spark):
-    # The default engine must be the diameter-independent one; a long
-    # chain would be the pathological case for propagation.
-    df = spark.createDataFrame(
-        [(i, i + 1) for i in range(95)], "doc_a long, doc_b long"
-    )
-    assert _components(components_from_pairs(df)) == {(i, 0) for i in range(96)}
 
 
 def test_chain_converges_in_log_rounds(spark):
@@ -178,12 +167,12 @@ def test_personalized_pagerank_concentrates_near_seed(spark):
     # members rank lowest; total mass stays bounded by the scale.
     from chicago_business_owners_data_engineering_spark.operators.graph import (
         PR_SCALE,
-        personalized_pagerank_integer,
+        pagerank_integer,
     )
 
     pairs = [(0, 1), (0, 2), (1, 2), (2, 10), (10, 11), (10, 12), (11, 12)]
     df = spark.createDataFrame(pairs, "part_a long, part_b long")
-    out = personalized_pagerank_integer(df).collect()
+    out = pagerank_integer(df, personalized=True).collect()
     ranks = {r.node: r["rank"] for r in out}
     assert all(r.seed == 0 for r in out)
     # Proximity decay: every seed-clique member outranks every
@@ -325,6 +314,7 @@ def test_link_prediction_hand_computed_and_hub_cap(spark):
     predicted; an over-cap hub contributes no candidates."""
     from chicago_business_owners_data_engineering_spark.operators.graph import (
         LP_MAX_DEG,
+        link_candidates,
     )
 
     # u=1, v=2 share centers 10 and 11 (no 1-2 edge) -> cn 2.
@@ -339,32 +329,8 @@ def test_link_prediction_hand_computed_and_hub_cap(spark):
         "part_a long, part_b long",
     )
 
-    # Exercise the same plan the registry query builds, against an
-    # in-memory edge relation (mirror of gr09's body).
-    from pyspark.sql import functions as F
-
-    bidir = edges.select(
-        F.col("part_a").alias("src"), F.col("part_b").alias("dst")
-    ).unionByName(
-        edges.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
-    )
-    deg = bidir.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    nb = bidir.join(
-        deg.filter(F.col("deg") <= LP_MAX_DEG).select("src"), "src"
-    ).select(F.col("src").alias("w"), F.col("dst").alias("n"))
-    a, b = nb.alias("a"), nb.alias("b")
-    cn = (
-        a.join(b, on=[F.col("a.w") == F.col("b.w"), F.col("a.n") < F.col("b.n")])
-        .groupBy(F.col("a.n").alias("u"), F.col("b.n").alias("v"))
-        .agg(F.count(F.lit(1)).alias("common_neighbors"))
-    )
     pred = {
-        (r.u, r.v): r.common_neighbors
-        for r in cn.join(
-            edges,
-            on=[cn["u"] == edges["part_a"], cn["v"] == edges["part_b"]],
-            how="left_anti",
-        ).collect()
+        (r.u, r.v): r.common_neighbors for r in link_candidates(edges).collect()
     }
     assert pred[(1, 2)] == 2
     assert pred[(2, 3)] == 1

@@ -514,8 +514,8 @@ def test_er04_field_rules_on_real_clusters(spark, sf_dir):
     bound every member."""
     from collections import Counter
 
-    from chicago_business_owners_data_engineering_spark.operators.dedup import (
-        components_from_pairs,
+    from chicago_business_owners_data_engineering_spark.operators.graph import (
+        components_large_small_star,
     )
     from chicago_business_owners_data_engineering_spark.operators.linkage import (
         _blocked_pairs,
@@ -527,7 +527,7 @@ def test_er04_field_rules_on_real_clusters(spark, sf_dir):
         F.col("part_a").alias("doc_a"), F.col("part_b").alias("doc_b")
     )
     comp = {
-        r.doc_id: r.component for r in components_from_pairs(pairs).collect()
+        r.doc_id: r.component for r in components_large_small_star(pairs).collect()
     }
     members: dict[int, list] = {}
     for p in part.collect():

@@ -357,6 +357,29 @@ def test_gr12_isolated_seed_scores_zero(spark, tmp_path):
     assert got[10] == (2, 2000)
 
 
+def test_gr12_path_plus_star_hand_computed(spark, tmp_path):
+    # path 1-...-6 plus a star with hub 10 and leaves 11..14; the
+    # landmarks are the 8 smallest ids (1..6, 10, 11). Node 6 is 5 hops
+    # from seed 1, beyond the 4-round radius.
+    path = [(i, i + 1) for i in range(1, 6)]
+    star = [(10, leaf) for leaf in range(11, 15)]
+    _write_lineitem_edges(spark, tmp_path, path + star)
+    got = {
+        r.seed: (r.n_reached, r.harmonic_milli)
+        for r in QUERIES["gr12_harmonic_centrality"](spark, str(tmp_path)).collect()
+    }
+    assert got == {
+        1: (4, 1000 + 500 + 333 + 250),
+        2: (5, 2 * 1000 + 500 + 333 + 250),
+        3: (5, 2 * 1000 + 2 * 500 + 333),
+        4: (5, 2 * 1000 + 2 * 500 + 333),
+        5: (5, 2 * 1000 + 500 + 333 + 250),
+        6: (4, 1000 + 500 + 333 + 250),
+        10: (4, 4 * 1000),  # hub: every leaf one hop out
+        11: (4, 1000 + 3 * 500),  # leaf: hub, then the other leaves
+    }
+
+
 # ------------------------------------------------------------------
 # inc05: incremental top-k
 # ------------------------------------------------------------------

@@ -1,0 +1,25 @@
+"""The driver-heap sizing rule of session.get_spark."""
+
+from __future__ import annotations
+
+from chicago_business_owners_data_engineering_spark.session import driver_memory_for
+
+
+def _meminfo(total_kib: int) -> str:
+    return (
+        f"MemTotal:       {total_kib} kB\n"
+        "MemFree:         1234567 kB\n"
+        "MemAvailable:    2345678 kB\n"
+    )
+
+
+def test_heap_is_sixty_percent_of_memtotal_in_whole_gib():
+    # a 15.7 GiB host: 0.6 * 15.7 = 9.4 -> 9g, not the 16g that cannot start
+    assert driver_memory_for(_meminfo(16_479_424)) == "9g"
+    assert driver_memory_for(_meminfo(8 * 2**20)) == "4g"
+
+
+def test_heap_is_capped_at_16g_and_floored_at_1g():
+    assert driver_memory_for(_meminfo(256 * 2**20)) == "16g"
+    assert driver_memory_for(_meminfo(27 * 2**20)) == "16g"  # 16.2 -> cap
+    assert driver_memory_for(_meminfo(1 * 2**20)) == "1g"
