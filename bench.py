@@ -60,13 +60,10 @@ BENCH_QUERIES = [
     "skew01_salted_agg",
 ]
 
-# Extended set: operators added AFTER the headline set froze (freezing
-# keeps the headline total comparable round-over-round; this second
-# metric makes regressions in newer code visible). Same measurement
-# protocol; reported as extra keys on the same JSON line.
-# r06 note: the round-5 group was folded in here (VERDICT r5 #6), so the
-# extended TOTAL is not comparable across the r05/r06 boundary — the
-# per-query medians in query_stats are the round-over-round signal.
+# Extended set: every other bench query, one ordered manifest in the
+# order the operators shipped. Same measurement protocol as the headline
+# set; reported on its own detail line. Compare per-query medians in
+# query_stats, not totals across manifest changes.
 BENCH_EXTENDED = [
     "sim08_hybrid_search",
     "tx09_unigram_surprisal",
@@ -74,7 +71,6 @@ BENCH_EXTENDED = [
     "dq04_distribution_drift",
     "tp08_source_mixture_sample",
     "dd06_neardup_components",
-    # --- folded round-5 group (was BENCH_R5) ---
     "mon02_slo_burn_rate",
     "dq15_profile_drift",
     "inc04_incremental_neardup_probe",
@@ -88,11 +84,6 @@ BENCH_EXTENDED = [
     "ts14_ewma_anomaly",
     "tp20_source_overlap_matrix",
     "f27_time_to_convert",
-]
-
-# Round-3 additions (same freezing rationale: each round's new
-# operators get their own comparable total).
-BENCH_R3 = [
     "er01_blocked_fuzzy_pairs",
     "er02_entity_clusters",
     "inc01_incremental_rollup",
@@ -104,10 +95,6 @@ BENCH_R3 = [
     "sim09_pq_topk",
     "tp11_length_buckets",
     "tp12_weighted_sample",
-]
-
-# Round-3 tail additions (post r3-group freeze).
-BENCH_R3B = [
     "dd08_components_largestar",
     "dd09_duplicate_spans",
     "wh03_snapshot_diff",
@@ -118,11 +105,6 @@ BENCH_R3B = [
     "j11_scd2_point_in_time",
     "dd10_span_dedup_apply",
     "ts08_event_transitions",
-]
-
-# Round-3 session additions (post r3b freeze): graph analytics, BM25
-# retrieval, char-level span dedup.
-BENCH_R3C = [
     "gr01_pagerank",
     "gr02_triangle_counts",
     "tx11_bm25_search",
@@ -135,11 +117,6 @@ BENCH_R3C = [
     "gr03_weighted_pagerank",
     "gr04_personalized_pagerank",
     "dq05_expectation_quarantine",
-]
-
-
-# Round-4 additions (same freezing rationale).
-BENCH_R4 = [
     "gr05_kcore",
     "sim12_ivf_mmr_rerank",
     "sim13_knn_join",
@@ -187,12 +164,6 @@ BENCH_R4 = [
     "wh04_scd2_merge",
     "f25_id_gap_islands",
     "ts13_seasonal_anomaly",
-]
-
-
-# Round-6 additions (same freezing rationale; the round-5 group now
-# lives inside BENCH_EXTENDED). Frozen the day each operator ships.
-BENCH_R6 = [
     "opt01_or_join_rule",
     "opt02_fused_counts_rule",
     "ab03_cuped_readout",
@@ -217,11 +188,6 @@ BENCH_R6 = [
     "f31_mom_change",
     "gov01_pseudonymize",
     "gov02_erasure_audit",
-]
-
-
-# Round-6 tail-session additions (frozen the day each operator ships).
-BENCH_R6B = [
     "st07_markov_transitions",
     "tp21_stable_eval_panel",
     "tx20_heaps_curve",
@@ -242,20 +208,12 @@ BENCH_R6B = [
     "ml09_knn_classifier_eval",
     "tp22_pack_efficiency",
     "dd17_lsh_tuning_eval",
-]
-
-
-# Round-7 additions (same freezing rationale).
-BENCH_R7 = [
     "tp23_pipeline_report",
     "tp24_epoch_budget",
     "tx22_rank_decay",
     "sim19_source_centroid_drift",
     "a34_weighted_median",
     "wh06_partition_skew_audit",
-]
-
-BENCH_R8 = [
     "f33_variant_json",
     "f34_try_arithmetic",
     "f35_collated_group",
@@ -266,6 +224,7 @@ BENCH_R8 = [
     "tp25_curriculum_phases",
     "wh07_snapshot_diff",
 ]
+
 
 def run_pipeline_e2e(sf_dir: str) -> dict[str, object]:
     """Time the full warehouse CLI (ingestion → warehouse → analytics).
@@ -377,11 +336,9 @@ def main() -> None:
             stats[name] = {
                 "median": round(med, 3),
                 "min": round(min(samples), 3),
-                # max ≈ the cold first rep. Queries that persist()
-                # intermediates (dd17) hit Spark's CacheManager on reps
-                # 2+ (identical logical plans reuse the cached
-                # relation), so their median reflects warm reuse; max
-                # keeps the uncached cost visible in the artifact.
+                # max ≈ the cold first rep; each rep rebuilds and
+                # re-persists its intermediates, so no rep reuses an
+                # earlier rep's cached relation.
                 "max": round(max(samples), 3),
                 "runs": len(samples),
             }
@@ -391,27 +348,11 @@ def main() -> None:
     # sub-second queries still dropping through rep 5-7 (C2 JIT tiers)
     # with 2-5× run-to-run spread on this box — median-of-3 medians
     # land on a warmup rep often enough to fake a 2%/round drift.
-    # Clear persisted relations BETWEEN groups (ADVICE r9): queries
-    # that persist() intermediates (dd15/dd16/dd17...) otherwise leave
-    # caches behind for the rest of the session — later groups' numbers
-    # then depend on which groups ran before them (memory pressure +
-    # warm-cache cross-talk). Within a group the reps of one query
-    # still see CacheManager reuse (the documented warm-median
-    # property); across groups each total is now independent.
-    def run_group(names: list[str], n_runs: int = 3):
-        spark.catalog.clearCache()
-        return run_set(names, n_runs=n_runs)
-
-    timings, stats = run_group(BENCH_QUERIES, n_runs=5)
-    extended, ext_stats = run_group(BENCH_EXTENDED)
-    r3, r3_stats = run_group(BENCH_R3)
-    r3b, r3b_stats = run_group(BENCH_R3B)
-    r3c, r3c_stats = run_group(BENCH_R3C)
-    r4, r4_stats = run_group(BENCH_R4)
-    r6, r6_stats = run_group(BENCH_R6)
-    r6b, r6b_stats = run_group(BENCH_R6B)
-    r7, r7_stats = run_group(BENCH_R7)
-    r8, r8_stats = run_group(BENCH_R8)
+    timings, stats = run_set(BENCH_QUERIES, n_runs=5)
+    # drop the headline set's last pins (e.g. dd04's per-doc relation)
+    # so the extended medians do not depend on what ran before them
+    spark.catalog.clearCache()
+    extended, ext_stats = run_set(BENCH_EXTENDED)
     e2e = run_pipeline_e2e(sf_dir)
     vec = run_vector_e2e(sf_dir)
 
@@ -449,14 +390,6 @@ def main() -> None:
         print(line, flush=True)
 
     emit("extended_queries_total_runtime", extended, ext_stats)
-    emit("round3_queries_total_runtime", r3, r3_stats)
-    emit("round3_tail_queries_total_runtime", r3b, r3b_stats)
-    emit("round3_session_queries_total_runtime", r3c, r3c_stats)
-    emit("round4_queries_total_runtime", r4, r4_stats)
-    emit("round6_queries_total_runtime", r6, r6_stats)
-    emit("round6_tail_queries_total_runtime", r6b, r6b_stats)
-    emit("round7_queries_total_runtime", r7, r7_stats)
-    emit("round8_queries_total_runtime", r8, r8_stats)
     stage_detail = e2e.pop("warehouse_stages", {})
     validation_flag = e2e.pop("warehouse_validation", "passed")
     emit(

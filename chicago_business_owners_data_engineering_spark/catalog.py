@@ -74,3 +74,64 @@ def spread_scan(df: DataFrame) -> DataFrame:
     through a user repartition, which is exactly the point.
     """
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+
+class Pins:
+    """The one owner of persisted intermediate relations.
+
+    ``pin(df)`` persists ``df`` lazily at ``df.persist()``'s default
+    level (materialized by the first action that reaches it, lineage
+    kept, so a lost block recomputes) and records it; ``release()``
+    unpersists everything recorded. Two lifetimes use it:
+
+    - ``with Pins() as pin:`` — a function that runs its own actions
+      (the pipelines) releases its pins when the block exits, also on an
+      exception.
+    - ``pin = generation(owner)`` — a function that returns a lazy
+      DataFrame cannot release its pins before the caller's action, so
+      they live until the owner's next call. A long session therefore
+      holds at most one generation per owner, and a repeated call never
+      reuses the previous call's data: this is a scratch space, not a
+      result cache. A plan whose pins were released just recomputes
+      (correct, slower).
+
+    No lock: the generation lookup is one dict operation. Two concurrent
+    calls of the same owner can release each other's pins, which costs a
+    recompute and never a wrong result; no pinned query runs inside the
+    engine's thread pools (CLI analytics, warehouse dim writes, dq12).
+    """
+
+    def __init__(self) -> None:
+        self._pinned: list[DataFrame] = []
+
+    def __call__(self, df: DataFrame) -> DataFrame:
+        df = df.persist()
+        self._pinned.append(df)
+        return df
+
+    def release(self) -> None:
+        # pop() is atomic: a concurrent release of the same pins neither
+        # fails nor unpersists one relation twice
+        while True:
+            try:
+                df = self._pinned.pop()
+            except IndexError:
+                return
+            df.unpersist()
+
+    def __enter__(self) -> Pins:
+        return self
+
+    def __exit__(self, *exc: object) -> None:
+        self.release()
+
+
+_GENERATIONS: dict[str, Pins] = {}
+
+
+def generation(owner: str) -> Pins:
+    """Release ``owner``'s previous generation; the returned
+    :class:`Pins` records the new one."""
+    pins = _GENERATIONS.setdefault(owner, Pins())
+    pins.release()
+    return pins

@@ -82,9 +82,9 @@ def run_analytics_mode(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     # paths; submitting them from a small driver pool (guide §2.6) lets
     # the next query's tasks back-fill executors freed by the current
     # one's tail instead of serializing eight per-job stragglers. All
-    # eight are stateless aggregates (no persist rings), so concurrent
-    # construction is safe; 3 in flight fills the tail without
-    # fighting for executors.
+    # eight are stateless aggregates (none pins through
+    # catalog.generation), so concurrent construction is safe; 3 in
+    # flight fills the tail without fighting for executors.
     def _run_one(name: str) -> tuple[str, str]:
         spark.sparkContext.setJobDescription(f"analytics:{name}")
         df = QUERIES[name](spark, sf_dir)

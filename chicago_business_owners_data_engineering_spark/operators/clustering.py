@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, spread_scan
+from ..catalog import generation, load_table, spread_scan
 from ..registry import query
 from .shared_oracles import (
     EMB_DIM as DIM,
@@ -43,32 +43,6 @@ from .shared_oracles import (
 )
 
 ITERATIONS = 2
-
-# Lazy persists for the blocked self-join engines (ml04/sim13/sim14):
-# the (vec_id, probe, v) probes relation feeds BOTH sides of the
-# candidate self-join, and ml04's candidate-pair relation feeds five
-# downstream branches (nbrs×2, core_edges, border, plus the eager
-# component fixpoint) — without a persist each branch re-runs the
-# quadratic cosine stage (measured: 222 Exchanges, 0 ReusedExchange,
-# 14-41 s of construction-time recompute at sf0.1). Same ring-buffer
-# hygiene as dedup._PERSISTED_PER_DOC: calls are sequential in every
-# consumer, so each engine call releases the previous call's caches
-# before pinning its own; an unpersisted plan that re-executes later
-# just recomputes (correct, slower).
-_PERSISTED_BLOCKING: list[DataFrame] = []
-
-
-def _release_blocking_caches() -> None:
-    while _PERSISTED_BLOCKING:
-        _PERSISTED_BLOCKING.pop().unpersist()
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED_BLOCKING.append(df)
-    return df
 
 
 def _dist_sq(v: Column, c: Column) -> Column:
@@ -661,7 +635,7 @@ def dbscan_density_dedup(
     """
     from .graph import components_large_small_star
 
-    _release_blocking_caches()
+    pin = generation("dbscan_density_dedup")
     norm = F.sqrt(
         F.aggregate(
             F.transform(F.col("v"), lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
@@ -694,7 +668,7 @@ def dbscan_density_dedup(
     # component fixpoint materializes core_edges EAGERLY at
     # construction, so without the persist the quadratic stage runs
     # once there and again per downstream branch.
-    cpairs = _pin(
+    cpairs = pin(
         a.join(
             b,
             on=[
@@ -717,7 +691,7 @@ def dbscan_density_dedup(
     # nbrs-groupBy shuffle over the cached pairs; with it the degree
     # aggregate runs once. Eager+lazy consumption is exactly the
     # profile the ml03 lesson says a pin pays for.
-    core = _pin(
+    core = pin(
         nbrs.groupBy("vec_id")
         .agg(F.count(F.lit(1)).alias("n_nb"))
         .filter(F.col("n_nb") >= min_pts)
@@ -735,7 +709,7 @@ def dbscan_density_dedup(
     # border branch and the final labeling both consume it, and its
     # subtree (core ⋈ comp over the cached pairs) would otherwise be
     # re-instantiated once per consumer.
-    corec = _pin(
+    corec = pin(
         core.join(comp, core["vec_id"] == comp["doc_id"], "left")
         .select(
             core["vec_id"],
@@ -745,7 +719,7 @@ def dbscan_density_dedup(
     # Pinned (r11): consumed by the final labeling AND by the eager
     # survivor-min broadcast build below — the eager+lazy profile the
     # ml03 lesson says a pin pays for. Tiny relation (border points).
-    border = _pin(
+    border = pin(
         nbrs.join(
             corec.select(
                 F.col("vec_id").alias("nb"), F.col("cluster").alias("nb_cluster")

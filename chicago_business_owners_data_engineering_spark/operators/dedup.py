@@ -28,21 +28,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, spread_scan
+from ..catalog import generation, load_table, spread_scan
 from ..registry import query
 
 NUM_HASHES = 16  # minhash signature length
 BAND_SIZE = 4  # rows per LSH band → 4 bands
 SHINGLE_N = 3  # words per shingle
-
-# Bounded cache registry for minhash_lsh_pairs' per-doc relation (at
-# most one persisted DataFrame live; see the unpersist note there).
-_PERSISTED_PER_DOC: list[DataFrame] = []
-# Ring for containment_join_prefix's base/token relations (same
-# sequential-call hygiene; see the persist comment in that function).
-_PERSISTED_CONTAINMENT: list[DataFrame] = []
-# Ring for jaccard_join_prefix's base/token/prefix relations.
-_PERSISTED_JACCARD: list[DataFrame] = []
 
 
 def _word_set(text: Column) -> Column:
@@ -199,13 +190,12 @@ def minhash_lsh_pairs(
 
     Signatures and the hashed token set are computed as a pure per-row
     projection (array_min over transform — zero shuffle); the per-doc
-    result is persisted (MEMORY_AND_DISK) because three downstream
-    branches (bands, verify-left, verify-right) reuse it. Verification
-    intersects long arrays, not strings — same Jaccard value (hashing
-    is injective modulo 2^-64 collisions), far cheaper to shuffle.
+    result is pinned until the next call (:func:`catalog.generation`)
+    because three downstream branches (bands, verify-left,
+    verify-right) reuse it. Verification intersects long arrays, not
+    strings — same Jaccard value (hashing is injective modulo 2^-64
+    collisions), far cheaper to shuffle.
     """
-    from pyspark import StorageLevel
-
     # Signature computation is a PURE PROJECTION — no explode, no
     # groupBy, no shuffle: each minhash slot is array_min over the
     # hashed token set, evaluated per row inside whole-stage codegen.
@@ -217,18 +207,8 @@ def minhash_lsh_pairs(
     # relations come from the SAME builders the storable-index path
     # uses (_minhash_per_doc/_minhash_bands), which is what guarantees
     # a streaming-built index and this one-pass form stay row-identical.
-    # Release the PREVIOUS call's cache before pinning a new one: four
-    # call paths (dd04, dd06, dd07, pipeline dedup_near) plus repeated
-    # bench/harness sweeps would otherwise each leak a persisted
-    # DataFrame for the session lifetime. Calls are sequential in every
-    # consumer, so at most one cache is live at a time; an unpersisted
-    # plan that re-executes later just recomputes (correct, slower).
-    while _PERSISTED_PER_DOC:
-        _PERSISTED_PER_DOC.pop().unpersist()
-    per_doc = _minhash_per_doc(docs, id_col, set_col, num_hashes).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    _PERSISTED_PER_DOC.append(per_doc)
+    pin = generation("minhash_lsh_pairs")
+    per_doc = pin(_minhash_per_doc(docs, id_col, set_col, num_hashes))
 
     bands = _minhash_bands(per_doc, id_col, num_hashes, band_size)
 
@@ -1030,7 +1010,6 @@ def jaccard_join_prefix(
     set_col: str = "ws",
     t_num: int = 4,
     t_den: int = 5,
-    reuse: bool = False,
 ) -> DataFrame:
     """EXACT Jaccard similarity join via prefix filtering (AllPairs).
 
@@ -1067,46 +1046,30 @@ def jaccard_join_prefix(
     """
     from pyspark.sql import Window
 
-    # Ring-managed lazy persists (same hygiene as _PERSISTED_PER_DOC —
-    # each call releases the previous call's caches, so a long session
-    # holds at most one generation): ``base`` carries the caller's
-    # set projection (dd12's shingling) and feeds toks plus BOTH
-    # verify joins; ``toks`` feeds dfreq and the prefix derivation.
-    # Without the pins each branch re-runs the projection/explode.
-    while _PERSISTED_JACCARD:
-        _PERSISTED_JACCARD.pop().unpersist()
-
-    def _pin_j(df: DataFrame) -> DataFrame:
-        from pyspark import StorageLevel
-
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        _PERSISTED_JACCARD.append(df)
-        return df
-
-    base = _pin_j(
+    # Pins: ``base`` carries the caller's set projection (dd12's
+    # shingling) and feeds toks plus BOTH verify joins; ``toks`` feeds
+    # dfreq and the prefix derivation. Without the pins each branch
+    # re-runs the projection/explode.
+    pin = generation("jaccard_join_prefix")
+    base = pin(
         docs.select(
             F.col(id_col).alias("doc_id"), F.col(set_col).alias("ws")
         ).withColumn("sz", F.size("ws"))
     )
-    toks = _pin_j(base.select("doc_id", "sz", F.explode("ws").alias("token")))
+    toks = pin(base.select("doc_id", "sz", F.explode("ws").alias("token")))
     dfreq = toks.groupBy("token").agg(F.count("*").alias("df"))
     # prefix length p = sz - ceil(t*sz) + 1, integer-exact
     p = F.col("sz") - F.expr(f"({t_num} * sz + {t_den - 1}) div {t_den}") + 1
     wdoc = Window.partitionBy("doc_id").orderBy("df", "token")
-    prefix = (
+    # The prefix relation feeds BOTH sides of the candidate self-join;
+    # unpinned, the df join + per-doc window shuffle run twice (Spark's
+    # exchange reuse does not unify the two aliased subplans here).
+    prefix = pin(
         toks.join(dfreq, "token")
         .withColumn("rn", F.row_number().over(wdoc))
         .filter(F.col("rn") <= p)
         .select("doc_id", "sz", "token")
     )
-    if reuse:
-        # The prefix relation feeds BOTH sides of the candidate
-        # self-join; without caching, the df join + per-doc window
-        # shuffle run twice (Spark's exchange reuse does not unify the
-        # two aliased subplans here). Lazy persist: materializes on the
-        # caller's first action, lineage preserved. Ring-managed since
-        # r10, so repeated calls no longer accumulate session caches.
-        prefix = _pin_j(prefix)
     a, b = prefix.alias("a"), prefix.alias("b")
     cands = (
         a.join(
@@ -1187,9 +1150,7 @@ def dd12_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     documents = load_table(spark, sf_dir, "documents")
     docs = documents.select("doc_id", _shingle_set(F.col("text")).alias("ws"))
-    # reuse=True: the prefix relation feeds both candidate sides; the
-    # ring in jaccard_join_prefix bounds the cache lifetime (r10).
-    return jaccard_join_prefix(docs, t_num=1, t_den=2, reuse=True)
+    return jaccard_join_prefix(docs, t_num=1, t_den=2)
 
 
 def minhash_index_rows(
@@ -1302,29 +1263,19 @@ def containment_join_prefix(
     """
     from pyspark.sql import Window
 
-    # Lazy persists (ring hygiene as _PERSISTED_PER_DOC): ``base``
-    # carries the shingle-set projection — the expensive per-row
-    # zip/slice/distinct work — and feeds toks plus BOTH verify joins;
-    # ``toks`` (the explode) feeds dfreq, the prefix derivation, and
-    # the container side of the candidate probe. Without the pins each
-    # of those branches re-runs the shingling (measured 3× base + 3×
-    # toks instantiations in the dd13 plan).
-    while _PERSISTED_CONTAINMENT:
-        _PERSISTED_CONTAINMENT.pop().unpersist()
-
-    def _pin_c(df: DataFrame) -> DataFrame:
-        from pyspark import StorageLevel
-
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        _PERSISTED_CONTAINMENT.append(df)
-        return df
-
-    base = _pin_c(
+    # Pins: ``base`` carries the shingle-set projection — the expensive
+    # per-row zip/slice/distinct work — and feeds toks plus BOTH verify
+    # joins; ``toks`` (the explode) feeds dfreq, the prefix derivation,
+    # and the container side of the candidate probe. Without the pins
+    # each of those branches re-runs the shingling (measured 3× base +
+    # 3× toks instantiations in the dd13 plan).
+    pin = generation("containment_join_prefix")
+    base = pin(
         docs.select(
             F.col(id_col).alias("doc_id"), F.col(set_col).alias("ws")
         ).withColumn("sz", F.size("ws"))
     )
-    toks = _pin_c(base.select("doc_id", "sz", F.explode("ws").alias("token")))
+    toks = pin(base.select("doc_id", "sz", F.explode("ws").alias("token")))
     dfreq = toks.groupBy("token").agg(F.count("*").alias("df"))
     # contained-side prefix length p = sz - ceil(t*sz) + 1, integer-exact
     p = F.col("sz") - F.expr(f"({t_num} * sz + {t_den - 1}) div {t_den}") + 1
@@ -1559,15 +1510,12 @@ def dd15_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a huge expression tree, and the band self-join would otherwise
     # inline it on BOTH sides (8 copies after the band explode) — the
     # unrolled-plan trap every iterative op here guards against.
-    # Lazy persist() (NOT eager localCheckpoint, dd17's pattern):
+    # A lazy pin (NOT eager localCheckpoint, dd17's pattern):
     # plan-only consumers pay nothing, and lineage survives executor
     # loss. Only the fixpoint loops (components_propagation) genuinely
     # need checkpoint truncation; this is a single-pass self-join.
-    fp = (
-        dd05_simhash(spark, sf_dir)
-        .select("doc_id", "simhash")
-        .persist()
-    )
+    pin = generation("dd15_simhash_hamming_pairs")
+    fp = pin(dd05_simhash(spark, sf_dir).select("doc_id", "simhash"))
     bands = fp.select(
         "doc_id",
         "simhash",
@@ -1695,13 +1643,14 @@ def dd16_weighted_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The exploded shingle relation feeds FIVE consumers (df counts,
     # doc totals, band minima, and both intersection legs) — without a
     # cache Spark re-explodes the corpus per consumer (the dd15
-    # lesson). Lazy persist() (dd17's pattern, NOT eager
-    # localCheckpoint): materialization waits for the first action, so
-    # plan-only consumers stay free, and lineage survives executor
-    # loss — this is a DAG, not a fixpoint loop needing truncation.
-    stoks = documents.select(
-        "doc_id", F.explode(_shingle_set(F.col("text"))).alias("sg")
-    ).persist()
+    # lesson). A lazy pin (dd17's pattern, NOT eager localCheckpoint):
+    # materialization waits for the first action, so plan-only
+    # consumers stay free, and lineage survives executor loss — this
+    # is a DAG, not a fixpoint loop needing truncation.
+    pin = generation("dd16_weighted_jaccard_pairs")
+    stoks = pin(
+        documents.select("doc_id", F.explode(_shingle_set(F.col("text"))).alias("sg"))
+    )
     n = stoks.agg(F.countDistinct("doc_id").alias("n_docs"))
     wt = (
         stoks.groupBy("sg")
@@ -1709,9 +1658,9 @@ def dd16_weighted_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(n))
         .select("sg", F.expr("(n_docs * 1000) div df").alias("w"))
     )
-    # Feeds doc totals + both intersection legs; lazy for the same
+    # Feeds doc totals + both intersection legs; pinned for the same
     # reasons as stoks above.
-    wtoks = stoks.join(wt, "sg").select("doc_id", "sg", "w").persist()
+    wtoks = pin(stoks.join(wt, "sg").select("doc_id", "sg", "w"))
     doc_sum = wtoks.groupBy("doc_id").agg(F.sum("w").alias("total_w"))
     # All four band minima in ONE doc-keyed aggregate (map-side
     # partials) instead of exploding the shingle relation ×4: A/B-
@@ -1868,19 +1817,16 @@ def dd17_lsh_tuning_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents = spread_scan(load_table(spark, sf_dir, "documents"))
     # The shingled relation feeds the 12 minhash slot builds AND the
     # exact true-pair leg's five internal consumers (df counts, prefix,
-    # both verify fetches — the dd16 stoks lesson). Lazy persist()
-    # (NOT eager localCheckpoint): materialization happens on the first
+    # both verify fetches — the dd16 stoks lesson). A lazy pin (NOT
+    # eager localCheckpoint): materialization happens on the first
     # ACTION, so plan-only consumers (plan audits, .explain()) stay
     # free, and lineage is preserved — an executor loss recomputes the
     # lost blocks instead of failing the job, which localCheckpoint
-    # cannot do. Cache lifetime is session-scoped by design: the
-    # registry contract returns a lazy DataFrame, so there is no safe
-    # point inside this function to unpersist after the caller's
-    # action.
-    docs = (
+    # cannot do.
+    pin = generation("dd17_lsh_tuning_eval")
+    docs = pin(
         documents.select("doc_id", _shingle_set(F.col("text")).alias("ws"))
         .filter(F.size("ws") > 0)
-        .persist()
     )
     def _slot(idx: int):
         # NB: must be a ONE-argument lambda — a second parameter (even
@@ -1917,13 +1863,12 @@ def dd17_lsh_tuning_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                     bh.alias("bh"),
                 )
             )
-    # Lazy persist: the bucket self-join scans this relation twice;
-    # caching it avoids recomputing 12 minhash mins + 13 md5s per doc
-    # on the second side. Same fault-tolerance rationale as `docs`.
-    bands = (
+    # Pinned: the bucket self-join scans this relation twice; the pin
+    # avoids recomputing 12 minhash mins + 13 md5s per doc on the
+    # second side. Same fault-tolerance rationale as `docs`.
+    bands = pin(
         per_doc.select("doc_id", F.explode(F.array(*band_structs)).alias("bb"))
         .select("doc_id", F.col("bb.r").alias("r"), "bb.band_id", "bb.bh")
-        .persist()
     )
     cand = (
         bands.alias("a")
@@ -1942,14 +1887,11 @@ def dd17_lsh_tuning_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # Consumed twice (the recall left-join and the n_true scalar);
-    # persisting avoids re-running the whole prefix-filter join for the
-    # 1-row count. Lazy, same rationale as above.
-    truep = (
-        jaccard_join_prefix(
-            docs, "doc_id", "ws", t_num=DD17_T_NUM, t_den=DD17_T_DEN, reuse=True
-        )
+    # pinning avoids re-running the whole prefix-filter join for the
+    # 1-row count.
+    truep = pin(
+        jaccard_join_prefix(docs, "doc_id", "ws", t_num=DD17_T_NUM, t_den=DD17_T_DEN)
         .select("doc_a", "doc_b", F.lit(1).alias("is_true"))
-        .persist()
     )
     nt = truep.agg(F.count("*").alias("n_true"))
     return (

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import generation, load_table
 from ..registry import query
 
 SALT_BUCKETS = 16
@@ -613,13 +613,13 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier (map-side combine → one row per supplier); the
     ``= (SELECT MAX ...)`` filter becomes a 1-row broadcast cross join
     against the aggregate's own max — the aggregate is computed ONCE and
-    cached for its two consumers (max + filter), where the naive
+    pinned for its two consumers (max + filter), where the naive
     translation re-scans lineitem for the subquery. Equality on the
     identically-rounded value keeps tie handling exact on both sides.
     """
     supplier = load_table(spark, sf_dir, "supplier")
     lineitem = load_table(spark, sf_dir, "lineitem")
-    revenue = (
+    revenue = generation("q15_top_supplier")(
         lineitem.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
@@ -630,7 +630,6 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "total_revenue_cents"
             )
         )
-        .cache()
     )
     top = revenue.agg(F.max("total_revenue_cents").alias("max_revenue"))
     return (
@@ -1232,14 +1231,13 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     this schema: per-part shipped value for one nation's suppliers (NATION_15, populated at every SF),
     kept only where it exceeds 0.1% of that nation's total. The
     supplier⋈nation prune broadcasts into the fact scan; the per-part
-    aggregate is computed ONCE and cached for its two consumers (the
+    aggregate is computed ONCE and pinned for its two consumers (the
     grand total and the threshold filter) — same shared-subplan
     tactic as q15. The scalar total re-enters as a 1-row broadcast
     nested-loop join, so no second pass over the fact. Completes the
-    22-query TPC-H shape family (COVERAGE.md §OLAP). Like q15, the
-    cache is part-cardinality-sized and left to Spark's LRU eviction
-    (MEMORY_AND_DISK); a job that owns the session lifecycle can
-    unpersist after collecting.
+    22-query TPC-H shape family (COVERAGE.md §OLAP). Like q15's, the
+    pin is part-cardinality-sized and released by the next call
+    (:func:`catalog.generation`).
     """
     lineitem = load_table(spark, sf_dir, "lineitem")
     supplier = load_table(spark, sf_dir, "supplier")
@@ -1248,7 +1246,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(nation.filter(F.col("n_name") == "NATION_15")),
         F.col("s_nationkey") == F.col("n_nationkey"),
     ).select("s_suppkey")
-    per_part = (
+    per_part = generation("q11_important_stock")(
         lineitem.join(
             F.broadcast(national_suppliers), F.col("l_suppkey") == F.col("s_suppkey")
         )
@@ -1258,7 +1256,6 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "stock_value"
             )
         )
-        .cache()
     )
     total = per_part.agg((F.sum("stock_value") * 0.001).alias("threshold"))
     return (

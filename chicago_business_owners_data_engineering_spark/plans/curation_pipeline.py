@@ -44,7 +44,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import Pins, load_table
 from ..operators.dedup import _shingle_set, neardup_edges
 from ..operators.graph import components_large_small_star
 from ..operators.multimodal import SHARD_BUDGET_BYTES, shard_id_over
@@ -236,45 +236,40 @@ def run_curation_pipeline(
     shard byte sums stay under budget + one max-doc overhang.
     """
     documents = load_table(spark, sf_dir, "documents")
-    # gate is the heaviest pre-dedup scan (full token explode); cache it
-    # so the card's funnel counts don't replay it per stage
-    gated = gate_quality(documents).cache()
-    modeled = gate_model(gated).cache()
-    exact = dedup_exact(modeled)
-    near = dedup_near(exact).cache()
-    contained = dedup_containment(near).cache()
-    mixed = sample_mixture(contained)
-    split = assign_splits(mixed)
-    sharded = assign_shards(split).cache()
+    # Pinned stage outputs: the curated write and the card's per-stage
+    # counts all read them, so each pinned stage runs once (gate, a full
+    # token explode, is the heaviest pre-dedup scan). The pins are
+    # released when the block exits, also on an exception.
+    with Pins() as pin:
+        gated = pin(gate_quality(documents))
+        modeled = pin(gate_model(gated))
+        exact = dedup_exact(modeled)
+        near = pin(dedup_near(exact))
+        contained = pin(dedup_containment(near))
+        mixed = sample_mixture(contained)
+        split = assign_splits(mixed)
+        sharded = pin(assign_shards(split))
 
-    (
-        sharded.repartition("split", "source")
-        .write.mode("overwrite")
-        .partitionBy("split", "source")
-        .parquet(os.path.join(out_dir, "curated"))
-    )
+        (
+            sharded.repartition("split", "source")
+            .write.mode("overwrite")
+            .partitionBy("split", "source")
+            .parquet(os.path.join(out_dir, "curated"))
+        )
 
-    def n(df: DataFrame) -> int:
-        return df.count()
+        def n(df: DataFrame) -> int:
+            return df.count()
 
-    card_rows = [
-        ("0_raw", n(documents)),
-        ("1_gated", n(gated)),
-        ("2_model_gate", n(modeled)),
-        ("3_exact_dedup", n(exact)),
-        ("4_near_dedup", n(near)),
-        ("5_containment", n(contained)),
-        ("6_mixture", n(mixed)),
-        ("7_final", n(sharded)),
-    ]
+        card_rows = [
+            ("0_raw", n(documents)),
+            ("1_gated", n(gated)),
+            ("2_model_gate", n(modeled)),
+            ("3_exact_dedup", n(exact)),
+            ("4_near_dedup", n(near)),
+            ("5_containment", n(contained)),
+            ("6_mixture", n(mixed)),
+            ("7_final", n(sharded)),
+        ]
     card = spark.createDataFrame(card_rows, "stage string, docs long")
     card.coalesce(1).write.mode("overwrite").json(os.path.join(out_dir, "card"))
-    # release the intermediate caches — the pipeline may run inside a
-    # long-lived session (CLI full mode, tests) and cached RDDs otherwise
-    # pin executor memory for the rest of the session
-    gated.unpersist()
-    modeled.unpersist()
-    near.unpersist()
-    contained.unpersist()
-    sharded.unpersist()
     return card

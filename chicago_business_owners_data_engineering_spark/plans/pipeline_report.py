@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import generation, load_table
 
 # Constants only, and only from the import-pure shared_oracles module:
 # a module-level import of curation_pipeline (or any operator module)
@@ -38,10 +38,6 @@ from ..operators.shared_oracles import (
     FT_BUCKETS,
 )
 from ..registry import query
-
-# Ring for the stage-output persists in tp23 (sequential-call hygiene,
-# see the pin comment in the query body).
-_PERSISTED_STAGES: list[DataFrame] = []
 
 _MD5_DOC = "CAST(CONCAT('0x', SUBSTRING(MD5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100"
 _MD5_SPLIT = (
@@ -175,30 +171,20 @@ def tp23_pipeline_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     documents = load_table(spark, sf_dir, "documents")
-    # Pin each stage output (lazy MEMORY_AND_DISK, ring-released on the
-    # next call — the dedup._PERSISTED_PER_DOC hygiene): the funnel is
-    # a 6-stage chain AND each stage also joins the id spine, so
-    # without pins the flags join instantiates stage 1 six times,
+    # Pin each stage output (lazy, released by the next call): the
+    # funnel is a 6-stage chain AND each stage also joins the id spine,
+    # so without pins the flags join instantiates stage 1 six times,
     # stage 1b five times, … (triangular recompute of the two explode
     # passes and the LSH edge build). The near-dedup stage's component
     # fixpoint additionally materializes its whole upstream chain
     # EAGERLY at construction; with the pins that materialization is
     # the only full computation of each stage.
-    while _PERSISTED_STAGES:
-        _PERSISTED_STAGES.pop().unpersist()
-
-    def _pin(df: DataFrame) -> DataFrame:
-        from pyspark import StorageLevel
-
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        _PERSISTED_STAGES.append(df)
-        return df
-
-    g = _pin(gate_quality(documents))
-    m = _pin(gate_model(g))
-    e = _pin(dedup_exact(m))
-    n = _pin(dedup_near(e))
-    x = _pin(sample_mixture(n))
+    pin = generation("tp23_pipeline_report")
+    g = pin(gate_quality(documents))
+    m = pin(gate_model(g))
+    e = pin(dedup_exact(m))
+    n = pin(dedup_near(e))
+    x = pin(sample_mixture(n))
     s = assign_splits(x)
 
     # The card only needs per-stage COUNTS, and every stage output is

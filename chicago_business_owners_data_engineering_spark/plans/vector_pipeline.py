@@ -33,7 +33,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, spread_scan
+from ..catalog import Pins, load_table, spread_scan
 from ..operators.clustering import (
     kmeans_assignments,
     lloyd_centroids,
@@ -62,53 +62,54 @@ def build_vector_index(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     emb = kmeans_assignments(spark, sf_dir, centroids=cents)
     n_raw = emb.count()
 
-    # one dedup pass, cached: the component loop is the expensive part
-    # and feeds both the drop list and the card's component count.
-    # semantic_dedup_components at default knobs IS ml03_semantic_dedup
-    # (the registry wrapper calls it verbatim), plus the shared cents.
-    dedup = semantic_dedup_components(spark, sf_dir, centroids=cents).cache()
-    dropped = dedup.filter(~F.col("keep")).select("vec_id")
-    # Both card counts from ONE job over the fresh cache (keep=True →
-    # component survivors, keep=False → drops); survivors = raw minus
-    # drops — every dropped vec_id exists in emb (components only
-    # contain embedding vec_ids) — so keep.count()'s second assignment
-    # scan + anti-join disappears (the index write below is keep's
-    # only consumer now).
-    by_keep = {
-        r["keep"]: r["n"]
-        for r in dedup.groupBy("keep").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    n_components = by_keep.get(True, 0)
-    keep = emb.join(dropped, "vec_id", "left_anti")
-    n_kept = n_raw - by_keep.get(False, 0)
+    with Pins() as pin:
+        # one dedup pass, pinned: the component loop is the expensive
+        # part and feeds both the drop list and the card's component
+        # count. semantic_dedup_components at default knobs IS
+        # ml03_semantic_dedup (the registry wrapper calls it verbatim),
+        # plus the shared cents.
+        dedup = pin(semantic_dedup_components(spark, sf_dir, centroids=cents))
+        dropped = dedup.filter(~F.col("keep")).select("vec_id")
+        # Both card counts from ONE job over the fresh pin (keep=True →
+        # component survivors, keep=False → drops); survivors = raw
+        # minus drops — every dropped vec_id exists in emb (components
+        # only contain embedding vec_ids) — so keep.count()'s second
+        # assignment scan + anti-join disappears (the index write below
+        # is keep's only consumer now).
+        by_keep = {
+            r["keep"]: r["n"]
+            for r in dedup.groupBy("keep").agg(F.count(F.lit(1)).alias("n")).collect()
+        }
+        n_components = by_keep.get(True, 0)
+        keep = emb.join(dropped, "vec_id", "left_anti")
+        n_kept = n_raw - by_keep.get(False, 0)
 
-    cb_rows = (
-        spread_scan(load_table(spark, sf_dir, "embeddings"))
-        .select("vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-        .orderBy("vec_id")
-        .limit(PQ_NCODES)
-        .collect()
-    )
-    codebook = [
-        [list(r["v"][m * PQ_DSUB : (m + 1) * PQ_DSUB]) for r in cb_rows]
-        for m in range(PQ_M)
-    ]
+        cb_rows = (
+            spread_scan(load_table(spark, sf_dir, "embeddings"))
+            .select("vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"))
+            .orderBy("vec_id")
+            .limit(PQ_NCODES)
+            .collect()
+        )
+        codebook = [
+            [list(r["v"][m * PQ_DSUB : (m + 1) * PQ_DSUB]) for r in cb_rows]
+            for m in range(PQ_M)
+        ]
 
-    labels = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
-    index = keep.join(labels, "vec_id").select(
-        "vec_id",
-        "label",
-        "cluster",
-        *[pq_code_col(codebook, m).alias(f"code{m}") for m in range(PQ_M)],
-    )
-    (
-        index.repartition("cluster")
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(os.path.join(out_dir, "pq_index"))
-    )
-    n_indexed = spark.read.parquet(os.path.join(out_dir, "pq_index")).count()
-    dedup.unpersist()
+        labels = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
+        index = keep.join(labels, "vec_id").select(
+            "vec_id",
+            "label",
+            "cluster",
+            *[pq_code_col(codebook, m).alias(f"code{m}") for m in range(PQ_M)],
+        )
+        (
+            index.repartition("cluster")
+            .write.mode("overwrite")
+            .partitionBy("cluster")
+            .parquet(os.path.join(out_dir, "pq_index"))
+        )
+        n_indexed = spark.read.parquet(os.path.join(out_dir, "pq_index")).count()
     return {
         "raw_vectors": n_raw,
         "survivors": n_kept,
@@ -221,6 +222,8 @@ def foreach_batch_index_append(
         for m in range(PQ_M)
     ]
 
+    codes_schema = ", ".join(f"code{m} int" for m in range(PQ_M))
+
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         marker = os.path.join(out_dir, "_append_ledger", f"epoch={epoch_id}")
         if os.path.exists(marker):
@@ -238,11 +241,19 @@ def foreach_batch_index_append(
             *[pq_code_col(codebook, m).alias(f"code{m}") for m in range(PQ_M)],
         )
         index_path = os.path.join(out_dir, "pq_index")
-        try:
-            existing = spark.read.parquet(index_path).select(
-                *[F.col(f"code{m}").alias(f"e{m}") for m in range(PQ_M)]
+        # Existence check, NOT try/except (the near-dup sink's recipe):
+        # an index read error must FAIL the batch, because treating it
+        # as "no index" would admit duplicates without the SDC check.
+        # The explicit schema makes a torn first append (a directory
+        # holding no committed files) read as an empty index instead of
+        # failing schema inference.
+        if os.path.exists(index_path):
+            existing = (
+                spark.read.schema(codes_schema)
+                .parquet(index_path)
+                .select(*[F.col(f"code{m}").alias(f"e{m}") for m in range(PQ_M)])
             )
-        except Exception:  # noqa: BLE001 — no index yet: everything is novel
+        else:
             existing = None
         if existing is not None:
             # SDC distance new×existing via the precomputed tables —

@@ -31,7 +31,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import Pins, load_table
 from ..registry import query
 
 
@@ -388,25 +388,24 @@ def run_warehouse_pipeline(
     _mark("facts")
 
     # The read-back fact table feeds FOUR actions (two gold aggregates,
-    # two validation anti-joins); persist it so the many-small-files
+    # two validation anti-joins); pin it so the many-small-files
     # date-partitioned scan is paid once, not four times. On a cluster
     # this is the standard cache-between-consumers pattern for a hot
     # silver table inside one job.
-    facts_back = spark.read.parquet(os.path.join(out_dir, "silver", "fact_order_lines"))
-    facts_back.persist()
-    try:
+    with Pins() as pin:
+        facts_back = pin(
+            spark.read.parquet(os.path.join(out_dir, "silver", "fact_order_lines"))
+        )
         for name, df in create_aggregations(facts_back).items():
             df.write.mode("overwrite").parquet(os.path.join(out_dir, "gold", name))
         _mark("gold")
 
         # validate() runs its one-pass orphan count eagerly, while
-        # facts are still cached; the returned verdict rows are
+        # facts are still pinned; the returned verdict rows are
         # driver-local.
         verdict = validate(facts_back, dims_back)
         _mark("validate")
         return verdict
-    finally:
-        facts_back.unpersist()
 
 
 # --------------------------------------------------------------------------

@@ -54,24 +54,10 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
 
 # ORDER MATTERS for external verification: the driver's differential
-# harness samples the FIRST 50 registered queries each round. Rounds 1-3
-# sampled the aggregate/dedup/curation families; round 4 fronted the
-# join/window/sort/graph/setop/monitoring families; round 5 fronted the
-# TPC-H-shaped olap queries, training-data pipeline ops, warehouse
-# plans, entity resolution and scalar functions; round 6 fronted the
-# tx*/ts*/dq*/f*/sim*/mm*/u* families; round 7 fronted 49 more plus
-# tp23; round 8 fronted the last 41 never-sampled queries plus the 9
-# round-8 additions, closing the external-proof gap: EVERY registry
-# query now has at least one driver-verified correctness row.
-#
-# From round 9 on the rotation optimizes EVIDENCE FRESHNESS: the front
-# is the 50 queries with the OLDEST driver evidence (ascending
-# last-sampled round, then name — `python tools/rotation.py` derives it
-# mechanically from the CORRECTNESS_r*.json record). The r09 front is
-# exactly the r01/r02/r03-era sample: the aggregate, filter-predicate,
-# similarity and dedup families whose code has since been refactored
-# (dedup reworks r7-r8, salted-agg integer-cents fix r8) without
-# external re-verification.
+# harness samples the FIRST 50 registered queries. The front is the 50
+# queries with the oldest driver evidence (ascending last-sampled round,
+# then name), derived mechanically from the CORRECTNESS_r*.json record
+# by `python tools/rotation.py`; earlier fronts live in git history.
 _R09_FRONT = (
     # last sampled r01
     "a28_countmin_heavy_hitters",
@@ -126,265 +112,6 @@ _R09_FRONT = (
     "dd03_jaccard_pairs",
     "dd04_minhash_lsh_pairs",
     "dd05_simhash",
-)
-
-# Round-8 front, kept for provenance (driver-green in CORRECTNESS_r08).
-_R08_FRONT = (
-    # training-data pipeline ops
-    "tp20_source_overlap_matrix",
-    "tp21_stable_eval_panel",
-    "tp22_pack_efficiency",
-    "tp24_epoch_budget",
-    # join tail: as-of / interval / nearest-in-time
-    "j08_asof_join",
-    "j13_interval_overlap_join",
-    "j14_nearest_event_join",
-    # experimentation
-    "ab01_experiment_readout",
-    "ab02_srm_check",
-    "ab03_cuped_readout",
-    # monitoring
-    "mon02_slo_burn_rate",
-    "mon03_freshness_lag",
-    "mon04_error_budget",
-    # governance
-    "gov01_pseudonymize",
-    "gov02_erasure_audit",
-    "gov03_retention_sweep",
-    # UDF surfaces
-    "u06_arrow_udf_bucket",
-    "u07_pandas_iter_udf",
-    "u08_apply_in_arrow",
-    # optimizer-rule demonstrations
-    "opt01_or_join_rule",
-    "opt02_fused_counts_rule",
-    # warehouse tail
-    "wh05_cdc_apply",
-    "wh06_partition_skew_audit",
-    # market basket
-    "mb01_market_basket",
-    "mb02_frequent_triples",
-    # skew mitigation
-    "skew01_salted_agg",
-    "skew02_salted_join",
-    # multimodal (incl. the 2 rows-only codec stubs, documented)
-    "mm03_frame_sample_plan",
-    "mm05_shard_manifest",
-    "mm02_decode_features",
-    "mm06_resize_batch",
-    # data-quality tail
-    "dq16_format_conformance",
-    "dq17_row_invariants",
-    # graph tail
-    "gr12_harmonic_centrality",
-    # bloom prefilter
-    "bf01_bloom_join_prefilter",
-    # entity-resolution tail
-    "er05_blocking_quality",
-    # round-7 tail trio
-    "tx22_rank_decay",
-    "sim19_source_centroid_drift",
-    "a34_weighted_median",
-    # remaining rows-only entries (OPQ rotation, applyInPandas demo)
-    "sim10_opq_topk",
-    "u03_apply_in_pandas_scores",
-    # ---- the 9 round-8 additions (new API cells + pipeline ops),
-    # each landed with oracle + fixture test the same session
-    "f33_variant_json",
-    "f34_try_arithmetic",
-    "f35_collated_group",
-    "j15_lateral_topk",
-    "a35_percentile_disc",
-    "a36_grouped_mode",
-    "st10_session_window_native",
-    "tp25_curriculum_phases",
-    "wh07_snapshot_diff",
-)
-
-# Round-7 front, kept for provenance (driver-green in CORRECTNESS_r07).
-_R07_FRONT = (
-    # event-stream analytics (entire family never driver-sampled)
-    "st01_sessionization",
-    "st02_last_touch_attribution",
-    "st03_funnel_conversion",
-    "st04_cohort_retention",
-    "st05_rfm_segments",
-    "st06_cohort_ltv",
-    "st07_markov_transitions",
-    "st08_session_paths",
-    "st09_stickiness",
-    # scalar-function tail
-    "f21_grouping_sets",
-    "f23_parameterized_sql",
-    "f25_id_gap_islands",
-    "f30_unpivot_metrics",
-    "f31_mom_change",
-    "f32_equiwidth_histogram",
-    # time series tail
-    "ts15_seasonal_strength",
-    "ts16_peak_concurrency",
-    "ts17_autocorrelation",
-    "ts18_rolling_wau",
-    "ts19_interarrival",
-    # incremental maintenance (entire family)
-    "inc01_incremental_rollup",
-    "inc02_incremental_components",
-    "inc03_incremental_distinct",
-    "inc04_incremental_neardup_probe",
-    "inc05_incremental_topk",
-    # similarity / ANN tail
-    "sim12_ivf_mmr_rerank",
-    "sim14_pq_knn_join",
-    "sim16_range_search",
-    "sim17_ivf_sq_batch_topk",
-    "sim18_filtered_ann",
-    # embedding-space ML tail
-    "ml04_density_dedup",
-    "ml05_fasttext_quality",
-    "ml06_threshold_sweep",
-    "ml08_reliability_bins",
-    "ml09_knn_classifier_eval",
-    # dedup tail
-    "dd13_containment_join",
-    "dd14_ngram_novelty",
-    "dd15_simhash_hamming_pairs",
-    "dd16_weighted_jaccard_pairs",
-    "dd17_lsh_tuning_eval",
-    # aggregate tail
-    "a18_word_frequency",
-    "a19_suffix_frequency",
-    "a30_grouped_string_agg",
-    "a33_quantile_sketch_checked",
-    # text tail
-    "tx18_lexical_diversity",
-    "tx19_langid_confusion",
-    "tx20_heaps_curve",
-    "tx21_source_vocab_jaccard",
-    # UDAF demo
-    "u02_entropy_udaf",
-    # new this round: the composed curation funnel
-    "tp23_pipeline_report",
-)
-
-# Round-6 front, kept for provenance (driver-green in CORRECTNESS_r06).
-_R06_FRONT = (
-    # text analysis: quality, lang-id, PII, TF-IDF, BM25, BPE, TextRank
-    "tx01_quality_score",
-    "tx02_token_count",
-    "tx03_language_id",
-    "tx04_fingerprint",
-    "tx05_pii_redaction",
-    "tx06_tfidf_topk",
-    "tx11_bm25_search",
-    "tx13_bigram_surprisal",
-    "tx14_bpe_merges",
-    "tx15_bpe_tokenize",
-    "tx16_collocations",
-    "tx17_repetition_signals",
-    # time series
-    "ts01_hourly_rollup",
-    "ts02_cohort_retention",
-    "ts03_funnel_conversion",
-    "ts04_deviation_from_mean",
-    "ts05_all_channel_users",
-    "ts09_seasonal_naive_backtest",
-    "ts10_linear_trend",
-    "ts11_cusum_changepoint",
-    "ts12_weekday_seasonality",
-    "ts13_seasonal_anomaly",
-    "ts14_ewma_anomaly",
-    # data quality
-    "dq06_k_anonymity",
-    "dq07_k_anonymity_suppress",
-    "dq08_ks_drift",
-    "dq09_mann_whitney",
-    "dq10_mad_outliers",
-    "dq11_benford_digits",
-    "dq12_key_discovery",
-    "dq13_l_diversity",
-    "dq14_referential_orphans",
-    "dq15_profile_drift",
-    # scalar-function tail
-    "f13b_date_sequence",
-    "f15_strftime_partition_key",
-    "f16_surrogate_keys",
-    "f18_json_decode",
-    "f19_array_ops",
-    "f26_interval_merge",
-    "f27_time_to_convert",
-    # similarity / ANN (oracle-backed members)
-    "sim06_scalar_quantization",
-    "sim09_pq_topk",
-    "sim11_mmr_rerank",
-    "sim13_knn_join",
-    "sim15_ivf_recall_eval",
-    # multimodal (oracle-backed members)
-    "mm01_binary_metadata",
-    "mm04_arrow_batch_stats",
-    # UDF surface (oracle-backed members)
-    "u01_pandas_udf_combine",
-    "u05_python_udtf",
-    # filters tail
-    "p09_time_range",
-)
-
-# Round-5 front, kept for provenance (driver-green in CORRECTNESS_r05).
-_R05_FRONT = (
-    # olap: TPC-H shapes q01-q22 (q18 already driver-green r04)
-    "q01_pricing_summary",
-    "q02_min_cost_supplier",
-    "q03_shipping_priority",
-    "q04_order_priority",
-    "q05_supplier_volume",
-    "q06_forecast_revenue",
-    "q07_nation_trade_volume",
-    "q08_market_share",
-    "q09_product_profit",
-    "q10_returned_items",
-    "q11_important_stock",
-    "q12_priority_shipping",
-    "q13_customer_order_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_supplier_part_variety",
-    "q17_small_quantity_revenue",
-    "q19_disjunctive_predicate_join",
-    "q20_excess_shipment_suppliers",
-    "q21_blocking_suppliers",
-    "q22_inactive_rich_customers",
-    # training-data pipeline ops (tp08-tp10 were sampled earlier)
-    "tp01_hash_split",
-    "tp02_doc_chunks",
-    "tp03_bigram_freq",
-    "tp04_stratified_sample",
-    "tp05_sequence_packing",
-    "tp06_curation_report",
-    "tp07_contamination_check",
-    "tp11_length_buckets",
-    "tp12_weighted_sample",
-    "tp13_global_shuffle",
-    "tp14_leakage_safe_split",
-    "tp15_temperature_mixture",
-    "tp16_dsir_resample",
-    "tp17_decontaminate_train",
-    # warehouse plans + upsert (the reference's core ETL semantics)
-    "wh01_daily_agg",
-    "wh02_integrity_check",
-    "wh03_snapshot_diff",
-    "wh04_scd2_merge",
-    "ups01_upsert_latest_wins",
-    # entity resolution chain
-    "er01_blocked_fuzzy_pairs",
-    "er02_entity_clusters",
-    "er03_entity_revenue",
-    "er04_golden_record",
-    # scalar functions
-    "f01_normalize_strings",
-    "f03_concat_ws_names",
-    "f08_case_classification",
-    "f12_date_parts",
-    "f13_time_arith",
-    "f14_epoch_diff",
 )
 
 

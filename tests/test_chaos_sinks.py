@@ -256,6 +256,44 @@ def test_pq_append_replay_after_lost_marker(spark, tmp_path):
     assert spark.read.parquet(os.path.join(out, "pq_index")).count() == base + 1
 
 
+def test_pq_append_unreadable_index_fails_batch(spark, tmp_path):
+    """An index read error must fail the batch, never read as "no
+    index": otherwise the batch is appended without the SDC dedup check
+    and its epoch marker is written, so the replay can't repair it."""
+    import os
+
+    import numpy as np
+    import pandas as pd
+
+    from chicago_business_owners_data_engineering_spark.operators.similarity import (
+        PQ_DSUB,
+        PQ_M,
+        PQ_NCODES,
+    )
+    from chicago_business_owners_data_engineering_spark.plans.vector_pipeline import (
+        foreach_batch_index_append,
+    )
+
+    out = tmp_path / "vec"
+    (out / "pq_index").mkdir(parents=True)
+    (out / "pq_index" / "part-00000.parquet").write_bytes(b"not a parquet file")
+    codebook = [
+        [[float(c)] * PQ_DSUB for c in range(PQ_NCODES)] for _ in range(PQ_M)
+    ]
+    batch = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "vec_id": [900001],
+                "embedding": [np.full(PQ_M * PQ_DSUB, 3.0, dtype=np.float32)],
+                "label": [99],
+            }
+        )
+    )
+    with pytest.raises(Exception):
+        foreach_batch_index_append(str(out), codebook)(batch, 0)
+    assert not os.path.exists(out / "_append_ledger" / "epoch=0")
+
+
 QG_BOUNDARIES = ["pre_publish", "post_data_write", "post_rejects_write", "post_commit"]
 
 

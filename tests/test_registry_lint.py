@@ -137,3 +137,29 @@ def test_r09_front_is_the_mechanical_staleness_pick():
 
     expected = stalest_front(list(registry.get_queries()), limit=50, max_round=8)
     assert list(registry._R09_FRONT) == expected
+
+
+def test_persist_only_through_pins():
+    """Every persisted intermediate has one owner: ``catalog.Pins``
+    (directly or through ``catalog.generation``). A ``.persist(``,
+    ``.cache()`` or ``.unpersist(`` call anywhere else in the engine
+    package would bring back a relation with no bounded lifetime."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(registry.__file__).resolve().parent
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path.name == "catalog.py" and path.parent == pkg:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and (
+                    node.func.attr in ("persist", "unpersist")
+                    or (node.func.attr == "cache" and not node.args)
+                )
+            ):
+                offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert not offenders, offenders

@@ -174,14 +174,11 @@ def main() -> int:
     for name in sorted(qs):
         if only and name not in only:
             continue
-        # Bound the sweep's memory footprint: several queries persist()
-        # intermediates they cannot safely unpersist themselves (the
-        # registry contract returns a lazy DataFrame, so there is no
-        # post-action point inside the query function). Across a
-        # 300+-query sweep those caches would otherwise accumulate —
-        # and CacheManager's plan-dedup keeps them live — so the
-        # harness clears the cache between queries. Per-query timing
-        # stays honest too: nothing is pre-warmed by an earlier query.
+        # Bound the sweep's memory footprint: a query's pins
+        # (catalog.generation) live until its owner's next call, so
+        # across a 300+-query sweep every owner's last generation would
+        # otherwise stay cached. Per-query timing stays honest too:
+        # nothing is pre-warmed by an earlier query.
         spark.catalog.clearCache()
         t0 = time.time()
         try:
