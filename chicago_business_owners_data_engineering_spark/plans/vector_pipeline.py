@@ -197,11 +197,13 @@ def foreach_batch_index_append(
     and this corpus's closest distinct pair (measured SDC 0.308;
     5th-percentile nearest-other 0.45) — recalibrate per corpus.
 
-    Exactly-once under replay via the epoch-ledger protocol shared with
-    foreach_batch_incremental_rollup: appends are not idempotent, so an
-    epoch that finds its marker is skipped.
+    Exactly-once under replay through the streaming sinks' epoch ledger
+    (``streaming.jobs.exactly_once_sink`` over an ``EpochLedger`` at
+    ``out_dir/_append_ledger``): appends are not idempotent, so an
+    epoch the ledger holds is skipped, and a replay after an append
+    whose commit was lost is absorbed by the SDC dedup below.
     """
-    import math
+    from ..streaming.jobs import exactly_once_sink
 
     # sdc[m][ca][cb] = squared L2 between codebook entries, mirroring
     # the engine's (sqrt(Σ))² arithmetic
@@ -224,12 +226,7 @@ def foreach_batch_index_append(
 
     codes_schema = ", ".join(f"code{m} int" for m in range(PQ_M))
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(out_dir, "_append_ledger", f"epoch={epoch_id}")
-        if os.path.exists(marker):
-            return
-        if fault:
-            fault("pre_publish")
+    def plan(batch_df: DataFrame, epoch_id: int, ledger):
         spark = batch_df.sparkSession
         new = batch_df.select(
             "vec_id",
@@ -247,15 +244,12 @@ def foreach_batch_index_append(
         # The explicit schema makes a torn first append (a directory
         # holding no committed files) read as an empty index instead of
         # failing schema inference.
-        if os.path.exists(index_path):
+        if ledger.exists(index_path):
             existing = (
                 spark.read.schema(codes_schema)
                 .parquet(index_path)
                 .select(*[F.col(f"code{m}").alias(f"e{m}") for m in range(PQ_M)])
             )
-        else:
-            existing = None
-        if existing is not None:
             # SDC distance new×existing via the precomputed tables —
             # 3D literal indexed per subspace, summed in fixed order.
             dist = None
@@ -285,13 +279,11 @@ def foreach_batch_index_append(
         # appends land under cluster=-1 partitions (segregated segment,
         # compacted into proper cells by the next rebuild — the standard
         # fresh-segment design of online ANN indexes).
-        novel.withColumn("cluster", F.lit(-1)).write.mode("append").partitionBy(
-            "cluster"
-        ).parquet(index_path)
-        if fault:
-            fault("post_append_write")
-        os.makedirs(marker, exist_ok=True)
-        if fault:
-            fault("post_commit")
+        def append() -> None:
+            novel.withColumn("cluster", F.lit(-1)).write.mode(
+                "append"
+            ).partitionBy("cluster").parquet(index_path)
 
-    return sink
+        return [("post_append_write", append)], []
+
+    return exactly_once_sink(out_dir, plan, fault, ledger="_append_ledger")

@@ -23,9 +23,6 @@ import re
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -49,14 +46,12 @@ def _host_driver_memory() -> str:
 
 def get_spark(
     app_name: str = "chicago-business-owners-spark",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` for the test
-    harness; on a cluster, leave it unset and let spark-submit decide.
+    The master is always set: ``$SPARK_MASTER`` when exported, else
+    ``local[$SPARK_GRAFT_CPUS]`` (the host's core count by default).
     """
     cpus = default_parallelism()
     driver_mem = os.environ.get("SPARK_DRIVER_MEMORY") or _host_driver_memory()
@@ -80,7 +75,7 @@ def get_spark(
     )
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
+        .master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
         .config("spark.driver.extraJavaOptions", driver_opts)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -104,8 +99,6 @@ def get_spark(
         # parallelism knob together with the parquet row-group size.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

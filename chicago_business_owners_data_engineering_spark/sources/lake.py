@@ -130,18 +130,7 @@ class LakeStorage:
 
     def list_partitions(self, spark: SparkSession, layer: str, name: str) -> list[str]:
         """Partition listing (S8) via the Hadoop FS API — no data scan."""
-        jvm = spark.sparkContext._jvm
-        jsc = spark.sparkContext._jsc
-        path = jvm.org.apache.hadoop.fs.Path(self._path(layer, name))
-        fs = path.getFileSystem(jsc.hadoopConfiguration())
-        if not fs.exists(path):
-            return []
-        out = []
-        for status in fs.listStatus(path):
-            base = status.getPath().getName()
-            if status.isDirectory() and base.startswith(f"{DATE_COL}="):
-                out.append(base.split("=", 1)[1])
-        return sorted(out)
+        return sorted(_keyed_dirs(spark, self._path(layer, name), DATE_COL))
 
     def latest_partition(self, spark: SparkSession, layer: str, name: str) -> str | None:
         parts = self.list_partitions(spark, layer, name)
@@ -165,15 +154,10 @@ class LakeStorage:
         """Retention (S9, storage_manager.py:246-265): drop partitions
         with date_key < keep_after. Pure directory deletes — O(partitions),
         independent of data volume."""
-        jvm = spark.sparkContext._jvm
-        jsc = spark.sparkContext._jsc
         removed = []
         for key in self.list_partitions(spark, layer, name):
             if key < keep_after:
-                p = jvm.org.apache.hadoop.fs.Path(
-                    f"{self._path(layer, name)}/{DATE_COL}={key}"
-                )
-                fs = p.getFileSystem(jsc.hadoopConfiguration())
+                fs, p = _fs(spark, f"{self._path(layer, name)}/{DATE_COL}={key}")
                 fs.delete(p, True)
                 removed.append(key)
         return removed
@@ -262,9 +246,20 @@ def write_clustered(
 
 
 def _fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p, jvm
+    """``(FileSystem, Path)`` for ``path`` through the Hadoop FS API, so
+    one call resolves file://, hdfs://, s3a:// and plain paths alike."""
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
+
+
+def _keyed_dirs(spark: SparkSession, path: str, key: str) -> list[str]:
+    """The values ``v`` of the ``key=v`` subdirectories of ``path``
+    (none when ``path`` is absent), unsorted."""
+    fs, p = _fs(spark, path)
+    if not fs.exists(p):
+        return []
+    names = [st.getPath().getName() for st in fs.listStatus(p) if st.isDirectory()]
+    return [n.split("=", 1)[1] for n in names if n.startswith(f"{key}=")]
 
 
 def _compact_partition(
@@ -275,8 +270,8 @@ def _compact_partition(
     tmp_path = f"{lake._path(layer, name)}/.compact-{date_key}.tmp"
     df = spark.read.format(lake.fmt).load(part_path)
     df.repartition(target_files).write.mode("overwrite").format(lake.fmt).save(tmp_path)
-    fs, part_p, jvm = _fs(spark, part_path)
-    tmp_p = jvm.org.apache.hadoop.fs.Path(tmp_path)
+    fs, part_p = _fs(spark, part_path)
+    _, tmp_p = _fs(spark, tmp_path)
     fs.delete(part_p, True)
     fs.rename(tmp_p, part_p)
     n = 0

@@ -25,9 +25,13 @@ construction in tests.
 
 from __future__ import annotations
 
+import posixpath
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..sources.lake import _fs, _keyed_dirs
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -188,8 +192,12 @@ def foreach_batch_multi_sink(parquet_out: str, dead_letter_out: str):
     replacing per-sink cursors."""
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        valid = batch_df.filter(F.col("value").isNotNull() & (F.col("value") >= 0))
-        invalid = batch_df.subtract(valid)
+        # The negation, not batch_df.subtract(valid): subtract is EXCEPT
+        # DISTINCT, which collapses identical rejected rows (and costs
+        # an all-column shuffle). ``ok`` is never NULL, so every row
+        # lands on exactly one side.
+        ok = F.col("value").isNotNull() & (F.col("value") >= 0)
+        valid, invalid = batch_df.filter(ok), batch_df.filter(~ok)
         valid.write.mode("append").parquet(parquet_out)
         if invalid.take(1):
             invalid.withColumn("epoch", F.lit(epoch_id)).write.mode("append").parquet(
@@ -331,21 +339,29 @@ def kafka_source_plan(spark: SparkSession, brokers: str, topic: str) -> DataFram
 
 
 # ---------------------------------------------------------------------------
-# Generational snapshot protocol for read-modify-write streaming sinks.
+# Exactly-once sinks: one epoch ledger, one publish runner.
 #
-# A sink that merges each micro-batch into a stored table CANNOT
-# overwrite the table in place: Spark's overwrite deletes the target
-# before writing, so a crash mid-overwrite destroys the table AND the
-# in-flight batch, and a crash after the overwrite but before any
-# commit record makes non-idempotent merges (SUM partials) double-count
-# on replay — the replay merges the batch into a table that already
-# contains it. The fix is MVCC-shaped:
+# Every exactly-once foreachBatch sink below (rollup, upsert, near-dup
+# admission, quality gate, and the PQ index append in
+# plans/vector_pipeline.py) keeps only its own logic — compute the
+# epoch's relations, return its ordered writes — and hands them to
+# exactly_once_sink, which owns the commit protocol against an
+# EpochLedger.
+#
+# Merge sinks add the generational snapshot protocol on top. A sink
+# that merges each micro-batch into a stored table CANNOT overwrite the
+# table in place: Spark's overwrite deletes the target before writing,
+# so a crash mid-overwrite destroys the table AND the in-flight batch,
+# and a crash after the overwrite but before any commit record makes
+# non-idempotent merges (SUM partials) double-count on replay — the
+# replay merges the batch into a table that already contains it. The
+# fix is MVCC-shaped:
 #
 #   1. base   = data/gen=<last COMMITTED epoch>   (ledger decides)
 #   2. merged = merge(base, batch)
 #   3. write  data/gen=<epoch> with overwrite      (idempotent replay)
 #   4. mkdir  _ledger/epoch=<epoch>                (the commit point)
-#   5. GC generations older than the merge base
+#   5. GC generations and markers older than the merge base
 #
 # A crash at ANY boundary replays into: read the same committed base,
 # rewrite the same gen dir (overwrite heals torn files), re-commit.
@@ -356,80 +372,129 @@ def kafka_source_plan(spark: SparkSession, brokers: str, topic: str) -> DataFram
 # ---------------------------------------------------------------------------
 
 
-def _versioned_committed(root: str) -> list[int]:
-    import os
+class EpochLedger:
+    """The commit record of an exactly-once sink rooted at ``root``: one
+    ``<root>/<name>/epoch=N`` directory per committed epoch.
 
-    ledger = os.path.join(root, "_ledger")
-    if not os.path.isdir(ledger):
-        return []
-    return sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(ledger)
-        if d.startswith("epoch=")
-    )
+    All of a sink's existence, listing, marker and delete operations go
+    through the Hadoop FileSystem API (``sources.lake._fs``), so the
+    ledger lives on the same store as the data it commits — a plain
+    path, ``file://``, ``hdfs://`` or ``s3a://`` root alike — and never
+    on the driver's local disk or relative to its working directory.
+    """
+
+    def __init__(self, spark: SparkSession, root: str, name: str = "_ledger") -> None:
+        self.spark = spark
+        self.root = root
+        self.dir = posixpath.join(root, name)
+
+    def path(self, *parts: str) -> str:
+        return posixpath.join(self.root, *parts)
+
+    def exists(self, path: str) -> bool:
+        fs, p = _fs(self.spark, path)
+        return fs.exists(p)
+
+    def epochs(self) -> list[int]:
+        """Committed epochs, ascending."""
+        return sorted(int(v) for v in _keyed_dirs(self.spark, self.dir, "epoch"))
+
+    def committed(self, epoch_id: int) -> bool:
+        return self.exists(posixpath.join(self.dir, f"epoch={epoch_id}"))
+
+    def commit(self, epoch_id: int) -> None:
+        fs, p = _fs(self.spark, posixpath.join(self.dir, f"epoch={epoch_id}"))
+        fs.mkdirs(p)
+
+    def drop_below(self, path: str, key: str, bound: int) -> None:
+        """Delete every ``key=N`` directory under ``path`` with N < bound."""
+        for v in _keyed_dirs(self.spark, path, key):
+            if int(v) < bound:
+                fs, p = _fs(self.spark, posixpath.join(path, f"{key}={v}"))
+                fs.delete(p, True)
+
+
+def exactly_once_sink(root: str, plan, fault=None, ledger: str = "_ledger"):
+    """The publish runner behind every exactly-once sink.
+
+    ``plan(batch_df, epoch_id, ledger)`` is the sink's own logic: it
+    builds the epoch's relations and returns ``(writes, gc)``, two lists
+    of ``(boundary, step)``. An epoch the ledger already holds (a
+    replay) is skipped before ``plan`` runs. Otherwise the runner
+    crosses ``pre_publish``, runs each write and crosses its boundary,
+    commits the epoch, crosses ``post_commit``, then runs each
+    after-commit GC step and crosses its boundary.
+
+    ``fault`` is the chaos-test hook: it is called with the name of each
+    boundary as it is crossed, and may raise to simulate a crash exactly
+    there. Production callers leave it None; the fault-injection tests
+    sweep every boundary and assert replay converges to the
+    exactly-once state.
+    """
+    cross = fault or (lambda boundary: None)
+
+    def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        led = EpochLedger(batch_df.sparkSession, root, ledger)
+        if led.committed(epoch_id):
+            return  # fully committed replay: skip
+        writes, gc = plan(batch_df, epoch_id, led)
+        cross("pre_publish")
+        for boundary, write in writes:
+            write()
+            cross(boundary)
+        led.commit(epoch_id)
+        cross("post_commit")
+        for boundary, step in gc:
+            step()
+            cross(boundary)
+
+    return sink
 
 
 def read_versioned(spark: SparkSession, root: str) -> DataFrame | None:
     """Latest committed snapshot of a generational sink table (or None)."""
-    import os
-
-    committed = _versioned_committed(root)
+    ledger = EpochLedger(spark, root)
+    committed = ledger.epochs()
     if not committed:
         return None
-    return spark.read.parquet(os.path.join(root, "data", f"gen={committed[-1]}"))
+    return spark.read.parquet(ledger.path("data", f"gen={committed[-1]}"))
 
 
-def _versioned_publish(
-    merged: DataFrame,
-    root: str,
-    epoch_id: int,
-    base_gen: int | None,
-    fault=None,
-) -> None:
-    """Steps 3-5 of the protocol: write gen dir, commit marker, GC.
+def _generational_sink(root: str, merge, fault=None):
+    """Steps 1-5 of the generational protocol for
+    ``merge(base, batch_df)``; ``base`` is None before the first commit."""
 
-    ``fault`` is a chaos-test hook: when set, it is invoked with the
-    name of each write boundary as it is crossed, and may raise to
-    simulate a crash exactly there. Production callers leave it None;
-    the parametrized fault-injection tests sweep every boundary and
-    assert replay converges to the exactly-once state.
-    """
-    import os
-    import shutil
+    def plan(batch_df: DataFrame, epoch_id: int, ledger: EpochLedger):
+        data_dir = ledger.path("data")
+        base_gen = max((e for e in ledger.epochs() if e < epoch_id), default=None)
+        base = None
+        if base_gen is not None:
+            base = batch_df.sparkSession.read.parquet(
+                posixpath.join(data_dir, f"gen={base_gen}")
+            )
+        merged = merge(base, batch_df)
 
-    if fault:
-        fault("pre_publish")
-    data_dir = os.path.join(root, "data")
-    merged.write.mode("overwrite").parquet(os.path.join(data_dir, f"gen={epoch_id}"))
-    if fault:
-        fault("post_data_write")
-    os.makedirs(os.path.join(root, "_ledger", f"epoch={epoch_id}"), exist_ok=True)
-    if fault:
-        fault("post_commit")
-    # GC: generations strictly older than the merge base are dead — no
-    # replay can ever need them (replays of this epoch re-read base_gen;
-    # later epochs read this one). base_gen itself stays one cycle for
-    # in-flight readers that resolved it just before the commit.
-    for d in os.listdir(data_dir) if os.path.isdir(data_dir) else []:
-        if d.startswith("gen="):
-            g = int(d.split("=", 1)[1])
-            if base_gen is not None and g < base_gen:
-                shutil.rmtree(os.path.join(data_dir, d), ignore_errors=True)
-    if fault:
-        fault("post_data_gc")
-    # Ledger markers mirror the data GC, or the per-batch committed-set
-    # listing grows without bound (one dir per epoch forever). Safe for
-    # the same reason: base selection is "max committed < epoch", future
-    # epochs only look above this commit, and a replay of THIS epoch
-    # finds its own marker and skips — markers below base_gen can never
-    # be chosen again. GC runs only after the commit marker lands, so a
-    # pre-commit crash leaves the ledger untouched.
-    ledger_dir = os.path.join(root, "_ledger")
-    for d in os.listdir(ledger_dir) if os.path.isdir(ledger_dir) else []:
-        if d.startswith("epoch="):
-            g = int(d.split("=", 1)[1])
-            if base_gen is not None and g < base_gen:
-                shutil.rmtree(os.path.join(ledger_dir, d), ignore_errors=True)
+        def collect_garbage() -> None:
+            # Generations strictly older than the merge base are dead —
+            # no replay can ever need them (replays of this epoch
+            # re-read base_gen; later epochs read this one). base_gen
+            # itself stays one cycle for in-flight readers that resolved
+            # it just before the commit. Ledger markers mirror the data
+            # GC, or the per-batch committed-set listing grows without
+            # bound: base selection is "max committed < epoch", so a
+            # marker below base_gen can never be chosen again.
+            if base_gen is not None:
+                ledger.drop_below(data_dir, "gen", base_gen)
+                ledger.drop_below(ledger.dir, "epoch", base_gen)
+
+        def write() -> None:
+            merged.write.mode("overwrite").parquet(
+                posixpath.join(data_dir, f"gen={epoch_id}")
+            )
+
+        return [("post_data_write", write)], [("post_data_gc", collect_garbage)]
+
+    return exactly_once_sink(root, plan, fault)
 
 
 def foreach_batch_upsert(lake_path: str, keys: list[str], version_col: str, fault=None):
@@ -445,29 +510,15 @@ def foreach_batch_upsert(lake_path: str, keys: list[str], version_col: str, faul
     """
     from ..plans.warehouse import upsert_by_key
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        import os
-
-        spark = batch_df.sparkSession
-        all_committed = _versioned_committed(lake_path)
-        if epoch_id in all_committed:
-            return  # fully committed replay: skip
-        committed = [e for e in all_committed if e < epoch_id]
-        base_gen = committed[-1] if committed else None
-        existing = (
-            spark.read.parquet(os.path.join(lake_path, "data", f"gen={base_gen}"))
-            if base_gen is not None
-            else None
-        )
-        merged = upsert_by_key(
-            existing if existing is not None else batch_df.limit(0),
+    def merge(base: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+        return upsert_by_key(
+            base if base is not None else batch_df.limit(0),
             batch_df,
             keys,
             version_col,
         )
-        _versioned_publish(merged, lake_path, epoch_id, base_gen, fault=fault)
 
-    return sink
+    return _generational_sink(lake_path, merge, fault)
 
 
 def events_enriched_with_dim(stream: DataFrame, user_dim: DataFrame) -> DataFrame:
@@ -712,7 +763,7 @@ def foreach_batch_incremental_rollup(gold_path: str, fault=None):
     (cbddl/src/etl/pipeline.py:479-565).
 
     Exactly-once under micro-batch replay via the generational snapshot
-    protocol (see _versioned_publish above). SUM merges are NOT
+    protocol (see exactly_once_sink above). SUM merges are NOT
     naturally idempotent — merging a batch into a table that already
     contains it double-counts — so the merge BASE must be the last
     COMMITTED generation, never "whatever is at the data path": a crash
@@ -722,13 +773,7 @@ def foreach_batch_incremental_rollup(gold_path: str, fault=None):
     ``read_versioned(spark, gold_path)``.
     """
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        import os
-
-        spark = batch_df.sparkSession
-        all_committed = _versioned_committed(gold_path)
-        if epoch_id in all_committed:
-            return  # fully committed replay: skip
+    def merge(base: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         partials = batch_df.groupBy(
             F.date_format("ts", "yyyy-MM-dd").alias("day"),
             F.col("event_type"),
@@ -736,23 +781,13 @@ def foreach_batch_incremental_rollup(gold_path: str, fault=None):
             F.sum("value").alias("sum_value"),
             F.count("*").alias("n_events"),
         )
-        committed = [e for e in all_committed if e < epoch_id]
-        base_gen = committed[-1] if committed else None
-        existing = (
-            spark.read.parquet(os.path.join(gold_path, "data", f"gen={base_gen}"))
-            if base_gen is not None
-            else None
-        )
-        merged = (
-            existing.unionByName(partials) if existing is not None else partials
-        )
-        merged = merged.groupBy("day", "event_type").agg(
+        merged = base.unionByName(partials) if base is not None else partials
+        return merged.groupBy("day", "event_type").agg(
             F.sum("sum_value").alias("sum_value"),
             F.sum("n_events").alias("n_events"),
         )
-        _versioned_publish(merged, gold_path, epoch_id, base_gen, fault=fault)
 
-    return sink
+    return _generational_sink(gold_path, merge, fault)
 
 
 def foreach_batch_neardup_dedup(
@@ -796,9 +831,9 @@ def foreach_batch_neardup_dedup(
 
     Exactly-once under micro-batch replay: each epoch publishes into
     its own ``epoch=N`` partition with overwrite semantics (idempotent
-    even against a crash mid-publish), and the epoch-ledger marker
-    short-circuits fully committed replays — the same protocol family
-    as the incremental rollup sink. The index probe reads only when
+    even against a crash mid-publish), and the epoch ledger
+    short-circuits fully committed replays (exactly_once_sink, like
+    every sink here). The index probe reads only when
     BOTH relations exist (a bands-only tree is a torn current-epoch
     publish, whose rows the epoch filter excludes anyway) and records
     its parameters in ``_meta.json`` ONCE, on first publish — resuming
@@ -808,35 +843,15 @@ def foreach_batch_neardup_dedup(
     allowed. Writing meta only while the index is empty means a torn
     meta write is always healable by replay; an every-epoch rewrite
     would reopen the torn window over a data-bearing index, where the
-    unreadable-meta guard wedges the stream. All index-path
-    existence/marker operations go through the Hadoop FileSystem API,
-    so the index can live on any Spark-reachable store, not just the
-    driver's local disk.
+    unreadable-meta guard wedges the stream.
     """
     import json as _json
-    import posixpath
 
     BANDS_SCHEMA = "doc_id long, band_id int, band_hash long, epoch int"
     HSETS_SCHEMA = "doc_id long, hset array<bigint>, epoch int"
 
-    def _fs(spark, path: str):
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-    def _exists(spark, path: str) -> bool:
-        fs, jpath = _fs(spark, path)
-        return fs.exists(jpath)
-
-    def _mkdirs(spark, path: str) -> None:
-        fs, jpath = _fs(spark, path)
-        fs.mkdirs(jpath)
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
+    def plan(batch_df: DataFrame, epoch_id: int, ledger: EpochLedger):
         spark = batch_df.sparkSession
-        marker = posixpath.join(index_path, "_ledger", f"epoch={epoch_id}")
-        if _exists(spark, marker):
-            return  # replayed epoch: already admitted/appended, skip
         # Parameter pinning: the stored band format is defined by
         # (num_hashes, band_size); probing an index built with other
         # parameters matches nothing and silently admits near-dups.
@@ -853,7 +868,7 @@ def foreach_batch_neardup_dedup(
             "threshold": threshold,
         }
         stored = None
-        if _exists(spark, meta_path):
+        if ledger.exists(meta_path):
             txt = "\n".join(
                 r.value for r in spark.read.text(meta_path).collect()
             ).strip()
@@ -905,7 +920,7 @@ def foreach_batch_neardup_dedup(
         # and marker, the replay would otherwise self-match every doc
         # against its own rows at J=1.0 and overwrite the partition as
         # empty, losing the batch.
-        if _exists(spark, bands_path) and _exists(spark, hsets_path):
+        if ledger.exists(bands_path) and ledger.exists(hsets_path):
             idx_bands = (
                 spark.read.schema(BANDS_SCHEMA)
                 .parquet(bands_path)
@@ -1031,12 +1046,13 @@ def foreach_batch_neardup_dedup(
             )
         admitted = admitted.localCheckpoint(eager=True)
 
-        # Publish, then record the epoch. Each epoch OVERWRITES its own
-        # epoch=N partition directory instead of appending to a shared
-        # one: a crash after a partial publish replays into an
-        # overwrite of the same path — idempotent — where a bare append
-        # would duplicate the batch's rows. The marker then only saves
-        # the (harmless) re-publish work on replay.
+        # The runner publishes these in order, then commits the epoch.
+        # Each epoch OVERWRITES its own epoch=N partition directory
+        # instead of appending to a shared one: a crash after a partial
+        # publish replays into an overwrite of the same path —
+        # idempotent — where a bare append would duplicate the batch's
+        # rows. The marker then only saves the (harmless) re-publish
+        # work on replay.
         # Meta is written ONLY when absent/unreadable (stored is None),
         # i.e. on first publish or to heal a torn first-epoch write. At
         # that point the index is provably empty (a nonempty index with
@@ -1045,29 +1061,24 @@ def foreach_batch_neardup_dedup(
         # heals. Rewriting every epoch would reopen that torn window
         # over a data-bearing index on every batch — where the
         # unreadable-meta check wedges the stream until manual repair.
-        if fault:
-            fault("pre_publish")
-        if stored is None:
-            spark.createDataFrame(
-                [(_json.dumps(meta),)], "value string"
-            ).coalesce(1).write.mode("overwrite").text(meta_path)
-        if fault:
-            fault("post_meta_write")
-        bands.join(admitted, "doc_id").write.mode("overwrite").parquet(
-            posixpath.join(bands_path, f"epoch={epoch_id}")
-        )
-        if fault:
-            fault("post_bands_write")
-        hsets.join(admitted, "doc_id").write.mode("overwrite").parquet(
-            posixpath.join(hsets_path, f"epoch={epoch_id}")
-        )
-        if fault:
-            fault("post_hsets_write")
-        _mkdirs(spark, marker)
-        if fault:
-            fault("post_commit")
+        def write_meta() -> None:
+            if stored is None:
+                spark.createDataFrame(
+                    [(_json.dumps(meta),)], "value string"
+                ).coalesce(1).write.mode("overwrite").text(meta_path)
 
-    return sink
+        def write_index(rel: DataFrame, path: str):
+            return lambda: rel.join(admitted, "doc_id").write.mode(
+                "overwrite"
+            ).parquet(posixpath.join(path, f"epoch={epoch_id}"))
+
+        return [
+            ("post_meta_write", write_meta),
+            ("post_bands_write", write_index(bands, bands_path)),
+            ("post_hsets_write", write_index(hsets, hsets_path)),
+        ], []
+
+    return exactly_once_sink(index_path, plan, fault)
 
 
 def foreach_batch_quality_gate(
@@ -1085,24 +1096,17 @@ def foreach_batch_quality_gate(
     protocol, not the generational one: admission is a pure per-row
     function with no cross-batch state, so a replay rewrites the same
     epoch dirs byte-for-byte — overwrite heals torn files — and the
-    ledger marker is the commit point; no read-modify-write, no
+    ledger commit is the commit point; no read-modify-write, no
     generation chain). Scoring reuses the BATCH operator
     (clustering.fasttext_scores), which is the point: batch/streaming
     parity of the gate is a code-sharing fact, not a re-implementation
     hoping to agree.
     """
-    import os
-
     from ..operators.clustering import FT_KEEP_MICRO, fasttext_scores
 
     threshold = FT_KEEP_MICRO if keep_micro is None else keep_micro
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(lake_path, "_ledger", f"epoch={epoch_id}")
-        if os.path.isdir(marker):
-            return  # committed replay: skip
-        if fault:
-            fault("pre_publish")
+    def plan(batch_df: DataFrame, epoch_id: int, ledger: EpochLedger):
         scored = batch_df.join(
             fasttext_scores(batch_df.select("doc_id", "text")),
             "doc_id",
@@ -1111,21 +1115,18 @@ def foreach_batch_quality_gate(
         rejected = scored.filter(F.col("score_micro") < threshold).select(
             "doc_id", "score_micro", "n_tokens"
         )
-        admitted.write.mode("overwrite").parquet(
-            os.path.join(lake_path, "data", f"epoch={epoch_id}")
-        )
-        if fault:
-            fault("post_data_write")
-        rejected.write.mode("overwrite").parquet(
-            os.path.join(lake_path, "rejects", f"epoch={epoch_id}")
-        )
-        if fault:
-            fault("post_rejects_write")
-        os.makedirs(marker, exist_ok=True)
-        if fault:
-            fault("post_commit")
 
-    return sink
+        def write(rel: DataFrame, sub: str):
+            return lambda: rel.write.mode("overwrite").parquet(
+                ledger.path(sub, f"epoch={epoch_id}")
+            )
+
+        return [
+            ("post_data_write", write(admitted, "data")),
+            ("post_rejects_write", write(rejected, "rejects")),
+        ], []
+
+    return exactly_once_sink(lake_path, plan, fault)
 
 
 def read_quality_gate(
@@ -1137,15 +1138,10 @@ def read_quality_gate(
     half-written partition is never observed — the same read contract
     as read_versioned, minus the generation chain.
     """
-    import os
-
-    committed = _versioned_committed(lake_path)
+    ledger = EpochLedger(spark, lake_path)
     sub = "rejects" if rejects else "data"
-    dirs = [
-        os.path.join(lake_path, sub, f"epoch={e}")
-        for e in committed
-        if os.path.isdir(os.path.join(lake_path, sub, f"epoch={e}"))
-    ]
+    dirs = [ledger.path(sub, f"epoch={e}") for e in ledger.epochs()]
+    dirs = [d for d in dirs if ledger.exists(d)]
     if not dirs:
         return None
     return spark.read.parquet(*dirs)

@@ -7,8 +7,9 @@ asserting the final state equals a clean run's — not merely "no crash".
 
 The webhook sink's two crash windows (replay after publish, stale
 publish dir) are covered in test_kafka_plans.py; this file sweeps the
-generational sinks (rollup, upsert), the near-dup admission sink, and
-the PQ index append.
+generational sinks (rollup, upsert), the near-dup admission sink, the
+quality gate and the PQ index append, and runs each of them against a
+``file://`` root from changing working directories.
 """
 
 from __future__ import annotations
@@ -438,3 +439,106 @@ def test_quality_gate_batch_parity_and_replay(spark, tmp_path):
         else set()
     )
     assert got_keep == expect_keep
+
+
+# ---------------------------------------------------------------------------
+# URI roots: every sink keeps its ledger on the sink's own store
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture
+def run_across_cwds(tmp_path, monkeypatch):
+    """A runner that feeds ``batches`` to ``sink`` as epochs 0, 1, ...,
+    switching the working directory between two directories on every
+    epoch, and then checks neither gained a ``file:`` tree (where
+    driver-local path calls put a URI root's files)."""
+    dirs = [tmp_path / "cwd_a", tmp_path / "cwd_b"]
+    for d in dirs:
+        d.mkdir()
+
+    def run(sink, batches) -> None:
+        for e, b in enumerate(batches):
+            monkeypatch.chdir(dirs[e % 2])
+            sink(b, e)
+        for d in dirs:
+            assert not [p for p in d.iterdir() if p.name.startswith("file:")]
+
+    return run
+
+
+@pytest.mark.parametrize("kind", ["rollup", "upsert"])
+def test_generational_sink_on_uri_root(spark, tmp_path, run_across_cwds, kind):
+    def make(root):
+        if kind == "rollup":
+            return foreach_batch_incremental_rollup(root)
+        return foreach_batch_upsert(root, ["user_id"], "event_id")
+
+    batches = _event_batches(spark)
+    plain = str(tmp_path / "plain")
+    run_across_cwds(make(plain), batches)
+    root = tmp_path / "uri"
+    run_across_cwds(make(root.as_uri()), batches)
+    assert _canon(read_versioned(spark, root.as_uri())) == _canon(
+        read_versioned(spark, plain)
+    )
+    assert sorted(p.name for p in (root / "_ledger").iterdir()) == ["epoch=1", "epoch=2"]
+
+
+def test_quality_gate_on_uri_root(spark, tmp_path, run_across_cwds):
+    from chicago_business_owners_data_engineering_spark.streaming.jobs import (
+        foreach_batch_quality_gate,
+        read_quality_gate,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"tok{i % 7} common words here number {i}") for i in range(40)],
+        "doc_id long, text string",
+    )
+    batches = [docs.filter(F.col("doc_id") < 20), docs.filter(F.col("doc_id") >= 20)]
+    plain = str(tmp_path / "plain")
+    run_across_cwds(foreach_batch_quality_gate(plain), batches)
+    root = tmp_path / "uri"
+    run_across_cwds(foreach_batch_quality_gate(root.as_uri()), batches)
+    got = read_quality_gate(spark, root.as_uri())
+    assert got is not None
+    assert _canon(got.select("doc_id")) == _canon(
+        read_quality_gate(spark, plain).select("doc_id")
+    )
+    assert (root / "_ledger" / "epoch=1").is_dir()
+
+
+def test_neardup_on_uri_root(spark, tmp_path, run_across_cwds):
+    b0 = spark.createDataFrame([(1, _BASE), (2, _OTHER)], "doc_id long, text string")
+    b1 = spark.createDataFrame(
+        [(10, _BASE + " omega"), (11, _FRESH)], "doc_id long, text string"
+    )
+    root = tmp_path / "nd"
+    run_across_cwds(foreach_batch_neardup_dedup(root.as_uri()), [b0, b1])
+    assert _admitted(spark, root) == {1, 2, 11}
+    assert (root / "_ledger" / "epoch=1").is_dir()
+
+
+def test_pq_append_on_uri_root(spark, tmp_path, sf_dir, run_across_cwds):
+    """Exact copies of indexed vectors (new ids) are SDC-deduped, so
+    appending them from any working directory leaves the index size
+    unchanged."""
+    from chicago_business_owners_data_engineering_spark.plans.vector_pipeline import (
+        build_vector_index,
+        foreach_batch_index_append,
+    )
+
+    root = tmp_path / "vec"
+    card = build_vector_index(spark, sf_dir, root.as_uri())
+    index = str(root / "pq_index")
+    base = spark.read.parquet(index).count()
+    copies = (
+        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        .join(spark.read.parquet(index).select("vec_id"), "vec_id", "left_semi")
+        .orderBy("vec_id")
+        .limit(2)
+        .select((F.col("vec_id") + 900000).alias("vec_id"), "embedding", "label")
+    )
+    sink = foreach_batch_index_append(root.as_uri(), card["codebook"])
+    run_across_cwds(sink, [copies, copies])
+    assert spark.read.parquet(index).count() == base
+    assert (root / "_append_ledger" / "epoch=1").is_dir()

@@ -163,3 +163,29 @@ def test_persist_only_through_pins():
             ):
                 offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
     assert not offenders, offenders
+
+
+def test_sinks_touch_storage_only_through_the_ledger():
+    """The streaming sinks reach their store only through
+    ``streaming.jobs.EpochLedger`` (the Hadoop FileSystem API): a
+    driver-local ``os``/``shutil`` call resolves a URI root such as
+    ``file:///x`` as a relative path, so its markers and probes would
+    land under the process's working directory instead of the sink
+    root. Path joins stay allowed."""
+    import ast
+    from pathlib import Path
+
+    banned = {
+        "os.makedirs",
+        "os.listdir",
+        "os.path.isdir",
+        "os.path.exists",
+        "shutil.rmtree",
+    }
+    pkg = Path(registry.__file__).resolve().parent
+    offenders = []
+    for rel in ("streaming/jobs.py", "plans/vector_pipeline.py"):
+        for node in ast.walk(ast.parse((pkg / rel).read_text())):
+            if isinstance(node, ast.Call) and ast.unparse(node.func) in banned:
+                offenders.append(f"{rel}:{node.lineno} {ast.unparse(node.func)}")
+    assert not offenders, offenders

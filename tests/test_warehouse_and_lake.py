@@ -114,6 +114,24 @@ def test_streaming_checkpoint_no_reprocessing(spark, tmp_path):
     assert spark.read.parquet(good).count() == n1
 
 
+def test_dead_letter_keeps_every_rejected_row(spark, tmp_path):
+    """ST6: identical rejected rows are each dead-lettered, and NULL
+    values are rejected, never dropped from both sides."""
+    from chicago_business_owners_data_engineering_spark.streaming.jobs import (
+        foreach_batch_multi_sink,
+    )
+
+    batch = spark.createDataFrame(
+        [(1, 3.0), (2, -1.0), (2, -1.0), (3, None)], "event_id long, value double"
+    )
+    good, dead = str(tmp_path / "good"), str(tmp_path / "dead")
+    foreach_batch_multi_sink(good, dead)(batch, 7)
+    assert sorted(tuple(r) for r in spark.read.parquet(good).collect()) == [(1, 3.0)]
+    assert sorted(
+        (r.event_id, r.value, r.epoch) for r in spark.read.parquet(dead).collect()
+    ) == [(2, -1.0, 7), (2, -1.0, 7), (3, None, 7)]
+
+
 def test_streaming_stateful_running_totals(spark, tmp_path):
     """applyInPandasWithState: state persists across micro-batches —
     a user appearing in both batches must show cumulative totals."""
