@@ -1,10 +1,10 @@
-"""Table catalog: parquet loading + temp-view registration.
+"""Table catalog: parquet loading, scan spreading and pinned intermediates.
 
 The reference declares a dtype map at CSV ingest and relies on parquet
 self-describing schemas thereafter (SURVEY.md §1.3). We do the same:
-parquet is the storage format, schemas travel with the files, and the
-engine registers each table as a temp view so both the DataFrame API and
-``spark.sql`` see one catalog.
+parquet is the storage format and schemas travel with the files. Every
+query reads its tables through :func:`load_table` as DataFrames; the
+engine registers no temp views.
 """
 
 from __future__ import annotations
@@ -40,22 +40,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     return spark.read.parquet(table_path(sf_dir, name))
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    """Register each table as a temp view named after the table."""
-    dfs = load_tables(spark, sf_dir, names)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
 
 
 def spread_scan(df: DataFrame) -> DataFrame:

@@ -113,21 +113,13 @@ def run_curate_mode(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
 
 
 def run_vector_mode(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
-    from .operators.similarity import QUERY_VEC_ID, TOP_K
+    from .catalog import load_table
+    from .operators.similarity import TOP_K, query_vector
     from .plans.vector_pipeline import build_vector_index, query_vector_index
 
     vec_out = os.path.join(out_dir, "vector")
     card = build_vector_index(spark, sf_dir, vec_out)
-    from .catalog import load_table
-    from pyspark.sql import functions as F
-
-    qv = [
-        float(x)
-        for x in load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") == QUERY_VEC_ID)
-        .select(F.transform("embedding", lambda v: v.cast("double")).alias("v"))
-        .collect()[0]["v"]
-    ]
+    qv = query_vector(load_table(spark, sf_dir, "embeddings"))
     hits = query_vector_index(
         spark, sf_dir, vec_out, card.pop("codebook"), qv, top_k=TOP_K
     ).collect()

@@ -16,7 +16,7 @@ separator between present parts) — matching the reference's row-apply
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # Tokens treated as missing, matched case-sensitively after trim
@@ -47,15 +47,6 @@ def combine_name(*parts: Column) -> Column:
     produce double separators.
     """
     return F.concat_ws(" ", *[null_if_token(p) for p in parts])
-
-
-def clean_columns(df: DataFrame, columns: list[str]) -> DataFrame:
-    """Apply normalize_string to each named column (the reference's
-    clean_data pass, cbddl/src/data_ingestion/ingestion_pipeline.py:76-107)."""
-    out = df
-    for c in columns:
-        out = out.withColumn(c, normalize_string(F.col(c)))
-    return out
 
 
 def is_individual(owner_entity_col: Column) -> Column:

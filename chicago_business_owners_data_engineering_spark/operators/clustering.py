@@ -40,28 +40,20 @@ from .shared_oracles import (
     KMEANS_N_PROBES,
     KMEANS_PROBES_CTE,
     KMEANS_TRAJECTORY_CTE,
+    cos_sql,
 )
 
 ITERATIONS = 2
 
 
-def _dist_sq(v: Column, c: Column) -> Column:
-    """Squared L2 distance between two array<double> columns (codegen)."""
-    return F.aggregate(
-        F.zip_with(v, c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+def _centroid_dists(centroids: list[tuple[int, list[float]]]) -> Column:
+    """struct(d, cid) per centroid: the squared L2 distance from the
+    vector column ``v`` to each centroid of the broadcast literal.
+    Ordering these structs ranks centroids by (distance, cluster id);
+    sqrt is monotonic, so squared distance orders identically to the
+    oracle's list_distance."""
+    from .similarity import sq_l2
 
-
-def _assign(emb: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataFrame:
-    """Map-side cluster assignment against a broadcast centroid literal.
-
-    ``array_min`` over struct(dist, cid) picks the lexicographic min —
-    nearest centroid, ties to the lowest cluster id — inside
-    whole-stage codegen. sqrt is monotonic so squared distance orders
-    identically to the oracle's list_distance.
-    """
     cent_arr = F.array(
         *[
             F.struct(
@@ -71,12 +63,17 @@ def _assign(emb: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataFra
             for cid, vec in centroids
         ]
     )
-    best = F.array_min(
-        F.transform(
-            cent_arr,
-            lambda s: F.struct(_dist_sq(F.col("v"), s["c"]).alias("d"), s["cid"].alias("cid")),
-        )
+    return F.transform(
+        cent_arr,
+        lambda s: F.struct(sq_l2(F.col("v"), s["c"]).alias("d"), s["cid"].alias("cid")),
     )
+
+
+def _assign(emb: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataFrame:
+    """Map-side cluster assignment against a broadcast centroid literal:
+    ``array_min`` picks the nearest centroid, ties to the lowest
+    cluster id, inside whole-stage codegen."""
+    best = F.array_min(_centroid_dists(centroids))
     return emb.select(
         "vec_id", "v", best["cid"].alias("cluster"), best["d"].alias("dist_sq")
     )
@@ -249,22 +246,48 @@ def kmeans_probes(
     emb = _emb_vectors(spark, sf_dir)
     if centroids is None:
         centroids = lloyd_centroids(spark, sf_dir, k=k)
-    cent_arr = F.array(
-        *[
-            F.struct(
-                F.array(*[F.lit(float(x)) for x in vec]).alias("c"),
-                F.lit(cid).alias("cid"),
-            )
-            for cid, vec in centroids
-        ]
-    )
-    scored = F.transform(
-        cent_arr,
-        lambda s: F.struct(_dist_sq(F.col("v"), s["c"]).alias("d"), s["cid"].alias("cid")),
-    )
-    top = F.slice(F.array_sort(scored), 1, n_probes)
+    top = F.slice(F.array_sort(_centroid_dists(centroids)), 1, n_probes)
     return emb.select(
         "vec_id", "v", F.explode(F.transform(top, lambda s: s["cid"])).alias("probe")
+    )
+
+
+def _near_pairs(probes: DataFrame, cos_threshold: float, names: tuple[str, str]) -> DataFrame:
+    """Canonical blocked pairs (a < b) of a ``kmeans_probes`` relation
+    with cosine ≥ ``cos_threshold`` (ml03, ml04). Each (vector, probe)
+    row is normalized ONCE, so cosine costs a single dot fold per
+    candidate pair instead of a dot plus two norm folds (3× less array
+    work in the quadratic stage; identical pair set, the division
+    merely moves before the sum)."""
+    from .similarity import dot, salted_cell_join, unit
+
+    sides = probes.select("vec_id", "probe", unit(F.col("v")).alias("vn"))
+    return salted_cell_join(
+        sides,
+        sides,
+        names,
+        where=dot(F.col("a.vn"), F.col("b.vn")) >= F.lit(cos_threshold),
+    )
+
+
+def _knn_candidates(spark: SparkSession, sf_dir: str, k: int, n_probes: int) -> DataFrame:
+    """(qid, nid, cs): every blocked neighbor of every vector with its
+    exact cosine (sim13, ml09). Each pair is scored ONCE in canonical
+    (a < b) orientation, then symmetrized: cosine is bitwise
+    orientation-invariant (per-element IEEE multiplies commute and the
+    fold order is the element order, norm·norm likewise), so half the
+    quadratic stage's cosine evaluations and half the dedup shuffle buy
+    the identical candidate relation. NOT pinned (the ml03/ml04 lesson,
+    r10): the candidate relation is consumed once, so persisting the
+    probes side just adds a materialization barrier."""
+    from .similarity import cosine, salted_cell_join
+
+    sides = kmeans_probes(spark, sf_dir, k=k, n_probes=n_probes)  # (vec_id, v, probe)
+    half = salted_cell_join(
+        sides, sides, ("qid", "nid"), cosine(F.col("a.v"), F.col("b.v")).alias("cs")
+    )
+    return half.unionByName(
+        half.select(F.col("nid").alias("qid"), F.col("qid").alias("nid"), F.col("cs"))
     )
 
 
@@ -277,9 +300,7 @@ def kmeans_probes(
         SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
         FROM probes a JOIN probes b
           ON a.probe = b.probe AND a.vec_id < b.vec_id
-        WHERE LIST_DOT_PRODUCT(a.v, b.v) /
-              (SQRT(LIST_DOT_PRODUCT(a.v, a.v)) * SQRT(LIST_DOT_PRODUCT(b.v, b.v)))
-              >= {SEMDEDUP_COS}
+        WHERE {cos_sql("a.v", "b.v")} >= {SEMDEDUP_COS}
     ), edges AS (
         SELECT vec_a AS src, vec_b AS dst FROM spairs
         UNION ALL
@@ -338,11 +359,6 @@ def semantic_dedup_components(
     """
     from .graph import components_large_small_star
 
-    # Normalize ONCE per (vector, probe) row — cosine then costs a
-    # single zip_with/aggregate fold per candidate pair instead of a
-    # dot plus two norm folds (3× less array work in the quadratic
-    # stage; identical pair set, the division merely moves before the
-    # sum).
     # NOT pinned (measured, r10): unlike ml04, the pair relation here
     # is consumed exactly once (the eager component fixpoint), so a
     # persist of the probes side trades two fully-parallel inline
@@ -350,48 +366,10 @@ def semantic_dedup_components(
     # measured 4.7 s → 7.7 s median at sf0.1, a regression. Recompute
     # of a cheap per-row projection beats a persist when nothing
     # downstream reuses it.
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(F.col("v"), lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-        )
-    )
-    sides = kmeans_probes(
-        spark, sf_dir, k=k, n_probes=n_probes, centroids=centroids
-    ).select(
-        "vec_id",
-        "probe",
-        F.transform(F.col("v"), lambda x: x / norm).alias("vn"),
-    )
-    # Salt the self-join: with few large cells (small k, or a skewed
-    # corpus) joining on probe alone puts an entire cell's quadratic
-    # work in ONE task. Side a gets a deterministic salt; side b is
-    # replicated across all SALTS values, so each cell's pair grid
-    # splits into SALTS row-stripes that schedule independently —
-    # SALTS× the parallelism for a SALTS× replication of the (small)
-    # build side. This is the same salting recipe as skew02, applied
-    # to a blocked self-join.
-    SALTS = 8
-    a = sides.withColumn("salt", F.pmod(F.xxhash64("vec_id"), F.lit(SALTS))).alias("a")
-    b = sides.withColumn(
-        "salt", F.explode(F.array(*[F.lit(s) for s in range(SALTS)]))
-    ).alias("b")
-    cos = F.aggregate(
-        F.zip_with(F.col("a.vn"), F.col("b.vn"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    pairs = (
-        a.join(
-            b,
-            on=[
-                F.col("a.probe") == F.col("b.probe"),
-                F.col("a.salt") == F.col("b.salt"),
-                F.col("a.vec_id") < F.col("b.vec_id"),
-            ],
-        )
-        .filter(cos >= F.lit(cos_threshold))
-        .select(F.col("a.vec_id").alias("doc_a"), F.col("b.vec_id").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
+    pairs = _near_pairs(
+        kmeans_probes(spark, sf_dir, k=k, n_probes=n_probes, centroids=centroids),
+        cos_threshold,
+        ("doc_a", "doc_b"),
     )
     comp = components_large_small_star(pairs)
     return (
@@ -410,10 +388,7 @@ def semantic_dedup_components(
     + KMEANS_PROBES_CTE
     + f"""
     , cand AS (
-        SELECT DISTINCT a.vec_id AS qid, b.vec_id AS nid,
-               LIST_DOT_PRODUCT(a.v, b.v) /
-               (SQRT(LIST_DOT_PRODUCT(a.v, a.v)) *
-                SQRT(LIST_DOT_PRODUCT(b.v, b.v))) AS cs
+        SELECT DISTINCT a.vec_id AS qid, b.vec_id AS nid, {cos_sql("a.v", "b.v")} AS cs
         FROM probes a JOIN probes b
           ON a.probe = b.probe AND a.vec_id <> b.vec_id
     ), ranked AS (
@@ -473,44 +448,7 @@ def knn_join_topk(
     """
     from pyspark.sql import Window
 
-    from .similarity import cosine
-
-    # NOT pinned (the ml03/ml04 lesson, r10): the candidate relation is
-    # consumed once, so persisting the probes side just adds a
-    # materialization barrier.
-    sides = kmeans_probes(spark, sf_dir, k=k, n_probes=n_probes)  # (vec_id, v, probe)
-    SALTS = 8
-    a = sides.withColumn("salt", F.pmod(F.xxhash64("vec_id"), F.lit(SALTS))).alias("a")
-    b = sides.withColumn(
-        "salt", F.explode(F.array(*[F.lit(s) for s in range(SALTS)]))
-    ).alias("b")
-    # Score each candidate pair ONCE in canonical (a < b) orientation,
-    # then symmetrize (r10, the ml04 recipe): cosine is bitwise
-    # orientation-invariant (per-element IEEE multiplies commute and
-    # the fold order is the element order, norm·norm likewise), so
-    # half the quadratic stage's cosine evaluations and half the
-    # dedup shuffle buy the identical candidate relation.
-    half = (
-        a.join(
-            b,
-            on=[
-                F.col("a.probe") == F.col("b.probe"),
-                F.col("a.salt") == F.col("b.salt"),
-                F.col("a.vec_id") < F.col("b.vec_id"),
-            ],
-        )
-        .select(
-            F.col("a.vec_id").alias("qid"),
-            F.col("b.vec_id").alias("nid"),
-            cosine(F.col("a.v"), F.col("b.v")).alias("cs"),
-        )
-        .dropDuplicates(["qid", "nid"])
-    )
-    cand = half.unionByName(
-        half.select(
-            F.col("nid").alias("qid"), F.col("qid").alias("nid"), F.col("cs")
-        )
-    )
+    cand = _knn_candidates(spark, sf_dir, k, n_probes)
     w = Window.partitionBy("qid").orderBy(F.desc("cs"), F.asc("nid"))
     return (
         cand.withColumn("rn", F.row_number().over(w))
@@ -546,9 +484,7 @@ DBSCAN_MIN_PTS = 2
         SELECT DISTINCT a.vec_id AS vid, b.vec_id AS nb
         FROM probes a JOIN probes b
           ON a.probe = b.probe AND a.vec_id <> b.vec_id
-        WHERE LIST_DOT_PRODUCT(a.v, b.v) /
-              (SQRT(LIST_DOT_PRODUCT(a.v, a.v)) * SQRT(LIST_DOT_PRODUCT(b.v, b.v)))
-              >= {DBSCAN_COS}
+        WHERE {cos_sql("a.v", "b.v")} >= {DBSCAN_COS}
     ), core AS (
         SELECT vid FROM cpairs GROUP BY vid HAVING COUNT(*) >= {DBSCAN_MIN_PTS}
     ), cedge AS (
@@ -636,30 +572,6 @@ def dbscan_density_dedup(
     from .graph import components_large_small_star
 
     pin = generation("dbscan_density_dedup")
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(F.col("v"), lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-        )
-    )
-    # NOT pinned (measured, r10 — the ml03 lesson): both candidate
-    # sides consume it inside the ONE pinned cpairs materialization, so
-    # a persist here is a barrier + cache round-trip for a projection
-    # that recomputes cheaply in parallel.
-    sides = kmeans_probes(spark, sf_dir, k=k, n_probes=n_probes).select(
-        "vec_id",
-        "probe",
-        F.transform(F.col("v"), lambda x: x / norm).alias("vn"),
-    )
-    SALTS = 8
-    a = sides.withColumn("salt", F.pmod(F.xxhash64("vec_id"), F.lit(SALTS))).alias("a")
-    b = sides.withColumn(
-        "salt", F.explode(F.array(*[F.lit(s) for s in range(SALTS)]))
-    ).alias("b")
-    cos = F.aggregate(
-        F.zip_with(F.col("a.vn"), F.col("b.vn"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     # Score each candidate pair ONCE in canonical (a < b) orientation —
     # half the quadratic stage's cosine work — then symmetrize the
     # (filtered, much smaller) result: degree and border lookups need
@@ -667,19 +579,15 @@ def dbscan_density_dedup(
     # nbrs (twice), core_edges, and the border branch — plus the
     # component fixpoint materializes core_edges EAGERLY at
     # construction, so without the persist the quadratic stage runs
-    # once there and again per downstream branch.
+    # once there and again per downstream branch. The probes side is
+    # NOT pinned (measured, r10 — the ml03 lesson): it is consumed only
+    # inside this one materialization.
     cpairs = pin(
-        a.join(
-            b,
-            on=[
-                F.col("a.probe") == F.col("b.probe"),
-                F.col("a.salt") == F.col("b.salt"),
-                F.col("a.vec_id") < F.col("b.vec_id"),
-            ],
+        _near_pairs(
+            kmeans_probes(spark, sf_dir, k=k, n_probes=n_probes),
+            cos_threshold,
+            ("vec_id", "nb"),
         )
-        .filter(cos >= F.lit(cos_threshold))
-        .select(F.col("a.vec_id").alias("vec_id"), F.col("b.vec_id").alias("nb"))
-        .dropDuplicates(["vec_id", "nb"])
     )
     nbrs = cpairs.union(
         cpairs.select(F.col("nb").alias("vec_id"), F.col("vec_id").alias("nb"))
@@ -1117,10 +1025,7 @@ KNN_EVAL_K = 3
         FROM probes a JOIN probes b
           ON a.probe = b.probe AND a.vec_id <> b.vec_id
     ), nbr AS (
-        SELECT c.qid, c.nid,
-               LIST_DOT_PRODUCT(ea.v, eb.v) /
-               (SQRT(LIST_DOT_PRODUCT(ea.v, ea.v)) *
-                SQRT(LIST_DOT_PRODUCT(eb.v, eb.v))) AS cs
+        SELECT c.qid, c.nid, {cos_sql("ea.v", "eb.v")} AS cs
         FROM cpairs c
         JOIN emb ea ON ea.vec_id = c.qid
         JOIN emb eb ON eb.vec_id = c.nid
@@ -1194,39 +1099,7 @@ def knn_classifier_eval(
     """
     from pyspark.sql import Window
 
-    from ..catalog import load_table
-    from .similarity import cosine
-
-    sides = kmeans_probes(spark, sf_dir, k=k, n_probes=n_probes)
-    SALTS = 8
-    a = sides.withColumn("salt", F.pmod(F.xxhash64("vec_id"), F.lit(SALTS))).alias("a")
-    b = sides.withColumn(
-        "salt", F.explode(F.array(*[F.lit(s) for s in range(SALTS)]))
-    ).alias("b")
-    # Canonical (a < b) scoring + symmetrize — see knn_join_topk: half
-    # the cosine work and half the dedup shuffle for the identical
-    # candidate relation (cosine is bitwise orientation-invariant).
-    half = (
-        a.join(
-            b,
-            on=[
-                F.col("a.probe") == F.col("b.probe"),
-                F.col("a.salt") == F.col("b.salt"),
-                F.col("a.vec_id") < F.col("b.vec_id"),
-            ],
-        )
-        .select(
-            F.col("a.vec_id").alias("qid"),
-            F.col("b.vec_id").alias("nid"),
-            cosine(F.col("a.v"), F.col("b.v")).alias("cs"),
-        )
-        .dropDuplicates(["qid", "nid"])
-    )
-    cand = half.unionByName(
-        half.select(
-            F.col("nid").alias("qid"), F.col("qid").alias("nid"), F.col("cs")
-        )
-    )
+    cand = _knn_candidates(spark, sf_dir, k, n_probes)
     wk = Window.partitionBy("qid").orderBy(F.desc("cs"), F.asc("nid"))
     topk = (
         cand.withColumn("rn", F.row_number().over(wk))

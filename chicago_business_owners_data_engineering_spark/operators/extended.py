@@ -15,6 +15,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import load_table
 from ..registry import query
+from .shared_oracles import cos_sql
 # NOTE: .similarity is imported lazily where needed — a module-level
 # import would leave similarity partially initialized whenever
 # similarity itself is the first module imported (it pulls in registry,
@@ -332,7 +333,8 @@ def hyperplane_lsh_pairs(
 # step is the sign test pd > 0; both engines fold the dot product
 # left-to-right over identical doubles (the sim02-proven pattern), so
 # the bits compare equal.
-_SIM05_ORACLE = """
+_SIM05_COS = cos_sql("ea.v", "eb.v")
+_SIM05_ORACLE = f"""
     WITH planes AS (
         SELECT p,
                [CASE WHEN CAST(CONCAT('0x', SUBSTRING(
@@ -357,15 +359,10 @@ _SIM05_ORACLE = """
           ON a.table_id = b.table_id AND a.bucket = b.bucket
          AND a.vec_id < b.vec_id
     )
-    SELECT c.vec_a, c.vec_b,
-           ROUND(LIST_DOT_PRODUCT(ea.v, eb.v) /
-                 (SQRT(LIST_DOT_PRODUCT(ea.v, ea.v)) *
-                  SQRT(LIST_DOT_PRODUCT(eb.v, eb.v))), 6) AS cos_sim
+    SELECT c.vec_a, c.vec_b, ROUND({_SIM05_COS}, 6) AS cos_sim
     FROM cand c JOIN e ea ON c.vec_a = ea.vec_id
                 JOIN e eb ON c.vec_b = eb.vec_id
-    WHERE LIST_DOT_PRODUCT(ea.v, eb.v) /
-          (SQRT(LIST_DOT_PRODUCT(ea.v, ea.v)) *
-           SQRT(LIST_DOT_PRODUCT(eb.v, eb.v))) >= 0.4
+    WHERE {_SIM05_COS} >= 0.4
 """
 
 

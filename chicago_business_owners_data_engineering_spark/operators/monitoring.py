@@ -1064,11 +1064,11 @@ def ts13_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Demo SLO for the events fixture (error events are ~20% of traffic by
 # construction): slow-burn ticket when the error ratio exceeds 25%
 # (4·err > tot), fast-burn page when it exceeds 30% (10·err > 3·tot) —
-# in BOTH the short (1h) and long (6h) trailing windows, the standard
-# multi-window rule that suppresses single-spike false pages.
-# Production tunes these to its SLO budget; the integer cross-multiplied
-# comparisons are the point (no float ratio ever computed).
-BURN_SHORT_H = 1
+# in BOTH the short (the hour itself) and long (BURN_LONG_H trailing
+# hours) windows, the standard multi-window rule that suppresses
+# single-spike false pages. Production tunes these to its SLO budget;
+# the integer cross-multiplied comparisons are the point (no float
+# ratio ever computed).
 BURN_LONG_H = 6
 
 

@@ -5,7 +5,7 @@ registry, and the registry imports every operator module at first use,
 so a constant needed at DECORATION time cannot be imported peer-to-peer
 without re-entering a partially initialized module (the circular-import
 class fixed in round 3). Anything here must stay import-pure: no
-registry, no pyspark, just strings.
+registry, no pyspark, just strings and functions that build them.
 """
 
 # fastText-shaped classifier constants (clustering.py re-exports) and
@@ -28,6 +28,61 @@ CURATION_FT_MIN_MICRO = 35_000_000
 KMEANS_K = 8
 EMB_DIM = 64
 KMEANS_N_PROBES = 2
+
+# The vector family's fixed probe vector (sim01/sim03/sim08/sim11/...;
+# similarity.py re-exports it) and its DuckDB relation ``q(qv)``.
+QUERY_VEC_ID = 0
+QUERY_CTE = f"""q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings
+          WHERE vec_id = {QUERY_VEC_ID})"""
+
+
+def cos_sql(a: str, b: str) -> str:
+    """DuckDB cosine of two DOUBLE[] expressions, in the engine's fold
+    order: dot / (norm * norm) on the raw vectors (similarity.cosine)."""
+    return (
+        f"LIST_DOT_PRODUCT({a}, {b}) / "
+        f"(SQRT(LIST_DOT_PRODUCT({a}, {a})) * SQRT(LIST_DOT_PRODUCT({b}, {b})))"
+    )
+
+
+# IVF cells: per-label mean vectors, the replay of similarity._centroids
+# (``pos`` keeps vec_id for sim17's quantization grid). The positional
+# explode is unrolled with a constant GENERATE_SERIES(1, 64): 64 is this
+# corpus's embedding dim, because DuckDB lacks UNNEST WITH ORDINALITY
+# and rejects a column-dependent series; the Spark side handles any dim.
+IVF_CENTROID_CTE = """pos AS MATERIALIZED (
+        SELECT vec_id, label, i AS pos, CAST(embedding[i] AS DOUBLE) AS val
+        FROM embeddings, GENERATE_SERIES(1, 64) AS g(i)
+    ), cent AS (
+        SELECT label, LIST(mean_val ORDER BY pos) AS centroid
+        FROM (SELECT label, pos, AVG(val) AS mean_val FROM pos GROUP BY label, pos)
+        GROUP BY label
+    )"""
+
+
+def ivf_probe_cte(nprobe: int) -> str:
+    """``probed(label)``: the ``nprobe`` cells nearest the one query ``q``
+    by centroid cosine, ties to the lower label."""
+    return f"""probed AS (
+        SELECT label FROM cent, q
+        ORDER BY {cos_sql("centroid", "qv")} DESC, label ASC
+        LIMIT {nprobe}
+    )"""
+
+
+def ivf_panel_probe_cte(nprobe: int) -> str:
+    """``probed(qid, label)``: the same probe rule per query of a panel
+    ``qs(qid, qv)``."""
+    return f"""probed AS (
+        SELECT qid, label FROM (
+            SELECT q.qid, c.label,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY q.qid
+                       ORDER BY {cos_sql("c.centroid", "q.qv")} DESC, c.label ASC) AS rn
+            FROM cent c, qs q
+        ) WHERE rn <= {nprobe}
+    )"""
+
 
 # Shared DuckDB replay of the two-iteration Lloyd trajectory over the
 # embeddings table: deterministic init (k lowest vec_ids) -> assign ->

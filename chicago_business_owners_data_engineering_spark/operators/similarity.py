@@ -1,20 +1,36 @@
 """Similarity search over embedding vectors (SURVEY.md §2.11).
 
-The ``embeddings`` table carries ``array<float>`` vectors. Dot products
-and norms are expressed with the native higher-order functions
-``zip_with`` + ``aggregate`` — JVM-side, no Python in the row path.
+The ``embeddings`` table carries ``array<float>`` vectors. All vector
+math is native higher-order functions (``zip_with`` + ``aggregate``),
+JVM-side, with no Python in the row path. Every query of the family is
+composed from the steps below, each written once; the DuckDB twins are
+composed the same way from ``shared_oracles`` (``cos_sql``, the
+``q``/centroid/probe CTEs).
 
-- sim01: brute-force cosine top-k for one query vector (the exactness
-  baseline; linear scan, embarrassingly parallel).
-- sim02: all-pairs near-neighbor above a cosine threshold (oracle-able
-  at test scale).
-- sim03: IVF-style pruned search — coarse centroids (one per label
-  partition), probe the nearest ``nprobe`` cells, scan only those.
-  At 100 TB the cell assignment is the partition key, so a query scans
-  nprobe/ncells of the data instead of all of it.
+- Folds: :func:`dot`, :func:`norm`, :func:`cosine`, :func:`unit` and
+  the squared-L2 fold :func:`sq_l2` (k-means assignment, PQ encoding,
+  exact L2 re-rank). Every float that reaches the output or an ordering
+  is folded in element order, as DuckDB's list functions do.
+- Exact search: the one-row query relation :func:`_query_vec`, scored
+  by :func:`_cosine_to_query` / :func:`_exact_topk` (sim01, sim03,
+  sim16, sim18).
+- IVF: per-label cell centroids :func:`_centroids`, probed for one
+  query (:func:`_ivf_probed_labels`: sim03, sim12, sim18) or per query
+  of a panel (:func:`_panel_probe`: sim15, sim17).
+- PQ: the codebook :func:`pq_codebook` (subvectors of the NCODES lowest
+  vec_ids), encoding :func:`pq_code_col`, the ADC lookup-table score
+  :func:`pq_adc_score` and exact re-rank (sim09, sim10, sim14 and the
+  vector pipeline).
+- Blocked self-joins: :func:`salted_cell_join`, the salted in-cell join
+  behind ml03, ml04, ml09, sim13 and sim14.
+- MMR: one candidate pool plus a driver-coordinated greedy loop
+  (:func:`_mmr_rerank`: sim11, sim12).
 """
 
 from __future__ import annotations
+
+import math
+import operator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -23,10 +39,22 @@ from pyspark.sql.window import Window
 
 from ..catalog import load_table, spread_scan
 from ..registry import query
-from .shared_oracles import KMEANS_PROBES_CTE, KMEANS_TRAJECTORY_CTE
+from .shared_oracles import (
+    IVF_CENTROID_CTE,
+    KMEANS_K,
+    KMEANS_N_PROBES,
+    KMEANS_PROBES_CTE,
+    KMEANS_TRAJECTORY_CTE,
+    QUERY_CTE,
+    QUERY_VEC_ID,
+    cos_sql,
+    ivf_panel_probe_cte,
+    ivf_probe_cte,
+)
 
-QUERY_VEC_ID = 0  # fixed probe vector for deterministic top-k queries
 TOP_K = 10
+# An embeddings row ``e``'s cosine against the query relation ``q``.
+_E_COS_SQL = cos_sql("CAST(e.embedding AS DOUBLE[])", "q.qv")
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -48,14 +76,60 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def unit(a: Column) -> Column:
+    """``a / ‖a‖`` element-wise."""
+    return F.transform(a, lambda x: x / norm(a))
+
+
+def sq_l2(a: Column, b: Column) -> Column:
+    """Σ(aᵢ-bᵢ)², folded in element order."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _query_vec(embeddings: DataFrame) -> DataFrame:
+    """The one-row relation ``qv`` holding QUERY_VEC_ID's vector."""
+    return embeddings.filter(F.col("vec_id") == QUERY_VEC_ID).select(
+        F.col("embedding").cast("array<double>").alias("qv")
+    )
+
+
+def query_vector(embeddings: DataFrame) -> list[float]:
+    """QUERY_VEC_ID's vector, collected to the driver as doubles."""
+    row = (
+        embeddings.filter(F.col("vec_id") == QUERY_VEC_ID)
+        .select(F.transform("embedding", lambda x: x.cast("double")).alias("v"))
+        .collect()[0]
+    )
+    return [float(x) for x in row["v"]]
+
+
+def _cosine_to_query(cands: DataFrame, q: DataFrame) -> DataFrame:
+    """(vec_id, label, cos_sim): each candidate's rounded exact cosine
+    against the broadcast one-row query ``q``."""
+    cos = F.round(cosine(F.col("embedding").cast("array<double>"), F.col("qv")), 6)
+    return cands.crossJoin(F.broadcast(q)).select("vec_id", "label", cos.alias("cos_sim"))
+
+
+def _exact_topk(cands: DataFrame, q: DataFrame) -> DataFrame:
+    """TOP_K candidates by rounded cosine, ties to the lower vec_id:
+    every partition keeps a k-heap (TakeOrderedAndProject)."""
+    return (
+        _cosine_to_query(cands, q)
+        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
+        .limit(TOP_K)
+    )
+
+
 @query(
     "sim01_bruteforce_topk",
     oracle=f"""
-    WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID})
+    WITH {QUERY_CTE}
     SELECT e.vec_id, e.label,
-           ROUND(LIST_DOT_PRODUCT(CAST(e.embedding AS DOUBLE[]), q.qv) /
-                 (SQRT(LIST_DOT_PRODUCT(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))) *
-                  SQRT(LIST_DOT_PRODUCT(q.qv, q.qv))), 6) AS cos_sim
+           ROUND({_E_COS_SQL}, 6) AS cos_sim
     FROM embeddings e, q
     WHERE e.vec_id <> {QUERY_VEC_ID}
     ORDER BY cos_sim DESC, e.vec_id ASC
@@ -71,30 +145,20 @@ def sim01_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim03 approximates.
     """
     embeddings = load_table(spark, sf_dir, "embeddings")
-    q = embeddings.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("embedding").cast("array<double>").alias("qv")
+    return _exact_topk(
+        embeddings.filter(F.col("vec_id") != QUERY_VEC_ID), _query_vec(embeddings)
     )
-    cos = F.round(cosine(F.col("embedding").cast("array<double>"), F.col("qv")), 6)
-    return (
-        embeddings.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", "label", cos.alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(TOP_K)
-    )
+
+
+_SIM02_COS = cos_sql("CAST(a.embedding AS DOUBLE[])", "CAST(b.embedding AS DOUBLE[])")
 
 
 @query(
     "sim02_near_dup_vectors",
-    oracle="""
-    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           ROUND(LIST_DOT_PRODUCT(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) /
-                 (SQRT(LIST_DOT_PRODUCT(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[]))) *
-                  SQRT(LIST_DOT_PRODUCT(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))), 6) AS cos_sim
+    oracle=f"""
+    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, ROUND({_SIM02_COS}, 6) AS cos_sim
     FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-    WHERE LIST_DOT_PRODUCT(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) /
-          (SQRT(LIST_DOT_PRODUCT(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[]))) *
-           SQRT(LIST_DOT_PRODUCT(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))) >= 0.4
+    WHERE {_SIM02_COS} >= 0.4
     """,
 )
 def sim02_near_dup_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -123,11 +187,12 @@ def sim02_near_dup_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _centroids(embeddings: DataFrame) -> DataFrame:
     """Per-cell mean vectors: posexplode → groupBy(cell, dim) avg →
-    re-assemble by cell. The ONE centroid convention every IVF member
-    (sim03/sim12 via _ivf_probed_labels, sim16, sim17) shares — the
-    explode is map-side and partial aggregation collapses each task to
-    ncells×dim tiny rows before the shuffle (see sim03's docstring for
-    the measured-faster rationale). Returns (label, centroid)."""
+    re-assemble by cell. The ONE centroid convention of every IVF
+    member: sim03, sim12 and sim18 through :func:`_ivf_probed_labels`,
+    sim15 and sim17 through :func:`_panel_probe`, and sim16 directly.
+    The explode is map-side and partial aggregation collapses each task
+    to ncells×dim tiny rows before the shuffle (see sim03's docstring
+    for the measured-faster rationale). Returns (label, centroid)."""
     pos = embeddings.select(
         "label", F.posexplode(F.col("embedding").cast("array<double>")).alias("pos", "val")
     )
@@ -147,8 +212,7 @@ def _centroids(embeddings: DataFrame) -> DataFrame:
 def _ivf_probed_labels(embeddings: DataFrame, q: DataFrame, nprobe: int = 3) -> DataFrame:
     """IVF coarse-probe: nearest ``nprobe`` cells to the query by
     centroid cosine over the shared :func:`_centroids` relation.
-    Shared by sim03 (pruned top-k) and sim12 (pruned MMR candidate
-    pool). ``q`` must carry one row with a double-array column ``qv``.
+    ``q`` must carry one row with a double-array column ``qv``.
     """
     centroid = _centroids(embeddings)
     return (
@@ -160,39 +224,28 @@ def _ivf_probed_labels(embeddings: DataFrame, q: DataFrame, nprobe: int = 3) -> 
     )
 
 
+def _panel_probe(embeddings: DataFrame, qs: DataFrame, nprobe: int) -> DataFrame:
+    """(qid, label): :func:`_ivf_probed_labels`' rule for every query of
+    a panel ``qs(qid, qv)`` at once — one broadcast of the panel onto
+    the ncells centroids and a window over the (tiny) qid partitioning."""
+    w = Window.partitionBy("qid").orderBy(F.desc("cell_sim"), F.asc("label"))
+    return (
+        _centroids(embeddings)
+        .crossJoin(F.broadcast(qs))
+        .select("qid", "label", cosine(F.col("centroid"), F.col("qv")).alias("cell_sim"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= nprobe)
+        .select("qid", "label")
+    )
+
+
 @query(
     "sim03_ivf_topk",
-    # Deterministic given the probe rule, so fully oracle-able. The
-    # oracle unrolls the positional explode with a constant
-    # GENERATE_SERIES(1, 64): this corpus's embedding dim (DuckDB lacks
-    # UNNEST WITH ORDINALITY and rejects column-dependent series); the
-    # Spark side handles any dim.
+    # Deterministic given the probe rule, so fully oracle-able.
     oracle=f"""
-    WITH pos AS (
-        SELECT label, i AS pos, CAST(embedding[i] AS DOUBLE) AS val
-        FROM embeddings, GENERATE_SERIES(1, 64) AS g(i)
-    ),
-    cent AS (
-        SELECT label, LIST(mean_val ORDER BY pos) AS centroid
-        FROM (SELECT label, pos, AVG(val) AS mean_val FROM pos GROUP BY label, pos)
-        GROUP BY label
-    ),
-    q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings
-          WHERE vec_id = {QUERY_VEC_ID}),
-    probed AS (
-        SELECT label
-        FROM cent, q
-        ORDER BY LIST_DOT_PRODUCT(centroid, qv) /
-                 (SQRT(LIST_DOT_PRODUCT(centroid, centroid)) *
-                  SQRT(LIST_DOT_PRODUCT(qv, qv))) DESC,
-                 label ASC
-        LIMIT 3
-    )
+    WITH {IVF_CENTROID_CTE}, {QUERY_CTE}, {ivf_probe_cte(3)}
     SELECT e.vec_id, e.label,
-           ROUND(LIST_DOT_PRODUCT(CAST(e.embedding AS DOUBLE[]), q.qv) /
-                 (SQRT(LIST_DOT_PRODUCT(CAST(e.embedding AS DOUBLE[]),
-                                        CAST(e.embedding AS DOUBLE[]))) *
-                  SQRT(LIST_DOT_PRODUCT(q.qv, q.qv))), 6) AS cos_sim
+           ROUND({_E_COS_SQL}, 6) AS cos_sim
     FROM embeddings e JOIN probed USING (label), q
     WHERE e.vec_id <> {QUERY_VEC_ID}
     ORDER BY cos_sim DESC, e.vec_id ASC
@@ -219,24 +272,13 @@ def sim03_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
          exact cosine + top-k.
     """
     embeddings = load_table(spark, sf_dir, "embeddings")
-
-    q = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") == QUERY_VEC_ID)
-        .select(F.col("embedding").cast("array<double>").alias("qv"))
-    )
-
+    q = _query_vec(embeddings)
     probed = _ivf_probed_labels(embeddings, q)
-
-    # 3. exact scoring restricted to probed cells
-    cos = F.round(cosine(F.col("embedding").cast("array<double>"), F.col("qv")), 6)
-    return (
-        embeddings.join(F.broadcast(probed), "label")
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", "label", cos.alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(TOP_K)
+    return _exact_topk(
+        embeddings.join(F.broadcast(probed), "label").filter(
+            F.col("vec_id") != QUERY_VEC_ID
+        ),
+        q,
     )
 
 
@@ -283,9 +325,7 @@ BATCH_K = 3
     ),
     scored AS (
         SELECT q.query_id, e.vec_id,
-               LIST_DOT_PRODUCT(CAST(e.embedding AS DOUBLE[]), q.qv) /
-               (SQRT(LIST_DOT_PRODUCT(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))) *
-                SQRT(LIST_DOT_PRODUCT(q.qv, q.qv))) AS cs
+               {_E_COS_SQL} AS cs
         FROM embeddings e CROSS JOIN q
         WHERE e.vec_id >= {N_QUERY_BATCH}
     )
@@ -319,8 +359,6 @@ def sim07_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(q))
         .select("query_id", "vec_id", cos.alias("cs"))
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("query_id").orderBy(F.desc("cs"), F.asc("vec_id"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
@@ -336,17 +374,13 @@ HYBRID_K = 15
 @query(
     "sim08_hybrid_search",
     oracle=f"""
-    WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-               FROM embeddings WHERE vec_id = {QUERY_VEC_ID}),
+    WITH {QUERY_CTE},
     scored AS (
         SELECT d.doc_id,
                LEN(LIST_INTERSECT(LIST_DISTINCT(STRING_SPLIT(d.text, ' ')),
                                   {list(HYBRID_TERMS)!r})) / {len(HYBRID_TERMS)}.0
                    AS lex,
-               LIST_DOT_PRODUCT(CAST(e.embedding AS DOUBLE[]), q.qv) /
-               (SQRT(LIST_DOT_PRODUCT(CAST(e.embedding AS DOUBLE[]),
-                                      CAST(e.embedding AS DOUBLE[]))) *
-                SQRT(LIST_DOT_PRODUCT(q.qv, q.qv))) AS cos
+               {_E_COS_SQL} AS cos
         FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id, q
     )
     SELECT doc_id,
@@ -374,9 +408,7 @@ def sim08_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     documents = load_table(spark, sf_dir, "documents")
     embeddings = load_table(spark, sf_dir, "embeddings")
-    q = embeddings.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("embedding").cast("array<double>").alias("qv")
-    )
+    q = _query_vec(embeddings)
     terms = F.array(*[F.lit(t) for t in HYBRID_TERMS])
     lex = F.size(
         F.array_intersect(F.array_distinct(F.split(F.col("text"), " ")), terms)
@@ -409,13 +441,33 @@ PQ_RERANK = 30  # ADC candidates re-ranked exactly
 def _sq_l2_mirror(a: Column, b: Column) -> Column:
     """(sqrt(Σ(aᵢ-bᵢ)²))² — bit-identical to DuckDB's list_distance²,
     which the oracle uses (same sequential fold, sqrt, square)."""
-    fold = F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return F.pow(F.sqrt(fold), F.lit(2.0))
+    return F.pow(F.sqrt(sq_l2(a, b)), F.lit(2.0))
 
+
+def sq_l2_py(a: list[float], b: list[float]) -> float:
+    """Driver-side twin of :func:`_sq_l2_mirror` over two float lists."""
+    return math.sqrt(sum((x - y) ** 2 for x, y in zip(a, b))) ** 2
+
+
+def lit_matrix(rows: list[list[float]]) -> Column:
+    """A 2-D array literal (a subspace's codewords, a distance table)."""
+    return F.array(*[F.array(*[F.lit(x) for x in r]) for r in rows])
+
+
+def pq_codebook(embeddings: DataFrame) -> list[list[list[float]]]:
+    """``cb[m][c]``: subspace ``m`` of the ``c``-th lowest vec_id's
+    vector. Raw corpus rows as codewords keep encoding replayable in
+    SQL (the oracles' ``cbsrc``/``cb`` CTEs); codebooks are k·d driver
+    material, collected once as MLlib does for k-means."""
+    rows = (
+        embeddings.select(
+            "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
+        )
+        .orderBy("vec_id")
+        .limit(PQ_NCODES)
+        .collect()
+    )
+    return [[list(r["v"][m * PQ_DSUB : (m + 1) * PQ_DSUB]) for r in rows] for m in range(PQ_M)]
 
 
 def pq_code_col(codebook: list, m: int) -> Column:
@@ -427,17 +479,32 @@ def pq_code_col(codebook: list, m: int) -> Column:
     which keeps analysis/codegen time flat as NCODES grows. Tiebreak:
     array_min on struct(d, c) → lowest code id among equal distances.
     """
-    cb_lit = F.array(
-        *[F.array(*[F.lit(x) for x in codebook[m][c]]) for c in range(len(codebook[m]))]
-    )
     scored = F.transform(
-        cb_lit,
+        lit_matrix(codebook[m]),
         lambda c, i: F.struct(
             _sq_l2_mirror(F.slice(F.col("v"), m * PQ_DSUB + 1, PQ_DSUB), c).alias("d"),
             i.alias("c"),
         ),
     )
     return F.array_min(scored)["c"]
+
+
+def pq_adc_score(codebook: list, qv: list[float]) -> Column:
+    """Asymmetric distance of the coded row (``code0..``) to ``qv``:
+    the query's distance to every codeword is precomputed once on the
+    driver (the lookup table), so the per-row score is M literal
+    lookups summed in subspace order."""
+    score = None
+    for m in range(PQ_M):
+        lut = [sq_l2_py(qv[m * PQ_DSUB : (m + 1) * PQ_DSUB], cw) for cw in codebook[m]]
+        term = F.element_at(F.array(*[F.lit(x) for x in lut]), F.col(f"code{m}") + 1)
+        score = term if score is None else score + term
+    return score
+
+
+def pq_exact_l2(qv: list[float]) -> Column:
+    """Exact L2 distance of the raw vector column ``v`` to ``qv``."""
+    return F.sqrt(sq_l2(F.col("v"), F.array(*[F.lit(float(x)) for x in qv])))
 
 
 def _pq_adc_rerank(emb: DataFrame, cb: list, qv: list) -> DataFrame:
@@ -449,44 +516,48 @@ def _pq_adc_rerank(emb: DataFrame, cb: list, qv: list) -> DataFrame:
     bit-identically; for sim10 (rows-only) the extra sqrt/square costs
     nothing beyond the last ulp.
     """
-    import math
-
-    lut = [
-        [
-            math.sqrt(
-                sum((qv[m * PQ_DSUB + i] - cb[m][c][i]) ** 2 for i in range(PQ_DSUB))
-            )
-            ** 2
-            for c in range(PQ_NCODES)
-        ]
-        for m in range(PQ_M)
-    ]
     coded = emb.select(
         "vec_id", "label", "v", *[pq_code_col(cb, m).alias(f"code{m}") for m in range(PQ_M)]
     )
-    approx = None
-    for m in range(PQ_M):
-        term = F.element_at(F.array(*[F.lit(x) for x in lut[m]]), F.col(f"code{m}") + 1)
-        approx = term if approx is None else approx + term
     cand = (
-        coded.select("vec_id", "label", "v", approx.alias("ad"))
+        coded.select("vec_id", "label", "v", pq_adc_score(cb, qv).alias("ad"))
         .orderBy("ad", "vec_id")
         .limit(PQ_RERANK)
     )
-    q_lit = F.array(*[F.lit(float(x)) for x in qv])
-    exact = F.sqrt(
-        F.aggregate(
-            F.zip_with(F.col("v"), q_lit, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
     return (
-        cand.select("vec_id", "label", exact.alias("d"))
+        cand.select("vec_id", "label", pq_exact_l2(qv).alias("d"))
         .orderBy("d", "vec_id")
         .limit(TOP_K)
         .select("vec_id", "label", F.round("d", 6).alias("l2_dist"))
     )
+
+
+# The oracles' PQ codebook and encoding over ``emb(vec_id, v)`` (sim09,
+# sim14): pq_codebook's codewords and pq_code_col's (distance, code)
+# argmin.
+_PQ_CODEBOOK_CTES = f"""cbsrc AS (
+        SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS c, v
+        FROM (SELECT * FROM emb ORDER BY vec_id LIMIT {PQ_NCODES})
+    ), cb AS (
+        SELECT g.m, cbsrc.c,
+               cbsrc.v[g.m * {PQ_DSUB} + 1 : g.m * {PQ_DSUB} + {PQ_DSUB}] AS sub
+        FROM cbsrc CROSS JOIN (SELECT UNNEST(RANGE(0, {PQ_M})) AS m) g
+    )"""
+
+
+def _pq_codes_ctes(where: str = "") -> str:
+    return f"""enc AS (
+        SELECT e.vec_id, cb.m, cb.c,
+               ROW_NUMBER() OVER (
+                   PARTITION BY e.vec_id, cb.m
+                   ORDER BY POWER(list_distance(
+                       e.v[cb.m * {PQ_DSUB} + 1 : cb.m * {PQ_DSUB} + {PQ_DSUB}],
+                       cb.sub), 2), cb.c) AS rn
+        FROM emb e CROSS JOIN cb
+        {where}
+    ), codes AS (
+        SELECT vec_id, m, c FROM enc WHERE rn = 1
+    )"""
 
 
 @query(
@@ -496,31 +567,13 @@ def _pq_adc_rerank(emb: DataFrame, cb: list, qv: list) -> DataFrame:
         SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
     ), q AS (
         SELECT v AS qv FROM emb WHERE vec_id = {QUERY_VEC_ID}
-    ), cbsrc AS (
-        SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS c, v
-        FROM (SELECT * FROM emb ORDER BY vec_id LIMIT {PQ_NCODES})
-    ), cb AS (
-        SELECT g.m, cbsrc.c,
-               cbsrc.v[g.m * {PQ_DSUB} + 1 : g.m * {PQ_DSUB} + {PQ_DSUB}] AS sub
-        FROM cbsrc CROSS JOIN (SELECT UNNEST(RANGE(0, {PQ_M})) AS m) g
-    ), lut AS (
+    ), {_PQ_CODEBOOK_CTES}, lut AS (
         SELECT cb.m, cb.c,
                POWER(list_distance(
                    q.qv[cb.m * {PQ_DSUB} + 1 : cb.m * {PQ_DSUB} + {PQ_DSUB}],
                    cb.sub), 2) AS d
         FROM cb CROSS JOIN q
-    ), enc AS (
-        SELECT e.vec_id, cb.m, cb.c,
-               ROW_NUMBER() OVER (
-                   PARTITION BY e.vec_id, cb.m
-                   ORDER BY POWER(list_distance(
-                       e.v[cb.m * {PQ_DSUB} + 1 : cb.m * {PQ_DSUB} + {PQ_DSUB}],
-                       cb.sub), 2), cb.c) AS rn
-        FROM emb e CROSS JOIN cb
-        WHERE e.vec_id <> {QUERY_VEC_ID}
-    ), codes AS (
-        SELECT vec_id, m, c FROM enc WHERE rn = 1
-    ), approx AS (
+    ), {_pq_codes_ctes(f"WHERE e.vec_id <> {QUERY_VEC_ID}")}, approx AS (
         SELECT codes.vec_id, list_sum(LIST(lut.d ORDER BY codes.m)) AS ad
         FROM codes JOIN lut ON codes.m = lut.m AND codes.c = lut.c
         GROUP BY codes.vec_id
@@ -560,15 +613,8 @@ def sim09_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = embeddings.select(
         "vec_id", "label", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
-    qv = list(
-        emb.filter(F.col("vec_id") == QUERY_VEC_ID).select("v").collect()[0]["v"]
-    )
-    cb_rows = emb.orderBy("vec_id").limit(PQ_NCODES).collect()
-    # cb[m][c] = the c-th codebook subvector for subspace m
-    cb = [
-        [list(r["v"][m * PQ_DSUB : (m + 1) * PQ_DSUB]) for r in cb_rows]
-        for m in range(PQ_M)
-    ]
+    qv = query_vector(embeddings)
+    cb = pq_codebook(embeddings)
     return _pq_adc_rerank(emb.filter(F.col("vec_id") != QUERY_VEC_ID), cb, qv)
 
 
@@ -760,12 +806,9 @@ def _mmr_oracle(pre_ctes: str = "", en_from: str = "embeddings") -> str:
     ``pre_ctes``/``en_from`` let sim12 splice an IVF cell-probe in
     front of the candidate pool (same chain, pruned FROM clause)."""
     head = f"""
-    WITH qv AS (
-        SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        WHERE vec_id = {QUERY_VEC_ID}
-    ), qn AS (
-        SELECT LIST_TRANSFORM(v, x -> x / SQRT(LIST_DOT_PRODUCT(v, v))) AS vn
-        FROM qv
+    WITH {QUERY_CTE}, qn AS (
+        SELECT LIST_TRANSFORM(qv, x -> x / SQRT(LIST_DOT_PRODUCT(qv, qv))) AS vn
+        FROM q
     ){pre_ctes}, en AS (
         SELECT vec_id,
                LIST_TRANSFORM(CAST(embedding AS DOUBLE[]),
@@ -830,24 +873,25 @@ def sim11_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = embeddings.select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
-    vn = F.transform(F.col("v"), lambda x: x / norm(F.col("v")))
-    en = emb.filter(F.col("vec_id") != QUERY_VEC_ID).select("vec_id", vn.alias("vn"))
-    qrow = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(vn.alias("vn")).collect()
-    qlit = F.array(*[F.lit(float(x)) for x in qrow[0]["vn"]])
+    return _mmr_rerank(spark, emb, emb.filter(F.col("vec_id") == QUERY_VEC_ID), "v")
+
+
+def _mmr_rerank(spark: SparkSession, emb: DataFrame, qsrc: DataFrame, qcol: str) -> DataFrame:
+    """The MMR_CAND unit vectors of ``emb(vec_id, v)`` most similar to
+    the query (column ``qcol`` of the one-row ``qsrc``) form the pool;
+    then K driver-coordinated greedy rounds over it. The pool is
+    localCheckpointed once (≤ MMR_CAND rows) so each round re-scans a
+    materialized pool, not the corpus plan."""
+    qvn = qsrc.select(unit(F.col(qcol)).alias("vn")).collect()[0]["vn"]
+    qlit = F.array(*[F.lit(float(x)) for x in qvn])
     cand = (
-        en.select("vec_id", "vn", dot(F.col("vn"), qlit).alias("rel"))
+        emb.filter(F.col("vec_id") != QUERY_VEC_ID)
+        .select("vec_id", unit(F.col("v")).alias("vn"))
+        .select("vec_id", "vn", dot(F.col("vn"), qlit).alias("rel"))
         .orderBy(F.desc("rel"), F.asc("vec_id"))
         .limit(MMR_CAND)
+        .localCheckpoint(eager=True)
     )
-    return _mmr_greedy(spark, cand)
-
-
-def _mmr_greedy(spark: SparkSession, cand: DataFrame) -> DataFrame:
-    """K driver-coordinated greedy MMR rounds over a bounded candidate
-    pool (``vec_id``, ``vn``, ``rel``). The pool is localCheckpointed
-    once (≤ MMR_CAND rows) so each round re-scans a materialized
-    pool, not the corpus plan."""
-    cand = cand.localCheckpoint(eager=True)
     picks: list[tuple] = []  # (pick_rank, vec_id, rel, score)
     selected: list[list[float]] = []
     remaining = cand
@@ -883,31 +927,11 @@ def _mmr_greedy(spark: SparkSession, cand: DataFrame) -> DataFrame:
 
 # sim12's oracle splices sim03's cell probe in front of sim11's greedy
 # chain: centroids → nprobe nearest cells → candidate pool restricted
-# to probed cells → identical K-round MMR trajectory. GENERATE_SERIES
-# is pinned to this corpus's dim=64 for the same DuckDB reason as
-# sim03's oracle; the Spark side handles any dim.
-_SIM12_PRE_CTES = """, pos AS (
-        SELECT label, i AS pos, CAST(embedding[i] AS DOUBLE) AS val
-        FROM embeddings, GENERATE_SERIES(1, 64) AS g(i)
-    ), cent AS (
-        SELECT label, LIST(mean_val ORDER BY pos) AS centroid
-        FROM (SELECT label, pos, AVG(val) AS mean_val FROM pos GROUP BY label, pos)
-        GROUP BY label
-    ), probed AS (
-        SELECT label
-        FROM cent, qv
-        ORDER BY LIST_DOT_PRODUCT(centroid, qv.v) /
-                 (SQRT(LIST_DOT_PRODUCT(centroid, centroid)) *
-                  SQRT(LIST_DOT_PRODUCT(qv.v, qv.v))) DESC,
-                 label ASC
-        LIMIT 3
-    )"""
-
-
+# to probed cells → identical K-round MMR trajectory.
 @query(
     "sim12_ivf_mmr_rerank",
     oracle=_mmr_oracle(
-        pre_ctes=_SIM12_PRE_CTES,
+        pre_ctes=f", {IVF_CENTROID_CTE}, {ivf_probe_cte(3)}",
         en_from="embeddings JOIN probed USING (label)",
     ),
 )
@@ -931,31 +955,60 @@ def sim12_ivf_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the scale path the two components exist to form.
     """
     embeddings = spread_scan(load_table(spark, sf_dir, "embeddings"))
-    q = (
-        embeddings.filter(F.col("vec_id") == QUERY_VEC_ID)
-        .select(F.col("embedding").cast("array<double>").alias("qv"))
-    )
+    q = _query_vec(embeddings)
     probed = _ivf_probed_labels(embeddings, q)
-
     emb = embeddings.join(F.broadcast(probed), "label").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
-    vn = F.transform(F.col("v"), lambda x: x / norm(F.col("v")))
-    en = emb.filter(F.col("vec_id") != QUERY_VEC_ID).select("vec_id", vn.alias("vn"))
-    qrow = (
-        q.select(
-            F.transform(
-                F.col("qv"), lambda x: x / norm(F.col("qv"))
-            ).alias("vn")
-        ).collect()
+    return _mmr_rerank(spark, emb, q, "qv")
+
+
+# --- blocked self-joins (ml03, ml04, ml09, sim13, sim14) -------------------
+
+SALTS = 8
+
+
+def salted_cell_join(
+    a: DataFrame,
+    b: DataFrame,
+    names: tuple[str, str],
+    *cols: Column,
+    where: Column | None = None,
+    op=operator.lt,
+) -> DataFrame:
+    """Candidate pairs of a blocked self-join: rows of ``a`` and ``b``
+    (each with ``vec_id`` and ``probe``) that share a probe cell, with
+    ``op(a.vec_id, b.vec_id)`` — ``<`` for canonical pairs, ``!=`` for
+    both orientations. ``where`` filters the joined rows; the result is
+    the two ids as ``names`` plus ``cols``, deduplicated on ``names``
+    (a pair sharing two probe cells meets twice). Expressions address
+    the sides as ``a.<col>`` and ``b.<col>``.
+
+    Salted: with few large cells (small k, or a skewed corpus) joining
+    on probe alone puts an entire cell's quadratic work in ONE task.
+    Side a gets a deterministic salt; side b is replicated across all
+    SALTS values, so each cell's pair grid splits into SALTS row-stripes
+    that schedule independently — SALTS× the parallelism for a SALTS×
+    replication of the (small) build side. This is skew02's salting
+    recipe, applied to a blocked self-join.
+    """
+    a = a.withColumn("salt", F.pmod(F.xxhash64("vec_id"), F.lit(SALTS))).alias("a")
+    b = b.withColumn(
+        "salt", F.explode(F.array(*[F.lit(s) for s in range(SALTS)]))
+    ).alias("b")
+    pairs = a.join(
+        b,
+        on=[
+            F.col("a.probe") == F.col("b.probe"),
+            F.col("a.salt") == F.col("b.salt"),
+            op(F.col("a.vec_id"), F.col("b.vec_id")),
+        ],
     )
-    qlit = F.array(*[F.lit(float(x)) for x in qrow[0]["vn"]])
-    cand = (
-        en.select("vec_id", "vn", dot(F.col("vn"), qlit).alias("rel"))
-        .orderBy(F.desc("rel"), F.asc("vec_id"))
-        .limit(MMR_CAND)
-    )
-    return _mmr_greedy(spark, cand)
+    if where is not None:
+        pairs = pairs.filter(where)
+    return pairs.select(
+        F.col("a.vec_id").alias(names[0]), F.col("b.vec_id").alias(names[1]), *cols
+    ).dropDuplicates(list(names))
 
 
 # --- sim14: PQ-quantized kNN join -------------------------------------------
@@ -971,24 +1024,7 @@ PQ_JOIN_RERANK = 8
     oracle=KMEANS_TRAJECTORY_CTE
     + KMEANS_PROBES_CTE
     + f"""
-    , cbsrc AS (
-        SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS c, v
-        FROM (SELECT * FROM emb ORDER BY vec_id LIMIT {PQ_NCODES})
-    ), cb AS (
-        SELECT g.m, cbsrc.c,
-               cbsrc.v[g.m * {PQ_DSUB} + 1 : g.m * {PQ_DSUB} + {PQ_DSUB}] AS sub
-        FROM cbsrc CROSS JOIN (SELECT UNNEST(RANGE(0, {PQ_M})) AS m) g
-    ), enc AS (
-        SELECT e.vec_id, cb.m, cb.c,
-               ROW_NUMBER() OVER (
-                   PARTITION BY e.vec_id, cb.m
-                   ORDER BY POWER(list_distance(
-                       e.v[cb.m * {PQ_DSUB} + 1 : cb.m * {PQ_DSUB} + {PQ_DSUB}],
-                       cb.sub), 2), cb.c) AS rn
-        FROM emb e CROSS JOIN cb
-    ), codes AS (
-        SELECT vec_id, m, c FROM enc WHERE rn = 1
-    ), cand AS (
+    , {_PQ_CODEBOOK_CTES}, {_pq_codes_ctes()}, cand AS (
         SELECT DISTINCT a.vec_id AS qid, b.vec_id AS nid
         FROM probes a JOIN probes b
           ON a.probe = b.probe AND a.vec_id <> b.vec_id
@@ -1052,8 +1088,8 @@ def pq_knn_join(
     spark: SparkSession,
     sf_dir: str,
     rerank: int = PQ_JOIN_RERANK,
-    k: int | None = None,
-    n_probes: int | None = None,
+    k: int = KMEANS_K,
+    n_probes: int = KMEANS_N_PROBES,
 ) -> DataFrame:
     """Parameterized engine behind sim14.
 
@@ -1063,72 +1099,43 @@ def pq_knn_join(
     growing corpus means quadratic candidate pairs (measured for sim13
     in SCALE_PROBE.md; sim14 shares the blocking, so the same knob).
     """
-    from pyspark.sql import Window
-
     from .clustering import kmeans_probes
 
-    probe_kwargs = {}
-    if k is not None:
-        probe_kwargs["k"] = k
-    if n_probes is not None:
-        probe_kwargs["n_probes"] = n_probes
     # NOT pinned (the ml03/ml04 lesson, r10): the candidate relation is
     # consumed once, so persisting the probes side just adds a
     # materialization barrier for a cheaply-recomputed projection.
-    sides = kmeans_probes(spark, sf_dir, **probe_kwargs)  # (vec_id, v, probe)
+    sides = kmeans_probes(spark, sf_dir, k=k, n_probes=n_probes)  # (vec_id, v, probe)
     embeddings = spread_scan(load_table(spark, sf_dir, "embeddings"))
     emb = embeddings.select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
-    cb_rows = emb.orderBy("vec_id").limit(PQ_NCODES).collect()
-    cb = [
-        [list(r["v"][m * PQ_DSUB : (m + 1) * PQ_DSUB]) for r in cb_rows]
-        for m in range(PQ_M)
-    ]
+    cb = pq_codebook(embeddings)
     coded = sides.select(
         "vec_id", "probe", *[pq_code_col(cb, m).alias(f"code{m}") for m in range(PQ_M)]
     )
-    SALTS = 8
     # Pre-slice the query side into its M subvectors ONCE per (row,
     # probe) — inside the candidate loop the slice would run per PAIR
     # (M array allocations × the quadratic candidate count; the probe
     # flagged exactly this cost shape at 10×). Same bytes shuffled
     # (M·DSUB doubles = the vector), zero per-pair allocation.
-    a = sides.select(
+    qsubs = sides.select(
         "vec_id",
         "probe",
         *[
             F.slice(F.col("v"), m * PQ_DSUB + 1, PQ_DSUB).alias(f"qsub{m}")
             for m in range(PQ_M)
         ],
-    ).withColumn("salt", F.pmod(F.xxhash64("vec_id"), F.lit(SALTS))).alias("a")
-    b = coded.withColumn(
-        "salt", F.explode(F.array(*[F.lit(s) for s in range(SALTS)]))
-    ).alias("b")
+    )
     # ADC score: per subspace, look the neighbor's codeword up in the
     # broadcast codebook literal and measure it against the query row's
     # pre-sliced subvector; accumulate in subspace order (oracle fold
     # parity).
     ad = None
     for m in range(PQ_M):
-        cb_lit = F.array(
-            *[F.array(*[F.lit(x) for x in cb[m][c]]) for c in range(PQ_NCODES)]
-        )
-        cw = F.element_at(cb_lit, F.col(f"code{m}") + 1)
+        cw = F.element_at(lit_matrix(cb[m]), F.col(f"code{m}") + 1)
         term = _sq_l2_mirror(F.col(f"a.qsub{m}"), cw)
         ad = term if ad is None else ad + term
-    cand = (
-        a.join(
-            b,
-            on=[
-                F.col("a.probe") == F.col("b.probe"),
-                F.col("a.salt") == F.col("b.salt"),
-                F.col("a.vec_id") != F.col("b.vec_id"),
-            ],
-        )
-        .select(F.col("a.vec_id").alias("qid"), F.col("b.vec_id").alias("nid"), ad.alias("ad"))
-        .dropDuplicates(["qid", "nid"])
-    )
+    cand = salted_cell_join(qsubs, coded, ("qid", "nid"), ad.alias("ad"), op=operator.ne)
     w = Window.partitionBy("qid").orderBy(F.asc("ad"), F.asc("nid"))
     top = (
         cand.withColumn("rn", F.row_number().over(w))
@@ -1137,18 +1144,11 @@ def pq_knn_join(
     )
     qv = emb.select(F.col("vec_id").alias("qid"), F.col("v").alias("qv"))
     nv = emb.select(F.col("vec_id").alias("nid"), F.col("v").alias("nv"))
-    d = F.sqrt(
-        F.aggregate(
-            F.zip_with(F.col("qv"), F.col("nv"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
     w2 = Window.partitionBy("qid").orderBy(F.asc("d"), F.asc("nid"))
     return (
         top.join(qv, "qid")
         .join(nv, "nid")
-        .select("qid", "nid", d.alias("d"))
+        .select("qid", "nid", F.sqrt(sq_l2(F.col("qv"), F.col("nv"))).alias("d"))
         .withColumn("rn2", F.row_number().over(w2))
         .filter(F.col("rn2") == 1)
         .select(
@@ -1174,34 +1174,10 @@ RECALL_NPROBE = 3
         SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
         FROM embeddings
         WHERE vec_id % {RECALL_QUERY_MOD} = 0 AND vec_id <= {RECALL_QUERY_MAX}
-    ),
-    pos AS (
-        SELECT label, i AS pos, CAST(embedding[i] AS DOUBLE) AS val
-        FROM embeddings, GENERATE_SERIES(1, 64) AS g(i)
-    ),
-    cent AS (
-        SELECT label, LIST(mean_val ORDER BY pos) AS centroid
-        FROM (SELECT label, pos, AVG(val) AS mean_val FROM pos GROUP BY label, pos)
-        GROUP BY label
-    ),
-    probed AS (
-        SELECT qid, label FROM (
-            SELECT q.qid, c.label,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY q.qid
-                       ORDER BY LIST_DOT_PRODUCT(c.centroid, q.qv) /
-                                (SQRT(LIST_DOT_PRODUCT(c.centroid, c.centroid)) *
-                                 SQRT(LIST_DOT_PRODUCT(q.qv, q.qv))) DESC,
-                                c.label ASC) AS rn
-            FROM cent c, qs q
-        ) WHERE rn <= {RECALL_NPROBE}
-    ),
+    ), {IVF_CENTROID_CTE}, {ivf_panel_probe_cte(RECALL_NPROBE)},
     scored AS (
         SELECT q.qid, e.vec_id, e.label,
-               ROUND(LIST_DOT_PRODUCT(CAST(e.embedding AS DOUBLE[]), q.qv) /
-                     (SQRT(LIST_DOT_PRODUCT(CAST(e.embedding AS DOUBLE[]),
-                                            CAST(e.embedding AS DOUBLE[]))) *
-                      SQRT(LIST_DOT_PRODUCT(q.qv, q.qv))), 6) AS c
+               ROUND({_E_COS_SQL}, 6) AS c
         FROM embeddings e, qs q
         WHERE e.vec_id <> q.qid
     ),
@@ -1252,8 +1228,6 @@ def sim15_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     completing sim03/sim09/sim10's quality pytests with a registry-
     visible, oracle-checked recall report).
     """
-    from pyspark.sql import Window
-
     embeddings = load_table(spark, sf_dir, "embeddings")
     qs = embeddings.filter(
         (F.col("vec_id") % RECALL_QUERY_MOD == 0)
@@ -1262,34 +1236,7 @@ def sim15_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"),
         F.col("embedding").cast("array<double>").alias("qv"),
     )
-    pos = embeddings.select(
-        "label",
-        F.posexplode(F.col("embedding").cast("array<double>")).alias("pos", "val"),
-    )
-    cent = (
-        pos.groupBy("label", "pos")
-        .agg(F.avg("val").alias("mean_val"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "mean_val"))),
-                lambda s: s.mean_val,
-            ).alias("centroid")
-        )
-    )
-    wq = Window.partitionBy("qid")
-    probed = (
-        cent.crossJoin(F.broadcast(qs))
-        .select(
-            "qid", "label", cosine(F.col("centroid"), F.col("qv")).alias("cs")
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(wq.orderBy(F.desc("cs"), F.asc("label"))),
-        )
-        .filter(F.col("rn") <= RECALL_NPROBE)
-        .select("qid", "label")
-    )
+    probed = _panel_probe(embeddings, qs, RECALL_NPROBE)
     scored = (
         embeddings.crossJoin(F.broadcast(qs))
         .filter(F.col("vec_id") != F.col("qid"))
@@ -1302,7 +1249,9 @@ def sim15_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("c"),
         )
     )
-    rank = F.row_number().over(wq.orderBy(F.desc("c"), F.asc("vec_id")))
+    rank = F.row_number().over(
+        Window.partitionBy("qid").orderBy(F.desc("c"), F.asc("vec_id"))
+    )
     exact = scored.withColumn("rn", rank).filter(F.col("rn") <= TOP_K).select(
         "qid", "vec_id"
     )
@@ -1354,35 +1303,15 @@ RANGE_CELL_FLOOR_MILLI = 100  # probe cells whose centroid cos ≥ 0.100
 @query(
     "sim16_range_search",
     oracle=f"""
-    WITH pos AS (
-        SELECT label, i AS pos, CAST(embedding[i] AS DOUBLE) AS val
-        FROM embeddings, GENERATE_SERIES(1, 64) AS g(i)
-    ),
-    cent AS (
-        SELECT label, LIST(mean_val ORDER BY pos) AS centroid
-        FROM (SELECT label, pos, AVG(val) AS mean_val FROM pos GROUP BY label, pos)
-        GROUP BY label
-    ),
-    q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings
-          WHERE vec_id = {QUERY_VEC_ID}),
+    WITH {IVF_CENTROID_CTE}, {QUERY_CTE},
     probed AS (
         SELECT label FROM cent, q
-        WHERE LIST_DOT_PRODUCT(centroid, qv) /
-              (SQRT(LIST_DOT_PRODUCT(centroid, centroid)) *
-               SQRT(LIST_DOT_PRODUCT(qv, qv))) >= {RANGE_CELL_FLOOR_MILLI} / 1000.0
+        WHERE {cos_sql("centroid", "qv")} >= {RANGE_CELL_FLOOR_MILLI} / 1000.0
     )
-    SELECT e.vec_id, e.label,
-           ROUND(LIST_DOT_PRODUCT(CAST(e.embedding AS DOUBLE[]), q.qv) /
-                 (SQRT(LIST_DOT_PRODUCT(CAST(e.embedding AS DOUBLE[]),
-                                        CAST(e.embedding AS DOUBLE[]))) *
-                  SQRT(LIST_DOT_PRODUCT(q.qv, q.qv))), 6) AS cos_sim
+    SELECT e.vec_id, e.label, ROUND({_E_COS_SQL}, 6) AS cos_sim
     FROM embeddings e JOIN probed USING (label), q
     WHERE e.vec_id <> {QUERY_VEC_ID}
-      AND ROUND(LIST_DOT_PRODUCT(CAST(e.embedding AS DOUBLE[]), q.qv) /
-                (SQRT(LIST_DOT_PRODUCT(CAST(e.embedding AS DOUBLE[]),
-                                       CAST(e.embedding AS DOUBLE[]))) *
-                 SQRT(LIST_DOT_PRODUCT(q.qv, q.qv))), 6)
-          >= {RANGE_THETA_MILLI} / 1000.0
+      AND ROUND({_E_COS_SQL}, 6) >= {RANGE_THETA_MILLI} / 1000.0
     ORDER BY cos_sim DESC, e.vec_id ASC
     """,
 )
@@ -1406,10 +1335,7 @@ def sim16_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters locally — output-proportional, never corpus×corpus.
     """
     embeddings = load_table(spark, sf_dir, "embeddings")
-    q = (
-        embeddings.filter(F.col("vec_id") == QUERY_VEC_ID)
-        .select(F.col("embedding").cast("array<double>").alias("qv"))
-    )
+    q = _query_vec(embeddings)
     probed = (
         _centroids(embeddings).crossJoin(F.broadcast(q))
         .filter(
@@ -1418,12 +1344,11 @@ def sim16_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("label")
     )
-    cos = F.round(cosine(F.col("embedding").cast("array<double>"), F.col("qv")), 6)
+    cands = embeddings.join(F.broadcast(probed), "label").filter(
+        F.col("vec_id") != QUERY_VEC_ID
+    )
     return (
-        embeddings.join(F.broadcast(probed), "label")
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", "label", cos.alias("cos_sim"))
+        _cosine_to_query(cands, q)
         .filter(F.col("cos_sim") >= F.lit(RANGE_THETA_MILLI) / F.lit(1000.0))
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
     )
@@ -1444,35 +1369,15 @@ _SIM17_IDS_SQL = ", ".join(str(i) for i in SIM17_QUERY_IDS)
     # grid, so fully oracle-able: the oracle replays the same per-dim
     # min/max grid, the same FLOOR code assignment, the same midpoint
     # reconstruction, and ranks by the same fold-order cosine.
-    # GENERATE_SERIES(1, 64) = this corpus's dim (the sim03 convention).
     oracle=f"""
     WITH emb AS (
         SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
     ), qs AS (
-        SELECT vec_id AS q_id, v AS qv FROM emb
+        SELECT vec_id AS qid, v AS qv FROM emb
         WHERE vec_id IN ({_SIM17_IDS_SQL})
-    ), pos AS MATERIALIZED (
-        SELECT vec_id, label, i AS pos, v[i] AS val
-        FROM emb, GENERATE_SERIES(1, 64) AS g(i)
-    ), bounds AS (
+    ), {IVF_CENTROID_CTE}, bounds AS (
         SELECT pos, MIN(val) AS mn, MAX(val) AS mx FROM pos GROUP BY pos
-    ), cent AS (
-        SELECT label, LIST(mean_val ORDER BY pos) AS centroid
-        FROM (SELECT label, pos, AVG(val) AS mean_val FROM pos
-              GROUP BY label, pos)
-        GROUP BY label
-    ), probe AS (
-        SELECT q_id, label FROM (
-            SELECT q.q_id, c.label,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY q.q_id
-                       ORDER BY LIST_DOT_PRODUCT(c.centroid, q.qv) /
-                                (SQRT(LIST_DOT_PRODUCT(c.centroid, c.centroid)) *
-                                 SQRT(LIST_DOT_PRODUCT(q.qv, q.qv))) DESC,
-                                c.label ASC) AS rn
-            FROM cent c CROSS JOIN qs q)
-        WHERE rn <= {SIM17_NPROBE}
-    ), recon AS (
+    ), {ivf_panel_probe_cte(SIM17_NPROBE)}, recon AS (
         SELECT p.vec_id, p.label,
                LIST(CASE WHEN b.mx > b.mn
                          THEN b.mn + (LEAST(255.0, FLOOR(((p.val - b.mn) * 255.0) /
@@ -1480,37 +1385,28 @@ _SIM17_IDS_SQL = ", ".join(str(i) for i in SIM17_QUERY_IDS)
                               (b.mx - b.mn) / 255.0
                          ELSE b.mn END ORDER BY p.pos) AS rv
         FROM pos p JOIN bounds b ON p.pos = b.pos
-        WHERE p.label IN (SELECT DISTINCT label FROM probe)
+        WHERE p.label IN (SELECT DISTINCT label FROM probed)
         GROUP BY p.vec_id, p.label
     ), cand AS (
         SELECT * FROM (
-            SELECT q.q_id, r.vec_id, r.label,
+            SELECT q.qid, r.vec_id, r.label,
                    ROW_NUMBER() OVER (
-                       PARTITION BY q.q_id
-                       ORDER BY LIST_DOT_PRODUCT(r.rv, q.qv) /
-                                (SQRT(LIST_DOT_PRODUCT(r.rv, r.rv)) *
-                                 SQRT(LIST_DOT_PRODUCT(q.qv, q.qv))) DESC,
-                                r.vec_id ASC) AS rn
+                       PARTITION BY q.qid
+                       ORDER BY {cos_sql("r.rv", "q.qv")} DESC, r.vec_id ASC) AS rn
             FROM recon r
-            JOIN probe p ON r.label = p.label
-            JOIN qs q ON q.q_id = p.q_id
-            WHERE r.vec_id <> q.q_id)
+            JOIN probed p ON r.label = p.label
+            JOIN qs q ON q.qid = p.qid
+            WHERE r.vec_id <> q.qid)
         WHERE rn <= {SIM17_RERANK}
     ), exact AS (
-        SELECT t.q_id, e.vec_id, e.label,
-               LIST_DOT_PRODUCT(e.v, q.qv) /
-               (SQRT(LIST_DOT_PRODUCT(e.v, e.v)) *
-                SQRT(LIST_DOT_PRODUCT(q.qv, q.qv))) AS cs,
+        SELECT t.qid, e.vec_id, e.label, {cos_sql("e.v", "q.qv")} AS cs,
                ROW_NUMBER() OVER (
-                   PARTITION BY t.q_id
-                   ORDER BY LIST_DOT_PRODUCT(e.v, q.qv) /
-                            (SQRT(LIST_DOT_PRODUCT(e.v, e.v)) *
-                             SQRT(LIST_DOT_PRODUCT(q.qv, q.qv))) DESC,
-                            e.vec_id ASC) AS rn
+                   PARTITION BY t.qid
+                   ORDER BY {cos_sql("e.v", "q.qv")} DESC, e.vec_id ASC) AS rn
         FROM cand t JOIN emb e ON e.vec_id = t.vec_id
-        JOIN qs q ON q.q_id = t.q_id
+        JOIN qs q ON q.qid = t.qid
     )
-    SELECT q_id AS q_vec_id, vec_id, label, ROUND(cs, 6) AS cos_sim
+    SELECT qid AS q_vec_id, vec_id, label, ROUND(cs, 6) AS cos_sim
     FROM exact WHERE rn <= {TOP_K}
     ORDER BY q_vec_id, cos_sim DESC, vec_id
     """,
@@ -1538,11 +1434,12 @@ def sim17_ivf_sq_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle mirrors bit-for-bit (the sim13 lesson: a float that DRIVES
     ranking must be fold-order-exact, not just close).
     """
-    emb = load_table(spark, sf_dir, "embeddings").select(
+    embeddings = load_table(spark, sf_dir, "embeddings")
+    emb = embeddings.select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
     )
     qs = emb.filter(F.col("vec_id").isin(*SIM17_QUERY_IDS)).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
+        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
     )
     pos = emb.select("label", F.posexplode("v").alias("pos", "val"))
     bounds = (
@@ -1558,20 +1455,8 @@ def sim17_ivf_sq_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("mx_arr"),
         )
     )
-    centroid = _centroids(load_table(spark, sf_dir, "embeddings"))
-    wq = Window.partitionBy("q_id")
-    probe = (
-        centroid.crossJoin(F.broadcast(qs))
-        .select(
-            "q_id", "label", cosine(F.col("centroid"), F.col("qv")).alias("cell_sim")
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(wq.orderBy(F.desc("cell_sim"), F.asc("label"))),
-        )
-        .filter(F.col("rn") <= SIM17_NPROBE)
-        .select("q_id", "label")
-    )
+    probe = _panel_probe(embeddings, qs, SIM17_NPROBE)
+    wq = Window.partitionBy("qid")
     # SQ-reconstruct once per corpus vector in any probed cell (labels
     # dedup'd first so a vector probed by several queries encodes once)
     sub = emb.join(F.broadcast(probe.select("label").distinct()), "label")
@@ -1587,15 +1472,15 @@ def sim17_ivf_sq_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = (
         sub_rv.join(F.broadcast(probe), "label")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .join(F.broadcast(qs), "q_id")
+        .filter(F.col("vec_id") != F.col("qid"))
+        .join(F.broadcast(qs), "qid")
         .withColumn("approx", cosine(F.col("rv"), F.col("qv")))
         .withColumn(
             "rn",
             F.row_number().over(wq.orderBy(F.desc("approx"), F.asc("vec_id"))),
         )
         .filter(F.col("rn") <= SIM17_RERANK)
-        .select("q_id", "vec_id", "label", "v", "qv")
+        .select("qid", "vec_id", "label", "v", "qv")
     )
     exact = cand.withColumn("cs", cosine(F.col("v"), F.col("qv")))
     return (
@@ -1604,7 +1489,7 @@ def sim17_ivf_sq_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("rn") <= TOP_K)
         .select(
-            F.col("q_id").alias("q_vec_id"),
+            F.col("qid").alias("q_vec_id"),
             "vec_id",
             "label",
             F.round("cs", 6).alias("cos_sim"),
@@ -1622,32 +1507,8 @@ SIM18_FILTER_MOD = 3  # predicate: vec_id % 3 == 0 ("only source-X vectors")
 @query(
     "sim18_filtered_ann",
     oracle=f"""
-    WITH pos AS (
-        SELECT label, i AS pos, CAST(embedding[i] AS DOUBLE) AS val
-        FROM embeddings, GENERATE_SERIES(1, 64) AS g(i)
-    ),
-    cent AS (
-        SELECT label, LIST(mean_val ORDER BY pos) AS centroid
-        FROM (SELECT label, pos, AVG(val) AS mean_val FROM pos
-              GROUP BY label, pos)
-        GROUP BY label
-    ),
-    q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings
-          WHERE vec_id = {QUERY_VEC_ID}),
-    probed AS (
-        SELECT label
-        FROM cent, q
-        ORDER BY LIST_DOT_PRODUCT(centroid, qv) /
-                 (SQRT(LIST_DOT_PRODUCT(centroid, centroid)) *
-                  SQRT(LIST_DOT_PRODUCT(qv, qv))) DESC,
-                 label ASC
-        LIMIT {SIM18_NPROBE}
-    )
-    SELECT e.vec_id, e.label,
-           ROUND(LIST_DOT_PRODUCT(CAST(e.embedding AS DOUBLE[]), q.qv) /
-                 (SQRT(LIST_DOT_PRODUCT(CAST(e.embedding AS DOUBLE[]),
-                                        CAST(e.embedding AS DOUBLE[]))) *
-                  SQRT(LIST_DOT_PRODUCT(q.qv, q.qv))), 6) AS cos_sim
+    WITH {IVF_CENTROID_CTE}, {QUERY_CTE}, {ivf_probe_cte(SIM18_NPROBE)}
+    SELECT e.vec_id, e.label, ROUND({_E_COS_SQL}, 6) AS cos_sim
     FROM embeddings e JOIN probed USING (label), q
     WHERE e.vec_id <> {QUERY_VEC_ID} AND e.vec_id % {SIM18_FILTER_MOD} = 0
     ORDER BY cos_sim DESC, e.vec_id ASC
@@ -1672,23 +1533,14 @@ def sim18_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-replayed machinery.
     """
     embeddings = load_table(spark, sf_dir, "embeddings")
-    q = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") == QUERY_VEC_ID)
-        .select(F.col("embedding").cast("array<double>").alias("qv"))
-    )
+    q = _query_vec(embeddings)
     probed = _ivf_probed_labels(embeddings, q, nprobe=SIM18_NPROBE)
-    cos = F.round(cosine(F.col("embedding").cast("array<double>"), F.col("qv")), 6)
-    return (
-        embeddings.join(F.broadcast(probed), "label")
-        .filter(
+    return _exact_topk(
+        embeddings.join(F.broadcast(probed), "label").filter(
             (F.col("vec_id") != QUERY_VEC_ID)
             & (F.col("vec_id") % SIM18_FILTER_MOD == 0)
-        )
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", "label", cos.alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(TOP_K)
+        ),
+        q,
     )
 
 

@@ -27,10 +27,9 @@ nprobe/k of the index files (partition pruning on the cluster column).
 
 from __future__ import annotations
 
-import math
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Pins, load_table, spread_scan
@@ -40,11 +39,14 @@ from ..operators.clustering import (
     semantic_dedup_components,
 )
 from ..operators.similarity import (
-    PQ_DSUB,
     PQ_M,
-    PQ_NCODES,
     PQ_RERANK,
+    lit_matrix,
+    pq_adc_score,
     pq_code_col,
+    pq_codebook,
+    pq_exact_l2,
+    sq_l2_py,
 )
 
 
@@ -84,17 +86,7 @@ def build_vector_index(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
         keep = emb.join(dropped, "vec_id", "left_anti")
         n_kept = n_raw - by_keep.get(False, 0)
 
-        cb_rows = (
-            spread_scan(load_table(spark, sf_dir, "embeddings"))
-            .select("vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-            .orderBy("vec_id")
-            .limit(PQ_NCODES)
-            .collect()
-        )
-        codebook = [
-            [list(r["v"][m * PQ_DSUB : (m + 1) * PQ_DSUB]) for r in cb_rows]
-            for m in range(PQ_M)
-        ]
+        codebook = pq_codebook(spread_scan(load_table(spark, sf_dir, "embeddings")))
 
         labels = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
         index = keep.join(labels, "vec_id").select(
@@ -135,43 +127,18 @@ def query_vector_index(
     broadcast semi join — at 100 TB that is the difference between
     scanning the corpus and scanning a lookup table.
     """
-    lut = [
-        [
-            math.sqrt(
-                sum(
-                    (query_vec[m * PQ_DSUB + i] - codebook[m][c][i]) ** 2
-                    for i in range(PQ_DSUB)
-                )
-            )
-            ** 2
-            for c in range(PQ_NCODES)
-        ]
-        for m in range(PQ_M)
-    ]
     index = spark.read.parquet(os.path.join(out_dir, "pq_index"))
-    approx = None
-    for m in range(PQ_M):
-        term = F.element_at(F.array(*[F.lit(x) for x in lut[m]]), F.col(f"code{m}") + 1)
-        approx = term if approx is None else approx + term
     cand = (
-        index.select("vec_id", "label", approx.alias("ad"))
+        index.select("vec_id", "label", pq_adc_score(codebook, query_vec).alias("ad"))
         .orderBy("ad", "vec_id")
         .limit(PQ_RERANK)
     )
     raw = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
-    q_lit = F.array(*[F.lit(float(x)) for x in query_vec])
-    exact = F.sqrt(
-        F.aggregate(
-            F.zip_with(F.col("v"), q_lit, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
     return (
         cand.join(raw, "vec_id")
-        .select("vec_id", "label", exact.alias("l2_dist"))
+        .select("vec_id", "label", pq_exact_l2(query_vec).alias("l2_dist"))
         .orderBy("l2_dist", "vec_id")
         .limit(top_k)
     )
@@ -208,19 +175,7 @@ def foreach_batch_index_append(
     # sdc[m][ca][cb] = squared L2 between codebook entries, mirroring
     # the engine's (sqrt(Σ))² arithmetic
     sdc = [
-        [
-            [
-                math.sqrt(
-                    sum(
-                        (codebook[m][ca][i] - codebook[m][cb][i]) ** 2
-                        for i in range(PQ_DSUB)
-                    )
-                )
-                ** 2
-                for cb in range(PQ_NCODES)
-            ]
-            for ca in range(PQ_NCODES)
-        ]
+        [[sq_l2_py(ca, cb) for cb in codebook[m]] for ca in codebook[m]]
         for m in range(PQ_M)
     ]
 
@@ -254,14 +209,8 @@ def foreach_batch_index_append(
             # 3D literal indexed per subspace, summed in fixed order.
             dist = None
             for m in range(PQ_M):
-                table_m = F.array(
-                    *[
-                        F.array(*[F.lit(x) for x in sdc[m][ca]])
-                        for ca in range(PQ_NCODES)
-                    ]
-                )
                 term = F.element_at(
-                    F.element_at(table_m, F.col(f"code{m}") + 1),
+                    F.element_at(lit_matrix(sdc[m]), F.col(f"code{m}") + 1),
                     F.col(f"e{m}") + 1,
                 )
                 dist = term if dist is None else dist + term

@@ -18,13 +18,42 @@ driver entry point, and the pipelines all run with the same posture:
 
 from __future__ import annotations
 
+import math
 import os
 import re
 
 from pyspark.sql import SparkSession
 
+
+def cpus_for(affinity: int, cpu_max: str | None) -> int:
+    """CPUs a process may use, given the size of its affinity mask and
+    the text of its cgroup v2 ``cpu.max`` (``"<quota> <period>"``, or
+    ``"max <period>"`` for no limit; None when there is no such file):
+    the smaller of the mask and the quota rounded up to whole CPUs.
+    ``os.cpu_count()`` reports the host's cores instead, which
+    oversubscribes a CPU-limited container."""
+    if cpu_max:
+        quota, period = cpu_max.split()
+        if quota != "max":
+            return max(1, min(affinity, math.ceil(int(quota) / int(period))))
+    return affinity
+
+
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    """``$SPARK_GRAFT_CPUS`` when exported, else :func:`cpus_for` this
+    process."""
+    if "SPARK_GRAFT_CPUS" in os.environ:
+        return int(os.environ["SPARK_GRAFT_CPUS"])
+    try:
+        with open("/sys/fs/cgroup/cpu.max") as f:
+            cpu_max = f.read()
+    except OSError:  # cgroup v1, or not Linux: no quota to honour
+        cpu_max = None
+    if hasattr(os, "sched_getaffinity"):
+        affinity = len(os.sched_getaffinity(0))
+    else:  # not Linux: no affinity mask to read
+        affinity = os.cpu_count() or 8
+    return cpus_for(affinity, cpu_max)
 
 
 def driver_memory_for(meminfo: str) -> str:
@@ -51,7 +80,7 @@ def get_spark(
     """Build (or fetch) the tuned SparkSession.
 
     The master is always set: ``$SPARK_MASTER`` when exported, else
-    ``local[$SPARK_GRAFT_CPUS]`` (the host's core count by default).
+    ``local[N]`` with N from :func:`default_parallelism`.
     """
     cpus = default_parallelism()
     driver_mem = os.environ.get("SPARK_DRIVER_MEMORY") or _host_driver_memory()

@@ -428,6 +428,43 @@ def test_sim13_knn_join_structure_and_recall(spark, sf_dir):
     assert agree / len(got) >= 0.6, f"recall {agree}/{len(got)}"
 
 
+def test_salted_cell_join_neither_loses_nor_duplicates_pairs(spark):
+    """The salted in-cell self-join behind ml03/ml04/ml09/sim13/sim14
+    returns exactly the pair set of the plain probe-only join, each
+    pair once: one hot cell of 40 ids (striped over several salts),
+    some of its ids also in a second cell, and both join forms (``<``
+    for canonical pairs, ``!=`` for both orientations)."""
+    import operator
+
+    from chicago_business_owners_data_engineering_spark.operators.similarity import (
+        SALTS,
+        salted_cell_join,
+    )
+
+    rows = (
+        [(i, 0) for i in range(40)]
+        + [(i, 1) for i in range(0, 40, 3)]
+        + [(i, 1) for i in range(40, 44)]
+        + [(i, 2) for i in range(44, 47)]
+    )
+    probes = spark.createDataFrame(rows, "vec_id long, probe int")
+    hot_salts = (
+        probes.filter("probe = 0")
+        .select(F.pmod(F.xxhash64("vec_id"), F.lit(SALTS)).alias("s"))
+        .distinct()
+        .count()
+    )
+    assert hot_salts > 1
+    for op in (operator.lt, operator.ne):
+        got = [
+            (r.x, r.y)
+            for r in salted_cell_join(probes, probes, ("x", "y"), op=op).collect()
+        ]
+        want = {(a, b) for a, pa in rows for b, pb in rows if pa == pb and op(a, b)}
+        assert len(got) == len(set(got)), op
+        assert set(got) == want, op
+
+
 def test_sim14_pq_join_quality_vs_exact_blocked(spark, sf_dir):
     """The PQ-quantized join's contract, measured against the exact
     blocked top-1: (a) every reported nn_l2 is the TRUE distance to the

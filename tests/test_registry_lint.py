@@ -189,3 +189,41 @@ def test_sinks_touch_storage_only_through_the_ledger():
             if isinstance(node, ast.Call) and ast.unparse(node.func) in banned:
                 offenders.append(f"{rel}:{node.lineno} {ast.unparse(node.func)}")
     assert not offenders, offenders
+
+
+def test_vector_family_written_once():
+    """Each step of the vector family has one definition. Only
+    ``similarity.salted_cell_join`` salts a blocked self-join with
+    ``xxhash64("vec_id")``, and only ``shared_oracles`` spells out the
+    oracle cosine (``cos_sql``) or the dim-64 centroid series
+    (``IVF_CENTROID_CTE``); every other module composes them."""
+    import ast
+    from pathlib import Path
+
+    cosine_sql = re.compile(r"/\s*\(\s*SQRT\s*\(\s*LIST_DOT_PRODUCT", re.I)
+    pkg = Path(registry.__file__).resolve().parent
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = str(path.relative_to(pkg))
+        text = path.read_text()
+        tree = ast.parse(text)
+        allowed = set()
+        if rel == "operators/similarity.py":
+            for fn in ast.walk(tree):
+                if isinstance(fn, ast.FunctionDef) and fn.name == "salted_cell_join":
+                    allowed.update(id(n) for n in ast.walk(fn))
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and ast.unparse(node.func).endswith("xxhash64")
+                and [ast.unparse(a) for a in node.args] == ["'vec_id'"]
+                and id(node) not in allowed
+            ):
+                offenders.append(f"{rel}:{node.lineno} xxhash64('vec_id')")
+        if rel == "operators/shared_oracles.py":
+            continue
+        for m in cosine_sql.finditer(text):
+            offenders.append(f"{rel}:{text.count(chr(10), 0, m.start()) + 1} cosine SQL")
+        for m in re.finditer(r"GENERATE_SERIES\(1, 64\)", text):
+            offenders.append(f"{rel}:{text.count(chr(10), 0, m.start()) + 1} GENERATE_SERIES")
+    assert not offenders, offenders
