@@ -1,15 +1,34 @@
-"""Deduplication operators (SURVEY.md §2.11).
+"""Deduplication operators (SURVEY.md §2.11): dd01–dd17.
 
-Four rungs of the dedup ladder a training-data pipeline needs, each a
-pure DataFrame composition:
+The dedup ladder a training-data pipeline needs, each rung a pure
+DataFrame composition:
 
-- exact dedup          — hash-groupBy on the full text (dd01/dd02)
-- word-set Jaccard     — brute-force pair scoring, the correctness
-                         baseline for the fuzzy rungs (dd03)
-- MinHash + LSH        — banded signatures → bucket join → verify;
-                         the O(n·bands) scale path (dd04)
-- SimHash              — 64-bit bit-majority fingerprint, hamming-
-                         bucketed (dd05)
+- exact dedup       — hash-groupBy on the full text (dd01/dd02)
+- word-set Jaccard  — brute-force pair scoring, the correctness
+                      baseline for the fuzzy rungs (dd03)
+- MinHash + LSH     — banded signatures → bucket join → exact verify;
+                      the O(n·bands) scale path (dd04), its component
+                      closure and survivor choice (dd06/dd07; dd08 in
+                      graph.py), its IDF-weighted one-row-band form
+                      (dd16) and its band-tuning sweep (dd17)
+- SimHash           — 60-bit bit-majority fingerprint (dd05) and its
+                      pigeonhole-banded hamming pairs (dd15)
+- substring dedup   — token spans (dd09/dd10), character spans (dd11)
+- prefix filtering  — exact Jaccard (dd12) and containment (dd13)
+                      joins, never O(n²)
+- n-gram novelty    — per-doc share of first-seen word 3-grams (dd14)
+
+Each step of the near-dup family is written once here and composed by
+every consumer (these queries, inc02/inc04, tp07/tp14/tp17/tp20/tp23,
+the curation pipeline and the streaming near-dup sink): the shingle
+and trigram column builders (:func:`_shingle_set`,
+:func:`_trigram_set`), the signature and band builders
+(:func:`_minhash_per_doc`, :func:`_minhash_bands`, over
+:func:`_explode_bands`), the band-bucket pair join
+(:func:`bucket_pairs`), the rarest-first prefix index
+(:func:`_prefix_index`) and the exact-Jaccard verify
+(:func:`jaccard_verify` over :func:`jaccard_score`). Their DuckDB
+twins live in ``shared_oracles``.
 
 Reference seeds: duplicate counting
 (cbddl/src/data_ingestion/ingestion_pipeline.py:62) and key dedup
@@ -17,19 +36,34 @@ Reference seeds: duplicate counting
 beyond-reference, mandated by BASELINE.json.
 
 Scale notes: dd03's cross join is O(n²) — it exists as the oracle-able
-baseline and for candidate verification. dd04 is the 100 TB path: cost
-is (docs × shingles) for signatures plus a shuffle keyed on (band_id,
-band_hash), with bucket sizes bounded by collision probability, never
-all-pairs.
+baseline. Every other pair query blocks first: cost is (docs ×
+shingles) for signatures plus a shuffle keyed on the bucket or prefix
+token, with bucket sizes bounded by collision probability or token
+rarity, never all-pairs.
 """
 
 from __future__ import annotations
+
+import operator
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import generation, load_table, spread_scan
 from ..registry import query
+from .shared_oracles import (
+    DD04_EXACT_PAIRS_SQL,
+    DD06_COMPONENT_CTE,
+    DD06_REPORT_SQL,
+    SIMHASH_BAND,
+    SIMHASH_BANDS_SQL,
+    SIMHASH_BITS,
+    SIMHASH_CTES,
+    TRIGRAMS_SQL,
+    _SHINGLE_CTES,
+    jaccard_pairs_sql,
+    simhash_band_sql,
+)
 
 NUM_HASHES = 16  # minhash signature length
 BAND_SIZE = 4  # rows per LSH band → 4 bands
@@ -58,6 +92,98 @@ def _shingle_set(text: Column, n: int = SHINGLE_N) -> Column:
     zipped = F.arrays_zip(*[F.slice(words, i + 1, sz - (n - 1)) for i in range(n)])
     grams = F.transform(zipped, lambda s: F.concat_ws(" ", *[s[str(i)] for i in range(n)]))
     return F.array_distinct(F.when(sz >= n, grams).otherwise(F.array(F.lower(text))))
+
+
+def _trigram_set(text: Column) -> Column:
+    """Distinct word 3-grams of a document, and none for a doc under 3
+    words (unlike :func:`_shingle_set`'s whole-text fallback): the slice
+    length is clamped at 0, because Spark rejects a negative one."""
+    words = F.split(F.lower(text), " ")
+    n_grams = F.greatest(F.size(words) - F.lit(2), F.lit(0))
+    zipped = F.arrays_zip(*[F.slice(words, i, n_grams) for i in (1, 2, 3)])
+    return F.array_distinct(
+        F.transform(zipped, lambda s: F.concat_ws(" ", s["0"], s["1"], s["2"]))
+    )
+
+
+def jaccard_score(a: Column, b: Column) -> tuple[Column, Column]:
+    """(|A∩B|, |A∩B| / (|A|+|B|−|A∩B|)) of two set-valued array columns:
+    the one exact-Jaccard expression (``shared_oracles.jaccard_sql`` is
+    its DuckDB twin)."""
+    inter = F.size(F.array_intersect(a, b))
+    return inter, inter / (F.size(a) + F.size(b) - inter)
+
+
+def fetch_sets(
+    pairs: DataFrame,
+    sets: DataFrame,
+    set_col: str,
+    right: DataFrame | None = None,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """``pairs(doc_a, doc_b)`` with each side's set attached as ``ws_a``
+    and ``ws_b`` — from ``sets`` (``id_col``, ``set_col``), or from
+    ``right`` for the b side when the two sides live apart."""
+    right = sets if right is None else right
+    return pairs.join(
+        sets.select(F.col(id_col).alias("doc_a"), F.col(set_col).alias("ws_a")), "doc_a"
+    ).join(
+        right.select(F.col(id_col).alias("doc_b"), F.col(set_col).alias("ws_b")), "doc_b"
+    )
+
+
+def jaccard_verify(
+    pairs: DataFrame,
+    sets: DataFrame,
+    set_col: str,
+    threshold: float,
+    right: DataFrame | None = None,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """(doc_a, doc_b, jaccard) of the candidate ``pairs`` whose exact
+    Jaccard reaches ``threshold``: the verify step after every blocked
+    candidate join, so blocking only ever costs recall, never
+    precision."""
+    _, jac = jaccard_score(F.col("ws_a"), F.col("ws_b"))
+    return (
+        fetch_sets(pairs, sets, set_col, right, id_col)
+        .filter(jac >= threshold)
+        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+    )
+
+
+def bucket_pairs(
+    a: DataFrame,
+    b: DataFrame,
+    keys: list[str],
+    *cols: Column,
+    op=operator.lt,
+    where: tuple[Column, ...] = (),
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Distinct pairs of rows of ``a`` and ``b`` that share every bucket
+    key in ``keys``, with ``op(a.id, b.id)`` (``<`` for canonical
+    pairs, ``>`` or ``!=`` for the other orientations, ``None`` for a
+    probe of two disjoint relations) and any ``where`` conditions
+    joined into the same condition. The result is ``cols`` — by default
+    the ids as ``doc_a``/``doc_b`` — deduplicated, because a pair that
+    collides in several buckets meets once per bucket. Expressions
+    address the sides as ``a.<col>`` and ``b.<col>``."""
+    a, b = a.alias("a"), b.alias("b")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    if op is not None:
+        on.append(op(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")))
+    cols = cols or (
+        F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
+    )
+    return a.join(b, on=on + list(where)).select(*cols).distinct()
+
+
+def _explode_bands(df: DataFrame, keep: list[str], bands: list[Column]) -> DataFrame:
+    """One row per band: the ``keep`` columns plus the fields of each of
+    the ``bands`` structs, flattened — a single explode over the
+    per-document row instead of a union of per-band projections."""
+    return df.select(*keep, F.explode(F.array(*bands)).alias("b")).select(*keep, "b.*")
 
 
 @query(
@@ -119,14 +245,8 @@ def dd02_exact_dedup_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH w AS (
         SELECT doc_id, LIST_SORT(LIST_DISTINCT(STRING_SPLIT(LOWER(text), ' '))) AS ws
         FROM documents
-    )
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           ROUND(LEN(LIST_INTERSECT(a.ws, b.ws)) * 1.0 /
-                 (LEN(a.ws) + LEN(b.ws) - LEN(LIST_INTERSECT(a.ws, b.ws))), 6) AS jaccard
-    FROM w a JOIN w b ON a.doc_id < b.doc_id
-    WHERE LEN(LIST_INTERSECT(a.ws, b.ws)) * 1.0 /
-          (LEN(a.ws) + LEN(b.ws) - LEN(LIST_INTERSECT(a.ws, b.ws))) >= 0.8
-    """,
+    )"""
+    + jaccard_pairs_sql("w", 0.8),
 )
 def dd03_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force word-set Jaccard near-dup pairs (threshold 0.8).
@@ -139,9 +259,7 @@ def dd03_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = documents.select("doc_id", _word_set(F.col("text")).alias("ws"))
     a = docs.alias("a")
     b = docs.alias("b")
-    inter = F.size(F.array_intersect(F.col("a.ws"), F.col("b.ws")))
-    union = F.size(F.col("a.ws")) + F.size(F.col("b.ws")) - inter
-    jac = inter / union
+    _, jac = jaccard_score(F.col("a.ws"), F.col("b.ws"))
     return (
         a.crossJoin(b)
         .filter(F.col("a.doc_id") < F.col("b.doc_id"))
@@ -152,23 +270,6 @@ def dd03_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(jac, 6).alias("jaccard"),
         )
     )
-
-
-def minhash_signature(docs: DataFrame, id_col: str, set_col: str, num_hashes: int = NUM_HASHES) -> DataFrame:
-    """Per-doc MinHash signature as ``num_hashes`` min-of-hash columns.
-
-    A pure projection — each slot is array_min over the seeded hash of
-    the token set, evaluated per row in whole-stage codegen with NO
-    shuffle (value-identical to the explode + groupBy(min) formulation,
-    which costs an O(docs·tokens) exchange).
-    """
-    sig_cols = [
-        F.array_min(
-            F.transform(F.col(set_col), lambda t: F.xxhash64(t, F.lit(i)))
-        ).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-    return docs.select(id_col, *sig_cols)
 
 
 def minhash_lsh_pairs(
@@ -196,52 +297,18 @@ def minhash_lsh_pairs(
     strings — same Jaccard value (hashing is injective modulo 2^-64
     collisions), far cheaper to shuffle.
     """
-    # Signature computation is a PURE PROJECTION — no explode, no
-    # groupBy, no shuffle: each minhash slot is array_min over the
-    # hashed token set, evaluated per row inside whole-stage codegen.
-    # (Identical values to the explode+groupBy formulation: min over
-    # t∈set of xxhash64(xxhash64(t), i); the token set is already
-    # distinct.) At 100 TB this removes the one O(docs·tokens) shuffle
-    # the old plan had; the only exchanges left are the band bucket
-    # join and the candidate-verify joins. The per-doc and band
-    # relations come from the SAME builders the storable-index path
-    # uses (_minhash_per_doc/_minhash_bands), which is what guarantees
-    # a streaming-built index and this one-pass form stay row-identical.
+    # The per-doc and band relations come from the SAME builders the
+    # storable index uses, so a streaming-built index and this one-pass
+    # form stay row-identical; the only exchanges are the bucket join
+    # and the two verify fetches.
     pin = generation("minhash_lsh_pairs")
     per_doc = pin(_minhash_per_doc(docs, id_col, set_col, num_hashes))
-
     bands = _minhash_bands(per_doc, id_col, num_hashes, band_size)
-
-    left = bands.alias("l")
-    right = bands.alias("r")
-    candidates = (
-        left.join(
-            right,
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(F.col(f"l.{id_col}").alias("doc_a"), F.col(f"r.{id_col}").alias("doc_b"))
-        .distinct()
-    )
-
-    wa = per_doc.select(F.col(id_col).alias("doc_a"), F.col("hset").alias("ws_a"))
-    wb = per_doc.select(F.col(id_col).alias("doc_b"), F.col("hset").alias("ws_b"))
-    inter = F.size(F.array_intersect(F.col("ws_a"), F.col("ws_b")))
-    union = F.size(F.col("ws_a")) + F.size(F.col("ws_b")) - inter
-    jac = inter / union
-    return (
-        candidates.join(wa, "doc_a")
-        .join(wb, "doc_b")
-        .filter(jac >= threshold)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
+    candidates = bucket_pairs(bands, bands, ["band_id", "band_hash"], id_col=id_col)
+    return jaccard_verify(candidates, per_doc, "hset", threshold, id_col=id_col)
 
 
-from .shared_oracles import DD04_EXACT_PAIRS_SQL as _DD04_EXACT_PAIRS_SQL  # noqa: E402
-
-
-@query("dd04_minhash_lsh_pairs", oracle=_DD04_EXACT_PAIRS_SQL)
+@query("dd04_minhash_lsh_pairs", oracle=DD04_EXACT_PAIRS_SQL)
 def dd04_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingle-based MinHash-LSH near-dup pairs over ``documents``.
 
@@ -265,32 +332,9 @@ def dd04_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_pairs(docs, "doc_id", "shingles", threshold=0.5)
 
 
-# 60-bit SimHash (15 hex chars of md5 per token): md5 is the portable
-# hash both engines share (tp12/sim05's idiom), and 60 bits is the
-# widest md5 prefix that fits signed int64 on both sides. A production
-# deployment free of cross-engine replay needs could use xxhash64 for
-# cheaper per-token hashing; fingerprint PORTABILITY is itself a real
-# property here — simhashes stored by one system get probed by others.
-_SIMHASH_BITS = 60
-_SIMHASH_BAND = 15  # 4 bands × 15 bits
-
 _DD05_ORACLE = f"""
-    WITH hs AS (
-        SELECT doc_id,
-               [CAST(CONCAT('0x', SUBSTRING(MD5(t), 1, 15)) AS BIGINT)
-                FOR t IN LIST_DISTINCT(STRING_SPLIT(LOWER(text), ' '))] AS h
-        FROM documents
-    ), votes AS (
-        SELECT doc_id, LEN(h) AS n,
-               {', '.join(f"CAST(LIST_SUM([(x >> {b}) & 1 FOR x IN h]) AS BIGINT) AS s{b}" for b in range(_SIMHASH_BITS))}
-        FROM hs
-    ), packed AS (
-        SELECT doc_id,
-               {' + '.join(f"(CAST(2 * s{b} > n AS BIGINT) << {b})" for b in range(_SIMHASH_BITS))} AS simhash
-        FROM votes
-    )
-    SELECT doc_id, simhash,
-           {', '.join(f"(simhash >> {_SIMHASH_BAND * i}) & {(1 << _SIMHASH_BAND) - 1} AS band15_{i}" for i in range(4))}
+    WITH {SIMHASH_CTES}
+    SELECT doc_id, simhash, {SIMHASH_BANDS_SQL}
     FROM packed
 """
 
@@ -321,14 +365,10 @@ def dd05_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vote without a branch per row.
     votes = ", ".join(
         f"aggregate(h, 0L, (a, x) -> a + (shiftright(x, {b}) & 1)) AS s{b}"
-        for b in range(_SIMHASH_BITS)
+        for b in range(SIMHASH_BITS)
     )
     pack = " + ".join(
-        f"(CAST(2 * s{b} > n AS LONG) << {b})" for b in range(_SIMHASH_BITS)
-    )
-    bands = ", ".join(
-        f"(simhash >> {_SIMHASH_BAND * i}) & {(1 << _SIMHASH_BAND) - 1} AS band15_{i}"
-        for i in range(4)
+        f"(CAST(2 * s{b} > n AS LONG) << {b})" for b in range(SIMHASH_BITS)
     )
     return spark.sql(
         f"""
@@ -340,23 +380,12 @@ def dd05_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         votes AS (SELECT doc_id, size(h) AS n, {votes} FROM hs),
         packed AS (SELECT doc_id, {pack} AS simhash FROM votes)
-        SELECT doc_id, simhash, {bands} FROM packed
+        SELECT doc_id, simhash, {SIMHASH_BANDS_SQL} FROM packed
         """
     )
 
 
-# Shared oracle prefix for the near-dup component family (dd06, dd07,
-# graph.dd08) — hosted in the registry-free shared_oracles module so
-# peer operator modules can import it at decoration time without
-# re-entering this module through the registry.
-from .shared_oracles import DD06_COMPONENT_CTE as _DD06_COMPONENT_CTE  # noqa: E402
-from .shared_oracles import DD06_REPORT_SQL as _DD06_REPORT_SQL  # noqa: E402
-
-
-@query(
-    "dd06_neardup_components",
-    oracle=_DD06_REPORT_SQL,
-)
+@query("dd06_neardup_components", oracle=DD06_REPORT_SQL)
 def dd06_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS: connected components over the similarity graph.
 
@@ -487,7 +516,7 @@ def components_propagation(pairs: DataFrame) -> DataFrame:
 
 @query(
     "dd07_canonical_docs",
-    oracle=_DD06_COMPONENT_CTE
+    oracle=DD06_COMPONENT_CTE
     + """
     , ranked AS (
         SELECT c.doc_id, c.component, d.n_chars,
@@ -1044,13 +1073,39 @@ def jaccard_join_prefix(
     filter ``t·|a| ≤ |b| ≤ |a|/t`` (integer cross-multiplied) prunes
     candidates before verification.
     """
-    from pyspark.sql import Window
-
     # Pins: ``base`` carries the caller's set projection (dd12's
     # shingling) and feeds toks plus BOTH verify joins; ``toks`` feeds
     # dfreq and the prefix derivation. Without the pins each branch
-    # re-runs the projection/explode.
+    # re-runs the projection/explode. The prefix relation feeds BOTH
+    # sides of the candidate self-join; unpinned, the df join + per-doc
+    # window shuffle run twice (Spark's exchange reuse does not unify
+    # the two aliased subplans here).
     pin = generation("jaccard_join_prefix")
+    base, _, prefix = _prefix_index(docs, id_col, set_col, t_num, t_den, pin)
+    prefix = pin(prefix)
+    cands = bucket_pairs(
+        prefix,
+        prefix,
+        ["token"],
+        # size filter: t·sz_a ≤ sz_b and t·sz_b ≤ sz_a
+        where=(
+            F.lit(t_num) * F.col("a.sz") <= F.lit(t_den) * F.col("b.sz"),
+            F.lit(t_num) * F.col("b.sz") <= F.lit(t_den) * F.col("a.sz"),
+        ),
+    )
+    return jaccard_verify(cands, base, "ws", t_num / t_den)
+
+
+def _prefix_index(
+    docs: DataFrame, id_col: str, set_col: str, t_num: int, t_den: int, pin
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``(base, toks, prefix)`` of the rarest-first prefix filter:
+    ``base`` (doc_id, ws, sz) and its explode ``toks`` (doc_id, sz,
+    token), both pinned by ``pin``, and ``prefix`` — each doc's first
+    ``sz - ceil(t·sz) + 1`` tokens by ascending document frequency, ties
+    by token, with t = t_num/t_den in integer arithmetic."""
+    from pyspark.sql import Window
+
     base = pin(
         docs.select(
             F.col(id_col).alias("doc_id"), F.col(set_col).alias("ws")
@@ -1061,70 +1116,18 @@ def jaccard_join_prefix(
     # prefix length p = sz - ceil(t*sz) + 1, integer-exact
     p = F.col("sz") - F.expr(f"({t_num} * sz + {t_den - 1}) div {t_den}") + 1
     wdoc = Window.partitionBy("doc_id").orderBy("df", "token")
-    # The prefix relation feeds BOTH sides of the candidate self-join;
-    # unpinned, the df join + per-doc window shuffle run twice (Spark's
-    # exchange reuse does not unify the two aliased subplans here).
-    prefix = pin(
+    prefix = (
         toks.join(dfreq, "token")
         .withColumn("rn", F.row_number().over(wdoc))
         .filter(F.col("rn") <= p)
         .select("doc_id", "sz", "token")
     )
-    a, b = prefix.alias("a"), prefix.alias("b")
-    cands = (
-        a.join(
-            b,
-            on=[
-                F.col("a.token") == F.col("b.token"),
-                F.col("a.doc_id") < F.col("b.doc_id"),
-                # size filter: t·sz_a ≤ sz_b and t·sz_b ≤ sz_a
-                F.lit(t_num) * F.col("a.sz") <= F.lit(t_den) * F.col("b.sz"),
-                F.lit(t_num) * F.col("b.sz") <= F.lit(t_den) * F.col("a.sz"),
-            ],
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    verify = (
-        cands.join(
-            base.select(F.col("doc_id").alias("doc_a"), F.col("ws").alias("ws_a")),
-            "doc_a",
-        ).join(
-            base.select(F.col("doc_id").alias("doc_b"), F.col("ws").alias("ws_b")),
-            "doc_b",
-        )
-    )
-    inter = F.size(F.array_intersect(F.col("ws_a"), F.col("ws_b")))
-    union = F.size("ws_a") + F.size("ws_b") - inter
-    jac = inter / union
-    return (
-        verify.filter(jac >= t_num / t_den)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
+    return base, toks, prefix
 
 
 @query(
     "dd12_prefix_filter_jaccard",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, text, STRING_SPLIT(LOWER(text), ' ') AS t FROM documents
-    ), sh AS (
-        SELECT doc_id,
-               CASE WHEN LEN(t) >= 3
-                    THEN LIST_DISTINCT([ARRAY_TO_STRING(t[i:i+2], ' ')
-                                        FOR i IN RANGE(1, LEN(t) - 1)])
-                    ELSE [LOWER(text)] END AS ws
-        FROM toks
-    )
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           ROUND(LEN(LIST_INTERSECT(a.ws, b.ws)) * 1.0 /
-                 (LEN(a.ws) + LEN(b.ws) - LEN(LIST_INTERSECT(a.ws, b.ws))), 6) AS jaccard
-    FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-    WHERE LEN(LIST_INTERSECT(a.ws, b.ws)) * 1.0 /
-          (LEN(a.ws) + LEN(b.ws) - LEN(LIST_INTERSECT(a.ws, b.ws))) >= 0.5
-    """,
+    oracle=DD04_EXACT_PAIRS_SQL,
 )
 def dd12_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The near-dup edge relation (dd04/dd06's input) computed EXACTLY,
@@ -1201,26 +1204,19 @@ def _minhash_bands(
 ) -> DataFrame:
     """(id, band_id, band_hash) LSH bucket keys from _minhash_per_doc
     output; the shared twin of the signature builder above."""
-    n_bands = num_hashes // band_size
-    return per_doc.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(band).alias("band_id"),
-                        F.xxhash64(
-                            *[
-                                F.col(f"mh{band * band_size + r}")
-                                for r in range(band_size)
-                            ]
-                        ).alias("band_hash"),
-                    )
-                    for band in range(n_bands)
-                ]
+    return _explode_bands(
+        per_doc,
+        [id_col],
+        [
+            F.struct(
+                F.lit(band).alias("band_id"),
+                F.xxhash64(
+                    *[F.col(f"mh{band * band_size + r}") for r in range(band_size)]
+                ).alias("band_hash"),
             )
-        ).alias("b"),
-    ).select(id_col, "b.band_id", "b.band_hash")
+            for band in range(num_hashes // band_size)
+        ],
+    )
 
 
 # --- dd13: exact containment join (quote / partial-dup detection) -----------
@@ -1261,8 +1257,6 @@ def containment_join_prefix(
     true pairs. Verification compares ``t_den·|A∩B| ≥ t_num·|A|``
     exactly; only the reported score divides.
     """
-    from pyspark.sql import Window
-
     # Pins: ``base`` carries the shingle-set projection — the expensive
     # per-row zip/slice/distinct work — and feeds toks plus BOTH verify
     # joins; ``toks`` (the explode) feeds dfreq, the prefix derivation,
@@ -1270,48 +1264,19 @@ def containment_join_prefix(
     # each of those branches re-runs the shingling (measured 3× base +
     # 3× toks instantiations in the dd13 plan).
     pin = generation("containment_join_prefix")
-    base = pin(
-        docs.select(
-            F.col(id_col).alias("doc_id"), F.col(set_col).alias("ws")
-        ).withColumn("sz", F.size("ws"))
+    base, toks, prefix = _prefix_index(docs, id_col, set_col, t_num, t_den, pin)
+    cands = bucket_pairs(
+        prefix,
+        toks,
+        ["token"],
+        op=operator.ne,
+        # container big enough: t_den·sz_b ≥ t_num·sz_a ⇔ sz_b ≥ ceil(t·sz_a)
+        where=(F.lit(t_den) * F.col("b.sz") >= F.lit(t_num) * F.col("a.sz"),),
     )
-    toks = pin(base.select("doc_id", "sz", F.explode("ws").alias("token")))
-    dfreq = toks.groupBy("token").agg(F.count("*").alias("df"))
-    # contained-side prefix length p = sz - ceil(t*sz) + 1, integer-exact
-    p = F.col("sz") - F.expr(f"({t_num} * sz + {t_den - 1}) div {t_den}") + 1
-    wdoc = Window.partitionBy("doc_id").orderBy("df", "token")
-    prefix = (
-        toks.join(dfreq, "token")
-        .withColumn("rn", F.row_number().over(wdoc))
-        .filter(F.col("rn") <= p)
-        .select("doc_id", "sz", "token")
-    )
-    a, b = prefix.alias("a"), toks.alias("b")
-    cands = (
-        a.join(
-            b,
-            on=[
-                F.col("a.token") == F.col("b.token"),
-                F.col("a.doc_id") != F.col("b.doc_id"),
-                # container big enough: t_den·sz_b ≥ t_num·sz_a ⇔ sz_b ≥ ceil(t·sz_a)
-                F.lit(t_den) * F.col("b.sz") >= F.lit(t_num) * F.col("a.sz"),
-            ],
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    verify = cands.join(
-        base.select(F.col("doc_id").alias("doc_a"), F.col("ws").alias("ws_a")),
-        "doc_a",
-    ).join(
-        base.select(F.col("doc_id").alias("doc_b"), F.col("ws").alias("ws_b")),
-        "doc_b",
-    )
-    inter = F.size(F.array_intersect(F.col("ws_a"), F.col("ws_b")))
+    inter, _ = jaccard_score(F.col("ws_a"), F.col("ws_b"))
     return (
-        verify.filter(F.lit(t_den) * inter >= F.lit(t_num) * F.size("ws_a"))
+        fetch_sets(cands, base, "ws")
+        .filter(F.lit(t_den) * inter >= F.lit(t_num) * F.size("ws_a"))
         .select(
             "doc_a",
             "doc_b",
@@ -1322,17 +1287,9 @@ def containment_join_prefix(
 
 @query(
     "dd13_containment_join",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, text, STRING_SPLIT(LOWER(text), ' ') AS t FROM documents
-    ), sh AS (
-        SELECT doc_id,
-               CASE WHEN LEN(t) >= 3
-                    THEN LIST_DISTINCT([ARRAY_TO_STRING(t[i:i+2], ' ')
-                                        FOR i IN RANGE(1, LEN(t) - 1)])
-                    ELSE [LOWER(text)] END AS ws
-        FROM toks
-    )
+    oracle="WITH "
+    + _SHINGLE_CTES
+    + """
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
            ROUND(LEN(LIST_INTERSECT(a.ws, b.ws)) * 1.0 / LEN(a.ws), 6)
                AS containment
@@ -1361,16 +1318,14 @@ def dd13_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dd14_ngram_novelty",
-    oracle="""
+    oracle=f"""
     WITH labeled AS (
         SELECT doc_id, STRING_SPLIT(LOWER(text), ' ') AS l FROM documents
     ),
     shingled AS (
         SELECT DISTINCT doc_id, sh
         FROM (
-            SELECT doc_id,
-                   UNNEST([l[i] || ' ' || l[i + 1] || ' ' || l[i + 2]
-                           FOR i IN GENERATE_SERIES(1, LEN(l) - 2)]) AS sh
+            SELECT doc_id, UNNEST({TRIGRAMS_SQL}) AS sh
             FROM labeled
         )
     ),
@@ -1411,19 +1366,8 @@ def dd14_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     cbddl/src/etl/pipeline.py:296 dedup keys).
     """
     documents = load_table(spark, sf_dir, "documents")
-    words = F.split(F.lower(F.col("text")), " ")
-    sz = F.size(words)
-    # Clamp the slice length at 0 so <3-word docs yield zero shingles
-    # instead of a negative-length slice error (Spark rejects length<0).
-    n_grams = F.greatest(sz - F.lit(2), F.lit(0))
-    zipped = F.arrays_zip(
-        F.slice(words, 1, n_grams),
-        F.slice(words, 2, n_grams),
-        F.slice(words, 3, n_grams),
-    )
-    shingles = F.transform(zipped, lambda s: F.concat_ws(" ", s["0"], s["1"], s["2"]))
     shingled = documents.select(
-        "doc_id", F.explode(F.array_distinct(shingles)).alias("sh")
+        "doc_id", F.explode(_trigram_set(F.col("text"))).alias("sh")
     )
     first_seen = shingled.groupBy("sh").agg(F.min("doc_id").alias("first_doc"))
     return (
@@ -1451,19 +1395,12 @@ def dd14_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 HAMMING_MAX = 3  # Manku et al.'s k: 4 bands ⇒ any pair ≤ 3 bits apart collides
 
-_DD15_ORACLE = _DD05_ORACLE.replace(
-    "    SELECT doc_id, simhash,",
-    "    , fp AS (SELECT doc_id, simhash,",
-).replace(
-    f"""           {', '.join(f"(simhash >> {_SIMHASH_BAND * i}) & {(1 << _SIMHASH_BAND) - 1} AS band15_{i}" for i in range(4))}
-    FROM packed
-""",
-    f"""           {', '.join(f"(simhash >> {_SIMHASH_BAND * i}) & {(1 << _SIMHASH_BAND) - 1} AS band15_{i}" for i in range(4))}
-    FROM packed)
+_DD15_ORACLE = f"""
+    WITH {SIMHASH_CTES}
+    , fp AS (SELECT doc_id, simhash, {SIMHASH_BANDS_SQL} FROM packed)
     , bands AS (
         SELECT doc_id, simhash, i AS band_idx,
-               (simhash >> ({_SIMHASH_BAND} * i)) & {(1 << _SIMHASH_BAND) - 1}
-                   AS band_val
+               {simhash_band_sql(f"({SIMHASH_BAND} * i)")} AS band_val
         FROM fp, GENERATE_SERIES(0, 3) AS g(i)
     ), cand AS (
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -1477,8 +1414,7 @@ _DD15_ORACLE = _DD05_ORACLE.replace(
     FROM cand
     WHERE BIT_COUNT(XOR(sim_a, sim_b)) <= {HAMMING_MAX}
     ORDER BY doc_a, doc_b
-""",
-)
+"""
 
 
 @query("dd15_simhash_hamming_pairs", oracle=_DD15_ORACLE)
@@ -1516,41 +1452,25 @@ def dd15_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # need checkpoint truncation; this is a single-pass self-join.
     pin = generation("dd15_simhash_hamming_pairs")
     fp = pin(dd05_simhash(spark, sf_dir).select("doc_id", "simhash"))
-    bands = fp.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"),
-                        F.expr(
-                            f"(simhash >> {_SIMHASH_BAND * i})"
-                            f" & {(1 << _SIMHASH_BAND) - 1}"
-                        ).alias("band_val"),
-                    )
-                    for i in range(4)
-                ]
+    bands = _explode_bands(
+        fp,
+        ["doc_id", "simhash"],
+        [
+            F.struct(
+                F.lit(i).alias("band_idx"),
+                F.expr(simhash_band_sql(SIMHASH_BAND * i)).alias("band_val"),
             )
-        ).alias("b"),
-    ).select("doc_id", "simhash", "b.band_idx", "b.band_val")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            on=[
-                F.col("a.band_idx") == F.col("b.band_idx"),
-                F.col("a.band_val") == F.col("b.band_val"),
-                F.col("a.doc_id") < F.col("b.doc_id"),
-            ],
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sim_a"),
-            F.col("b.simhash").alias("sim_b"),
-        )
-        .distinct()
+            for i in range(4)
+        ],
+    )
+    cand = bucket_pairs(
+        bands,
+        bands,
+        ["band_idx", "band_val"],
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
+        F.col("a.simhash").alias("sim_a"),
+        F.col("b.simhash").alias("sim_b"),
     )
     hamming = F.expr("bit_count(sim_a ^ sim_b)")
     return (
@@ -1558,18 +1478,17 @@ def dd15_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b", hamming.cast("long").alias("hamming"))
         .orderBy("doc_a", "doc_b")
     )
+
+
 # --- dd16: IDF-weighted Jaccard near-dup pairs -----------------------------------
 
 DD16_THETA_X10 = 5  # keep pairs with 10·inter ≥ 5·union (weighted J ≥ 0.5)
 DD16_BANDS = 4  # single-row minhash bands: recall ≈ 1-(1-J)^4 at Jaccard J
 
-from .shared_oracles import _SHINGLE_CTES as _DD16_SHINGLE_CTES  # noqa: E402
-
-
 @query(
     "dd16_weighted_jaccard_pairs",
     oracle="WITH "
-    + _DD16_SHINGLE_CTES
+    + _SHINGLE_CTES
     + f"""
     , stoks AS (
         SELECT doc_id, UNNEST(ws) AS sg FROM sh
@@ -1675,30 +1594,15 @@ def dd16_weighted_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             for k in range(DD16_BANDS)
         ]
     )
-    mh = mh_wide.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("k"), F.col(f"sig{k}").alias("sig")
-                    )
-                    for k in range(DD16_BANDS)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", F.col("b.k").alias("k"), F.col("b.sig").alias("sig"))
-    cand = (
-        mh.alias("a")
-        .join(
-            mh.alias("b"),
-            (F.col("a.k") == F.col("b.k"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
+    mh = _explode_bands(
+        mh_wide,
+        ["doc_id"],
+        [
+            F.struct(F.lit(k).alias("k"), F.col(f"sig{k}").alias("sig"))
+            for k in range(DD16_BANDS)
+        ],
     )
+    cand = bucket_pairs(mh, mh, ["k", "sig"])
     ta = wtoks.select(
         F.col("doc_id").alias("doc_a"), F.col("sg").alias("sg"), F.col("w").alias("w")
     )
@@ -1727,8 +1631,6 @@ def dd16_weighted_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from .shared_oracles import _SHINGLE_CTES as _SHINGLE_CTES_LOCAL  # noqa: E402
-
 # --- dd17: LSH band-tuning eval -------------------------------------------------------
 
 DD17_NUM_HASHES = 12
@@ -1749,7 +1651,7 @@ def _dd17_md5_slot_sql() -> str:
 @query(
     "dd17_lsh_tuning_eval",
     oracle="WITH "
-    + _SHINGLE_CTES_LOCAL
+    + _SHINGLE_CTES
     + f"""
     , slots AS MATERIALIZED (
         SELECT s.doc_id, g.i AS slot, {_dd17_md5_slot_sql()} AS mh
@@ -1767,13 +1669,7 @@ def _dd17_md5_slot_sql() -> str:
         FROM bands a JOIN bands b
           ON a.r = b.r AND a.band_id = b.band_id AND a.bh = b.bh
          AND a.doc_id < b.doc_id
-    ), truep AS MATERIALIZED (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE LEN(LIST_INTERSECT(a.ws, b.ws)) * 1.0 /
-              (LEN(a.ws) + LEN(b.ws) - LEN(LIST_INTERSECT(a.ws, b.ws)))
-              >= {DD17_THRESHOLD}
-    ), nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_true FROM truep)
+    ), truep AS MATERIALIZED ({jaccard_pairs_sql("sh", DD17_THRESHOLD, score=False)}), nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_true FROM truep)
     SELECT c.r AS band_size,
            CAST({DD17_NUM_HASHES} // c.r AS BIGINT) AS n_bands,
            CAST(COUNT(*) AS BIGINT) AS n_candidates,
@@ -1807,9 +1703,6 @@ def dd17_lsh_tuning_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     provably identical to the brute-force all-pairs scan — dd12 pins
     the bit-parity vs the same oracle shape), so recall_milli measures
     the banding against ground truth, not against another LSH run.
-    Docs with an empty shingle set are excluded before banding —
-    exactly as the oracle's UNNEST produces no slot rows for them
-    (otherwise every empty doc pair collides on md5('') bands).
     Everything downstream of the per-doc signature is bounded: bands
     are |docs|·(Σ 12/r) rows, the bucket join collides on band keys
     (never all-pairs), and the rollup is 3 rows.
@@ -1824,10 +1717,8 @@ def dd17_lsh_tuning_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lost blocks instead of failing the job, which localCheckpoint
     # cannot do.
     pin = generation("dd17_lsh_tuning_eval")
-    docs = pin(
-        documents.select("doc_id", _shingle_set(F.col("text")).alias("ws"))
-        .filter(F.size("ws") > 0)
-    )
+    docs = pin(documents.select("doc_id", _shingle_set(F.col("text")).alias("ws")))
+
     def _slot(idx: int):
         # NB: must be a ONE-argument lambda — a second parameter (even
         # defaulted) makes pyspark bind transform's (element, index)
@@ -1848,43 +1739,30 @@ def dd17_lsh_tuning_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode over the 12-slot signature row — one pass over per_doc
     # instead of a 13-way union of projections (each of which would
     # re-scan the signature relation on both sides of the self-join).
-    band_structs = []
-    for r in DD17_BAND_SIZES:
-        for b in range(DD17_NUM_HASHES // r):
-            bh = F.md5(
+    band_structs = [
+        F.struct(
+            F.lit(r).alias("r"),
+            F.lit(b).alias("band_id"),
+            F.md5(
                 F.concat_ws(
                     ",", *[F.col(f"mh{b * r + j}").cast("string") for j in range(r)]
                 )
-            )
-            band_structs.append(
-                F.struct(
-                    F.lit(r).alias("r"),
-                    F.lit(b).alias("band_id"),
-                    bh.alias("bh"),
-                )
-            )
+            ).alias("bh"),
+        )
+        for r in DD17_BAND_SIZES
+        for b in range(DD17_NUM_HASHES // r)
+    ]
     # Pinned: the bucket self-join scans this relation twice; the pin
     # avoids recomputing 12 minhash mins + 13 md5s per doc on the
     # second side. Same fault-tolerance rationale as `docs`.
-    bands = pin(
-        per_doc.select("doc_id", F.explode(F.array(*band_structs)).alias("bb"))
-        .select("doc_id", F.col("bb.r").alias("r"), "bb.band_id", "bb.bh")
-    )
-    cand = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.r") == F.col("b.r"))
-            & (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.r").alias("r"),
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
+    bands = pin(_explode_bands(per_doc, ["doc_id"], band_structs))
+    cand = bucket_pairs(
+        bands,
+        bands,
+        ["r", "band_id", "bh"],
+        F.col("a.r").alias("r"),
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
     )
     # Consumed twice (the recall left-join and the n_true scalar);
     # pinning avoids re-running the whole prefix-filter join for the

@@ -23,6 +23,8 @@ Two scale patterns the reference approximates with hand-rolled SQL:
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -423,7 +425,7 @@ def inc04_incremental_neardup_probe(spark: SparkSession, sf_dir: str) -> DataFra
     cross-load incremental near-dup is the beyond-reference form.
     """
     from ..catalog import spread_scan
-    from .dedup import _shingle_set, minhash_index_rows
+    from .dedup import _shingle_set, bucket_pairs, jaccard_verify, minhash_index_rows
 
     documents = spread_scan(load_table(spark, sf_dir, "documents"))
     docs = documents.select("doc_id", _shingle_set(F.col("text")).alias("shingles"))
@@ -431,34 +433,16 @@ def inc04_incremental_neardup_probe(spark: SparkSession, sf_dir: str) -> DataFra
     idx_bands, idx_hsets = minhash_index_rows(docs.filter(~is_delta), "doc_id", "shingles")
     d_bands, d_hsets = minhash_index_rows(docs.filter(is_delta), "doc_id", "shingles")
 
-    probe_side = d_bands.alias("d")
-    index_side = idx_bands.unionByName(d_bands).alias("x")
-    candidates = (
-        probe_side.join(
-            index_side,
-            (F.col("d.band_id") == F.col("x.band_id"))
-            & (F.col("d.band_hash") == F.col("x.band_hash"))
-            & (F.col("d.doc_id") != F.col("x.doc_id")),
-        )
-        .select(
-            F.least(F.col("d.doc_id"), F.col("x.doc_id")).alias("doc_a"),
-            F.greatest(F.col("d.doc_id"), F.col("x.doc_id")).alias("doc_b"),
-        )
-        .distinct()
+    candidates = bucket_pairs(
+        d_bands,
+        idx_bands.unionByName(d_bands),
+        ["band_id", "band_hash"],
+        F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_a"),
+        F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_b"),
+        op=operator.ne,
     )
     hsets = idx_hsets.unionByName(d_hsets)
-    wa = hsets.select(F.col("doc_id").alias("doc_a"), F.col("hset").alias("ws_a"))
-    wb = hsets.select(F.col("doc_id").alias("doc_b"), F.col("hset").alias("ws_b"))
-    inter = F.size(F.array_intersect(F.col("ws_a"), F.col("ws_b")))
-    union = F.size(F.col("ws_a")) + F.size(F.col("ws_b")) - inter
-    jac = inter / union
-    return (
-        candidates.join(wa, "doc_a")
-        .join(wb, "doc_b")
-        .filter(jac >= 0.5)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-        .orderBy("doc_a", "doc_b")
-    )
+    return jaccard_verify(candidates, hsets, "hset", 0.5).orderBy("doc_a", "doc_b")
 
 
 # --- inc05: incremental top-k heavy hitters -----------------------------------

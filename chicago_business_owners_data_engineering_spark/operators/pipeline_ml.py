@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, spread_scan
 from ..registry import query
+from .shared_oracles import TRIGRAMS_SQL
 
 CHUNK_SIZE = 200
 CHUNK_STRIDE = 150
@@ -528,7 +529,7 @@ def tp06_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tp07_contamination_check",
-    oracle="""
+    oracle=f"""
     WITH labeled AS (
         SELECT doc_id,
                CAST(CONCAT('0x', SUBSTRING(MD5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
@@ -539,9 +540,7 @@ def tp06_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingled AS (
         SELECT DISTINCT doc_id, b, sh
         FROM (
-            SELECT doc_id, b,
-                   UNNEST([l[i] || ' ' || l[i + 1] || ' ' || l[i + 2]
-                           FOR i IN GENERATE_SERIES(1, LEN(l) - 2)]) AS sh
+            SELECT doc_id, b, UNNEST({TRIGRAMS_SQL}) AS sh
             FROM labeled
         )
     ),
@@ -574,23 +573,12 @@ def tp07_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     probability) and the train side becomes a bloom-filter-prunable
     build.
     """
+    from .dedup import _trigram_set
+
     documents = load_table(spark, sf_dir, "documents")
     bucket = _md5_bucket(F.col("doc_id"))
-    words = F.split(F.lower(F.col("text")), " ")
-    sz = F.size(words)
-    # Clamp the slice length at 0 so <3-word docs yield zero shingles
-    # instead of a negative-length slice error (Spark rejects length<0).
-    n_grams = F.greatest(sz - F.lit(2), F.lit(0))
-    zipped = F.arrays_zip(
-        F.slice(words, 1, n_grams),
-        F.slice(words, 2, n_grams),
-        F.slice(words, 3, n_grams),
-    )
-    shingles = F.transform(zipped, lambda s: F.concat_ws(" ", s["0"], s["1"], s["2"]))
     shingled = documents.select(
-        "doc_id",
-        bucket.alias("b"),
-        F.explode(F.array_distinct(shingles)).alias("sh"),
+        "doc_id", bucket.alias("b"), F.explode(_trigram_set(F.col("text"))).alias("sh")
     )
     train_sh = shingled.filter(F.col("b") < 80).select("sh").distinct()
     eval_sh = shingled.filter(F.col("b") >= 90).select("doc_id", "sh")
@@ -1143,7 +1131,7 @@ def dsir_scores(documents: DataFrame) -> DataFrame:
 
 @query(
     "tp17_decontaminate_train",
-    oracle="""
+    oracle=f"""
     WITH labeled AS (
         SELECT doc_id,
                CAST(CONCAT('0x', SUBSTRING(MD5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
@@ -1154,9 +1142,7 @@ def dsir_scores(documents: DataFrame) -> DataFrame:
     shingled AS (
         SELECT DISTINCT doc_id, b, sh
         FROM (
-            SELECT doc_id, b,
-                   UNNEST([l[i] || ' ' || l[i + 1] || ' ' || l[i + 2]
-                           FOR i IN GENERATE_SERIES(1, LEN(l) - 2)]) AS sh
+            SELECT doc_id, b, UNNEST({TRIGRAMS_SQL}) AS sh
             FROM labeled
         )
     ),
@@ -1202,23 +1188,12 @@ def tp17_decontaminate_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     Parity: beyond-reference (§2.11 mandate; governance seed
     cbddl/src/etl/pipeline.py:296,329 dedup keys).
     """
+    from .dedup import _trigram_set
+
     documents = load_table(spark, sf_dir, "documents")
     bucket = _md5_bucket(F.col("doc_id"))
-    words = F.split(F.lower(F.col("text")), " ")
-    sz = F.size(words)
-    # Clamp the slice length at 0 so <3-word docs yield zero shingles
-    # instead of a negative-length slice error (Spark rejects length<0).
-    n_grams = F.greatest(sz - F.lit(2), F.lit(0))
-    zipped = F.arrays_zip(
-        F.slice(words, 1, n_grams),
-        F.slice(words, 2, n_grams),
-        F.slice(words, 3, n_grams),
-    )
-    shingles = F.transform(zipped, lambda s: F.concat_ws(" ", s["0"], s["1"], s["2"]))
     shingled = documents.select(
-        "doc_id",
-        bucket.alias("b"),
-        F.explode(F.array_distinct(shingles)).alias("sh"),
+        "doc_id", bucket.alias("b"), F.explode(_trigram_set(F.col("text"))).alias("sh")
     )
     eval_sh = shingled.filter(F.col("b") >= 90).select("sh").distinct()
     train_sh = shingled.filter(F.col("b") < 80)

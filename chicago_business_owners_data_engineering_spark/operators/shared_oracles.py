@@ -130,59 +130,71 @@ KMEANS_PROBES_CTE = f"""
     )
 """
 
-# Word-3-gram shingle sets per document — the single definition of the
-# similarity universe the whole near-dup family (dd04, dd06, dd07,
-# dd08) verifies against. Shared as a fragment so no two oracles can
-# silently diverge on tokenization.
-_SHINGLE_CTES = """
+# --- near-duplicate family ----------------------------------------------------
+
+# The word-3-gram shingle set of one document, given its text and its
+# lowercased word list ``t`` (dedup._shingle_set's twin): the single
+# definition of the similarity universe the near-dup family verifies
+# against, so no two oracles can silently diverge on tokenization.
+SHINGLE_SQL = """CASE WHEN LEN(t) >= 3
+                    THEN LIST_DISTINCT([ARRAY_TO_STRING(t[i:i+2], ' ')
+                                        FOR i IN RANGE(1, LEN(t) - 1)])
+                    ELSE [LOWER(text)] END"""
+
+# ``sh(doc_id, ws)`` over ``documents``. Composed by dd04, dd06, dd07,
+# dd08, dd12, dd13, dd16, dd17, inc02, inc04, tp14 and tp20 (tp23 uses
+# SHINGLE_SQL over its own survivor relation).
+_SHINGLE_CTES = f"""
     toks AS (
         SELECT doc_id, text, STRING_SPLIT(LOWER(text), ' ') AS t FROM documents
     ), sh AS (
         SELECT doc_id,
-               CASE WHEN LEN(t) >= 3
-                    THEN LIST_DISTINCT([ARRAY_TO_STRING(t[i:i+2], ' ')
-                                        FOR i IN RANGE(1, LEN(t) - 1)])
-                    ELSE [LOWER(text)] END AS ws
+               {SHINGLE_SQL} AS ws
         FROM toks
     )
 """
 
+# All word 3-grams of a split word list ``l``, repeats kept and none for
+# a doc under 3 words (dedup._trigram_set's twin): dd14, tp07, tp17.
+TRIGRAMS_SQL = """[l[i] || ' ' || l[i + 1] || ' ' || l[i + 2]
+                           FOR i IN GENERATE_SERIES(1, LEN(l) - 2)]"""
+
+
+def jaccard_sql(a: str, b: str) -> str:
+    """DuckDB Jaccard of two LIST expressions, |A∩B| / (|A|+|B|−|A∩B|),
+    the score dedup.jaccard_score computes."""
+    return (
+        f"LEN(LIST_INTERSECT({a}, {b})) * 1.0 / "
+        f"(LEN({a}) + LEN({b}) - LEN(LIST_INTERSECT({a}, {b})))"
+    )
+
+
+def jaccard_pairs_sql(rel: str, threshold: float, score: bool = True) -> str:
+    """Brute-force all-pairs ``(doc_a, doc_b[, jaccard])`` with
+    ``doc_a < doc_b`` and J ≥ ``threshold`` over ``rel(doc_id, ws)``:
+    the definition every blocked Jaccard join is checked against."""
+    j = jaccard_sql("a.ws", "b.ws")
+    rounded = f", ROUND({j}, 6) AS jaccard" if score else ""
+    return f"""
+    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b{rounded}
+    FROM {rel} a JOIN {rel} b ON a.doc_id < b.doc_id
+    WHERE {j} >= {threshold}
+    """
+
+
 # Exact all-pairs shingle-Jaccard edges at threshold 0.5 with the score
-# — dd04's oracle. dd04's Spark side generates candidates via banded
-# MinHash-LSH then verifies with EXACT Jaccard, so precision is exact
-# by construction and this differential check is a RECALL certificate:
-# it asserts the band parameters (32 hashes × band size 2) lose no
+# — the oracle of dd04, dd12, inc04 and tp20. dd04's Spark side
+# generates candidates via banded MinHash-LSH then verifies with EXACT
+# Jaccard, so precision is exact by construction and this differential
+# check is a RECALL certificate: it asserts the band parameters lose no
 # ≥0.5 pair ON THIS CORPUS. A borderline pair can legitimately slip a
 # banded index with ~s^r per-band probability; production tunes bands
 # for its threshold and audits recall exactly this way.
-DD04_EXACT_PAIRS_SQL = (
-    "WITH "
-    + _SHINGLE_CTES
-    + """
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           ROUND(LEN(LIST_INTERSECT(a.ws, b.ws)) * 1.0 /
-                 (LEN(a.ws) + LEN(b.ws) - LEN(LIST_INTERSECT(a.ws, b.ws))), 6) AS jaccard
-    FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-    WHERE LEN(LIST_INTERSECT(a.ws, b.ws)) * 1.0 /
-          (LEN(a.ws) + LEN(b.ws) - LEN(LIST_INTERSECT(a.ws, b.ws))) >= 0.5
-    """
-)
+DD04_EXACT_PAIRS_SQL = "WITH " + _SHINGLE_CTES + jaccard_pairs_sql("sh", 0.5)
 
-# Shared DuckDB oracle prefix for the near-dup component family:
-# shingle sets -> exact-Jaccard edges -> recursive-CTE reachability ->
-# min-label components. dd06, dd07 AND dd08 all compose their oracles
-# from this single constant so the three queries can never silently
-# verify against different similarity graphs.
-DD06_COMPONENT_CTE = (
-    "WITH RECURSIVE "
-    + _SHINGLE_CTES
-    + """
-    , pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE LEN(LIST_INTERSECT(a.ws, b.ws)) * 1.0 /
-              (LEN(a.ws) + LEN(b.ws) - LEN(LIST_INTERSECT(a.ws, b.ws))) >= 0.5
-    ), edges AS (
+# sh -> exact-Jaccard edges -> recursive-CTE reachability -> min-label
+# components ``comp(doc_id, component)``; needs a RECURSIVE ``sh``.
+NEARDUP_COMPONENT_CTES = f"""pairs AS ({jaccard_pairs_sql("sh", 0.5, score=False)}), edges AS (
         SELECT doc_a AS src, doc_b AS dst FROM pairs
         UNION ALL
         SELECT doc_b, doc_a FROM pairs
@@ -192,8 +204,14 @@ DD06_COMPONENT_CTE = (
         SELECT e.dst, r.r FROM reach r JOIN edges e ON r.node = e.src
     ), comp AS (
         SELECT node AS doc_id, MIN(r) AS component FROM reach GROUP BY node
-    )
-"""
+    )"""
+
+# The components over ``documents``: dd06, dd07, dd08, inc02 and tp14
+# compose their oracles from this single constant, and tp23 from
+# NEARDUP_COMPONENT_CTES, so none can verify against a different
+# similarity graph.
+DD06_COMPONENT_CTE = (
+    "WITH RECURSIVE " + _SHINGLE_CTES + "    , " + NEARDUP_COMPONENT_CTES + "\n"
 )
 
 # dd06's component report (doc_id, component, csize), which dd08 shares.
@@ -208,3 +226,41 @@ DD06_REPORT_SQL = (
     ORDER BY c.doc_id
     """
 )
+
+# 60-bit SimHash (15 hex chars of md5 per token): md5 is the portable
+# hash both engines share (tp12/sim05's idiom), and 60 bits is the
+# widest md5 prefix that fits signed int64 on both sides. A production
+# deployment free of cross-engine replay needs could use xxhash64 for
+# cheaper per-token hashing; fingerprint PORTABILITY is itself a real
+# property here — simhashes stored by one system get probed by others.
+SIMHASH_BITS = 60
+SIMHASH_BAND = 15  # 4 bands × 15 bits
+
+
+def simhash_band_sql(shift) -> str:
+    """The 15-bit band of ``simhash`` starting at bit ``shift`` (an int
+    or a SQL expression); the text runs unchanged on Spark and DuckDB."""
+    return f"(simhash >> {shift}) & {(1 << SIMHASH_BAND) - 1}"
+
+
+# dd05's four prefix buckets band15_0..band15_3, both engines.
+SIMHASH_BANDS_SQL = ", ".join(
+    f"{simhash_band_sql(SIMHASH_BAND * i)} AS band15_{i}" for i in range(4)
+)
+
+# ``packed(doc_id, simhash)`` over ``documents``: md5-prefix token
+# hashes, per-bit majority votes, bit-packed (dd05, dd15).
+SIMHASH_CTES = f"""hs AS (
+        SELECT doc_id,
+               [CAST(CONCAT('0x', SUBSTRING(MD5(t), 1, 15)) AS BIGINT)
+                FOR t IN LIST_DISTINCT(STRING_SPLIT(LOWER(text), ' '))] AS h
+        FROM documents
+    ), votes AS (
+        SELECT doc_id, LEN(h) AS n,
+               {', '.join(f"CAST(LIST_SUM([(x >> {b}) & 1 FOR x IN h]) AS BIGINT) AS s{b}" for b in range(SIMHASH_BITS))}
+        FROM hs
+    ), packed AS (
+        SELECT doc_id,
+               {' + '.join(f"(CAST(2 * s{b} > n AS BIGINT) << {b})" for b in range(SIMHASH_BITS))} AS simhash
+        FROM votes
+    )"""

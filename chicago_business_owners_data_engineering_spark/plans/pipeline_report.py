@@ -36,6 +36,8 @@ from ..operators.shared_oracles import (
     CURATION_MAX_TOP_TOKEN_FRAC as MAX_TOP_TOKEN_FRAC,
     CURATION_MIN_TOKENS as MIN_TOKENS,
     FT_BUCKETS,
+    NEARDUP_COMPONENT_CTES,
+    SHINGLE_SQL,
 )
 from ..registry import query
 
@@ -85,27 +87,9 @@ _TP23_ORACLE = f"""
         USING (doc_id)
     ), sh AS (
         SELECT doc_id,
-               CASE WHEN LEN(t) >= 3
-                    THEN LIST_DISTINCT([ARRAY_TO_STRING(t[i:i+2], ' ')
-                                        FOR i IN RANGE(1, LEN(t) - 1)])
-                    ELSE [LOWER(text)] END AS ws
+               {SHINGLE_SQL} AS ws
         FROM (SELECT doc_id, text, STRING_SPLIT(LOWER(text), ' ') AS t FROM exact)
-    ), pairs AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE LEN(LIST_INTERSECT(a.ws, b.ws)) * 1.0 /
-              (LEN(a.ws) + LEN(b.ws) - LEN(LIST_INTERSECT(a.ws, b.ws))) >= 0.5
-    ), edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION ALL
-        SELECT doc_b, doc_a FROM pairs
-    ), reach(node, r) AS (
-        SELECT DISTINCT src, src FROM edges
-        UNION
-        SELECT e.dst, r.r FROM reach r JOIN edges e ON r.node = e.src
-    ), comp AS (
-        SELECT node AS doc_id, MIN(r) AS component FROM reach GROUP BY node
-    ), members AS (
+    ), {NEARDUP_COMPONENT_CTES}, members AS (
         SELECT c.component, c.doc_id, e.n_chars FROM comp c JOIN exact e USING (doc_id)
     ), canonical AS (
         SELECT doc_id FROM (

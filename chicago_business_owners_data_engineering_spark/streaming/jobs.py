@@ -25,6 +25,7 @@ construction in tests.
 
 from __future__ import annotations
 
+import operator
 import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
@@ -888,7 +889,12 @@ def foreach_batch_neardup_dedup(
                     f"{stored_fmt}; sink configured with {want_fmt} — "
                     "refusing to probe an incompatible band format"
                 )
-        from ..operators.dedup import _shingle_set, minhash_index_rows
+        from ..operators.dedup import (
+            _shingle_set,
+            bucket_pairs,
+            jaccard_verify,
+            minhash_index_rows,
+        )
         docs = batch_df.select(
             "doc_id", _shingle_set(F.col("text")).alias("sh")
         )
@@ -940,44 +946,17 @@ def foreach_batch_neardup_dedup(
                 "parameters back to _meta.json to confirm, or rebuild"
             )
 
-        inter = F.size(F.array_intersect(F.col("ws_a"), F.col("ws_b")))
-        union = F.size("ws_a") + F.size("ws_b") - inter
-
         def matches(cand: DataFrame, left_h: DataFrame, right_h: DataFrame):
             """Candidate pairs that verify at ≥ threshold, as (doc_a, doc_b)."""
             return (
-                cand.join(
-                    left_h.select(
-                        F.col("doc_id").alias("doc_a"), F.col("hset").alias("ws_a")
-                    ),
-                    "doc_a",
-                )
-                .join(
-                    right_h.select(
-                        F.col("doc_id").alias("doc_b"), F.col("hset").alias("ws_b")
-                    ),
-                    "doc_b",
-                )
-                .filter((inter / union) >= threshold)
+                jaccard_verify(cand, left_h, "hset", threshold, right_h)
                 .select("doc_a", "doc_b")
                 .distinct()
             )
 
+        keys = ["band_id", "band_hash"]
         if idx_bands is not None:
-            cand_idx = (
-                F.broadcast(bands)
-                .alias("n")
-                .join(
-                    idx_bands.alias("o"),
-                    (F.col("n.band_id") == F.col("o.band_id"))
-                    & (F.col("n.band_hash") == F.col("o.band_hash")),
-                )
-                .select(
-                    F.col("n.doc_id").alias("doc_a"),
-                    F.col("o.doc_id").alias("doc_b"),
-                )
-                .distinct()
-            )
+            cand_idx = bucket_pairs(F.broadcast(bands), idx_bands, keys, op=None)
             dropped_idx = matches(cand_idx, hsets, idx_hsets).select("doc_a")
             survivors1 = docs.join(
                 dropped_idx.withColumnRenamed("doc_a", "doc_id").distinct(),
@@ -991,19 +970,7 @@ def foreach_batch_neardup_dedup(
         # Within-batch: candidate pairs among survivors of (i); drop the
         # larger id of each verified pair.
         s_bands = bands.join(survivors1, "doc_id")
-        l, r = s_bands.alias("l"), s_bands.alias("r")
-        cand_batch = (
-            l.join(
-                r,
-                (F.col("l.band_id") == F.col("r.band_id"))
-                & (F.col("l.band_hash") == F.col("r.band_hash"))
-                & (F.col("l.doc_id") > F.col("r.doc_id")),
-            )
-            .select(
-                F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
-            )
-            .distinct()
-        )
+        cand_batch = bucket_pairs(s_bands, s_bands, keys, op=operator.gt)
         # The admitted-blocker rule is inherently sequential: in a chain
         # A~B, B~C, A≁C, doc C is admitted because its only match B was
         # itself dropped. Resolve the greedy pass on the DRIVER over the

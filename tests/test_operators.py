@@ -100,6 +100,44 @@ def test_minhash_lsh_finds_known_near_dups(spark):
     assert not any(3 in p or 4 in p for p in pairs)
 
 
+def test_bucket_pairs_returns_each_pair_once(spark):
+    """The band-bucket join collapses a pair colliding in several bands
+    to ONE row, never pairs a doc with itself, and keeps the requested
+    orientation; with no id predicate it returns every colliding cross
+    pair of two disjoint relations once."""
+    import operator
+
+    from chicago_business_owners_data_engineering_spark.operators.dedup import (
+        bucket_pairs,
+    )
+
+    schema = "doc_id long, band_id int, band_hash long"
+    bands = spark.createDataFrame(
+        [
+            # docs 1 and 2 collide in bands 0, 1 and 2
+            (1, 0, 10), (2, 0, 10), (1, 1, 11), (2, 1, 11), (1, 2, 12), (2, 2, 12),
+            # docs 1 and 3 collide in band 3 only; doc 4 collides with no one
+            (1, 3, 13), (3, 3, 13), (4, 0, 99),
+        ],
+        schema,
+    )
+    keys = ["band_id", "band_hash"]
+
+    def rows(df):
+        return sorted((r["doc_a"], r["doc_b"]) for r in df.collect())
+
+    assert rows(bucket_pairs(bands, bands, keys)) == [(1, 2), (1, 3)]
+    assert rows(bucket_pairs(bands, bands, keys, op=operator.gt)) == [(2, 1), (3, 1)]
+
+    probe = spark.createDataFrame([(10, 0, 1), (10, 1, 2), (11, 0, 3)], schema)
+    index = spark.createDataFrame(
+        [(20, 0, 1), (20, 1, 2), (21, 1, 2), (22, 0, 3), (23, 0, 9)], schema
+    )
+    assert rows(bucket_pairs(probe, index, keys, op=None)) == [
+        (10, 20), (10, 21), (11, 22)
+    ]
+
+
 def test_simhash_identical_sets_collide(spark, sf_dir):
     sim = {r["doc_id"]: r["simhash"] for r in QUERIES["dd05_simhash"](spark, sf_dir).collect()}
     exact = [

@@ -156,9 +156,11 @@ def test_minhash_match_fraction_concentrates_on_jaccard(spark, data):
     slots the observed match fraction must land within 4σ
     (σ = √(J(1−J)/64) ≤ 0.0625) of the exact Jaccard — the estimator
     property the whole dd04 LSH path rests on. Exact at the endpoints:
-    identical sets ⇒ 1, disjoint sets ⇒ 0 (mod 2⁻⁶⁴ collisions)."""
+    identical sets ⇒ 1, disjoint sets ⇒ 0 (mod 2⁻⁶⁴ collisions). Checks
+    the signature production signs with (``_minhash_per_doc``: slot i is
+    min over t of xxhash64(xxhash64(t), i))."""
     from chicago_business_owners_data_engineering_spark.operators.dedup import (
-        minhash_signature,
+        _minhash_per_doc,
     )
 
     universe = [f"tok{i}" for i in range(40)]
@@ -171,7 +173,7 @@ def test_minhash_match_fraction_concentrates_on_jaccard(spark, data):
     n = 64
     rows = {
         r["doc_id"]: [r[f"mh{i}"] for i in range(n)]
-        for r in minhash_signature(df, "doc_id", "toks", num_hashes=n).collect()
+        for r in _minhash_per_doc(df, "doc_id", "toks", n).collect()
     }
     match = sum(x == y for x, y in zip(rows[0], rows[1])) / n
     assert abs(match - jac) <= 0.25 + 1e-9

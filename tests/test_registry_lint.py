@@ -227,3 +227,47 @@ def test_vector_family_written_once():
         for m in re.finditer(r"GENERATE_SERIES\(1, 64\)", text):
             offenders.append(f"{rel}:{text.count(chr(10), 0, m.start()) + 1} GENERATE_SERIES")
     assert not offenders, offenders
+
+
+def test_dedup_family_written_once():
+    """Each step of the near-dup family has one definition. Only
+    ``dedup.jaccard_score`` intersects token sets (blocked pairs reach
+    it through ``bucket_pairs`` and ``jaccard_verify``), only
+    ``shared_oracles`` spells out the oracle Jaccard (``jaccard_sql``)
+    or the shingle expression (``SHINGLE_SQL``), and no oracle is
+    derived from another's text by ``.replace``."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(registry.__file__).resolve().parent
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = str(path.relative_to(pkg))
+        text = path.read_text()
+        tree = ast.parse(text)
+        allowed = set()
+        for fn in ast.walk(tree):
+            if isinstance(fn, ast.FunctionDef) and fn.name == "jaccard_score":
+                allowed.update(id(n) for n in ast.walk(fn))
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            func = ast.unparse(node.func)
+            if (
+                rel in ("operators/dedup.py", "operators/incremental.py", "streaming/jobs.py")
+                and func.endswith("array_intersect")
+                and id(node) not in allowed
+            ):
+                offenders.append(f"{rel}:{node.lineno} array_intersect")
+            if isinstance(node.func, ast.Attribute) and node.func.attr == "replace":
+                base = node.func.value
+                while isinstance(base, ast.Call) and isinstance(base.func, ast.Attribute):
+                    base = base.func.value
+                if isinstance(base, ast.Name) and base.id.lstrip("_").isupper():
+                    offenders.append(f"{rel}:{node.lineno} {base.id}.replace")
+        if rel == "operators/shared_oracles.py":
+            continue
+        for needle in ("LEN(a.ws) + LEN(b.ws) - LEN(LIST_INTERSECT", "CASE WHEN LEN(t) >= 3"):
+            for m in re.finditer(re.escape(needle), text):
+                offenders.append(f"{rel}:{text.count(chr(10), 0, m.start()) + 1} {needle}")
+    assert not offenders, offenders
