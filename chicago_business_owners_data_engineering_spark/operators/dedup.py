@@ -119,16 +119,15 @@ def fetch_sets(
     sets: DataFrame,
     set_col: str,
     right: DataFrame | None = None,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """``pairs(doc_a, doc_b)`` with each side's set attached as ``ws_a``
-    and ``ws_b`` — from ``sets`` (``id_col``, ``set_col``), or from
+    and ``ws_b`` — from ``sets`` (``doc_id``, ``set_col``), or from
     ``right`` for the b side when the two sides live apart."""
     right = sets if right is None else right
     return pairs.join(
-        sets.select(F.col(id_col).alias("doc_a"), F.col(set_col).alias("ws_a")), "doc_a"
+        sets.select(F.col("doc_id").alias("doc_a"), F.col(set_col).alias("ws_a")), "doc_a"
     ).join(
-        right.select(F.col(id_col).alias("doc_b"), F.col(set_col).alias("ws_b")), "doc_b"
+        right.select(F.col("doc_id").alias("doc_b"), F.col(set_col).alias("ws_b")), "doc_b"
     )
 
 
@@ -138,7 +137,6 @@ def jaccard_verify(
     set_col: str,
     threshold: float,
     right: DataFrame | None = None,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """(doc_a, doc_b, jaccard) of the candidate ``pairs`` whose exact
     Jaccard reaches ``threshold``: the verify step after every blocked
@@ -146,7 +144,7 @@ def jaccard_verify(
     precision."""
     _, jac = jaccard_score(F.col("ws_a"), F.col("ws_b"))
     return (
-        fetch_sets(pairs, sets, set_col, right, id_col)
+        fetch_sets(pairs, sets, set_col, right)
         .filter(jac >= threshold)
         .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
     )
@@ -159,10 +157,9 @@ def bucket_pairs(
     *cols: Column,
     op=operator.lt,
     where: tuple[Column, ...] = (),
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Distinct pairs of rows of ``a`` and ``b`` that share every bucket
-    key in ``keys``, with ``op(a.id, b.id)`` (``<`` for canonical
+    key in ``keys``, with ``op(a.doc_id, b.doc_id)`` (``<`` for canonical
     pairs, ``>`` or ``!=`` for the other orientations, ``None`` for a
     probe of two disjoint relations) and any ``where`` conditions
     joined into the same condition. The result is ``cols`` — by default
@@ -172,10 +169,8 @@ def bucket_pairs(
     a, b = a.alias("a"), b.alias("b")
     on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
     if op is not None:
-        on.append(op(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")))
-    cols = cols or (
-        F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-    )
+        on.append(op(F.col("a.doc_id"), F.col("b.doc_id")))
+    cols = cols or (F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
     return a.join(b, on=on + list(where)).select(*cols).distinct()
 
 
@@ -302,10 +297,11 @@ def minhash_lsh_pairs(
     # form stay row-identical; the only exchanges are the bucket join
     # and the two verify fetches.
     pin = generation("minhash_lsh_pairs")
-    per_doc = pin(_minhash_per_doc(docs, id_col, set_col, num_hashes))
-    bands = _minhash_bands(per_doc, id_col, num_hashes, band_size)
-    candidates = bucket_pairs(bands, bands, ["band_id", "band_hash"], id_col=id_col)
-    return jaccard_verify(candidates, per_doc, "hset", threshold, id_col=id_col)
+    docs = docs.select(F.col(id_col).alias("doc_id"), set_col)
+    per_doc = pin(_minhash_per_doc(docs, "doc_id", set_col, num_hashes))
+    bands = _minhash_bands(per_doc, "doc_id", num_hashes, band_size)
+    candidates = bucket_pairs(bands, bands, ["band_id", "band_hash"])
+    return jaccard_verify(candidates, per_doc, "hset", threshold)
 
 
 @query("dd04_minhash_lsh_pairs", oracle=DD04_EXACT_PAIRS_SQL)

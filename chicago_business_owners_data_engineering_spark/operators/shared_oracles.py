@@ -193,7 +193,9 @@ def jaccard_pairs_sql(rel: str, threshold: float, score: bool = True) -> str:
 DD04_EXACT_PAIRS_SQL = "WITH " + _SHINGLE_CTES + jaccard_pairs_sql("sh", 0.5)
 
 # sh -> exact-Jaccard edges -> recursive-CTE reachability -> min-label
-# components ``comp(doc_id, component)``; needs a RECURSIVE ``sh``.
+# components ``comp(doc_id, component)``. Composes after an
+# ``sh(doc_id, ws)`` CTE inside a ``WITH RECURSIVE`` clause (``reach`` is
+# recursive).
 NEARDUP_COMPONENT_CTES = f"""pairs AS ({jaccard_pairs_sql("sh", 0.5, score=False)}), edges AS (
         SELECT doc_a AS src, doc_b AS dst FROM pairs
         UNION ALL

@@ -259,12 +259,31 @@ def test_dedup_family_written_once():
                 and id(node) not in allowed
             ):
                 offenders.append(f"{rel}:{node.lineno} array_intersect")
-            if isinstance(node.func, ast.Attribute) and node.func.attr == "replace":
-                base = node.func.value
-                while isinstance(base, ast.Call) and isinstance(base.func, ast.Attribute):
-                    base = base.func.value
-                if isinstance(base, ast.Name) and base.id.lstrip("_").isupper():
-                    offenders.append(f"{rel}:{node.lineno} {base.id}.replace")
+        # Oracle text: ``@query(..., oracle=...)`` values and module-level
+        # ``*_ORACLE`` / ``*_SQL`` / ``*_CTE(S)`` constants.
+        oracle_text = [
+            kw.value
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call) and ast.unparse(node.func).endswith("query")
+            for kw in node.keywords
+            if kw.arg == "oracle"
+        ] + [
+            node.value
+            for node in tree.body
+            if isinstance(node, ast.Assign)
+            and any(
+                isinstance(t, ast.Name) and re.search(r"(ORACLE|_SQL|_CTES?)$", t.id)
+                for t in node.targets
+            )
+        ]
+        for expr in oracle_text:
+            for node in ast.walk(expr):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "replace"
+                ):
+                    offenders.append(f"{rel}:{node.lineno} oracle .replace")
         if rel == "operators/shared_oracles.py":
             continue
         for needle in ("LEN(a.ws) + LEN(b.ws) - LEN(LIST_INTERSECT", "CASE WHEN LEN(t) >= 3"):
