@@ -11,8 +11,10 @@ partition pruning, AQE).
 Layout
 ------
 - ``session``    — SparkSession factory tuned for the target scale.
-- ``catalog``    — parquet table loading + temp-view registration.
-- ``functions``  — scalar/column function library (cleaning, text, classify).
+- ``catalog``    — parquet table loading, scan spreading and pinned
+                   intermediates (``Pins``/``generation``).
+- ``functions``  — column-function library (cleaning, text) and the
+                   Python-UDF demos (udfs).
 - ``operators``  — the relational operator inventory (SURVEY.md §2) as
                    composable DataFrame transformations.
 - ``plans``      — multi-stage jobs (warehouse ETL, quality audit).

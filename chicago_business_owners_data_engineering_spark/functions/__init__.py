@@ -1,1 +1,1 @@
-"""Column-function library: cleaning, classification, text helpers."""
+"""Column-function library: cleaning, text and the Python-UDF demos."""

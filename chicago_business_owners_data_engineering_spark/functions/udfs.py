@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import udtf
 
 from ..catalog import load_table
+from ..operators.shared_oracles import ws_tokens_sql
 from ..registry import query
 
 
@@ -164,12 +165,12 @@ class LongTokensUDTF:
 
 @query(
     "u05_python_udtf",
-    oracle="""
+    oracle=f"""
     WITH lists AS (
-        SELECT doc_id, STRING_SPLIT(text, ' ') AS ts FROM documents
+        SELECT doc_id, {ws_tokens_sql()} AS ts FROM documents
     ), toks AS (
         SELECT doc_id,
-               UNNEST([{'pos': i, 'tok': ts[i]} FOR i IN RANGE(1, LEN(ts) + 1)],
+               UNNEST([{{'pos': i, 'tok': ts[i]}} FOR i IN RANGE(1, LEN(ts) + 1)],
                       recursive := true)
         FROM lists
     )

@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import generation, load_table, spread_scan
+from ..functions.text import hashed_tokens, md5_bucket
 from ..registry import query
 from .shared_oracles import (
     EMB_DIM as DIM,
@@ -701,24 +702,21 @@ def dbscan_density_dedup(
 
 # --- ml05: fastText-shaped linear quality classifier -------------------------
 
-from .shared_oracles import FT_BUCKETS, FT_KEEP_MICRO  # noqa: E402
+from .shared_oracles import FT_BUCKETS, FT_KEEP_MICRO, ft_feature_ctes  # noqa: E402
+
+# ml05's per-document score over ft_feature_ctes, which ml06 and ml08 evaluate.
+_FT_SCORED_CTE = """scored AS (
+        SELECT f.doc_id,
+               CAST((1000000 * SUM(w.w)) // COUNT(*) AS BIGINT) AS score_micro
+        FROM feat f JOIN wt w ON f.bucket = w.bucket
+        GROUP BY f.doc_id
+    )"""
 
 
 @query(
     "ml05_fasttext_quality",
     oracle=f"""
-    WITH wt AS (
-        SELECT range AS bucket,
-               CAST(CONCAT('0x', SUBSTRING(MD5(CAST(range AS VARCHAR)), 1, 8))
-                    AS BIGINT) % 101 AS w
-        FROM RANGE({FT_BUCKETS})
-    ), feat AS (
-        SELECT doc_id,
-               CAST(CONCAT('0x', SUBSTRING(MD5(tok), 1, 8)) AS BIGINT)
-                   % {FT_BUCKETS} AS bucket
-        FROM (SELECT doc_id, UNNEST(STRING_SPLIT(LOWER(text), ' ')) AS tok
-              FROM documents)
-    )
+    WITH {ft_feature_ctes("documents")}
     SELECT f.doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_tokens,
            CAST((1000000 * SUM(w.w)) // COUNT(*) AS BIGINT) AS score_micro,
@@ -784,25 +782,10 @@ def fasttext_scores(documents: DataFrame) -> DataFrame:
     docstring for the architecture and determinism notes."""
     spark = documents.sparkSession
     weights = spark.range(FT_BUCKETS).select(
-        F.col("id").alias("bucket"),
-        (
-            F.conv(F.substring(F.md5(F.col("id").cast("string")), 1, 8), 16, 10)
-            .cast("long")
-            % 101
-        ).alias("w"),
-    )
-    feat = documents.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.col("text")), " ")).alias("tok"),
-    ).select(
-        "doc_id",
-        (
-            F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10).cast("long")
-            % FT_BUCKETS
-        ).alias("bucket"),
+        F.col("id").alias("bucket"), md5_bucket(F.col("id"), 101).alias("w")
     )
     return (
-        feat.join(F.broadcast(weights), "bucket")
+        hashed_tokens(documents, FT_BUCKETS).join(F.broadcast(weights), "bucket")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
@@ -828,23 +811,7 @@ ML06_LABEL_MIN_CHARS = 200
 @query(
     "ml06_threshold_sweep",
     oracle=f"""
-    WITH wt AS (
-        SELECT range AS bucket,
-               CAST(CONCAT('0x', SUBSTRING(MD5(CAST(range AS VARCHAR)), 1, 8))
-                    AS BIGINT) % 101 AS w
-        FROM RANGE({FT_BUCKETS})
-    ), feat AS (
-        SELECT doc_id,
-               CAST(CONCAT('0x', SUBSTRING(MD5(tok), 1, 8)) AS BIGINT)
-                   % {FT_BUCKETS} AS bucket
-        FROM (SELECT doc_id, UNNEST(STRING_SPLIT(LOWER(text), ' ')) AS tok
-              FROM documents)
-    ), scored AS (
-        SELECT f.doc_id,
-               CAST((1000000 * SUM(w.w)) // COUNT(*) AS BIGINT) AS score_micro
-        FROM feat f JOIN wt w ON f.bucket = w.bucket
-        GROUP BY f.doc_id
-    ), labeled AS (
+    WITH {ft_feature_ctes("documents")}, {_FT_SCORED_CTE}, labeled AS (
         SELECT s.score_micro, d.n_chars >= {ML06_LABEL_MIN_CHARS} AS pos
         FROM scored s JOIN documents d USING (doc_id)
     ), sweep AS (
@@ -936,23 +903,7 @@ ML08_BIN_MICRO = 10_000_000  # decile width on the micro-unit score axis
 @query(
     "ml08_reliability_bins",
     oracle=f"""
-    WITH wt AS (
-        SELECT range AS bucket,
-               CAST(CONCAT('0x', SUBSTRING(MD5(CAST(range AS VARCHAR)), 1, 8))
-                    AS BIGINT) % 101 AS w
-        FROM RANGE({FT_BUCKETS})
-    ), feat AS (
-        SELECT doc_id,
-               CAST(CONCAT('0x', SUBSTRING(MD5(tok), 1, 8)) AS BIGINT)
-                   % {FT_BUCKETS} AS bucket
-        FROM (SELECT doc_id, UNNEST(STRING_SPLIT(LOWER(text), ' ')) AS tok
-              FROM documents)
-    ), scored AS (
-        SELECT f.doc_id,
-               CAST((1000000 * SUM(w.w)) // COUNT(*) AS BIGINT) AS score_micro
-        FROM feat f JOIN wt w ON f.bucket = w.bucket
-        GROUP BY f.doc_id
-    )
+    WITH {ft_feature_ctes("documents")}, {_FT_SCORED_CTE}
     SELECT s.score_micro // {ML08_BIN_MICRO} AS bin,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(CASE WHEN d.n_chars >= {ML06_LABEL_MIN_CHARS}

@@ -1,4 +1,4 @@
-"""Training-data curation operators, round 2.
+"""Training-data curation operators.
 
 Extends the §2.11 beyond-reference surface (SURVEY.md) with the
 curation ops a 100 TB pretraining pipeline runs between "raw corpus"
@@ -23,24 +23,26 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.text import repetition_fracs, shifted, token_counts, token_rows, word_rows, words
 from ..registry import query
+from .shared_oracles import DUP_FRAC_SQL, TOP_FRAC_SQL, WS_TOKS_SQL, ngrams_sql, token_counts_sql
+from .shared_oracles import unnest_words_sql, words_sql
 
 
 @query(
     "tx07_repetition_stats",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-        SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS tok FROM documents
+        {WS_TOKS_SQL}
     ), counts AS (
-        SELECT doc_id, tok, COUNT(*) AS c
-        FROM toks WHERE tok <> '' GROUP BY doc_id, tok
+        {token_counts_sql("toks")}
     )
     SELECT doc_id,
            -- CAST: DuckDB SUM(BIGINT) yields HUGEINT -> pandas float64,
            -- but Spark emits int64; the driver's hash is dtype-sensitive.
            CAST(SUM(c) AS BIGINT) AS n_tokens,
-           ROUND(1 - COUNT(*) * 1.0 / SUM(c), 6) AS dup_token_frac,
-           ROUND(MAX(c) * 1.0 / SUM(c), 6) AS top_token_frac
+           ROUND({DUP_FRAC_SQL}, 6) AS dup_token_frac,
+           ROUND({TOP_FRAC_SQL}, 6) AS top_token_frac
     FROM counts
     GROUP BY doc_id
     """,
@@ -58,18 +60,11 @@ def tx07_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic over the second-level counts.
     """
     documents = load_table(spark, sf_dir, "documents")
-    counts = (
-        documents.select(
-            "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
-        )
-        .filter(F.col("tok") != "")
-        .groupBy("doc_id", "tok")
-        .agg(F.count("*").alias("c"))
-    )
-    return counts.groupBy("doc_id").agg(
-        F.sum("c").alias("n_tokens"),
-        F.round(1 - F.count("*") / F.sum("c"), 6).alias("dup_token_frac"),
-        F.round(F.max("c") / F.sum("c"), 6).alias("top_token_frac"),
+    n_tokens, dup, top = repetition_fracs()
+    return token_counts(documents).groupBy("doc_id").agg(
+        n_tokens.alias("n_tokens"),
+        F.round(dup, 6).alias("dup_token_frac"),
+        F.round(top, 6).alias("top_token_frac"),
     )
 
 
@@ -290,9 +285,9 @@ def f24_higher_order_array(spark: SparkSession, sf_dir: str) -> DataFrame:
 # constant (and from surprisal_scores on the Spark side), so the
 # difficulty score tp10 ranks on can never silently diverge from the
 # avg_surprisal tx09 reports.
-_SURPRISAL_CTE = """
+_SURPRISAL_CTE = f"""
     WITH toks AS (
-        SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS tok FROM documents
+        {WS_TOKS_SQL}
     ), tf AS (
         SELECT tok, COUNT(*) AS c FROM toks WHERE tok <> '' GROUP BY tok
     ), tot AS (
@@ -319,9 +314,7 @@ def surprisal_scores(documents: DataFrame) -> DataFrame:
     (broadcast), vocabulary-sized at 100 TB where AQE picks the shuffle
     join and the tf aggregate's map-side partials bound the traffic.
     """
-    toks = documents.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("tok")
-    ).filter(F.col("tok") != "")
+    toks = token_rows(documents)
     tf = toks.groupBy("tok").agg(F.count("*").alias("c"))
     tot = tf.agg(F.sum("c").alias("n"))
     return (
@@ -709,12 +702,11 @@ BIGRAM_ALPHA = 0.5
     "tx13_bigram_surprisal",
     oracle=f"""
     WITH w AS (
-        SELECT doc_id, STRING_SPLIT(LOWER(text), ' ') AS l FROM documents
+        SELECT doc_id, {words_sql()} AS l FROM documents
     ), bg AS (
         SELECT doc_id,
                UNNEST(l[1 : LEN(l) - 1]) AS ctx,
-               UNNEST([l[i] || ' ' || l[i + 1]
-                       FOR i IN GENERATE_SERIES(1, LEN(l) - 1)]) AS bigram
+               UNNEST({ngrams_sql("l", 2)}) AS bigram
         FROM w
     ), c12 AS (
         SELECT bigram, COUNT(*) AS c FROM bg GROUP BY bigram
@@ -722,7 +714,7 @@ BIGRAM_ALPHA = 0.5
         SELECT ctx, COUNT(*) AS c FROM bg GROUP BY ctx
     ), vocab AS (
         SELECT COUNT(DISTINCT tok) AS v
-        FROM (SELECT UNNEST(STRING_SPLIT(LOWER(text), ' ')) AS tok FROM documents)
+        FROM ({unnest_words_sql(name="tok")})
     )
     SELECT b.doc_id, COUNT(*) AS n_bigrams,
            ROUND(AVG(-LOG2((c12.c + {BIGRAM_ALPHA}) /
@@ -770,14 +762,11 @@ def tx13_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     brief calls for.
     """
     documents = load_table(spark, sf_dir, "documents")
-    words = F.split(F.lower(F.col("text")), " ")
-    sz = F.size(words)
-    zipped = F.arrays_zip(F.slice(words, 1, sz - 1), F.slice(words, 2, sz - 1))
     bg = documents.select(
         "doc_id",
         F.explode(
             F.transform(
-                zipped,
+                shifted(words(), 2),
                 lambda s: F.struct(
                     s["0"].alias("ctx"), F.concat_ws(" ", s["0"], s["1"]).alias("bigram")
                 ),
@@ -786,10 +775,7 @@ def tx13_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", F.col("b.ctx").alias("ctx"), F.col("b.bigram").alias("bigram"))
     c12 = bg.groupBy("ctx", "bigram").agg(F.count(F.lit(1)).alias("c12"))
     c1 = c12.groupBy("ctx").agg(F.sum("c12").alias("c1"))
-    vocab = (
-        documents.select(F.explode(words).alias("tok"))
-        .agg(F.countDistinct("tok").alias("v"))
-    )
+    vocab = word_rows(documents, name="tok").agg(F.countDistinct("tok").alias("v"))
     p = (F.col("c12") + F.lit(BIGRAM_ALPHA)) / (
         F.col("c1") + F.lit(BIGRAM_ALPHA) * F.col("v")
     )

@@ -50,6 +50,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import generation, load_table, spread_scan
+from ..functions.text import WORDS_EXPR, ngrams, word_set, words
 from ..registry import query
 from .shared_oracles import (
     DD04_EXACT_PAIRS_SQL,
@@ -60,18 +61,16 @@ from .shared_oracles import (
     SIMHASH_BITS,
     SIMHASH_CTES,
     TRIGRAMS_SQL,
+    WORD_SET_SQL,
     _SHINGLE_CTES,
     jaccard_pairs_sql,
     simhash_band_sql,
+    words_sql,
 )
 
 NUM_HASHES = 16  # minhash signature length
 BAND_SIZE = 4  # rows per LSH band → 4 bands
 SHINGLE_N = 3  # words per shingle
-
-
-def _word_set(text: Column) -> Column:
-    return F.array_sort(F.array_distinct(F.split(F.lower(text), " ")))
 
 
 def _shingle_set(text: Column, n: int = SHINGLE_N) -> Column:
@@ -81,15 +80,12 @@ def _shingle_set(text: Column, n: int = SHINGLE_N) -> Column:
     words); n-gram shingles are the standard MinHash unit — two docs
     share a shingle only when n consecutive words match, so similarity
     concentrates on true near-copies. Docs shorter than n words shingle
-    to their whole text.
-
-    Built by zipping n shifted slices of the word array — ~10× faster
-    than transform-over-indices with element_at, which falls out of
-    vectorized evaluation.
+    to their whole text, so the slices (``functions.text.shifted``'s
+    recipe) are guarded rather than clamped.
     """
-    words = F.split(F.lower(text), " ")
-    sz = F.size(words)
-    zipped = F.arrays_zip(*[F.slice(words, i + 1, sz - (n - 1)) for i in range(n)])
+    w = words(text)
+    sz = F.size(w)
+    zipped = F.arrays_zip(*[F.slice(w, i + 1, sz - (n - 1)) for i in range(n)])
     grams = F.transform(zipped, lambda s: F.concat_ws(" ", *[s[str(i)] for i in range(n)]))
     return F.array_distinct(F.when(sz >= n, grams).otherwise(F.array(F.lower(text))))
 
@@ -98,12 +94,7 @@ def _trigram_set(text: Column) -> Column:
     """Distinct word 3-grams of a document, and none for a doc under 3
     words (unlike :func:`_shingle_set`'s whole-text fallback): the slice
     length is clamped at 0, because Spark rejects a negative one."""
-    words = F.split(F.lower(text), " ")
-    n_grams = F.greatest(F.size(words) - F.lit(2), F.lit(0))
-    zipped = F.arrays_zip(*[F.slice(words, i, n_grams) for i in (1, 2, 3)])
-    return F.array_distinct(
-        F.transform(zipped, lambda s: F.concat_ws(" ", s["0"], s["1"], s["2"]))
-    )
+    return F.array_distinct(ngrams(words(text), 3))
 
 
 def jaccard_score(a: Column, b: Column) -> tuple[Column, Column]:
@@ -236,9 +227,9 @@ def dd02_exact_dedup_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dd03_jaccard_pairs",
-    oracle="""
+    oracle=f"""
     WITH w AS (
-        SELECT doc_id, LIST_SORT(LIST_DISTINCT(STRING_SPLIT(LOWER(text), ' '))) AS ws
+        SELECT doc_id, {WORD_SET_SQL} AS ws
         FROM documents
     )"""
     + jaccard_pairs_sql("w", 0.8),
@@ -251,7 +242,7 @@ def dd03_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates and this scoring only on candidates.
     """
     documents = load_table(spark, sf_dir, "documents")
-    docs = documents.select("doc_id", _word_set(F.col("text")).alias("ws"))
+    docs = documents.select("doc_id", word_set().alias("ws"))
     a = docs.alias("a")
     b = docs.alias("b")
     _, jac = jaccard_score(F.col("a.ws"), F.col("b.ws"))
@@ -370,7 +361,7 @@ def dd05_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"""
         WITH hs AS (
             SELECT doc_id,
-                   transform(array_distinct(split(lower(text), ' ')),
+                   transform(array_distinct({WORDS_EXPR}),
                              t -> CAST(conv(substring(md5(t), 1, 15), 16, 10) AS LONG)) AS h
             FROM __dd05_docs
         ),
@@ -579,14 +570,14 @@ def _token_spans(text: Column, w: int = SPAN_W) -> Column:
     one document keeps its multiplicity. Docs under ``w`` words emit no
     spans.
     """
-    return _token_spans_from_words(F.split(F.lower(text), " "), w)
+    return _token_spans_from_words(words(text), w)
 
 
 @query(
     "dd09_duplicate_spans",
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id, STRING_SPLIT(LOWER(text), ' ') AS t FROM documents
+        SELECT doc_id, {words_sql()} AS t FROM documents
     ), spans AS (
         SELECT doc_id,
                UNNEST([ARRAY_TO_STRING(t[i:i+{SPAN_W - 1}], ' ')
@@ -667,7 +658,7 @@ def dd09_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dd10_span_dedup_apply",
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id, STRING_SPLIT(LOWER(text), ' ') AS t FROM documents
+        SELECT doc_id, {words_sql()} AS t FROM documents
     ), occ AS (
         SELECT doc_id, t,
                UNNEST(RANGE(1, LEN(t) - {SPAN_W - 2})) AS pos
@@ -744,7 +735,7 @@ def span_dedup_apply(
 
     toks = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.split(F.lower(F.col(text_col)), " ").alias("t"),
+        words(text_col).alias("t"),
     )
     spans = toks.select(
         "doc_id",
@@ -782,17 +773,17 @@ def span_dedup_apply(
     )
 
 
-def _token_spans_from_words(words: Column, w: int = SPAN_W) -> Column:
+def _token_spans_from_words(tokens: Column, w: int = SPAN_W) -> Column:
     """_token_spans over an already-split word array (shared split)."""
-    n_spans = F.size(words) - F.lit(w - 1)
-    acc = F.slice(words, 1, n_spans)
+    n_spans = F.size(tokens) - F.lit(w - 1)
+    acc = F.slice(tokens, 1, n_spans)
     for k in range(1, w):
         acc = F.zip_with(
             acc,
-            F.slice(words, k + 1, n_spans),
+            F.slice(tokens, k + 1, n_spans),
             lambda a, b: F.concat(a, F.lit(" "), b),
         )
-    return F.when(F.size(words) >= w, acc).otherwise(
+    return F.when(F.size(tokens) >= w, acc).otherwise(
         F.array().cast("array<string>")
     )
 
@@ -1316,7 +1307,7 @@ def dd13_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dd14_ngram_novelty",
     oracle=f"""
     WITH labeled AS (
-        SELECT doc_id, STRING_SPLIT(LOWER(text), ' ') AS l FROM documents
+        SELECT doc_id, {words_sql()} AS l FROM documents
     ),
     shingled AS (
         SELECT DISTINCT doc_id, sh

@@ -37,13 +37,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.text import words
 from ..registry import query
 
 # The shared component oracle lives in the registry-free shared_oracles
 # module precisely so it can be imported here at decoration time; a
 # peer import from dedup would re-enter dedup half-initialized when
 # graph is imported first (the registry imports all operator modules).
-from .shared_oracles import DD06_REPORT_SQL as _DD06_REPORT_SQL
+from .shared_oracles import DD06_REPORT_SQL as _DD06_REPORT_SQL, words_sql
 
 
 def _canonical(pairs: DataFrame) -> DataFrame:
@@ -592,9 +593,9 @@ def dd08_components_largestar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx12_textrank_keywords",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-        SELECT STRING_SPLIT(LOWER(text), ' ') AS t FROM documents
+        SELECT {words_sql()} AS t FROM documents
     ), raw AS (
         SELECT t, UNNEST(RANGE(1, LEN(t))) AS i FROM toks WHERE LEN(t) >= 2
     ), adj AS (
@@ -631,7 +632,7 @@ def tx12_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     of corpus size — the corpus-sized work is exactly one scan.
     """
     documents = load_table(spark, sf_dir, "documents")
-    t = F.split(F.lower(F.col("text")), " ")
+    t = words()
     sz = F.size(t)
     adj = F.zip_with(
         F.slice(t, 1, sz - 1),

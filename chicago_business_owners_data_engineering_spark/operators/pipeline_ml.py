@@ -20,26 +20,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, spread_scan
+from ..functions.text import WORDS_EXPR, hashed_tokens, ngrams, words, ws_tokens
+from ..functions.text import md5_bucket as _md5_bucket
 from ..registry import query
-from .shared_oracles import TRIGRAMS_SQL
+from .shared_oracles import TRIGRAMS_SQL, hashed_tokens_sql, md5_bucket_sql, ngrams_sql
+from .shared_oracles import words_sql, ws_tokens_sql
 
 CHUNK_SIZE = 200
 CHUNK_STRIDE = 150
 SAMPLE_PER_STRATUM = 20
 SESSION_GAP_S = 1800
-
-
-def _md5_bucket(key, n_buckets: int = 100):
-    """Deterministic [0, n_buckets) bucket from the md5 of a key string.
-
-    The standard train/valid/test splitter: stable across runs, engines,
-    partitionings, and data order — unlike ``rand(seed)``, which is
-    per-partition-deterministic only (a repartition reshuffles splits).
-    First 8 hex chars → 32-bit int → modulo.
-    """
-    return (
-        F.conv(F.substring(F.md5(key.cast("string")), 1, 8), 16, 10).cast("long") % n_buckets
-    )
 
 
 @query(
@@ -123,10 +113,10 @@ def tp02_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tp03_bigram_freq",
-    oracle="""
-    WITH w AS (SELECT STRING_SPLIT(LOWER(text), ' ') AS l FROM documents),
+    oracle=f"""
+    WITH w AS (SELECT {words_sql()} AS l FROM documents),
     bg AS (
-        SELECT UNNEST([l[i] || ' ' || l[i + 1] FOR i IN GENERATE_SERIES(1, LEN(l) - 1)])
+        SELECT UNNEST({ngrams_sql("l", 2)})
             AS bigram
         FROM w
     )
@@ -141,18 +131,14 @@ def tp03_bigram_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus bigram frequency, top-50 (the n-gram LM statistics pass).
 
     Bigrams come from zipping the word array with its shift — pure
-    array ops in one codegen stage (see dedup._shingle_set for why not
-    transform-over-indices). The groupBy shuffles on bigram vocabulary
+    array ops in one codegen stage (see functions.text.shifted for why
+    not transform-over-indices). The groupBy shuffles on bigram vocabulary
     cardinality, not corpus size; partial aggregation collapses each
     partition's counts first.
     """
     documents = spread_scan(load_table(spark, sf_dir, "documents"))
-    words = F.split(F.lower(F.col("text")), " ")
-    sz = F.size(words)
-    zipped = F.arrays_zip(F.slice(words, 1, sz - 1), F.slice(words, 2, sz - 1))
-    bigrams = F.transform(zipped, lambda s: F.concat_ws(" ", s["0"], s["1"]))
     return (
-        documents.select(F.explode(bigrams).alias("bigram"))
+        documents.select(F.explode(ngrams(words(), 2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count("*").alias("count"))
         .orderBy(F.desc("count"), F.asc("bigram"))
@@ -413,19 +399,19 @@ def sim06_scalar_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
 PACK_BUDGET = 256  # tokens per packed context window
 
 
-@query(
-    "tp05_sequence_packing",
-    oracle=f"""
-    WITH d AS (
-        SELECT doc_id, lang, LEN(STRING_SPLIT(text, ' ')) AS n_tokens
+# tp05's bin assignment, which tp22 audits: per-doc token counts ``d``
+# and the running-count bin of each doc.
+_PACK_D_CTE = f"""d AS (
+        SELECT doc_id, lang, LEN({ws_tokens_sql()}) AS n_tokens
         FROM documents
-    )
-    SELECT doc_id, lang, n_tokens,
+    )"""
+_PACK_SQL = f"""SELECT doc_id, lang, n_tokens,
            CAST(FLOOR((SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id)
                        - n_tokens) / {PACK_BUDGET}.0) AS BIGINT) AS bin_id
-    FROM d
-    """,
-)
+    FROM d"""
+
+
+@query("tp05_sequence_packing", oracle=f"WITH {_PACK_D_CTE} {_PACK_SQL}")
 def tp05_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy sequence packing: assign docs to ~fixed-token context bins.
 
@@ -438,7 +424,7 @@ def tp05_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     count. Deterministic: same data → same bins, any cluster size.
     """
     documents = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(F.split(F.col("text"), " "))
+    n_tokens = F.size(ws_tokens())
     w = (
         Window.partitionBy("lang")
         .orderBy("doc_id")
@@ -456,12 +442,12 @@ def tp05_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tp06_curation_report",
-    oracle="""
+    oracle=f"""
     WITH scored AS (
         SELECT lang, source, n_chars,
-               LEN(STRING_SPLIT(text, ' ')) AS n_words,
+               LEN({ws_tokens_sql()}) AS n_words,
                (n_chars BETWEEN 100 AND 500
-                AND LEN(STRING_SPLIT(text, ' ')) >= 20
+                AND LEN({ws_tokens_sql()}) >= 20
                 AND LENGTH(REGEXP_REPLACE(text, '[a-zA-Z0-9 ]', '', 'g'))
                     <= 0.1 * n_chars) AS keep
         FROM documents
@@ -495,7 +481,7 @@ def tp06_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses each task to the (lang × source) group count.
     """
     documents = load_table(spark, sf_dir, "documents")
-    n_words = F.size(F.split(F.col("text"), " "))
+    n_words = F.size(ws_tokens())
     symbol_chars = F.length(F.regexp_replace(F.col("text"), "[a-zA-Z0-9 ]", ""))
     keep = (
         F.col("n_chars").between(100, 500)
@@ -527,14 +513,13 @@ def tp06_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "tp07_contamination_check",
-    oracle=f"""
-    WITH labeled AS (
+# tp01's split bucket ``b`` and word list ``l`` per doc (``labeled``) and
+# its distinct word 3-grams (``shingled``): tp07 and tp17 (_split_trigrams).
+_SPLIT_TRIGRAM_CTES = f"""labeled AS (
         SELECT doc_id,
                CAST(CONCAT('0x', SUBSTRING(MD5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
                    % 100 AS b,
-               STRING_SPLIT(LOWER(text), ' ') AS l
+               {words_sql()} AS l
         FROM documents
     ),
     shingled AS (
@@ -543,7 +528,25 @@ def tp06_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT doc_id, b, UNNEST({TRIGRAMS_SQL}) AS sh
             FROM labeled
         )
-    ),
+    )"""
+
+
+def _split_trigrams(documents: DataFrame) -> DataFrame:
+    """``(doc_id, b, sh)``: each doc's split bucket and distinct word
+    3-grams (``_SPLIT_TRIGRAM_CTES``' ``shingled``)."""
+    from .dedup import _trigram_set
+
+    return documents.select(
+        "doc_id",
+        _md5_bucket(F.col("doc_id")).alias("b"),
+        F.explode(_trigram_set(F.col("text"))).alias("sh"),
+    )
+
+
+@query(
+    "tp07_contamination_check",
+    oracle=f"""
+    WITH {_SPLIT_TRIGRAM_CTES},
     train_sh AS (SELECT DISTINCT sh FROM shingled WHERE b < 80)
     SELECT e.doc_id,
            COUNT(*) AS n_shingles,
@@ -573,13 +576,7 @@ def tp07_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     probability) and the train side becomes a bloom-filter-prunable
     build.
     """
-    from .dedup import _trigram_set
-
-    documents = load_table(spark, sf_dir, "documents")
-    bucket = _md5_bucket(F.col("doc_id"))
-    shingled = documents.select(
-        "doc_id", bucket.alias("b"), F.explode(_trigram_set(F.col("text"))).alias("sh")
-    )
+    shingled = _split_trigrams(load_table(spark, sf_dir, "documents"))
     train_sh = shingled.filter(F.col("b") < 80).select("sh").distinct()
     eval_sh = shingled.filter(F.col("b") >= 90).select("doc_id", "sh")
     hit = train_sh.withColumn("hit", F.lit(1))
@@ -610,8 +607,8 @@ WEIGHTED_PER_SOURCE = 25  # weighted sample size per source stratum
     oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               LEN(STRING_SPLIT(text, ' ')) AS n_tokens,
-               CAST(FLOOR(LEN(STRING_SPLIT(text, ' ')) * 1.0 / {TOKENS_PER_BUCKET}) AS BIGINT) AS bucket
+               LEN({ws_tokens_sql()}) AS n_tokens,
+               CAST(FLOOR(LEN({ws_tokens_sql()}) * 1.0 / {TOKENS_PER_BUCKET}) AS BIGINT) AS bucket
         FROM documents
     )
     SELECT bucket,
@@ -638,7 +635,7 @@ def tp11_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     in codegen (tx02's tokenizer tier discusses the BPE-regex upgrade).
     """
     documents = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(F.split("text", " "))
+    n_tokens = F.size(ws_tokens())
     bucket = F.floor(n_tokens / TOKENS_PER_BUCKET)
     ceiling = (bucket + 1) * TOKENS_PER_BUCKET
     return (
@@ -944,17 +941,15 @@ def tp15_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 DSIR_BUCKETS = 128  # hashed-unigram feature-table size
 DSIR_TARGET_LANG = "en"  # the "looks like the target distribution" corpus
 DSIR_KEEP_MICRO = 500_000  # acceptance scale: ratio 1.0 → 50% keep rate
+# tp16's per-doc md5-uniform acceptance draw in micro-units.
+_DSIR_COIN_SQL = md5_bucket_sql("'dsir:' || CAST(s.doc_id AS VARCHAR)", 1_000_000)
 
 
 @query(
     "tp16_dsir_resample",
     oracle=f"""
     WITH feat AS (
-        SELECT doc_id,
-               CAST(CONCAT('0x', SUBSTRING(MD5(tok), 1, 8)) AS BIGINT)
-                   % {DSIR_BUCKETS} AS bucket
-        FROM (SELECT doc_id, UNNEST(STRING_SPLIT(LOWER(text), ' ')) AS tok
-              FROM documents)
+        {hashed_tokens_sql("documents", DSIR_BUCKETS)}
     ), raw_b AS (
         SELECT bucket, CAST(COUNT(*) AS BIGINT) AS c FROM feat GROUP BY bucket
     ), tgt_b AS (
@@ -985,13 +980,9 @@ DSIR_KEEP_MICRO = 500_000  # acceptance scale: ratio 1.0 → 50% keep rate
         FROM feat f JOIN wt w ON f.bucket = w.bucket
         GROUP BY f.doc_id
     )
-    SELECT s.doc_id, d.lang, d.source, s.n_tokens, s.imp_micro,
-           CAST(CONCAT('0x', SUBSTRING(MD5('dsir:' || CAST(s.doc_id AS VARCHAR)),
-                                       1, 8)) AS BIGINT) % 1000000 AS u_micro
+    SELECT s.doc_id, d.lang, d.source, s.n_tokens, s.imp_micro, {_DSIR_COIN_SQL} AS u_micro
     FROM scored s JOIN documents d USING (doc_id)
-    WHERE CAST(CONCAT('0x', SUBSTRING(MD5('dsir:' || CAST(s.doc_id AS VARCHAR)),
-                                      1, 8)) AS BIGINT) % 1000000
-          < (s.imp_micro * {DSIR_KEEP_MICRO}) // 1000000
+    WHERE {_DSIR_COIN_SQL} < (s.imp_micro * {DSIR_KEEP_MICRO}) // 1000000
     ORDER BY s.doc_id
     """,
 )
@@ -1035,16 +1026,7 @@ def tp16_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     documents = load_table(spark, sf_dir, "documents")
     scored = dsir_scores(documents)
-    u_micro = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("dsir:"), F.col("doc_id").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1_000_000
-    )
+    u_micro = _md5_bucket(F.concat(F.lit("dsir:"), F.col("doc_id").cast("string")), 1_000_000)
     return (
         scored.join(documents.select("doc_id", "lang", "source"), "doc_id")
         .select(
@@ -1070,26 +1052,11 @@ def dsir_scores(documents: DataFrame) -> DataFrame:
     the corpus can be pipeline intermediates; see tp16's docstring for
     the linearization and int64-exactness argument."""
     spark = documents.sparkSession
-    # ``lang`` rides along the explode so the target-language counts
-    # come from a conditional aggregate in the SAME pass as the raw
-    # counts (r10): the old form ran the tokenize+md5 explode three
-    # times (raw counts, target counts, scoring) and shuffled the
-    # exploded relation doc-keyed to attach the language filter. Now
-    # the fit is ONE explode pass (two conditional counts, map-side
-    # partials on the bucket key) and scoring is the second — no
-    # doc-keyed join of token-grain rows at all. Counts identical.
-    feat = documents.select(
-        "doc_id",
-        "lang",
-        F.explode(F.split(F.lower(F.col("text")), " ")).alias("tok"),
-    ).select(
-        "doc_id",
-        "lang",
-        (
-            F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10).cast("long")
-            % DSIR_BUCKETS
-        ).alias("bucket"),
-    )
+    # ``lang`` rides along the explode, so the fit is ONE explode pass
+    # (raw and target-language counts as two conditional aggregates,
+    # map-side partials on the bucket key) and scoring is the second —
+    # no doc-keyed join of token-grain rows.
+    feat = hashed_tokens(documents, DSIR_BUCKETS, "lang")
     both_b = feat.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("rc"),
         F.count(F.when(F.col("lang") == DSIR_TARGET_LANG, 1)).alias("tc"),
@@ -1132,20 +1099,7 @@ def dsir_scores(documents: DataFrame) -> DataFrame:
 @query(
     "tp17_decontaminate_train",
     oracle=f"""
-    WITH labeled AS (
-        SELECT doc_id,
-               CAST(CONCAT('0x', SUBSTRING(MD5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-                   % 100 AS b,
-               STRING_SPLIT(LOWER(text), ' ') AS l
-        FROM documents
-    ),
-    shingled AS (
-        SELECT DISTINCT doc_id, b, sh
-        FROM (
-            SELECT doc_id, b, UNNEST({TRIGRAMS_SQL}) AS sh
-            FROM labeled
-        )
-    ),
+    WITH {_SPLIT_TRIGRAM_CTES},
     eval_sh AS (SELECT DISTINCT sh FROM shingled WHERE b >= 90),
     contaminated AS (
         SELECT DISTINCT s.doc_id
@@ -1188,18 +1142,13 @@ def tp17_decontaminate_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     Parity: beyond-reference (§2.11 mandate; governance seed
     cbddl/src/etl/pipeline.py:296,329 dedup keys).
     """
-    from .dedup import _trigram_set
-
     documents = load_table(spark, sf_dir, "documents")
-    bucket = _md5_bucket(F.col("doc_id"))
-    shingled = documents.select(
-        "doc_id", bucket.alias("b"), F.explode(_trigram_set(F.col("text"))).alias("sh")
-    )
+    shingled = _split_trigrams(documents)
     eval_sh = shingled.filter(F.col("b") >= 90).select("sh").distinct()
     train_sh = shingled.filter(F.col("b") < 80)
     contaminated = train_sh.join(eval_sh, "sh").select("doc_id").distinct()
     counts = train_sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    train = documents.filter(bucket < 80).select("doc_id")
+    train = documents.filter(_md5_bucket(F.col("doc_id")) < 80).select("doc_id")
     return (
         train.join(contaminated, "doc_id", "left_anti")
         .join(counts, "doc_id", "left")
@@ -2064,14 +2013,8 @@ def st09_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "tp22_pack_efficiency",
     oracle=f"""
-    WITH d AS (
-        SELECT doc_id, lang, LEN(STRING_SPLIT(text, ' ')) AS n_tokens
-        FROM documents
-    ), packed AS (
-        SELECT doc_id, lang, n_tokens,
-               CAST(FLOOR((SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id)
-                           - n_tokens) / {PACK_BUDGET}.0) AS BIGINT) AS bin_id
-        FROM d
+    WITH {_PACK_D_CTE}, packed AS (
+        {_PACK_SQL}
     )
     SELECT lang,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -2318,12 +2261,12 @@ def st10_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tp25_curriculum_phases",
-    oracle="""
+    oracle=f"""
     WITH scored AS (
         SELECT doc_id,
-               LEN(STRING_SPLIT(LOWER(text), ' ')) AS n_words,
-               (1000 * LEN(LIST_DISTINCT(STRING_SPLIT(LOWER(text), ' '))))
-                   // LEN(STRING_SPLIT(LOWER(text), ' ')) AS score
+               LEN({words_sql()}) AS n_words,
+               (1000 * LEN(LIST_DISTINCT({words_sql()})))
+                   // LEN({words_sql()}) AS score
         FROM documents
     ), buckets AS (
         SELECT score, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -2363,13 +2306,11 @@ def tp25_curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality family with tp15/tp24's budget discipline).
     """
     documents = load_table(spark, sf_dir, "documents")
-    words = F.split(F.lower(F.col("text")), " ")
     scored = documents.select(
         "doc_id",
-        F.size(words).alias("n_words"),
+        F.size(words()).alias("n_words"),
         F.expr(
-            "(1000 * size(array_distinct(split(lower(text), ' '))))"
-            " div size(split(lower(text), ' '))"
+            f"(1000 * size(array_distinct({WORDS_EXPR}))) div size({WORDS_EXPR})"
         ).alias("score"),
     )
     buckets = scored.groupBy("score").agg(

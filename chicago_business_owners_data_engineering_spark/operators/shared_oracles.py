@@ -22,6 +22,78 @@ CURATION_MAX_DUP_TOKEN_FRAC = 0.6
 CURATION_MAX_TOP_TOKEN_FRAC = 0.3
 CURATION_FT_MIN_MICRO = 35_000_000
 
+# --- text family: the DuckDB twins of functions/text.py -------------------------
+
+
+def words_sql(text: str = "text") -> str:
+    """Lowercase, then split on one space (functions.text.words)."""
+    return f"STRING_SPLIT(LOWER({text}), ' ')"
+
+
+def ws_tokens_sql(text: str = "text") -> str:
+    """The case-preserving single-space split (functions.text.ws_tokens)."""
+    return f"STRING_SPLIT({text}, ' ')"
+
+
+def ngrams_sql(l: str, n: int) -> str:
+    """The space-joined word ``n``-grams of a list ``l`` (functions.text.ngrams)."""
+    gram = " || ' ' || ".join([f"{l}[i]"] + [f"{l}[i + {j}]" for j in range(1, n)])
+    return f"[{gram} FOR i IN GENERATE_SERIES(1, LEN({l}) - {n - 1})]"
+
+
+# The sorted distinct word set of ``documents.text`` (functions.text.word_set).
+WORD_SET_SQL = f"LIST_SORT(LIST_DISTINCT({words_sql()}))"
+
+
+def unnest_words_sql(*keys: str, name: str = "word", rel: str = "documents") -> str:
+    """``SELECT keys…, name``: one row per word of ``rel.text``."""
+    cols = "".join(f"{k}, " for k in keys)
+    return f"SELECT {cols}UNNEST({words_sql()}) AS {name} FROM {rel}"
+
+
+def word_rows_sql(*keys: str, min_len: int) -> str:
+    """FROM-clause words of ``min_len``+ characters (functions.text.word_rows)."""
+    return f"({unnest_words_sql(*keys)}) WHERE LENGTH(word) >= {min_len}"
+
+
+# (doc_id, tok) per whitespace token: tx07, the surprisal family, tp23.
+WS_TOKS_SQL = f"SELECT doc_id, UNNEST({ws_tokens_sql()}) AS tok FROM documents"
+
+
+def token_counts_sql(toks: str) -> str:
+    """Non-empty ``(doc_id, tok)`` rows counted (functions.text.token_counts)."""
+    return f"SELECT doc_id, tok, COUNT(*) AS c FROM {toks} WHERE tok <> '' GROUP BY doc_id, tok"
+
+
+# Gopher repetition fractions over token_counts_sql (functions.text.repetition_fracs).
+DUP_FRAC_SQL = "1 - COUNT(*) * 1.0 / SUM(c)"
+TOP_FRAC_SQL = "MAX(c) * 1.0 / SUM(c)"
+
+
+def md5_bucket_sql(key: str, n_buckets: int) -> str:
+    """The [0, n_buckets) md5-prefix bucket of a string (functions.text.md5_bucket)."""
+    return f"CAST(CONCAT('0x', SUBSTRING(MD5({key}), 1, 8)) AS BIGINT) % {n_buckets}"
+
+
+def hashed_tokens_sql(rel: str, n_buckets: int) -> str:
+    """``(doc_id, bucket)`` per word of ``rel.text`` (functions.text.hashed_tokens)."""
+    return (
+        f"SELECT doc_id, {md5_bucket_sql('tok', n_buckets)} AS bucket "
+        f"FROM ({unnest_words_sql('doc_id', name='tok', rel=rel)})"
+    )
+
+
+def ft_feature_ctes(rel: str) -> str:
+    """fastText's parameters ``wt(bucket, w)`` and features ``feat(doc_id,
+    bucket)`` of ``rel`` (clustering.fasttext_scores): ml05, ml06, ml08, tp23."""
+    return f"""wt AS (
+        SELECT range AS bucket, {md5_bucket_sql("CAST(range AS VARCHAR)", 101)} AS w
+        FROM RANGE({FT_BUCKETS})
+    ), feat AS (
+        {hashed_tokens_sql(rel, FT_BUCKETS)}
+    )"""
+
+
 # K-means trajectory constants — shared by the embedding-space family
 # (ml01-ml04, sim12-sim14). Import-pure ints; clustering.py re-exports
 # them as K / DIM / N_PROBES for its engine code.
@@ -146,7 +218,7 @@ SHINGLE_SQL = """CASE WHEN LEN(t) >= 3
 # SHINGLE_SQL over its own survivor relation).
 _SHINGLE_CTES = f"""
     toks AS (
-        SELECT doc_id, text, STRING_SPLIT(LOWER(text), ' ') AS t FROM documents
+        SELECT doc_id, text, {words_sql()} AS t FROM documents
     ), sh AS (
         SELECT doc_id,
                {SHINGLE_SQL} AS ws
@@ -154,10 +226,9 @@ _SHINGLE_CTES = f"""
     )
 """
 
-# All word 3-grams of a split word list ``l``, repeats kept and none for
-# a doc under 3 words (dedup._trigram_set's twin): dd14, tp07, tp17.
-TRIGRAMS_SQL = """[l[i] || ' ' || l[i + 1] || ' ' || l[i + 2]
-                           FOR i IN GENERATE_SERIES(1, LEN(l) - 2)]"""
+# The word 3-grams of a list ``l`` (dedup._trigram_set's twin): dd14,
+# tp07, tp17.
+TRIGRAMS_SQL = ngrams_sql("l", 3)
 
 
 def jaccard_sql(a: str, b: str) -> str:
@@ -255,7 +326,7 @@ SIMHASH_BANDS_SQL = ", ".join(
 SIMHASH_CTES = f"""hs AS (
         SELECT doc_id,
                [CAST(CONCAT('0x', SUBSTRING(MD5(t), 1, 15)) AS BIGINT)
-                FOR t IN LIST_DISTINCT(STRING_SPLIT(LOWER(text), ' '))] AS h
+                FOR t IN LIST_DISTINCT({words_sql()})] AS h
         FROM documents
     ), votes AS (
         SELECT doc_id, LEN(h) AS n,

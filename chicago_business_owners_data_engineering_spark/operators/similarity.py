@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table, spread_scan
+from ..functions.text import words
 from ..registry import query
 from .shared_oracles import (
     IVF_CENTROID_CTE,
@@ -50,6 +51,7 @@ from .shared_oracles import (
     cos_sql,
     ivf_panel_probe_cte,
     ivf_probe_cte,
+    words_sql,
 )
 
 TOP_K = 10
@@ -377,7 +379,7 @@ HYBRID_K = 15
     WITH {QUERY_CTE},
     scored AS (
         SELECT d.doc_id,
-               LEN(LIST_INTERSECT(LIST_DISTINCT(STRING_SPLIT(d.text, ' ')),
+               LEN(LIST_INTERSECT(LIST_DISTINCT({words_sql("d.text")}),
                                   {list(HYBRID_TERMS)!r})) / {len(HYBRID_TERMS)}.0
                    AS lex,
                {_E_COS_SQL} AS cos
@@ -401,17 +403,18 @@ def sim08_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB both tables are bucketed on that key so the join is
     shuffle-free (sources/lake.py write_bucketed), the 1-row query
     vector broadcasts, and TakeOrderedAndProject keeps k rows per
-    partition. Lexical scoring is array_intersect over the tokenized
-    text — JVM-side, no inverted index needed for a fixed small term
-    set (an index materializes as the a18-style token relation when
-    term sets grow).
+    partition. Lexical scoring is array_intersect over the document's
+    distinct words (``functions.text.words``, the text family's
+    lowercasing tokenizer) — JVM-side, no inverted index needed for a
+    fixed small term set (an index materializes as the a18-style token
+    relation when term sets grow).
     """
     documents = load_table(spark, sf_dir, "documents")
     embeddings = load_table(spark, sf_dir, "embeddings")
     q = _query_vec(embeddings)
     terms = F.array(*[F.lit(t) for t in HYBRID_TERMS])
     lex = F.size(
-        F.array_intersect(F.array_distinct(F.split(F.col("text"), " ")), terms)
+        F.array_intersect(F.array_distinct(words()), terms)
     ) / float(len(HYBRID_TERMS))
     cos = cosine(F.col("embedding").cast("array<double>"), F.col("qv"))
     return (

@@ -7,6 +7,13 @@ higher-order functions — ``split`` / ``explode`` / ``filter`` /
 ``aggregate`` — so the whole path stays inside whole-stage codegen and
 scales by partitioning documents, with the word-count shuffle keyed on
 the (bounded-vocabulary) word.
+
+The family's shared steps live in ``functions/text.py``, each with its
+DuckDB twin in ``shared_oracles``: the one tokenizer ``words``
+(lowercase, split on one space) and the case-preserving ``ws_tokens``,
+the word set, word n-grams, the exploded ``(keys, word)`` relation
+``word_rows``, per-document token counts and hashed-word features.
+Here tx06/tx11 share one postings build and tx03/tx19 one marker rule.
 """
 
 from __future__ import annotations
@@ -16,7 +23,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table, spread_scan
+from ..functions.text import ngrams, shifted, word_rows, word_set, words, ws_tokens
 from ..registry import query
+from .shared_oracles import WORD_SET_SQL, ngrams_sql, unnest_words_sql, word_rows_sql
+from .shared_oracles import words_sql, ws_tokens_sql
 
 # Tiny stopword list used by the quality scorer; kept identical in the
 # DuckDB oracle strings below.
@@ -25,10 +35,9 @@ STOPWORDS = ("the", "a", "an", "of", "and", "to", "in", "is")
 
 @query(
     "a18_word_frequency",
-    oracle="""
+    oracle=f"""
     SELECT word, COUNT(*) AS count
-    FROM (SELECT UNNEST(STRING_SPLIT(LOWER(text), ' ')) AS word FROM documents)
-    WHERE LENGTH(word) >= 3
+    FROM {word_rows_sql(min_len=3)}
     GROUP BY word
     ORDER BY count DESC, word ASC
     LIMIT 50
@@ -43,11 +52,9 @@ def a18_word_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality is the vocabulary, not the corpus.
     """
     documents = load_table(spark, sf_dir, "documents")
-    words = documents.select(
-        F.explode(F.split(F.lower(F.col("text")), " ")).alias("word")
-    ).filter(F.length("word") >= 3)
     return (
-        words.groupBy("word")
+        word_rows(documents, min_len=3)
+        .groupBy("word")
         .agg(F.count("*").alias("count"))
         .orderBy(F.desc("count"), F.asc("word"))
         .limit(50)
@@ -78,10 +85,6 @@ def a19_suffix_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stopword_count(words: Column) -> Column:
-    return F.size(F.filter(words, lambda w: w.isin(*STOPWORDS)))
-
-
 @query(
     "tx01_quality_score",
     oracle=f"""
@@ -95,7 +98,7 @@ def _stopword_count(words: Column) -> Column:
                LEN(words) AS n_words,
                LEN(LIST_FILTER(words, w -> w IN {STOPWORDS})) * 1.0 / LEN(words) AS stop_ratio,
                LEN(LIST_DISTINCT(words)) * 1.0 / LEN(words) AS uniq_ratio
-        FROM (SELECT doc_id, STRING_SPLIT(LOWER(text), ' ') AS words FROM documents)
+        FROM (SELECT doc_id, {words_sql()} AS words FROM documents)
     )
     """,
 )
@@ -109,12 +112,12 @@ def tx01_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     higher-order array functions — zero Python in the row path.
     """
     documents = load_table(spark, sf_dir, "documents")
-    words = F.split(F.lower(F.col("text")), " ")
+    w = words()
     tokens = documents.select(
         "doc_id",
-        F.size(words).alias("n_words"),
-        (_stopword_count(words) / F.size(words)).alias("stop_ratio_raw"),
-        (F.size(F.array_distinct(words)) / F.size(words)).alias("uniq_ratio_raw"),
+        F.size(w).alias("n_words"),
+        (F.size(F.filter(w, lambda x: x.isin(*STOPWORDS))) / F.size(w)).alias("stop_ratio_raw"),
+        (F.size(F.array_distinct(w)) / F.size(w)).alias("uniq_ratio_raw"),
     )
     return tokens.select(
         "doc_id",
@@ -131,9 +134,9 @@ def tx01_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx02_token_count",
-    oracle=r"""
+    oracle=rf"""
     SELECT doc_id,
-           LEN(STRING_SPLIT(text, ' ')) AS ws_tokens,
+           LEN({ws_tokens_sql()}) AS ws_tokens,
            LEN(REGEXP_EXTRACT_ALL(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]')) AS bpe_ish_tokens
     FROM documents
     """,
@@ -145,22 +148,31 @@ def tx02_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents = load_table(spark, sf_dir, "documents")
     return documents.select(
         "doc_id",
-        F.size(F.split(F.col("text"), " ")).alias("ws_tokens"),
+        F.size(ws_tokens()).alias("ws_tokens"),
         F.size(
             F.regexp_extract_all(F.col("text"), F.lit(r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"), 0)
         ).alias("bpe_ish_tokens"),
     )
 
 
+# tx03's English-marker language rule, which tx19 audits.
+EN_MARKERS = ("the", "a", "of", "and", "is")
+_PREDICTED_LANG_SQL = f"""CASE WHEN LEN(LIST_FILTER({words_sql()}, w -> w IN {EN_MARKERS!r})) >= 2
+           THEN 'en' ELSE 'unknown' END"""
+
+
+def _predicted_lang() -> Column:
+    """'en' when ``text`` holds at least two English marker words, else
+    'unknown' (``_PREDICTED_LANG_SQL``)."""
+    en_markers = F.size(F.filter(words(), lambda w: w.isin(*EN_MARKERS)))
+    return F.when(en_markers >= 2, F.lit("en")).otherwise(F.lit("unknown"))
+
+
 @query(
     "tx03_language_id",
-    oracle="""
+    oracle=f"""
     SELECT doc_id, lang AS labeled_lang,
-           CASE
-               WHEN LEN(LIST_FILTER(STRING_SPLIT(LOWER(text), ' '),
-                        w -> w IN ('the', 'a', 'of', 'and', 'is'))) >= 2 THEN 'en'
-               ELSE 'unknown'
-           END AS predicted_lang
+           {_PREDICTED_LANG_SQL} AS predicted_lang
     FROM documents
     """,
 )
@@ -172,20 +184,18 @@ def tx03_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     heuristic keeps the plan identical and the output deterministic.
     """
     documents = load_table(spark, sf_dir, "documents")
-    words = F.split(F.lower(F.col("text")), " ")
-    en_markers = F.size(F.filter(words, lambda w: w.isin("the", "a", "of", "and", "is")))
     return documents.select(
         "doc_id",
         F.col("lang").alias("labeled_lang"),
-        F.when(en_markers >= 2, F.lit("en")).otherwise(F.lit("unknown")).alias("predicted_lang"),
+        _predicted_lang().alias("predicted_lang"),
     )
 
 
 @query(
     "tx04_fingerprint",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           MD5(ARRAY_TO_STRING(LIST_SORT(LIST_DISTINCT(STRING_SPLIT(LOWER(text), ' '))), ' '))
+           MD5(ARRAY_TO_STRING({WORD_SET_SQL}, ' '))
                AS fingerprint
     FROM documents
     """,
@@ -199,9 +209,7 @@ def tx04_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash (see operators/dedup.py).
     """
     documents = load_table(spark, sf_dir, "documents")
-    canonical = F.array_join(
-        F.array_sort(F.array_distinct(F.split(F.lower(F.col("text")), " "))), " "
-    )
+    canonical = F.array_join(word_set(), " ")
     return documents.select("doc_id", F.md5(canonical).alias("fingerprint"))
 
 
@@ -242,15 +250,28 @@ def tx05_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# tx06's and tx11's term relation: words of 3+ characters per document.
+_TERMS_CTE = f"""toks AS (
+        SELECT doc_id, word AS term
+        FROM {word_rows_sql("doc_id", min_len=3)}
+    )"""
+
+
+def _postings(documents: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``(toks, tf, dfreq)``: the ``(doc_id, term)`` rows of
+    ``_TERMS_CTE``, their per-document counts ``tf`` and the term
+    document frequencies ``df``, derived from ``tf`` so the corpus is
+    exploded once."""
+    toks = word_rows(documents, "doc_id", min_len=3, name="term")
+    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+    dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
+    return toks, tf, dfreq
+
+
 @query(
     "tx06_tfidf_topk",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, word AS term
-        FROM (SELECT doc_id, UNNEST(STRING_SPLIT(LOWER(text), ' ')) AS word
-              FROM documents)
-        WHERE LENGTH(word) >= 3
-    ), tf AS (
+    oracle=f"""
+    WITH {_TERMS_CTE}, tf AS (
         SELECT doc_id, term, COUNT(*) AS tf
         FROM toks GROUP BY doc_id, term
     ), dfreq AS (
@@ -279,11 +300,7 @@ def tx06_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     every term's df < N; a smoothed variant only shifts the constant.
     """
     documents = load_table(spark, sf_dir, "documents")
-    toks = documents.select(
-        "doc_id", F.explode(F.split(F.lower(F.col("text")), " ")).alias("term")
-    ).filter(F.length("term") >= 3)
-    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
+    _, tf, dfreq = _postings(documents)
     n_docs = documents.agg(F.count("*").alias("n_docs"))
     return (
         tf.join(dfreq, "term")
@@ -308,13 +325,8 @@ BM25_QUERY = ("vector", "stream", "merge")
 
 @query(
     "tx11_bm25_search",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, word AS term
-        FROM (SELECT doc_id, UNNEST(STRING_SPLIT(LOWER(text), ' ')) AS word
-              FROM documents)
-        WHERE LENGTH(word) >= 3
-    ), tf AS (
+    oracle=f"""
+    WITH {_TERMS_CTE}, tf AS (
         SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
         FROM toks GROUP BY doc_id, term
     ), dlen AS (
@@ -377,15 +389,11 @@ def tx11_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
       between engines (same discipline as er03's integer money math).
     """
     documents = load_table(spark, sf_dir, "documents")
-    toks = documents.select(
-        "doc_id", F.explode(F.split(F.lower(F.col("text")), " ")).alias("term")
-    ).filter(F.length("term") >= 3)
-    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+    toks, tf, dfreq = _postings(documents)
     dlen = toks.groupBy("doc_id").agg(F.count("*").alias("dlen"))
     stats = dlen.agg(
         F.count("*").alias("n_docs"), F.sum("dlen").alias("total_len")
     )
-    dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     q = list(BM25_QUERY)
     idf = F.log(
         F.lit(1.0)
@@ -440,11 +448,10 @@ def _bpe_chain_sql() -> str:
     corpus words to their final tokenization.
     """
     parts = [
-        """
+        f"""
     WITH words AS MATERIALIZED (
         SELECT word, CAST(COUNT(*) AS BIGINT) AS n
-        FROM (SELECT UNNEST(STRING_SPLIT(LOWER(text), ' ')) AS word
-              FROM documents)
+        FROM ({unnest_words_sql()})
         WHERE REGEXP_MATCHES(word, '^[a-z]+$')
         GROUP BY word
     ), t0 AS MATERIALIZED (
@@ -543,15 +550,13 @@ def _bpe_train(
     wrap markers (the registry pins ``^[a-z]+$``; the scale probe
     widens it to cover its shard-tagged fixture tokens).
     """
-    words = (
-        documents.select(
-            F.explode(F.split(F.lower(F.col("text")), " ")).alias("word")
-        )
+    counts = (
+        word_rows(documents)
         .filter(F.col("word").rlike(word_re))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    vocab = words.select(
+    vocab = counts.select(
         "word", F.regexp_replace(F.col("word"), "(.)", "<$1>").alias("s"), "n"
     ).localCheckpoint(eager=True)
 
@@ -594,8 +599,7 @@ def _bpe_train(
     + f"""
     , dw AS (
         SELECT doc_id, word
-        FROM (SELECT doc_id, UNNEST(STRING_SPLIT(LOWER(text), ' ')) AS word
-              FROM documents)
+        FROM ({unnest_words_sql("doc_id")})
         WHERE REGEXP_MATCHES(word, '^[a-z]+$')
     ), m AS (
         SELECT word,
@@ -649,9 +653,7 @@ def bpe_tokenize_counts(
         .alias("n_toks"),
         F.length("word").cast("long").alias("n_chars"),
     )
-    dw = documents.select(
-        "doc_id", F.explode(F.split(F.lower(F.col("text")), " ")).alias("word")
-    ).filter(F.col("word").rlike(word_re))
+    dw = word_rows(documents, "doc_id").filter(F.col("word").rlike(word_re))
     return (
         dw.join(F.broadcast(mapping), "word")
         .groupBy("doc_id")
@@ -673,12 +675,12 @@ COLLOC_TOP = 30
 @query(
     "tx16_collocations",
     oracle=f"""
-    WITH w AS (SELECT STRING_SPLIT(LOWER(text), ' ') AS l FROM documents),
+    WITH w AS (SELECT {words_sql()} AS l FROM documents),
     uni AS (SELECT UNNEST(l) AS tok FROM w),
     ucnt AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS c FROM uni GROUP BY tok),
     tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM uni),
     bg AS (
-        SELECT UNNEST([l[i] || ' ' || l[i + 1] FOR i IN GENERATE_SERIES(1, LEN(l) - 1)])
+        SELECT UNNEST({ngrams_sql("l", 2)})
             AS bigram
         FROM w
     ),
@@ -724,14 +726,11 @@ def tx16_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     extraction).
     """
     documents = spread_scan(load_table(spark, sf_dir, "documents"))
-    words = F.split(F.lower(F.col("text")), " ")
-    uni = documents.select(F.explode(words).alias("tok"))
+    uni = word_rows(documents, name="tok")
     ucnt = uni.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
     tot = uni.agg(F.count(F.lit(1)).alias("n"))
-    sz = F.size(words)
-    pairs = F.arrays_zip(F.slice(words, 1, sz - 1), F.slice(words, 2, sz - 1))
     bcnt = (
-        documents.select(F.explode(pairs).alias("s"))
+        documents.select(F.explode(shifted(words(), 2)).alias("s"))
         .select(F.col("s")["0"].alias("lw"), F.col("s")["1"].alias("rw"))
         .groupBy("lw", "rw")
         .agg(F.count(F.lit(1)).alias("c_xy"))
@@ -758,9 +757,9 @@ def tx16_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx17_repetition_signals",
-    oracle="""
+    oracle=f"""
     WITH words AS (
-        SELECT doc_id, STRING_SPLIT(LOWER(text), ' ') AS w FROM documents
+        SELECT doc_id, {words_sql()} AS w FROM documents
     ), uni AS (
         SELECT doc_id, u.tok, CAST(COUNT(*) AS BIGINT) AS c
         FROM words, UNNEST(w) AS u(tok)
@@ -772,10 +771,7 @@ def tx16_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM uni GROUP BY doc_id
     ), bi AS (
         SELECT doc_id, g.b, CAST(COUNT(*) AS BIGINT) AS c
-        FROM words,
-             UNNEST([ARRAY_TO_STRING(w[i:i+1], ' ')
-                     FOR i IN RANGE(1, LEN(w))]) AS g(b)
-        WHERE LEN(w) >= 2
+        FROM words, UNNEST({ngrams_sql("w", 2)}) AS g(b)
         GROUP BY doc_id, g.b
     ), bi_top AS (
         SELECT doc_id, MAX(c) AS top_bigram_n FROM bi GROUP BY doc_id
@@ -812,11 +808,9 @@ def tx17_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     compose.
     """
     documents = spread_scan(load_table(spark, sf_dir, "documents"))
-    words = documents.select(
-        "doc_id", F.split(F.lower(F.col("text")), " ").alias("w")
-    )
+    docs = documents.select("doc_id", words().alias("w"))
     uni = (
-        words.select("doc_id", F.explode("w").alias("tok"))
+        docs.select("doc_id", F.explode("w").alias("tok"))
         .groupBy("doc_id", "tok")
         .agg(F.count("*").alias("c"))
     )
@@ -825,16 +819,8 @@ def tx17_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("distinct_words"),
         F.max("c").alias("top_word_n"),
     )
-    sz = F.size("w")
-    bigrams = F.when(
-        sz >= 2,
-        F.transform(
-            F.slice("w", 1, F.greatest(sz - 1, F.lit(0))),
-            lambda x, i: F.concat_ws(" ", x, F.element_at("w", i + 2)),
-        ),
-    ).otherwise(F.array())
     bi = (
-        words.select("doc_id", F.explode(bigrams).alias("b"))
+        docs.select("doc_id", F.explode(ngrams(F.col("w"), 2)).alias("b"))
         .groupBy("doc_id", "b")
         .agg(F.count("*").alias("c"))
     )
@@ -860,10 +846,9 @@ def tx17_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx18_lexical_diversity",
-    oracle="""
+    oracle=f"""
     WITH words AS (
-        SELECT source, UNNEST(STRING_SPLIT(LOWER(text), ' ')) AS word
-        FROM documents
+        {unnest_words_sql("source")}
     ), vocab AS (
         SELECT source, word, CAST(COUNT(*) AS BIGINT) AS c
         FROM words WHERE LENGTH(word) >= 1
@@ -898,10 +883,11 @@ def tx18_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     profiles reconcile with the word-frequency table).
     """
     documents = load_table(spark, sf_dir, "documents")
-    words = documents.select(
-        "source", F.explode(F.split(F.lower(F.col("text")), " ")).alias("word")
-    ).filter(F.length("word") >= 1)
-    vocab = words.groupBy("source", "word").agg(F.count("*").alias("c"))
+    vocab = (
+        word_rows(documents, "source", min_len=1)
+        .groupBy("source", "word")
+        .agg(F.count("*").alias("c"))
+    )
     return (
         vocab.groupBy("source")
         .agg(
@@ -922,14 +908,10 @@ def tx18_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx19_langid_confusion",
-    oracle="""
+    oracle=f"""
     WITH pred AS (
         SELECT lang AS labeled_lang,
-               CASE
-                   WHEN LEN(LIST_FILTER(STRING_SPLIT(LOWER(text), ' '),
-                            w -> w IN ('the', 'a', 'of', 'and', 'is'))) >= 2 THEN 'en'
-                   ELSE 'unknown'
-               END AS predicted_lang
+               {_PREDICTED_LANG_SQL} AS predicted_lang
         FROM documents
     )
     SELECT labeled_lang, predicted_lang,
@@ -949,15 +931,9 @@ def tx19_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     |langs|² grid.
     """
     documents = load_table(spark, sf_dir, "documents")
-    words = F.split(F.lower(F.col("text")), " ")
-    en_markers = F.size(
-        F.filter(words, lambda w: w.isin("the", "a", "of", "and", "is"))
-    )
     pred = documents.select(
         F.col("lang").alias("labeled_lang"),
-        F.when(en_markers >= 2, F.lit("en"))
-        .otherwise(F.lit("unknown"))
-        .alias("predicted_lang"),
+        _predicted_lang().alias("predicted_lang"),
     )
     return (
         pred.groupBy("labeled_lang", "predicted_lang")
@@ -976,8 +952,7 @@ HEAPS_BUCKETS = 10  # fixed-width doc_id ranges — output size is scale-free
     oracle=f"""
     WITH mx AS (SELECT MAX(doc_id) AS mdoc FROM documents),
     words AS (
-        SELECT doc_id, UNNEST(STRING_SPLIT(LOWER(text), ' ')) AS word
-        FROM documents
+        {unnest_words_sql("doc_id")}
     ), w2 AS (
         SELECT doc_id, word FROM words WHERE LENGTH(word) >= 1
     ), tok AS (
@@ -1023,9 +998,7 @@ def tx20_heaps_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     documents = load_table(spark, sf_dir, "documents")
     mx = documents.agg(F.max("doc_id").alias("mdoc"))
-    words = documents.select(
-        "doc_id", F.explode(F.split(F.lower(F.col("text")), " ")).alias("word")
-    ).filter(F.length("word") >= 1)
+    words = word_rows(documents, "doc_id", min_len=1)
     bucket_of = lambda c: F.expr(f"({c} * {HEAPS_BUCKETS}) div (mdoc + 1)")
     tok = (
         words.crossJoin(F.broadcast(mx))
@@ -1063,11 +1036,10 @@ def tx20_heaps_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx21_source_vocab_jaccard",
-    oracle="""
+    oracle=f"""
     WITH vocab AS MATERIALIZED (
         SELECT DISTINCT source, word FROM (
-            SELECT source, UNNEST(STRING_SPLIT(LOWER(text), ' ')) AS word
-            FROM documents
+            {unnest_words_sql("source")}
         ) WHERE LENGTH(word) >= 1
     ), sizes AS (
         SELECT source, CAST(COUNT(*) AS BIGINT) AS n_types
@@ -1108,13 +1080,7 @@ def tx21_source_vocab_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer per-mille of exact BIGINT counts.
     """
     documents = load_table(spark, sf_dir, "documents")
-    vocab = (
-        documents.select(
-            "source", F.explode(F.split(F.lower(F.col("text")), " ")).alias("word")
-        )
-        .filter(F.length("word") >= 1)
-        .distinct()
-    )
+    vocab = word_rows(documents, "source", min_len=1).distinct()
     sizes = vocab.groupBy("source").agg(F.count("*").alias("n_types"))
     a, b = vocab.alias("a"), vocab.alias("b")
     inter = (
@@ -1157,9 +1123,7 @@ TX22_MAX_RANK = 256  # probe ranks 1, 2, 4, ..., 256 (needs top 512)
     oracle=f"""
     WITH c AS (
         SELECT word, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM (SELECT UNNEST(STRING_SPLIT(LOWER(text), ' ')) AS word
-              FROM documents)
-        WHERE LENGTH(word) >= 3
+        FROM {word_rows_sql(min_len=3)}
         GROUP BY word
     ), top AS (
         SELECT word, cnt,
@@ -1198,10 +1162,7 @@ def tx22_rank_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     documents = spread_scan(load_table(spark, sf_dir, "documents"))
     counts = (
-        documents.select(
-            F.explode(F.split(F.lower(F.col("text")), " ")).alias("word")
-        )
-        .filter(F.length("word") >= 3)
+        word_rows(documents, min_len=3)
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
     )

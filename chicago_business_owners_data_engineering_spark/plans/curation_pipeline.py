@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Pins, load_table
+from ..functions.text import repetition_fracs, token_counts
 from ..operators.dedup import _shingle_set, neardup_edges
 from ..operators.graph import components_large_small_star
 from ..operators.multimodal import SHARD_BUDGET_BYTES, shard_id_over
@@ -77,17 +78,13 @@ DEFAULT_WEIGHT = 90
 
 
 def gate_quality(documents: DataFrame) -> DataFrame:
-    """Stage 1: repetition + length gates as ONE scan's worth of flags."""
-    counts = (
-        documents.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
-        .filter(F.col("tok") != "")
-        .groupBy("doc_id", "tok")
-        .agg(F.count("*").alias("c"))
-    )
-    stats = counts.groupBy("doc_id").agg(
-        F.sum("c").alias("n_tokens"),
-        (1 - F.count("*") / F.sum("c")).alias("dup_token_frac"),
-        (F.max("c") / F.sum("c")).alias("top_token_frac"),
+    """Stage 1: repetition + length gates as ONE scan's worth of flags
+    (tx07's statistics)."""
+    n_tokens, dup, top = repetition_fracs()
+    stats = token_counts(documents).groupBy("doc_id").agg(
+        n_tokens.alias("n_tokens"),
+        dup.alias("dup_token_frac"),
+        top.alias("top_token_frac"),
     )
     return (
         documents.join(stats, "doc_id", "left")

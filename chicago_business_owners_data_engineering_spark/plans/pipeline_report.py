@@ -35,9 +35,14 @@ from ..operators.shared_oracles import (
     CURATION_MAX_DUP_TOKEN_FRAC as MAX_DUP_TOKEN_FRAC,
     CURATION_MAX_TOP_TOKEN_FRAC as MAX_TOP_TOKEN_FRAC,
     CURATION_MIN_TOKENS as MIN_TOKENS,
-    FT_BUCKETS,
+    DUP_FRAC_SQL,
     NEARDUP_COMPONENT_CTES,
     SHINGLE_SQL,
+    TOP_FRAC_SQL,
+    WS_TOKS_SQL,
+    ft_feature_ctes,
+    token_counts_sql,
+    words_sql,
 )
 from ..registry import query
 
@@ -49,14 +54,11 @@ _MD5_SPLIT = (
 
 _TP23_ORACLE = f"""
     WITH RECURSIVE tokc AS (
-        SELECT doc_id, tok, COUNT(*) AS c
-        FROM (SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS tok FROM documents)
-        WHERE tok <> ''
-        GROUP BY doc_id, tok
+        {token_counts_sql(f"({WS_TOKS_SQL})")}
     ), stats AS (
         SELECT doc_id, SUM(c) AS n_tokens,
-               1 - COUNT(*) * 1.0 / SUM(c) AS dup_frac,
-               MAX(c) * 1.0 / SUM(c) AS top_frac
+               {DUP_FRAC_SQL} AS dup_frac,
+               {TOP_FRAC_SQL} AS top_frac
         FROM tokc GROUP BY doc_id
     ), gated AS (
         SELECT d.doc_id, d.text, d.source, d.n_chars
@@ -64,18 +66,7 @@ _TP23_ORACLE = f"""
         WHERE s.n_tokens >= {MIN_TOKENS}
           AND s.dup_frac <= {MAX_DUP_TOKEN_FRAC}
           AND s.top_frac <= {MAX_TOP_TOKEN_FRAC}
-    ), wt AS (
-        SELECT range AS bucket,
-               CAST(CONCAT('0x', SUBSTRING(MD5(CAST(range AS VARCHAR)), 1, 8))
-                    AS BIGINT) % 101 AS w
-        FROM RANGE({FT_BUCKETS})
-    ), feat AS (
-        SELECT doc_id,
-               CAST(CONCAT('0x', SUBSTRING(MD5(tok), 1, 8)) AS BIGINT)
-                   % {FT_BUCKETS} AS bucket
-        FROM (SELECT doc_id, UNNEST(STRING_SPLIT(LOWER(text), ' ')) AS tok
-              FROM gated)
-    ), scorep AS (
+    ), {ft_feature_ctes("gated")}, scorep AS (
         SELECT f.doc_id, (1000000 * SUM(w.w)) // COUNT(*) AS score_micro
         FROM feat f JOIN wt w USING (bucket) GROUP BY f.doc_id
     ), modeled AS (
@@ -88,7 +79,7 @@ _TP23_ORACLE = f"""
     ), sh AS (
         SELECT doc_id,
                {SHINGLE_SQL} AS ws
-        FROM (SELECT doc_id, text, STRING_SPLIT(LOWER(text), ' ') AS t FROM exact)
+        FROM (SELECT doc_id, text, {words_sql()} AS t FROM exact)
     ), {NEARDUP_COMPONENT_CTES}, members AS (
         SELECT c.component, c.doc_id, e.n_chars FROM comp c JOIN exact e USING (doc_id)
     ), canonical AS (
@@ -174,13 +165,10 @@ def tp23_pipeline_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The card only needs per-stage COUNTS, and every stage output is
     # pinned — so tag each stage's rows with a literal and count one
     # UNION instead of left-joining six survivor id-sets back onto the
-    # raw spine (r10, guide §2.4: the six doc_id-keyed join exchanges
-    # bought nothing the stage relations didn't already know). Each
-    # union branch projects only the literal (a zero-column read of
-    # the cache / a count-only parquet scan for the raw branch); the
-    # aggregate is one map-side-partial count per stage. The 9-stage
-    # literal spine keeps an empty stage emitting 0 exactly like the
-    # old coalesce(sum, 0).
+    # raw spine. Each union branch projects only the literal (a
+    # zero-column read of the cache / a count-only parquet scan for the
+    # raw branch); the aggregate is one map-side-partial count per
+    # stage. The 9-stage literal spine makes an empty stage emit 0.
     from functools import reduce
 
     branches = [

@@ -1119,3 +1119,69 @@ def test_f27_time_to_convert_bounds(spark, sf_dir):
     assert 0 <= r["p25_min"] <= r["p50_min"] <= r["p75_min"]
     st03 = {x["stage"]: x["users"] for x in QUERIES["st03_funnel_conversion"](spark, sf_dir).collect()}
     assert r["n_converted"] >= st03["3_purchase_after_click"]
+
+
+TOKENIZER_CASES = ["", " ", "a  b", " Lead trail ", "MiXeD Case", "tab\there", None]
+
+
+def test_tokenizer_twins_agree(spark):
+    """``words()`` and the whitespace split give the same lists and
+    counts in Spark as ``words_sql``/``ws_tokens_sql`` in DuckDB on the
+    edge cases the ASCII, single-spaced, lowercase corpus never shows:
+    empty and blank text, repeated/leading/trailing spaces, mixed case,
+    a tab and NULL."""
+    import duckdb
+
+    from chicago_business_owners_data_engineering_spark.functions.text import (
+        words,
+        ws_tokens,
+    )
+    from chicago_business_owners_data_engineering_spark.operators.shared_oracles import (
+        words_sql,
+        ws_tokens_sql,
+    )
+
+    rows = list(enumerate(TOKENIZER_CASES))
+    df = spark.createDataFrame(rows, "id int, text string")
+    got = {
+        r["id"]: (r["w"], r["t"], r["n"])
+        for r in df.select(
+            "id",
+            words().alias("w"),
+            ws_tokens().alias("t"),
+            F.size(ws_tokens()).alias("n"),
+        ).collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE docs (id INTEGER, text VARCHAR)")
+    con.executemany("INSERT INTO docs VALUES (?, ?)", rows)
+    want = {
+        i: (w, t, n)
+        for i, w, t, n in con.execute(
+            f"SELECT id, {words_sql()}, {ws_tokens_sql()}, LEN({ws_tokens_sql()}) FROM docs"
+        ).fetchall()
+    }
+    assert got == want
+    assert got[3][0] == ["", "lead", "trail", ""]
+
+
+def test_hybrid_search_keyword_leg_ignores_case(spark, tmp_path):
+    """sim08's keyword overlap uses the family tokenizer: "Spark Join"
+    matches the lowercase terms spark and join, so 2 of its 4 terms."""
+    from chicago_business_owners_data_engineering_spark.operators.similarity import (
+        HYBRID_TERMS,
+    )
+
+    spark.createDataFrame(
+        [(0, "Spark Join tutorial"), (1, "nothing relevant here")],
+        "doc_id long, text string",
+    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "vec_id long, embedding array<float>"
+    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
+    lex = {
+        r.doc_id: r.lex_score
+        for r in QUERIES["sim08_hybrid_search"](spark, str(tmp_path)).collect()
+    }
+    assert len(HYBRID_TERMS) == 4
+    assert lex == {0: 0.5, 1: 0.0}

@@ -290,3 +290,48 @@ def test_dedup_family_written_once():
             for m in re.finditer(re.escape(needle), text):
                 offenders.append(f"{rel}:{text.count(chr(10), 0, m.start()) + 1} {needle}")
     assert not offenders, offenders
+
+
+def _text_family_offenders(pkg) -> list[str]:
+    """Sites under ``pkg`` that spell out a text-family step themselves
+    instead of composing ``functions/text.py`` or ``shared_oracles``."""
+    import ast
+
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = str(path.relative_to(pkg))
+        text = path.read_text()
+        if rel != "functions/text.py":
+            for node in ast.walk(ast.parse(text)):
+                if (
+                    isinstance(node, ast.Call)
+                    and ast.unparse(node.func) == "F.split"
+                    and node.args
+                    and any(
+                        (isinstance(n, ast.Constant) and re.search(r"(^|\.)text$", str(n.value)))
+                        or (isinstance(n, ast.Name) and "text" in n.id)
+                        for n in ast.walk(node.args[0])
+                    )
+                ):
+                    offenders.append(f"{rel}:{node.lineno} F.split on text")
+            needles = ["split(lower("]
+        else:
+            needles = []
+        if rel != "operators/shared_oracles.py":
+            needles += ["STRING_SPLIT(LOWER(", "STRING_SPLIT(text, ' ')", "SUBSTRING(MD5(tok)"]
+        for needle in needles:
+            for m in re.finditer(re.escape(needle), text):
+                offenders.append(f"{rel}:{text.count(chr(10), 0, m.start()) + 1} {needle}")
+    return offenders
+
+
+def test_text_family_written_once():
+    """Each step of the text family has one definition: only
+    ``functions/text.py`` splits a ``text`` column (``words``,
+    ``ws_tokens``, and ``WORDS_EXPR`` in Spark SQL strings), and only
+    ``shared_oracles`` spells out their DuckDB twins (``words_sql``,
+    ``ws_tokens_sql``) or the hashed-token bucket (``md5_bucket_sql``)."""
+    from pathlib import Path
+
+    offenders = _text_family_offenders(Path(registry.__file__).resolve().parent)
+    assert not offenders, offenders
