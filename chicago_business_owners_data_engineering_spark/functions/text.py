@@ -25,14 +25,14 @@ def words(text: Column | str = "text") -> Column:
     return F.split(F.lower(text), " ")
 
 
-def word_set(text: Column | str = "text") -> Column:
-    """The sorted distinct :func:`words` (``WORD_SET_SQL``)."""
-    return F.array_sort(F.array_distinct(words(text)))
+def word_set() -> Column:
+    """The sorted distinct :func:`words` of ``text`` (``WORD_SET_SQL``)."""
+    return F.array_sort(F.array_distinct(words()))
 
 
-def ws_tokens(text: Column | str = "text") -> Column:
-    """The case-preserving single-space split (``ws_tokens_sql``)."""
-    return F.split(text, " ")
+def ws_tokens() -> Column:
+    """The case-preserving single-space split of ``text`` (``WS_TOKENS_SQL``)."""
+    return F.split("text", " ")
 
 
 def shifted(tokens: Column, n: int) -> Column:
@@ -69,18 +69,17 @@ def token_rows(docs: DataFrame) -> DataFrame:
     )
 
 
-def token_counts(docs: DataFrame) -> DataFrame:
-    """``(doc_id, tok, c)``: :func:`token_rows` counted per document
-    (``token_counts_sql``)."""
-    return token_rows(docs).groupBy("doc_id", "tok").agg(F.count("*").alias("c"))
-
-
-def repetition_fracs() -> tuple[Column, Column, Column]:
-    """The Gopher repetition aggregates over one document's
-    :func:`token_counts`: token count, duplicate-token fraction and
-    top-token fraction (``DUP_FRAC_SQL``, ``TOP_FRAC_SQL``)."""
+def repetition_stats(docs: DataFrame) -> DataFrame:
+    """``(doc_id, n_tokens, dup_token_frac, top_token_frac)``: the Gopher
+    repetition statistics of each document's :func:`token_rows`, counted
+    per ``(doc_id, tok)`` and then per document (``REPETITION_STATS_SQL``)."""
+    counts = token_rows(docs).groupBy("doc_id", "tok").agg(F.count("*").alias("c"))
     n = F.sum("c")
-    return n, 1 - F.count("*") / n, F.max("c") / n
+    return counts.groupBy("doc_id").agg(
+        n.alias("n_tokens"),
+        (1 - F.count("*") / n).alias("dup_token_frac"),
+        (F.max("c") / n).alias("top_token_frac"),
+    )
 
 
 def md5_bucket(key: Column, n_buckets: int = 100) -> Column:

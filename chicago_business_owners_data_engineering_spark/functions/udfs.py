@@ -32,7 +32,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import udtf
 
 from ..catalog import load_table
-from ..operators.shared_oracles import ws_tokens_sql
+from ..operators.shared_oracles import WS_TOKENS_SQL
 from ..registry import query
 
 
@@ -167,7 +167,7 @@ class LongTokensUDTF:
     "u05_python_udtf",
     oracle=f"""
     WITH lists AS (
-        SELECT doc_id, {ws_tokens_sql()} AS ts FROM documents
+        SELECT doc_id, {WS_TOKENS_SQL} AS ts FROM documents
     ), toks AS (
         SELECT doc_id,
                UNNEST([{{'pos': i, 'tok': ts[i]}} FOR i IN RANGE(1, LEN(ts) + 1)],

@@ -23,28 +23,22 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.text import repetition_fracs, shifted, token_counts, token_rows, word_rows, words
+from ..functions.text import repetition_stats, shifted, token_rows, word_rows, words
 from ..registry import query
-from .shared_oracles import DUP_FRAC_SQL, TOP_FRAC_SQL, WS_TOKS_SQL, ngrams_sql, token_counts_sql
+from .shared_oracles import REPETITION_STATS_SQL, WS_TOKS_SQL, ngrams_sql
 from .shared_oracles import unnest_words_sql, words_sql
 
 
 @query(
     "tx07_repetition_stats",
     oracle=f"""
-    WITH toks AS (
-        {WS_TOKS_SQL}
-    ), counts AS (
-        {token_counts_sql("toks")}
-    )
+    -- CAST: DuckDB SUM(BIGINT) yields HUGEINT -> pandas float64,
+    -- but Spark emits int64; the driver's hash is dtype-sensitive.
     SELECT doc_id,
-           -- CAST: DuckDB SUM(BIGINT) yields HUGEINT -> pandas float64,
-           -- but Spark emits int64; the driver's hash is dtype-sensitive.
-           CAST(SUM(c) AS BIGINT) AS n_tokens,
-           ROUND({DUP_FRAC_SQL}, 6) AS dup_token_frac,
-           ROUND({TOP_FRAC_SQL}, 6) AS top_token_frac
-    FROM counts
-    GROUP BY doc_id
+           CAST(n_tokens AS BIGINT) AS n_tokens,
+           ROUND(dup_token_frac, 6) AS dup_token_frac,
+           ROUND(top_token_frac, 6) AS top_token_frac
+    FROM ({REPETITION_STATS_SQL})
     """,
 )
 def tx07_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -60,11 +54,11 @@ def tx07_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic over the second-level counts.
     """
     documents = load_table(spark, sf_dir, "documents")
-    n_tokens, dup, top = repetition_fracs()
-    return token_counts(documents).groupBy("doc_id").agg(
-        n_tokens.alias("n_tokens"),
-        F.round(dup, 6).alias("dup_token_frac"),
-        F.round(top, 6).alias("top_token_frac"),
+    return repetition_stats(documents).select(
+        "doc_id",
+        "n_tokens",
+        F.round("dup_token_frac", 6).alias("dup_token_frac"),
+        F.round("top_token_frac", 6).alias("top_token_frac"),
     )
 
 

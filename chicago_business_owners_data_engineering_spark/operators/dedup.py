@@ -64,6 +64,7 @@ from .shared_oracles import (
     WORD_SET_SQL,
     _SHINGLE_CTES,
     jaccard_pairs_sql,
+    ngrams_sql,
     simhash_band_sql,
     words_sql,
 )
@@ -561,16 +562,13 @@ SPAN_W = 6
 
 
 def _token_spans(text: Column, w: int = SPAN_W) -> Column:
-    """All ``w``-word spans of a document, in position order.
-
-    Built by zipping ``w`` shifted slices of the word array (the
-    _shingle_set recipe — vectorized, ~10× faster than
-    transform-over-indices with element_at). Unlike shingles these are
-    NOT deduplicated: dd09 counts positions, so a span repeated inside
-    one document keeps its multiplicity. Docs under ``w`` words emit no
+    """All ``w``-word spans of a document, in position order: the word
+    ``w``-grams (functions.text.ngrams). Unlike shingles these are NOT
+    deduplicated: dd09 counts positions, so a span repeated inside one
+    document keeps its multiplicity. Docs under ``w`` words emit no
     spans.
     """
-    return _token_spans_from_words(words(text), w)
+    return ngrams(words(text), w)
 
 
 @query(
@@ -579,10 +577,7 @@ def _token_spans(text: Column, w: int = SPAN_W) -> Column:
     WITH toks AS (
         SELECT doc_id, {words_sql()} AS t FROM documents
     ), spans AS (
-        SELECT doc_id,
-               UNNEST([ARRAY_TO_STRING(t[i:i+{SPAN_W - 1}], ' ')
-                       FOR i IN RANGE(1, LEN(t) - {SPAN_W - 2})]) AS span
-        FROM toks WHERE LEN(t) >= {SPAN_W}
+        SELECT doc_id, UNNEST({ngrams_sql("t", SPAN_W)}) AS span FROM toks
     ), dup AS (
         SELECT span FROM spans GROUP BY span
         HAVING COUNT(DISTINCT doc_id) >= 2
@@ -660,12 +655,9 @@ def dd09_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH toks AS (
         SELECT doc_id, {words_sql()} AS t FROM documents
     ), occ AS (
-        SELECT doc_id, t,
-               UNNEST(RANGE(1, LEN(t) - {SPAN_W - 2})) AS pos
-        FROM toks WHERE LEN(t) >= {SPAN_W}
+        SELECT doc_id, {ngrams_sql("t", SPAN_W)} AS sp FROM toks
     ), spans AS (
-        SELECT doc_id, pos,
-               ARRAY_TO_STRING(t[pos:pos + {SPAN_W - 1}], ' ') AS span
+        SELECT doc_id, GENERATE_SUBSCRIPTS(sp, 1) AS pos, UNNEST(sp) AS span
         FROM occ
     ), flagged AS (
         SELECT doc_id, pos,
@@ -739,7 +731,7 @@ def span_dedup_apply(
     )
     spans = toks.select(
         "doc_id",
-        F.posexplode(_token_spans_from_words(F.col("t"), w)).alias("pos0", "span"),
+        F.posexplode(ngrams(F.col("t"), w)).alias("pos0", "span"),
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "span")
     wspan = Window.partitionBy("span")
     flagged = spans.select(
@@ -770,21 +762,6 @@ def span_dedup_apply(
             ).alias("dedup_text"),
         )
         .withColumnRenamed("doc_id", id_col)
-    )
-
-
-def _token_spans_from_words(tokens: Column, w: int = SPAN_W) -> Column:
-    """_token_spans over an already-split word array (shared split)."""
-    n_spans = F.size(tokens) - F.lit(w - 1)
-    acc = F.slice(tokens, 1, n_spans)
-    for k in range(1, w):
-        acc = F.zip_with(
-            acc,
-            F.slice(tokens, k + 1, n_spans),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        )
-    return F.when(F.size(tokens) >= w, acc).otherwise(
-        F.array().cast("array<string>")
     )
 
 

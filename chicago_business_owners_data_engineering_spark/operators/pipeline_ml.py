@@ -24,7 +24,7 @@ from ..functions.text import WORDS_EXPR, hashed_tokens, ngrams, words, ws_tokens
 from ..functions.text import md5_bucket as _md5_bucket
 from ..registry import query
 from .shared_oracles import TRIGRAMS_SQL, hashed_tokens_sql, md5_bucket_sql, ngrams_sql
-from .shared_oracles import words_sql, ws_tokens_sql
+from .shared_oracles import WS_TOKENS_SQL, words_sql
 
 CHUNK_SIZE = 200
 CHUNK_STRIDE = 150
@@ -402,7 +402,7 @@ PACK_BUDGET = 256  # tokens per packed context window
 # tp05's bin assignment, which tp22 audits: per-doc token counts ``d``
 # and the running-count bin of each doc.
 _PACK_D_CTE = f"""d AS (
-        SELECT doc_id, lang, LEN({ws_tokens_sql()}) AS n_tokens
+        SELECT doc_id, lang, LEN({WS_TOKENS_SQL}) AS n_tokens
         FROM documents
     )"""
 _PACK_SQL = f"""SELECT doc_id, lang, n_tokens,
@@ -445,9 +445,9 @@ def tp05_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH scored AS (
         SELECT lang, source, n_chars,
-               LEN({ws_tokens_sql()}) AS n_words,
+               LEN({WS_TOKENS_SQL}) AS n_words,
                (n_chars BETWEEN 100 AND 500
-                AND LEN({ws_tokens_sql()}) >= 20
+                AND LEN({WS_TOKENS_SQL}) >= 20
                 AND LENGTH(REGEXP_REPLACE(text, '[a-zA-Z0-9 ]', '', 'g'))
                     <= 0.1 * n_chars) AS keep
         FROM documents
@@ -607,8 +607,8 @@ WEIGHTED_PER_SOURCE = 25  # weighted sample size per source stratum
     oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               LEN({ws_tokens_sql()}) AS n_tokens,
-               CAST(FLOOR(LEN({ws_tokens_sql()}) * 1.0 / {TOKENS_PER_BUCKET}) AS BIGINT) AS bucket
+               LEN({WS_TOKENS_SQL}) AS n_tokens,
+               CAST(FLOOR(LEN({WS_TOKENS_SQL}) * 1.0 / {TOKENS_PER_BUCKET}) AS BIGINT) AS bucket
         FROM documents
     )
     SELECT bucket,

@@ -30,9 +30,8 @@ def words_sql(text: str = "text") -> str:
     return f"STRING_SPLIT(LOWER({text}), ' ')"
 
 
-def ws_tokens_sql(text: str = "text") -> str:
-    """The case-preserving single-space split (functions.text.ws_tokens)."""
-    return f"STRING_SPLIT({text}, ' ')"
+# The case-preserving single-space split of ``text`` (functions.text.ws_tokens).
+WS_TOKENS_SQL = "STRING_SPLIT(text, ' ')"
 
 
 def ngrams_sql(l: str, n: int) -> str:
@@ -56,18 +55,20 @@ def word_rows_sql(*keys: str, min_len: int) -> str:
     return f"({unnest_words_sql(*keys)}) WHERE LENGTH(word) >= {min_len}"
 
 
-# (doc_id, tok) per whitespace token: tx07, the surprisal family, tp23.
-WS_TOKS_SQL = f"SELECT doc_id, UNNEST({ws_tokens_sql()}) AS tok FROM documents"
+# (doc_id, tok) per whitespace token: the surprisal family and repetition stats.
+WS_TOKS_SQL = f"SELECT doc_id, UNNEST({WS_TOKENS_SQL}) AS tok FROM documents"
 
-
-def token_counts_sql(toks: str) -> str:
-    """Non-empty ``(doc_id, tok)`` rows counted (functions.text.token_counts)."""
-    return f"SELECT doc_id, tok, COUNT(*) AS c FROM {toks} WHERE tok <> '' GROUP BY doc_id, tok"
-
-
-# Gopher repetition fractions over token_counts_sql (functions.text.repetition_fracs).
-DUP_FRAC_SQL = "1 - COUNT(*) * 1.0 / SUM(c)"
-TOP_FRAC_SQL = "MAX(c) * 1.0 / SUM(c)"
+# (doc_id, n_tokens, dup_token_frac, top_token_frac): the Gopher repetition
+# statistics of each document's non-empty tokens (functions.text.repetition_stats).
+REPETITION_STATS_SQL = f"""
+    SELECT doc_id, SUM(c) AS n_tokens,
+           1 - COUNT(*) * 1.0 / SUM(c) AS dup_token_frac,
+           MAX(c) * 1.0 / SUM(c) AS top_token_frac
+    FROM (
+        SELECT doc_id, tok, COUNT(*) AS c FROM ({WS_TOKS_SQL})
+        WHERE tok <> '' GROUP BY doc_id, tok
+    )
+    GROUP BY doc_id"""
 
 
 def md5_bucket_sql(key: str, n_buckets: int) -> str:

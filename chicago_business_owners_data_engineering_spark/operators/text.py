@@ -12,7 +12,8 @@ The family's shared steps live in ``functions/text.py``, each with its
 DuckDB twin in ``shared_oracles``: the one tokenizer ``words``
 (lowercase, split on one space) and the case-preserving ``ws_tokens``,
 the word set, word n-grams, the exploded ``(keys, word)`` relation
-``word_rows``, per-document token counts and hashed-word features.
+``word_rows``, per-document repetition statistics and hashed-word
+features.
 Here tx06/tx11 share one postings build and tx03/tx19 one marker rule.
 """
 
@@ -26,7 +27,7 @@ from ..catalog import load_table, spread_scan
 from ..functions.text import ngrams, shifted, word_rows, word_set, words, ws_tokens
 from ..registry import query
 from .shared_oracles import WORD_SET_SQL, ngrams_sql, unnest_words_sql, word_rows_sql
-from .shared_oracles import words_sql, ws_tokens_sql
+from .shared_oracles import WS_TOKENS_SQL, words_sql
 
 # Tiny stopword list used by the quality scorer; kept identical in the
 # DuckDB oracle strings below.
@@ -136,7 +137,7 @@ def tx01_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tx02_token_count",
     oracle=rf"""
     SELECT doc_id,
-           LEN({ws_tokens_sql()}) AS ws_tokens,
+           LEN({WS_TOKENS_SQL}) AS ws_tokens,
            LEN(REGEXP_EXTRACT_ALL(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]')) AS bpe_ish_tokens
     FROM documents
     """,

@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Pins, load_table
-from ..functions.text import repetition_fracs, token_counts
+from ..functions.text import repetition_stats
 from ..operators.dedup import _shingle_set, neardup_edges
 from ..operators.graph import components_large_small_star
 from ..operators.multimodal import SHARD_BUDGET_BYTES, shard_id_over
@@ -80,14 +80,8 @@ DEFAULT_WEIGHT = 90
 def gate_quality(documents: DataFrame) -> DataFrame:
     """Stage 1: repetition + length gates as ONE scan's worth of flags
     (tx07's statistics)."""
-    n_tokens, dup, top = repetition_fracs()
-    stats = token_counts(documents).groupBy("doc_id").agg(
-        n_tokens.alias("n_tokens"),
-        dup.alias("dup_token_frac"),
-        top.alias("top_token_frac"),
-    )
     return (
-        documents.join(stats, "doc_id", "left")
+        documents.join(repetition_stats(documents), "doc_id", "left")
         .filter(
             (F.col("n_tokens") >= MIN_TOKENS)
             & (F.col("dup_token_frac") <= MAX_DUP_TOKEN_FRAC)

@@ -35,13 +35,10 @@ from ..operators.shared_oracles import (
     CURATION_MAX_DUP_TOKEN_FRAC as MAX_DUP_TOKEN_FRAC,
     CURATION_MAX_TOP_TOKEN_FRAC as MAX_TOP_TOKEN_FRAC,
     CURATION_MIN_TOKENS as MIN_TOKENS,
-    DUP_FRAC_SQL,
     NEARDUP_COMPONENT_CTES,
+    REPETITION_STATS_SQL,
     SHINGLE_SQL,
-    TOP_FRAC_SQL,
-    WS_TOKS_SQL,
     ft_feature_ctes,
-    token_counts_sql,
     words_sql,
 )
 from ..registry import query
@@ -53,19 +50,13 @@ _MD5_SPLIT = (
 )
 
 _TP23_ORACLE = f"""
-    WITH RECURSIVE tokc AS (
-        {token_counts_sql(f"({WS_TOKS_SQL})")}
-    ), stats AS (
-        SELECT doc_id, SUM(c) AS n_tokens,
-               {DUP_FRAC_SQL} AS dup_frac,
-               {TOP_FRAC_SQL} AS top_frac
-        FROM tokc GROUP BY doc_id
+    WITH RECURSIVE stats AS ({REPETITION_STATS_SQL}
     ), gated AS (
         SELECT d.doc_id, d.text, d.source, d.n_chars
         FROM documents d JOIN stats s USING (doc_id)
         WHERE s.n_tokens >= {MIN_TOKENS}
-          AND s.dup_frac <= {MAX_DUP_TOKEN_FRAC}
-          AND s.top_frac <= {MAX_TOP_TOKEN_FRAC}
+          AND s.dup_token_frac <= {MAX_DUP_TOKEN_FRAC}
+          AND s.top_token_frac <= {MAX_TOP_TOKEN_FRAC}
     ), {ft_feature_ctes("gated")}, scorep AS (
         SELECT f.doc_id, (1000000 * SUM(w.w)) // COUNT(*) AS score_micro
         FROM feat f JOIN wt w USING (bucket) GROUP BY f.doc_id

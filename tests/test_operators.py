@@ -1126,7 +1126,7 @@ TOKENIZER_CASES = ["", " ", "a  b", " Lead trail ", "MiXeD Case", "tab\there", N
 
 def test_tokenizer_twins_agree(spark):
     """``words()`` and the whitespace split give the same lists and
-    counts in Spark as ``words_sql``/``ws_tokens_sql`` in DuckDB on the
+    counts in Spark as ``words_sql``/``WS_TOKENS_SQL`` in DuckDB on the
     edge cases the ASCII, single-spaced, lowercase corpus never shows:
     empty and blank text, repeated/leading/trailing spaces, mixed case,
     a tab and NULL."""
@@ -1137,8 +1137,8 @@ def test_tokenizer_twins_agree(spark):
         ws_tokens,
     )
     from chicago_business_owners_data_engineering_spark.operators.shared_oracles import (
+        WS_TOKENS_SQL,
         words_sql,
-        ws_tokens_sql,
     )
 
     rows = list(enumerate(TOKENIZER_CASES))
@@ -1158,7 +1158,7 @@ def test_tokenizer_twins_agree(spark):
     want = {
         i: (w, t, n)
         for i, w, t, n in con.execute(
-            f"SELECT id, {words_sql()}, {ws_tokens_sql()}, LEN({ws_tokens_sql()}) FROM docs"
+            f"SELECT id, {words_sql()}, {WS_TOKENS_SQL}, LEN({WS_TOKENS_SQL}) FROM docs"
         ).fetchall()
     }
     assert got == want

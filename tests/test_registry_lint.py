@@ -38,7 +38,6 @@ ROUND_SUM_WAIVERS: dict[str, str] = {
     "tp06_curation_report": "sums CASE 1/0 integers; one ratio division",
     "tp07_contamination_check": "sums CASE 1/0 integers; one ratio division",
     "ts08_event_transitions": "window-sums BIGINT transition counts; one division",
-    "tx07_repetition_stats": "sums BIGINT token counts; single ratio divisions",
     # scale-bounded float sums: the term domain is the CATEGORY space
     # (enum-sized, data-volume-independent) or a constant bin spine, so
     # term count and magnitude never grow with corpus size
@@ -330,7 +329,7 @@ def test_text_family_written_once():
     ``functions/text.py`` splits a ``text`` column (``words``,
     ``ws_tokens``, and ``WORDS_EXPR`` in Spark SQL strings), and only
     ``shared_oracles`` spells out their DuckDB twins (``words_sql``,
-    ``ws_tokens_sql``) or the hashed-token bucket (``md5_bucket_sql``)."""
+    ``WS_TOKENS_SQL``) or the hashed-token bucket (``md5_bucket_sql``)."""
     from pathlib import Path
 
     offenders = _text_family_offenders(Path(registry.__file__).resolve().parent)
