@@ -13,8 +13,8 @@ Layout
 - ``session``    — SparkSession factory tuned for the target scale.
 - ``catalog``    — parquet table loading, scan spreading and pinned
                    intermediates (``Pins``/``generation``).
-- ``functions``  — column-function library (cleaning, text) and the
-                   Python-UDF demos (udfs).
+- ``functions``  — column-function library (cleaning, text, sampling)
+                   and the Python-UDF demos (udfs).
 - ``operators``  — the relational operator inventory (SURVEY.md §2) as
                    composable DataFrame transformations.
 - ``plans``      — multi-stage jobs (warehouse ETL, quality audit).

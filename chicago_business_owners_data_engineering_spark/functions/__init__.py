@@ -1,1 +1,1 @@
-"""Column-function library: cleaning, text and the Python-UDF demos."""
+"""Column-function library: cleaning, text, sampling and the Python-UDF demos."""

@@ -1,14 +1,17 @@
 """Text-family column and relation builders: the one tokenizer and the
 steps every text query composes from it. Each names its DuckDB twin in
-``operators/shared_oracles``. Registry-free and importing only pyspark,
-like ``cleaning``, so operator and plan modules import it at module top
-without closing the import cycle a UDF-unpickling Python worker walks.
+``operators/shared_oracles``. Registry-free and importing only pyspark
+and ``sampling``, like ``cleaning``, so operator and plan modules import
+it at module top without closing the import cycle a UDF-unpickling
+Python worker walks.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .sampling import md5_bucket
 
 # words("text") as Spark SQL text, for queries built from SQL strings.
 WORDS_EXPR = "split(lower(text), ' ')"
@@ -79,15 +82,6 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
         n.alias("n_tokens"),
         (1 - F.count("*") / n).alias("dup_token_frac"),
         (F.max("c") / n).alias("top_token_frac"),
-    )
-
-
-def md5_bucket(key: Column, n_buckets: int = 100) -> Column:
-    """Deterministic [0, n_buckets) bucket from the first 8 hex chars of
-    a key's md5 (``md5_bucket_sql``): stable across runs, engines,
-    partitionings and data order, unlike ``rand(seed)``."""
-    return (
-        F.conv(F.substring(F.md5(key.cast("string")), 1, 8), 16, 10).cast("long") % n_buckets
     )
 
 

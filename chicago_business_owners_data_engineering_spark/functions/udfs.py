@@ -32,7 +32,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import udtf
 
 from ..catalog import load_table
-from ..operators.shared_oracles import WS_TOKENS_SQL
+from ..operators.shared_oracles import WS_TOKENS_SQL, md5_bucket_sql
 from ..registry import query
 
 
@@ -204,9 +204,8 @@ def u05_python_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "u06_arrow_udf_bucket",
-    oracle="""
-    SELECT CAST(CONCAT('0x', SUBSTRING(MD5(CAST(doc_id AS VARCHAR)), 1, 8))
-                AS BIGINT) % 100 AS bucket,
+    oracle=f"""
+    SELECT {md5_bucket_sql("CAST(doc_id AS VARCHAR)", 100)} AS bucket,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(n_chars) AS BIGINT) AS total_chars
     FROM documents

@@ -33,7 +33,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import generation, load_table, spread_scan
-from ..functions.text import hashed_tokens, md5_bucket
+from ..functions.sampling import md5_bucket
+from ..functions.text import hashed_tokens
 from ..registry import query
 from .shared_oracles import (
     EMB_DIM as DIM,

@@ -23,10 +23,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.sampling import md5_bucket, mixture_weight
 from ..functions.text import repetition_stats, shifted, token_rows, word_rows, words
+from ..functions.text import ws_tokens
 from ..registry import query
-from .shared_oracles import REPETITION_STATS_SQL, WS_TOKS_SQL, ngrams_sql
-from .shared_oracles import unnest_words_sql, words_sql
+from .shared_oracles import MIXTURE_WEIGHT_SQL, REPETITION_STATS_SQL, WS_TOKENS_SQL
+from .shared_oracles import WS_TOKS_SQL, md5_bucket_sql, ngrams_sql, unnest_words_sql
+from .shared_oracles import words_sql
 
 
 @query(
@@ -64,14 +67,10 @@ def tx07_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tp08_source_mixture_sample",
-    oracle="""
+    oracle=f"""
     SELECT doc_id, lang, source
     FROM documents
-    WHERE CAST(CONCAT('0x', SUBSTRING(MD5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-          % 100 <
-          CASE WHEN source IN ('src0', 'src1', 'src2') THEN 25
-               WHEN source IN ('src3', 'src4', 'src5') THEN 50
-               ELSE 90 END
+    WHERE {md5_bucket_sql("CAST(doc_id AS VARCHAR)", 100)} < {MIXTURE_WEIGHT_SQL}
     """,
 )
 def tp08_source_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -86,27 +85,17 @@ def tp08_source_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the weight table arrives as a CASE expression (at real scale, a
     broadcast-joined config dim).
     """
-    # Imported lazily: registry's import sweep reaches this module before
-    # pipeline_ml, so a top-level import would be circular.
-    from .pipeline_ml import _md5_bucket
-
     documents = load_table(spark, sf_dir, "documents")
-    weight = (
-        F.when(F.col("source").isin("src0", "src1", "src2"), 25)
-        .when(F.col("source").isin("src3", "src4", "src5"), 50)
-        .otherwise(90)
-    )
-    return documents.filter(_md5_bucket(F.col("doc_id")) < weight).select(
+    return documents.filter(md5_bucket(F.col("doc_id")) < mixture_weight()).select(
         "doc_id", "lang", "source"
     )
 
 
 @query(
     "tp09_token_budget",
-    oracle="""
+    oracle=f"""
     WITH per_doc AS (
-        SELECT lang, source,
-               LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) + 1 AS n_tokens
+        SELECT lang, source, LEN({WS_TOKENS_SQL}) AS n_tokens
         FROM documents
     ), per_group AS (
         SELECT lang, source, COUNT(*) AS docs,
@@ -127,19 +116,16 @@ def tp09_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     The planning query behind tp08's weights: how many tokens each
     source contributes, its share of the corpus, and the cumulative
     share in descending-size order ("the top k sources cover x% of
-    tokens"). Token count is whitespace arithmetic (length minus
-    blanks), so the per-doc stage is shuffle-free; the group stage
+    tokens"). Token count is the size of the single-space split
+    (``ws_tokens``), so the per-doc stage is shuffle-free; the group stage
     aggregates to source cardinality (tiny), and the grand-total /
     cumulative windows run over that aggregate — single-partition
     windows over dozens of rows, never over raw documents (the PERF.md
     post-aggregation-window rule).
     """
     documents = load_table(spark, sf_dir, "documents")
-    n_tokens = (
-        F.length("text") - F.length(F.regexp_replace("text", " ", "")) + 1
-    )
     per_group = (
-        documents.select("lang", "source", n_tokens.alias("n_tokens"))
+        documents.select("lang", "source", F.size(ws_tokens()).alias("n_tokens"))
         .groupBy("lang", "source")
         .agg(F.count("*").alias("docs"), F.sum("n_tokens").alias("tokens"))
     )

@@ -18,7 +18,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.sampling import md5_bucket
 from ..registry import query
+from .shared_oracles import md5_bucket_sql
+
+# ab01–ab03's variant of a user: the parity of its md5 key hash.
+_VARIANT_SQL = md5_bucket_sql("CAST(user_id AS VARCHAR)", 2)
 
 ROLLING_DAYS = 30
 _EPOCH_DAY0 = "2024-01-01"
@@ -533,8 +538,7 @@ _AB_Z_EXPR = (
     oracle=f"""
     WITH per_user AS (
         SELECT user_id,
-               CAST(CONCAT('0x', SUBSTRING(MD5(CAST(user_id AS VARCHAR)), 1, 8))
-                    AS BIGINT) % 2 AS v,
+               {_VARIANT_SQL} AS v,
                MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
         FROM events
         GROUP BY user_id
@@ -582,15 +586,7 @@ def ab01_experiment_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(
             F.when(F.col("event_type") == "purchase", 1).otherwise(0)
         ).alias("conv")
-    ).select(
-        (
-            F.conv(
-                F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10
-            ).cast("long")
-            % 2
-        ).alias("v"),
-        "conv",
-    )
+    ).select(md5_bucket(F.col("user_id"), 2).alias("v"), "conv")
     agg = per_user.agg(
         F.count(F.when(F.col("v") == 0, 1)).alias("n_a"),
         F.sum(F.when(F.col("v") == 0, F.col("conv"))).alias("conv_a"),
@@ -1154,11 +1150,10 @@ def mon02_slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ab02_srm_check",
-    oracle="""
+    oracle=f"""
     WITH per_user AS (
         SELECT DISTINCT user_id,
-               CAST(CONCAT('0x', SUBSTRING(MD5(CAST(user_id AS VARCHAR)), 1, 8))
-                    AS BIGINT) % 2 AS v
+               {_VARIANT_SQL} AS v
         FROM events
     )
     SELECT CAST(COUNT(*) FILTER (v = 0) AS BIGINT) AS n_a,
@@ -1191,11 +1186,7 @@ def ab02_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     events = load_table(spark, sf_dir, "events")
     per_user = events.select("user_id").distinct().select(
-        (
-            F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-            .cast("long")
-            % 2
-        ).alias("v")
+        md5_bucket(F.col("user_id"), 2).alias("v")
     )
     agg = per_user.agg(
         F.count(F.when(F.col("v") == 0, 1)).alias("n_a"),
@@ -1389,8 +1380,7 @@ _CUPED_ADJ_EXPR = (
     oracle=f"""
     WITH per_user AS (
         SELECT user_id,
-               CAST(CONCAT('0x', SUBSTRING(MD5(CAST(user_id AS VARCHAR)), 1, 8))
-                    AS BIGINT) % 2 AS v,
+               {_VARIANT_SQL} AS v,
                CAST(COUNT(*) FILTER (event_type = 'view') AS BIGINT) AS x,
                CAST(COALESCE(SUM(CAST(ROUND(value * 100) AS BIGINT))
                     FILTER (event_type = 'purchase'), 0) AS BIGINT) AS y
@@ -1457,15 +1447,7 @@ def ab03_cuped_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.lit(0),
         ).alias("y"),
-    ).select(
-        (
-            F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-            .cast("long")
-            % 2
-        ).alias("v"),
-        "x",
-        "y",
-    )
+    ).select(md5_bucket(F.col("user_id"), 2).alias("v"), "x", "y")
     pooled = per_user.agg(
         F.count("*").alias("n"),
         F.sum("x").alias("sx"),

@@ -20,11 +20,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, spread_scan
+from ..functions.sampling import md5_bucket, md5_prefix, mixture_weight, split_label
 from ..functions.text import WORDS_EXPR, hashed_tokens, ngrams, words, ws_tokens
-from ..functions.text import md5_bucket as _md5_bucket
 from ..registry import query
-from .shared_oracles import TRIGRAMS_SQL, hashed_tokens_sql, md5_bucket_sql, ngrams_sql
-from .shared_oracles import WS_TOKENS_SQL, words_sql
+from .shared_oracles import MIXTURE_WEIGHT_SQL, TRIGRAMS_SQL, WS_TOKENS_SQL, hashed_tokens_sql
+from .shared_oracles import md5_bucket_sql, md5_prefix_sql, ngrams_sql, split_label_sql, words_sql
 
 CHUNK_SIZE = 200
 CHUNK_STRIDE = 150
@@ -32,19 +32,14 @@ SAMPLE_PER_STRATUM = 20
 SESSION_GAP_S = 1800
 
 
+# tp01's per-doc split bucket.
+_DOC_BUCKET_SQL = md5_bucket_sql("CAST(doc_id AS VARCHAR)", 100)
+
+
 @query(
     "tp01_hash_split",
-    oracle="""
-    SELECT doc_id,
-           CAST(CONCAT('0x', SUBSTRING(MD5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-               % 100 AS bucket,
-           CASE
-               WHEN CAST(CONCAT('0x', SUBSTRING(MD5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-                   % 100 < 80 THEN 'train'
-               WHEN CAST(CONCAT('0x', SUBSTRING(MD5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-                   % 100 < 90 THEN 'valid'
-               ELSE 'test'
-           END AS split
+    oracle=f"""
+    SELECT doc_id, {_DOC_BUCKET_SQL} AS bucket, {split_label_sql(_DOC_BUCKET_SQL)} AS split
     FROM documents
     """,
 )
@@ -57,11 +52,10 @@ def tp01_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline re-runs at 100 TB).
     """
     documents = load_table(spark, sf_dir, "documents")
-    bucket = _md5_bucket(F.col("doc_id"))
-    split = (
-        F.when(bucket < 80, "train").when(bucket < 90, "valid").otherwise("test")
+    bucket = md5_bucket(F.col("doc_id"))
+    return documents.select(
+        "doc_id", bucket.alias("bucket"), split_label(bucket).alias("split")
     )
-    return documents.select("doc_id", bucket.alias("bucket"), split.alias("split"))
 
 
 @query(
@@ -516,10 +510,7 @@ def tp06_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tp01's split bucket ``b`` and word list ``l`` per doc (``labeled``) and
 # its distinct word 3-grams (``shingled``): tp07 and tp17 (_split_trigrams).
 _SPLIT_TRIGRAM_CTES = f"""labeled AS (
-        SELECT doc_id,
-               CAST(CONCAT('0x', SUBSTRING(MD5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-                   % 100 AS b,
-               {words_sql()} AS l
+        SELECT doc_id, {_DOC_BUCKET_SQL} AS b, {words_sql()} AS l
         FROM documents
     ),
     shingled AS (
@@ -538,7 +529,7 @@ def _split_trigrams(documents: DataFrame) -> DataFrame:
 
     return documents.select(
         "doc_id",
-        _md5_bucket(F.col("doc_id")).alias("b"),
+        md5_bucket(F.col("doc_id")).alias("b"),
         F.explode(_trigram_set(F.col("text"))).alias("sh"),
     )
 
@@ -660,8 +651,7 @@ def tp11_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH pri AS (
         SELECT doc_id, source, n_chars,
-               CAST(CONCAT('0x', SUBSTRING(MD5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-                   * 1.0 / n_chars AS priority
+               {md5_prefix_sql("CAST(doc_id AS VARCHAR)")} * 1.0 / n_chars AS priority
         FROM documents
     ), ranked AS (
         SELECT doc_id, source, n_chars, priority,
@@ -690,10 +680,7 @@ def tp12_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     as tp04: one window per stratum with rank ≤ k pruning.
     """
     documents = load_table(spark, sf_dir, "documents")
-    u = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-        "long"
-    )
-    priority = u * F.lit(1.0) / F.col("n_chars")
+    priority = md5_prefix(F.col("doc_id")) * F.lit(1.0) / F.col("n_chars")
     w = Window.partitionBy("source").orderBy(priority, F.col("doc_id"))
     return (
         documents.select("source", "doc_id", "n_chars", priority.alias("priority"))
@@ -713,9 +700,7 @@ SHUFFLE_EPOCH = "e0"  # epoch salt: a new salt reshuffles the whole corpus
     oracle=f"""
     WITH keyed AS (
         SELECT doc_id, source,
-               CAST(CONCAT('0x', SUBSTRING(
-                   MD5('{SHUFFLE_EPOCH}:' || CAST(doc_id AS VARCHAR)), 1, 8))
-                   AS BIGINT) AS k
+               {md5_prefix_sql(f"'{SHUFFLE_EPOCH}:' || CAST(doc_id AS VARCHAR)")} AS k
         FROM documents
     )
     SELECT CAST(k % {SHUFFLE_SHARDS} AS BIGINT) AS shard,
@@ -756,17 +741,6 @@ def tp13_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def shuffle_key(id_col) -> "F.Column":
-    """tp13's epoch-salted portable hash key (md5-prefix uniform)."""
-    return F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(f"{SHUFFLE_EPOCH}:"), id_col.cast("string"))), 1, 8
-        ),
-        16,
-        10,
-    ).cast("long")
-
-
 def global_shuffle_assignment(
     df: DataFrame, id_col: str = "doc_id", shards: int = SHUFFLE_SHARDS
 ) -> DataFrame:
@@ -774,7 +748,8 @@ def global_shuffle_assignment(
     position). The property test exercises THIS function, so key or
     tiebreak drift in the operator cannot silently lose the
     append-stability law."""
-    keyed = df.withColumn("k", shuffle_key(F.col(id_col)))
+    salted = F.concat(F.lit(f"{SHUFFLE_EPOCH}:"), F.col(id_col).cast("string"))
+    keyed = df.withColumn("k", md5_prefix(salted))
     w = Window.partitionBy(F.col("k") % shards).orderBy("k", id_col)
     return keyed.select(
         *df.columns,
@@ -788,25 +763,19 @@ def global_shuffle_assignment(
 # operator-module import, which must stay lazy).
 from .shared_oracles import DD06_COMPONENT_CTE as _TP14_COMPONENT_CTE
 
+_GROUP_BUCKET_SQL = md5_bucket_sql("CAST(group_key AS VARCHAR)", 100)
+
 
 @query(
     "tp14_leakage_safe_split",
     oracle=_TP14_COMPONENT_CTE
-    + """
+    + f"""
     , grouped AS (
         SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS group_key
         FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
     )
-    SELECT doc_id, group_key,
-           CAST(CONCAT('0x', SUBSTRING(MD5(CAST(group_key AS VARCHAR)), 1, 8)) AS BIGINT)
-               % 100 AS bucket,
-           CASE
-               WHEN CAST(CONCAT('0x', SUBSTRING(MD5(CAST(group_key AS VARCHAR)), 1, 8)) AS BIGINT)
-                   % 100 < 80 THEN 'train'
-               WHEN CAST(CONCAT('0x', SUBSTRING(MD5(CAST(group_key AS VARCHAR)), 1, 8)) AS BIGINT)
-                   % 100 < 90 THEN 'valid'
-               ELSE 'test'
-           END AS split
+    SELECT doc_id, group_key, {_GROUP_BUCKET_SQL} AS bucket,
+           {split_label_sql(_GROUP_BUCKET_SQL)} AS split
     FROM grouped ORDER BY doc_id
     """,
 )
@@ -838,16 +807,10 @@ def tp14_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped = documents.select("doc_id").join(comp, "doc_id", "left").select(
         "doc_id", F.coalesce("component", "doc_id").alias("group_key")
     )
-    bucket = _md5_bucket(F.col("group_key"))
-    split = (
-        F.when(bucket < 80, "train").when(bucket < 90, "valid").otherwise("test")
-    )
-    return (
-        grouped.select(
-            "doc_id", "group_key", bucket.alias("bucket"), split.alias("split")
-        )
-        .orderBy("doc_id")
-    )
+    bucket = md5_bucket(F.col("group_key"))
+    return grouped.select(
+        "doc_id", "group_key", bucket.alias("bucket"), split_label(bucket).alias("split")
+    ).orderBy("doc_id")
 
 
 TEMP_ALPHA_SCALE = 1_000_000  # integer weight unit for temperature mixing
@@ -874,8 +837,7 @@ TEMP_BUDGET = 1_000  # total docs in the mixed sample
         SELECT d.doc_id, d.source, t.target,
                ROW_NUMBER() OVER (
                    PARTITION BY d.source
-                   ORDER BY CAST(CONCAT('0x', SUBSTRING(MD5(CAST(d.doc_id AS VARCHAR)), 1, 8)) AS BIGINT),
-                            d.doc_id) AS rn
+                   ORDER BY {md5_prefix_sql("CAST(d.doc_id AS VARCHAR)")}, d.doc_id) AS rn
         FROM documents d JOIN targets t ON d.source = t.source
     )
     SELECT doc_id, source, CAST(rn AS BIGINT) AS pick_rank
@@ -923,10 +885,7 @@ def tp15_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     targets = weights.crossJoin(F.broadcast(tot)).select(
         "source", F.expr(f"({TEMP_BUDGET} * w) div wsum").alias("target")
     )
-    prio = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-        "long"
-    )
-    w = Window.partitionBy("source").orderBy(prio, F.col("doc_id"))
+    w = Window.partitionBy("source").orderBy(md5_prefix(F.col("doc_id")), F.col("doc_id"))
     return (
         documents.join(F.broadcast(targets), "source")
         .withColumn("rn", F.row_number().over(w))
@@ -1026,7 +985,7 @@ def tp16_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     documents = load_table(spark, sf_dir, "documents")
     scored = dsir_scores(documents)
-    u_micro = _md5_bucket(F.concat(F.lit("dsir:"), F.col("doc_id").cast("string")), 1_000_000)
+    u_micro = md5_bucket(F.concat(F.lit("dsir:"), F.col("doc_id").cast("string")), 1_000_000)
     return (
         scored.join(documents.select("doc_id", "lang", "source"), "doc_id")
         .select(
@@ -1148,7 +1107,7 @@ def tp17_decontaminate_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     train_sh = shingled.filter(F.col("b") < 80)
     contaminated = train_sh.join(eval_sh, "sh").select("doc_id").distinct()
     counts = train_sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    train = documents.filter(_md5_bucket(F.col("doc_id")) < 80).select("doc_id")
+    train = documents.filter(md5_bucket(F.col("doc_id")) < 80).select("doc_id")
     return (
         train.join(contaminated, "doc_id", "left_anti")
         .join(counts, "doc_id", "left")
@@ -1794,8 +1753,7 @@ PANEL_PERMILLE = 25  # ~2.5% of docs held out as the frozen eval panel
     oracle=f"""
     WITH tagged AS (
         SELECT source, doc_id,
-               CAST(CONCAT('0x', SUBSTRING(MD5(CAST(doc_id AS VARCHAR)), 1, 8))
-                    AS BIGINT) % 1000 < {PANEL_PERMILLE} AS in_panel
+               {md5_bucket_sql("CAST(doc_id AS VARCHAR)", 1000)} < {PANEL_PERMILLE} AS in_panel
         FROM documents
     )
     SELECT source,
@@ -1830,7 +1788,7 @@ def tp21_stable_eval_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; no shuffle beyond it.
     """
     documents = load_table(spark, sf_dir, "documents")
-    in_panel = _md5_bucket(F.col("doc_id"), 1000) < PANEL_PERMILLE
+    in_panel = md5_bucket(F.col("doc_id"), 1000) < PANEL_PERMILLE
     return (
         documents.select("source", "doc_id", in_panel.alias("in_panel"))
         .groupBy("source")
@@ -2077,14 +2035,11 @@ TP24_CAP_MILLI = 4000
     oracle=f"""
     WITH per_source AS (
         SELECT source,
-               CAST(SUM(LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) + 1)
-                    AS BIGINT) AS tokens
+               CAST(SUM(LEN({WS_TOKENS_SQL})) AS BIGINT) AS tokens
         FROM documents GROUP BY source
     ), weighted AS (
         SELECT source, tokens,
-               CASE WHEN source IN ('src0', 'src1', 'src2') THEN 25
-                    WHEN source IN ('src3', 'src4', 'src5') THEN 50
-                    ELSE 90 END AS weight
+               {MIXTURE_WEIGHT_SQL} AS weight
         FROM per_source
     ), tot AS (
         SELECT CAST(SUM(tokens) AS BIGINT) AS t_all,
@@ -2120,8 +2075,8 @@ def tp24_epoch_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     the audit signal: budget the cap prevents spending — the amount a
     re-allocation pass (or new data acquisition) must cover.
 
-    Every quantity is an exact BIGINT: token counts are whitespace
-    arithmetic (tp09's shuffle-free length trick), the allocation is
+    Every quantity is an exact BIGINT: token counts are the sizes of
+    the single-space splits (tp09's shuffle-free count), the allocation is
     one integer cross-multiplication over a 1-row total, and the
     cap/min/subtraction chain never touches a float — Spark ``div``
     and DuckDB ``//`` agree on nonnegative operands.
@@ -2134,19 +2089,11 @@ def tp24_epoch_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     composes with tp08/tp09/tp15).
     """
     documents = load_table(spark, sf_dir, "documents")
-    n_tokens = (
-        F.length("text") - F.length(F.regexp_replace("text", " ", "")) + 1
-    )
-    weight = (
-        F.when(F.col("source").isin("src0", "src1", "src2"), 25)
-        .when(F.col("source").isin("src3", "src4", "src5"), 50)
-        .otherwise(90)
-    ).cast("long")
     per_source = (
-        documents.select("source", n_tokens.alias("n_tokens"))
+        documents.select("source", F.size(ws_tokens()).alias("n_tokens"))
         .groupBy("source")
         .agg(F.sum("n_tokens").alias("tokens"))
-        .withColumn("weight", weight)
+        .withColumn("weight", mixture_weight().cast("long"))
     )
     tot = per_source.agg(
         F.sum("tokens").alias("t_all"),

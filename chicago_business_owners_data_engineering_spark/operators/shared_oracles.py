@@ -71,9 +71,45 @@ REPETITION_STATS_SQL = f"""
     GROUP BY doc_id"""
 
 
+# --- hash-assignment family: the DuckDB twins of functions/sampling.py ---------
+
+
+def md5_prefix_sql(key: str) -> str:
+    """The BIGINT of the first 8 hex characters of a string's md5
+    (functions.sampling.md5_prefix; NULL keys are its known limit)."""
+    return f"CAST(CONCAT('0x', SUBSTRING(MD5({key}), 1, 8)) AS BIGINT)"
+
+
 def md5_bucket_sql(key: str, n_buckets: int) -> str:
-    """The [0, n_buckets) md5-prefix bucket of a string (functions.text.md5_bucket)."""
-    return f"CAST(CONCAT('0x', SUBSTRING(MD5({key}), 1, 8)) AS BIGINT) % {n_buckets}"
+    """The [0, n_buckets) md5-prefix bucket of a string (functions.sampling.md5_bucket)."""
+    return f"{md5_prefix_sql(key)} % {n_buckets}"
+
+
+def split_label_sql(bucket: str) -> str:
+    """The 80/10/10 train/valid/test CASE on a bucket (functions.sampling.split_label)."""
+    return (
+        f"CASE WHEN {bucket} < 80 THEN 'train' WHEN {bucket} < 90 THEN 'valid' "
+        "ELSE 'test' END"
+    )
+
+
+# The source-mixture keep percentages (tp08, tp23, tp24 and the curation
+# pipeline's mixture stage); every source not listed keeps DEFAULT_WEIGHT.
+SOURCE_WEIGHTS = {
+    ("src0", "src1", "src2"): 25,
+    ("src3", "src4", "src5"): 50,
+}
+DEFAULT_WEIGHT = 90
+
+# The per-``source`` weight CASE (functions.sampling.mixture_weight).
+MIXTURE_WEIGHT_SQL = (
+    "CASE "
+    + " ".join(
+        "WHEN source IN (" + ", ".join(f"'{s}'" for s in sources) + f") THEN {w}"
+        for sources, w in SOURCE_WEIGHTS.items()
+    )
+    + f" ELSE {DEFAULT_WEIGHT} END"
+)
 
 
 def hashed_tokens_sql(rel: str, n_buckets: int) -> str:

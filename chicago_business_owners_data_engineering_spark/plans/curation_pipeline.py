@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Pins, load_table
+from ..functions.sampling import md5_bucket, mixture_weight, split_label
 from ..functions.text import repetition_stats
 from ..operators.dedup import _shingle_set, neardup_edges
 from ..operators.graph import components_large_small_star
@@ -69,12 +70,6 @@ from ..operators.shared_oracles import (  # noqa: E402
 # Containment-dedup threshold as a rational (integer cross-multiplied
 # comparisons — see containment_join_prefix).
 CONTAIN_T_NUM, CONTAIN_T_DEN = 7, 10
-
-SOURCE_WEIGHTS = {
-    ("src0", "src1", "src2"): 25,
-    ("src3", "src4", "src5"): 50,
-}
-DEFAULT_WEIGHT = 90
 
 
 def gate_quality(documents: DataFrame) -> DataFrame:
@@ -191,23 +186,13 @@ def dedup_containment(docs: DataFrame) -> DataFrame:
 
 def sample_mixture(docs: DataFrame) -> DataFrame:
     """Stage 3: per-source hash-deterministic downsampling (tp08)."""
-    from ..operators.pipeline_ml import _md5_bucket
-
-    weight = F.lit(DEFAULT_WEIGHT)
-    for sources, w in SOURCE_WEIGHTS.items():
-        weight = F.when(F.col("source").isin(*sources), w).otherwise(weight)
-    return docs.filter(_md5_bucket(F.col("doc_id")) < weight)
+    return docs.filter(md5_bucket(F.col("doc_id")) < mixture_weight())
 
 
 def assign_splits(docs: DataFrame) -> DataFrame:
     """Stage 4: stable 80/10/10 split by key hash (tp01)."""
-    from ..operators.pipeline_ml import _md5_bucket
-
-    bucket = _md5_bucket(F.concat(F.lit("split:"), F.col("doc_id")))
-    return docs.withColumn(
-        "split",
-        F.when(bucket < 80, "train").when(bucket < 90, "valid").otherwise("test"),
-    )
+    bucket = md5_bucket(F.concat(F.lit("split:"), F.col("doc_id")))
+    return docs.withColumn("split", split_label(bucket))
 
 
 def assign_shards(docs: DataFrame) -> DataFrame:

@@ -35,19 +35,19 @@ from ..operators.shared_oracles import (
     CURATION_MAX_DUP_TOKEN_FRAC as MAX_DUP_TOKEN_FRAC,
     CURATION_MAX_TOP_TOKEN_FRAC as MAX_TOP_TOKEN_FRAC,
     CURATION_MIN_TOKENS as MIN_TOKENS,
+    MIXTURE_WEIGHT_SQL,
     NEARDUP_COMPONENT_CTES,
     REPETITION_STATS_SQL,
     SHINGLE_SQL,
     ft_feature_ctes,
+    md5_bucket_sql,
+    split_label_sql,
     words_sql,
 )
 from ..registry import query
 
-_MD5_DOC = "CAST(CONCAT('0x', SUBSTRING(MD5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100"
-_MD5_SPLIT = (
-    "CAST(CONCAT('0x', SUBSTRING(MD5(CONCAT('split:', CAST(doc_id AS VARCHAR))), 1, 8)) "
-    "AS BIGINT) % 100"
-)
+_MD5_DOC = md5_bucket_sql("CAST(doc_id AS VARCHAR)", 100)
+_MD5_SPLIT = md5_bucket_sql("CONCAT('split:', CAST(doc_id AS VARCHAR))", 100)
 
 _TP23_ORACLE = f"""
     WITH RECURSIVE stats AS ({REPETITION_STATS_SQL}
@@ -84,15 +84,9 @@ _TP23_ORACLE = f"""
             WHERE doc_id NOT IN (SELECT doc_id FROM canonical))
     ), mixed AS (
         SELECT * FROM near
-        WHERE {_MD5_DOC} < CASE
-            WHEN source IN ('src0', 'src1', 'src2') THEN 25
-            WHEN source IN ('src3', 'src4', 'src5') THEN 50
-            ELSE 90 END
+        WHERE {_MD5_DOC} < {MIXTURE_WEIGHT_SQL}
     ), splits AS (
-        SELECT *, CASE WHEN {_MD5_SPLIT} < 80 THEN 'train'
-                       WHEN {_MD5_SPLIT} < 90 THEN 'valid'
-                       ELSE 'test' END AS split
-        FROM mixed
+        SELECT *, {split_label_sql(_MD5_SPLIT)} AS split FROM mixed
     )
     SELECT '0_raw' AS stage, CAST(COUNT(*) AS BIGINT) AS docs FROM documents
     UNION ALL SELECT '1_gated', CAST(COUNT(*) AS BIGINT) FROM gated

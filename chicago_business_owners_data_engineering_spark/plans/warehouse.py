@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import Pins, load_table
+from ..functions.sampling import md5_bucket
+from ..operators.shared_oracles import md5_bucket_sql
 from ..registry import query
 
 
@@ -879,8 +881,7 @@ WH06_HOT_MILLI = 1500  # flag buckets carrying >= 1.5x their fair share
     "wh06_partition_skew_audit",
     oracle=f"""
     WITH b AS (
-        SELECT CAST(CONCAT('0x', SUBSTRING(MD5(CAST(l_orderkey AS VARCHAR)), 1, 8))
-                    AS BIGINT) % {WH06_BUCKETS} AS bucket,
+        SELECT {md5_bucket_sql("CAST(l_orderkey AS VARCHAR)", WH06_BUCKETS)} AS bucket,
                l_orderkey
         FROM lineitem
     ), per AS (
@@ -922,14 +923,10 @@ def wh06_partition_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew01_salted_agg / skew02_salted_join).
     """
     lineitem = load_table(spark, sf_dir, "lineitem")
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 8), 16, 10
-        ).cast("long")
-        % WH06_BUCKETS
-    )
     per = (
-        lineitem.select(bucket.alias("bucket"), "l_orderkey")
+        lineitem.select(
+            md5_bucket(F.col("l_orderkey"), WH06_BUCKETS).alias("bucket"), "l_orderkey"
+        )
         .groupBy("bucket")
         .agg(
             F.count("*").alias("n_rows"),

@@ -164,9 +164,9 @@ def test_hyperplane_lsh_recall(spark, sf_dir):
 
 def test_arrow_udf_matches_native_bucket(spark):
     """u06's Python md5 bucket is bit-identical to the JVM md5/conv
-    path AND to pipeline_ml's _md5_bucket used by every splitter."""
-    from chicago_business_owners_data_engineering_spark.operators.pipeline_ml import (
-        _md5_bucket,
+    path AND to functions.sampling's md5_bucket used by every splitter."""
+    from chicago_business_owners_data_engineering_spark.functions.sampling import (
+        md5_bucket as _md5_bucket,
     )
     import hashlib
 

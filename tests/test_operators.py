@@ -1165,6 +1165,48 @@ def test_tokenizer_twins_agree(spark):
     assert got[3][0] == ["", "lead", "trail", ""]
 
 
+HASH_KEYS = {"k string": ["", "split:7", "é"], "k bigint": [-1, 0, 9223372036854775807]}
+
+
+def test_hash_twins_agree(spark):
+    """``md5_prefix`` and ``md5_bucket`` give the same values in Spark as
+    ``md5_prefix_sql``/``md5_bucket_sql`` in DuckDB on keys the
+    nonnegative fixture ids never show: the empty string, a salted key,
+    a non-ASCII character, and negative, zero and maximal BIGINT ids."""
+    import duckdb
+
+    from chicago_business_owners_data_engineering_spark.functions.sampling import (
+        md5_bucket,
+        md5_prefix,
+    )
+    from chicago_business_owners_data_engineering_spark.operators.shared_oracles import (
+        md5_bucket_sql,
+        md5_prefix_sql,
+    )
+
+    con = duckdb.connect()
+    for schema, keys in HASH_KEYS.items():
+        rows = list(enumerate(keys))
+        got = [
+            (r["p"], r["b"])
+            for r in spark.createDataFrame(rows, f"id int, {schema}")
+            .orderBy("id")
+            .select(
+                md5_prefix(F.col("k")).alias("p"), md5_bucket(F.col("k"), 100).alias("b")
+            )
+            .collect()
+        ]
+        con.execute(f"CREATE OR REPLACE TABLE keys (id INTEGER, {schema})")
+        con.executemany("INSERT INTO keys VALUES (?, ?)", rows)
+        key = "CAST(k AS VARCHAR)"
+        want = con.execute(
+            f"SELECT {md5_prefix_sql(key)}, {md5_bucket_sql(key, 100)} FROM keys ORDER BY id"
+        ).fetchall()
+        assert got == [tuple(w) for w in want]
+        if schema == "k string":
+            assert got[1] == (1766650486, 86)
+
+
 def test_hybrid_search_keyword_leg_ignores_case(spark, tmp_path):
     """sim08's keyword overlap uses the family tokenizer: "Spark Join"
     matches the lowercase terms spark and join, so 2 of its 4 terms."""

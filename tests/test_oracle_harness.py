@@ -13,14 +13,14 @@ from __future__ import annotations
 
 import datetime
 import importlib.util
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
 import pytest
 
-spec = importlib.util.spec_from_file_location(
-    "check_oracle", "/root/repo/tools/check_oracle.py"
-)
+ROOT = Path(__file__).resolve().parents[1]
+spec = importlib.util.spec_from_file_location("check_oracle", ROOT / "tools" / "check_oracle.py")
 check_oracle = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(check_oracle)
 canon_frame = check_oracle.canon_frame
@@ -124,7 +124,7 @@ def test_registry_rotation_survives_operator_module_first_import():
         [sys.executable, "-c", code],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
         timeout=120,
     )
     assert out.returncode == 0, out.stderr[-2000:]

@@ -15,8 +15,8 @@ from chicago_business_owners_data_engineering_spark.operators.pipeline_ml import
     CHUNK_STRIDE,
     SAMPLE_PER_STRATUM,
     SESSION_GAP_S,
-    _md5_bucket,
 )
+from chicago_business_owners_data_engineering_spark.functions.sampling import md5_bucket as _md5_bucket
 
 
 def test_hash_split_is_stable_under_data_growth(spark, sf_dir):
@@ -602,8 +602,8 @@ def test_decontaminate_train_drops_overlap_keeps_short_docs(spark, tmp_path):
     """tp17 on a planted corpus: a train doc sharing a 3-gram with an
     eval doc is dropped; an independent train doc and a shingle-less
     (2-word) train doc survive."""
-    from chicago_business_owners_data_engineering_spark.operators.pipeline_ml import (
-        _md5_bucket,
+    from chicago_business_owners_data_engineering_spark.functions.sampling import (
+        md5_bucket as _md5_bucket,
     )
     from chicago_business_owners_data_engineering_spark.registry import QUERIES
 

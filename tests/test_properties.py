@@ -15,8 +15,8 @@ from pyspark.sql import functions as F
 from chicago_business_owners_data_engineering_spark.operators.pipeline_ml import (
     CHUNK_SIZE,
     CHUNK_STRIDE,
-    _md5_bucket,
 )
+from chicago_business_owners_data_engineering_spark.functions.sampling import md5_bucket as _md5_bucket
 
 SETTINGS = dict(max_examples=8, deadline=None)
 

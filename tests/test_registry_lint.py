@@ -318,6 +318,8 @@ def _text_family_offenders(pkg) -> list[str]:
             needles = []
         if rel != "operators/shared_oracles.py":
             needles += ["STRING_SPLIT(LOWER(", "STRING_SPLIT(text, ' ')", "SUBSTRING(MD5(tok)"]
+            # The whitespace-token count written as length arithmetic.
+            needles += ["LENGTH(REPLACE(text, ' ', ''))", 'F.regexp_replace("text", " ", "")']
         for needle in needles:
             for m in re.finditer(re.escape(needle), text):
                 offenders.append(f"{rel}:{text.count(chr(10), 0, m.start()) + 1} {needle}")
@@ -333,4 +335,80 @@ def test_text_family_written_once():
     from pathlib import Path
 
     offenders = _text_family_offenders(Path(registry.__file__).resolve().parent)
+    assert not offenders, offenders
+
+
+# ``SUBSTRING(MD5(<key>), 1, 8)`` with up to three levels of parentheses in the key.
+_MD5_PREFIX_SQL = re.compile(
+    r"SUBSTRING\s*\(\s*MD5\s*\((?:[^()]|\((?:[^()]|\((?:[^()]|\([^()]*\))*\))*\))*\)"
+    r"\s*,\s*1\s*,\s*8\s*\)",
+    re.I,
+)
+
+
+def _hash_family_offenders(pkg) -> list[str]:
+    """Sites under ``pkg`` that spell out a hash-assignment step
+    themselves instead of composing ``functions/sampling.py`` or its
+    ``shared_oracles`` twins: the 8-hex md5 prefix, the 80/10/10 label
+    rule or the source-mixture weight table."""
+    import ast
+
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = str(path.relative_to(pkg))
+        text = path.read_text()
+
+        def at(m, what):
+            offenders.append(f"{rel}:{text.count(chr(10), 0, m.start()) + 1} {what}")
+
+        if rel != "functions/sampling.py":
+            for node in ast.walk(ast.parse(text)):
+                if not isinstance(node, ast.Call):
+                    continue
+                func = ast.unparse(node.func)
+                args = [ast.unparse(a) for a in node.args]
+                if func == "F.substring" and args[:1] and args[0].startswith("F.md5(") and args[1:] == ["1", "8"]:
+                    offenders.append(f"{rel}:{node.lineno} F.substring(F.md5(...), 1, 8)")
+                if func.endswith("when") and "'train'" in args:
+                    offenders.append(f"{rel}:{node.lineno} when(..., 'train')")
+        if rel != "operators/shared_oracles.py":
+            for m in _MD5_PREFIX_SQL.finditer(text):
+                at(m, "SUBSTRING(MD5(...), 1, 8)")
+            for m in re.finditer(r"THEN\s+'train'", text, re.I):
+                at(m, "THEN 'train'")
+            for m in re.finditer(r"[\"']src0[\"']", text):
+                at(m, "'src0'")
+    return offenders
+
+
+def test_hash_family_written_once():
+    """Each step of the hash-assignment family has one definition: only
+    ``functions/sampling.py`` builds the md5 prefix (``md5_prefix``), the
+    80/10/10 label (``split_label``) and the weight CASE
+    (``mixture_weight``) in Spark, and only ``shared_oracles`` spells out
+    their DuckDB twins and the ``SOURCE_WEIGHTS`` table."""
+    from pathlib import Path
+
+    offenders = _hash_family_offenders(Path(registry.__file__).resolve().parent)
+    assert not offenders, offenders
+
+
+def _checkout_path_offenders(root) -> list[str]:
+    """Files under ``root``'s tools/ and tests/ that name ``root``'s own
+    absolute path instead of resolving it from ``__file__``."""
+    return [
+        str(path.relative_to(root))
+        for sub in ("tools", "tests")
+        for path in sorted((root / sub).rglob("*"))
+        if path.is_file() and path.suffix in (".py", ".sh") and str(root) in path.read_text()
+    ]
+
+
+def test_tools_and_tests_check_their_own_checkout():
+    """The tier-1 tools and tests find the engine, the evidence files and
+    PLANS.md relative to their own file, so a run from a second checkout
+    checks that checkout's code rather than another one's."""
+    from pathlib import Path
+
+    offenders = _checkout_path_offenders(Path(__file__).resolve().parents[1])
     assert not offenders, offenders

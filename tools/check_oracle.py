@@ -41,12 +41,13 @@ import datetime
 import decimal
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"

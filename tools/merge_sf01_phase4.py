@@ -17,10 +17,12 @@ import json
 import os
 import sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def main() -> int:
     src_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf01_residue"
-    path = "/root/repo/CORRECTNESS_SF01.json"
+    path = os.path.join(ROOT, "CORRECTNESS_SF01.json")
     doc = json.load(open(path))
 
     phase4 = doc.setdefault("phase4_queries", {})

@@ -15,8 +15,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 # Queries where a Python-eval / single-partition flag is the documented
 # point of the query, not a plan bug.
@@ -282,7 +284,7 @@ def main() -> int:
     spark = get_spark("plan-audit", shuffle_partitions=8)
     rows, warnings = run_audit(spark, sf_dir)
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write(
             "# PLANS — physical-plan audit (generated by tools/plan_audit.py)\n\n"
             f"Audited at `{sf_dir}`, AQE on. Columns: shuffle exchanges, "

@@ -33,7 +33,8 @@ import re
 import sys
 from collections import defaultdict
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def last_sampled_rounds(max_round: int | None = None) -> dict[str, int]:
@@ -44,7 +45,7 @@ def last_sampled_rounds(max_round: int | None = None) -> dict[str, int]:
     later rounds add their own CORRECTNESS files.
     """
     last: dict[str, int] = {}
-    for f in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for f in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", f)
         if not m:  # skips CORRECTNESS_LOCAL_* and CORRECTNESS_SF01
             continue
